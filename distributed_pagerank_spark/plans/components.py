@@ -43,8 +43,7 @@ Three algorithms, identical output (same fixpoint):
 
 from __future__ import annotations
 
-import time
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,12 +52,58 @@ from distributed_pagerank_spark.operators.degrees import (
     symmetrize,
     vertices_from_edges,
 )
-from distributed_pagerank_spark.plans.loop import (
-    CheckpointManager,
-    KEEP_SESSION_CONFS,
-    loop_conf,
-    release_local_checkpoint,
-)
+from distributed_pagerank_spark.plans.loop import fixpoint
+
+# hybrid: a round whose ``changed`` count stays above this fraction of the
+# previous round's (without growing) arms pointer jumping
+STALL_DECAY = 0.7
+# hybrid: rounds after which pointer jumping is armed unconditionally
+JUMP_BACKSTOP_ROUND = 20
+
+
+def label_exchange(
+    spark: SparkSession,
+    edges: DataFrame,
+    name: str,
+    label: str,
+    step: Callable[[DataFrame, DataFrame, dict[str, Any] | None],
+                   tuple[DataFrame, dict]],
+    num_partitions: int | None = None,
+    **loop: Any,
+) -> DataFrame:
+    """Run a label-exchange fixpoint over the undirected view of ``edges``
+    → ``(id, <label>)``.
+
+    Every vertex starts labelled with its own id. ``step(sym, labels,
+    last)`` gets the cached symmetrized ``(src, dst)`` table and plans
+    ``(id, old, <label>)``; the loop stops when no label changed.
+    ``loop`` passes ``max_iter`` and the checkpoint options on to
+    ``fixpoint``.
+    """
+    num_partitions = num_partitions or int(
+        spark.conf.get("spark.sql.shuffle.partitions", "32")
+    )
+    # one scan of the raw input: the 2-column projection is cached and the
+    # symmetrized table AND the vertex set (which must keep self-loop-only
+    # vertices that symmetrize drops) both derive from it
+    raw = edges.select("src", "dst").persist()
+    sym = (
+        symmetrize(raw)
+        .repartition(num_partitions, "src")
+        .sortWithinPartitions("src")
+        .persist()
+    )
+    sym.count()
+    run = fixpoint(
+        spark, name, sym,
+        lambda: vertices_from_edges(raw).select("id", F.col("id").alias(label)),
+        lambda labels, last: step(sym, labels, last),
+        {"changed": F.sum((F.col(label) != F.col("old")).cast("long"))},
+        lambda s: s["changed"] == 0,
+        num_partitions=num_partitions, inputs=[raw], **loop,
+    )
+    sym.unpersist()
+    return run.state.select("id", label)
 
 
 def connected_components(
@@ -71,126 +116,27 @@ def connected_components(
     num_partitions: int | None = None,
     metrics_out: list[dict[str, Any]] | None = None,
     algorithm: str = "hybrid",
-    stall_decay: float = 0.7,
-    jump_backstop_round: int = 20,
 ) -> DataFrame:
-    """→ ``(id long, component long)`` at fixpoint."""
+    """→ ``(id long, component long)`` at fixpoint.
+
+    ``checkpoint_dir`` makes the run resumable (``plans/loop.py``).
+    """
     if algorithm not in ("hashmin", "pointer", "hybrid"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    ckpt = CheckpointManager(spark, checkpoint_dir)
-    # one scan of the raw input: the 2-column projection is cached and the
-    # symmetrized table AND the vertex set (which must keep self-loop-only
-    # vertices that symmetrize drops) both derive from it
-    raw = edges.select("src", "dst").persist()
-    sym = (
-        symmetrize(raw)
-        .repartition(num_partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    sym.count()
-
-    # resume safety: a checkpoint dir is only valid for the same
-    # (graph, algorithm) job — same guard as PageRank's.
-    fingerprint = None
-    if ckpt.enabled():
-        agg = sym.agg(
-            F.count("*").alias("m"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).first()
-        fingerprint = f"cc|m={agg['m']}|h={agg['h']}"
-
-    labels = None
-    start_iter = 0
-    if resume and ckpt.enabled():
-        latest = ckpt.latest()
-        if latest is not None:
-            it, st, manifest = latest
-            if manifest.get("fingerprint") == fingerprint:
-                start_iter, labels = it, st
-                if manifest.get("converged"):
-                    sym.unpersist()
-                    raw.unpersist()
-                    return labels.select("id", "component")
-            # stale dir from a different graph: start fresh
-    if labels is None:
-        labels = vertices_from_edges(raw).select(
-            "id", F.col("id").alias("component")
-        )
-    # id-sorted like the edge table: per-round sort-merge joins skip the
-    # label-side Sort (see pagerank.py)
-    labels = (
-        labels.repartition(num_partitions, "id")
-        .sortWithinPartitions("id")
-        .persist()
-    )
-    labels.count()
-    raw.unpersist()
-
-    iteration = start_iter
-    prev = labels
     jumping = algorithm == "pointer"  # hybrid arms this on stall
     prev_changed: int | None = None
-    # KEEP_SESSION_CONFS since the r6 fourth wave (see pagerank.py):
-    # checkpointed labels freeze their layout, so AQE can only help the
-    # per-round (dst, nbr_min) exchange — measured 4.65 -> 3.92 s AQE-on
-    # (min of 4, every rep faster); the old persist-chain shape measured
-    # 1.96x SLOWER with AQE on.
-    with loop_conf(spark, confs=KEEP_SESSION_CONFS):
-        while iteration < max_iter:
-            iteration += 1
-            t0 = time.monotonic()
-            nbr = (
-                sym.join(labels, sym["src"] == labels["id"])
-                .groupBy("dst")
-                .agg(F.min("component").alias("nbr_min"))
-            )
-            candidate = F.coalesce(F.col("nbr_min"), F.col("component"))
-            step = labels.join(nbr, labels["id"] == nbr["dst"], "left")
-            if jumping:
-                # pointer jump: label(label(v)). Every label value is a vertex
-                # id (init = own id; min over ids), so the self-join resolves.
-                # The label vector is |V|-sized — this join shuffles only it.
-                jump = labels.select(
-                    F.col("id").alias("__lid"), F.col("component").alias("__lcomp")
-                )
-                step = step.join(
-                    jump, F.col("component") == F.col("__lid"), "left"
-                )
-                candidate = F.least(
-                    candidate, F.coalesce(F.col("__lcomp"), F.col("component"))
-                )
-            # lazy localCheckpoint: the changed-count aggregate below is
-            # the materializing action — ONE job computes the round,
-            # caches the labels (with the old label riding along for the
-            # count), cuts lineage, and returns the convergence statistic
-            # (r6; same fusion as plans/pagerank.py). No Observation, no
-            # separate eager truncation, no 2^k plan growth.
-            snapshot = (
-                step.select(
-                    "id",
-                    F.col("component").alias("old"),
-                    F.least(F.col("component"), candidate).alias("component"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            changed = (
-                snapshot.agg(
-                    F.sum((F.col("component") != F.col("old")).cast("long"))
-                ).first()[0]
-                or 0
-            )
-            new_labels = snapshot.select("id", "component")
-            used_jump = jumping
+    rounds = 0
+
+    def step(sym: DataFrame, labels: DataFrame, last: dict[str, Any] | None):
+        nonlocal jumping, prev_changed, rounds
+        if last is not None:
+            changed = last["changed"]
             if algorithm == "hybrid" and not jumping and (
                 (
                     prev_changed is not None
-                    and stall_decay * prev_changed < changed <= prev_changed
+                    and STALL_DECAY * prev_changed < changed <= prev_changed
                 )
-                or iteration - start_iter >= jump_backstop_round
+                or rounds >= JUMP_BACKSTOP_ROUND
             ):
                 # flat decay = a long pointer chain draining one hop per
                 # round: switch the O(log d) jump join on for the rest of
@@ -198,26 +144,34 @@ def connected_components(
                 # graph — healthy hash-min progress, no jumps.)
                 jumping = True
             prev_changed = changed
-            labels = new_labels
-            if prev is not None:
-                release_local_checkpoint(prev)
-            prev = snapshot
-            converged = changed == 0
-            meta = {
-                "algo": "connected_components",
-                "changed": changed,
-                "jumping": used_jump,
-                "converged": converged,
-                "fingerprint": fingerprint,
-                "iter_s": round(time.monotonic() - t0, 4),
-            }
-            if metrics_out is not None:
-                metrics_out.append({"iteration": iteration, **meta})
-            if ckpt.enabled() and (
-                iteration % checkpoint_interval == 0 or converged
-            ):
-                ckpt.save(iteration, labels, meta)  # durable resume point only
-            if converged:
-                break
-    sym.unpersist()
-    return labels.select("id", "component")
+        rounds += 1
+        nbr = (
+            sym.join(labels, sym["src"] == labels["id"])
+            .groupBy("dst")
+            .agg(F.min("component").alias("nbr_min"))
+        )
+        candidate = F.coalesce(F.col("nbr_min"), F.col("component"))
+        nxt = labels.join(nbr, labels["id"] == nbr["dst"], "left")
+        if jumping:
+            # pointer jump: label(label(v)). Every label value is a vertex
+            # id (init = own id; min over ids), so the self-join resolves.
+            # The label vector is |V|-sized — this join shuffles only it.
+            jump = labels.select(
+                F.col("id").alias("__lid"), F.col("component").alias("__lcomp")
+            )
+            nxt = nxt.join(jump, F.col("component") == F.col("__lid"), "left")
+            candidate = F.least(
+                candidate, F.coalesce(F.col("__lcomp"), F.col("component"))
+            )
+        return nxt.select(
+            "id",
+            F.col("component").alias("old"),
+            F.least(F.col("component"), candidate).alias("component"),
+        ), {"jumping": jumping}
+
+    return label_exchange(
+        spark, edges, "connected_components", "component", step,
+        num_partitions=num_partitions, max_iter=max_iter,
+        checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
+        resume=resume, metrics_out=metrics_out,
+    )

@@ -54,11 +54,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import vertices_from_edges
-from distributed_pagerank_spark.plans.loop import (
-    KEEP_SESSION_CONFS,
-    loop_conf,
-    release_local_checkpoint,
-)
+from distributed_pagerank_spark.plans.loop import release_local_checkpoint
 
 
 @dataclass
@@ -76,8 +72,6 @@ def hits(
     max_iter: int = 20,
     eps: float = 0.0,
     num_partitions: int | None = None,
-    truncate_interval: int = 2,  # unused since r6 (lineage cut rides the
-    # per-iteration mass job); kept for API compatibility
 ) -> HitsResult:
     """Run HITS to ``max_iter`` rounds (or L1-delta ≤ eps on auth, when
     eps > 0 — the delta check costs one extra scalar agg per round over
@@ -132,97 +126,90 @@ def hits(
     iteration, delta, converged = 0, float("inf"), False
     prev_snapshot = state
 
-    # KEEP_SESSION_CONFS, not the AQE-off default: unlike the PageRank
-    # loop (whose state stays co-partitioned with the edge cache and
-    # which AQE coalescing would force to re-exchange), every HITS
-    # iteration re-keys through two unavoidable gather exchanges, and
-    # AQE coalescing those tiny shuffles to a task count matching the
-    # data is a measured 30% win (r6 A/B, tools/ab_hits.py: 9.5 s vs
-    # 14.1 s at sf0.1/local[32]; with truncate_interval 2 below, 7.3 s).
-    with loop_conf(spark, confs=KEEP_SESSION_CONFS):
-        while iteration < max_iter and not converged:
-            iteration += 1
-            t0 = time.monotonic()
-            auth_vec = state.select("id", "auth")
-            if iteration == 1:
-                # hub_0 == the uniform init vector: gather it directly
-                h_tmp = auth_vec.select(
-                    F.col("id").alias("hid"), F.col("auth").alias("h")
-                )
-            else:
-                # un-normalized intermediate hub E·auth — the scalar
-                # cancels inside the auth normalization below
-                h_tmp = (
-                    e_dst.join(auth_vec, e_dst["dst"] == auth_vec["id"])
-                    .groupBy(F.col("src").alias("hid"))
-                    .agg(F.sum("auth").alias("h"))
-                )
-            a_sums = (
-                e_src.join(h_tmp, e_src["src"] == F.col("hid"))
-                .groupBy("dst")
-                .agg(F.sum("h").alias("a_raw"))
-            )
-            # lazy localCheckpoint: the mass aggregate below is the
-            # materializing action — ONE job computes the iteration,
-            # caches the raw snapshot at the RDD layer, cuts lineage,
-            # and returns the L1 mass scalar (r6; same fusion as
-            # plans/ppr.py's barrier counts)
-            snapshot = (
-                state.join(a_sums, state["id"] == a_sums["dst"], "left")
-                .select(
-                    "id", F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("auth_raw")
-                )
-                .localCheckpoint(eager=False)
-            )
-            a_mass = snapshot.agg(F.sum("auth_raw")).first()[0] or 1.0
-            if iteration == 1:
-                # the init state (and everything derived from the raw
-                # input) is now baked into the checkpointed snapshot —
-                # drop the distinct-edge cache
-                e.unpersist()
-            # lazy normalization: a driver literal over the cached snapshot
-            new_state = snapshot.select(
-                "id", (F.col("auth_raw") / F.lit(float(a_mass))).alias("auth")
-            )
-            if eps > 0.0:
-                delta = (
-                    new_state.select("id", F.col("auth").alias("na"))
-                    .join(state.select("id", F.col("auth").alias("oa")), "id")
-                    .agg(F.sum(F.abs(F.col("na") - F.col("oa"))))
-                    .first()[0]
-                    or 0.0
-                )
-                converged = delta <= eps
-            if prev_snapshot is not None:
-                release_local_checkpoint(prev_snapshot)
-            prev_snapshot = snapshot
-            state = new_state
-            metrics.append(
-                {
-                    "iteration": iteration,
-                    "a_mass": a_mass,
-                    "delta": delta if eps > 0 else None,
-                    "total_s": round(time.monotonic() - t0, 4),
-                }
-            )
-
-        # final hub vector: hub_k = norm(E·auth_k) — one extra job
+    # session confs (AQE on): coalescing the two per-iteration gather
+    # exchanges measured ~30% faster (BENCH/ab_hits_r6.json)
+    while iteration < max_iter and not converged:
+        iteration += 1
+        t0 = time.monotonic()
         auth_vec = state.select("id", "auth")
-        h_sums = (
-            e_dst.join(auth_vec, e_dst["dst"] == auth_vec["id"])
-            .groupBy(F.col("src").alias("hid"))
-            .agg(F.sum("auth").alias("h_raw"))
+        if iteration == 1:
+            # hub_0 == the uniform init vector: gather it directly
+            h_tmp = auth_vec.select(
+                F.col("id").alias("hid"), F.col("auth").alias("h")
+            )
+        else:
+            # un-normalized intermediate hub E·auth — the scalar
+            # cancels inside the auth normalization below
+            h_tmp = (
+                e_dst.join(auth_vec, e_dst["dst"] == auth_vec["id"])
+                .groupBy(F.col("src").alias("hid"))
+                .agg(F.sum("auth").alias("h"))
+            )
+        a_sums = (
+            e_src.join(h_tmp, e_src["src"] == F.col("hid"))
+            .groupBy("dst")
+            .agg(F.sum("h").alias("a_raw"))
         )
-        scores_raw = (
-            state.join(h_sums, state["id"] == F.col("hid"), "left")
+        # lazy localCheckpoint: the mass aggregate below is the
+        # materializing action — ONE job computes the iteration,
+        # caches the raw snapshot at the RDD layer, cuts lineage,
+        # and returns the L1 mass scalar
+        snapshot = (
+            state.join(a_sums, state["id"] == a_sums["dst"], "left")
             .select(
-                "id",
-                F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("hub_raw"),
-                "auth",
+                "id", F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("auth_raw")
             )
             .localCheckpoint(eager=False)
         )
-        h_mass = scores_raw.agg(F.sum("hub_raw")).first()[0] or 1.0
+        a_mass = snapshot.agg(F.sum("auth_raw")).first()[0] or 1.0
+        if iteration == 1:
+            # the init state (and everything derived from the raw
+            # input) is now baked into the checkpointed snapshot —
+            # drop the distinct-edge cache
+            e.unpersist()
+        # lazy normalization: a driver literal over the cached snapshot
+        new_state = snapshot.select(
+            "id", (F.col("auth_raw") / F.lit(float(a_mass))).alias("auth")
+        )
+        if eps > 0.0:
+            delta = (
+                new_state.select("id", F.col("auth").alias("na"))
+                .join(state.select("id", F.col("auth").alias("oa")), "id")
+                .agg(F.sum(F.abs(F.col("na") - F.col("oa"))))
+                .first()[0]
+                or 0.0
+            )
+            converged = delta <= eps
+        if prev_snapshot is not None:
+            release_local_checkpoint(prev_snapshot)
+        prev_snapshot = snapshot
+        state = new_state
+        metrics.append(
+            {
+                "iteration": iteration,
+                "a_mass": a_mass,
+                "delta": delta if eps > 0 else None,
+                "total_s": round(time.monotonic() - t0, 4),
+            }
+        )
+
+    # final hub vector: hub_k = norm(E·auth_k) — one extra job
+    auth_vec = state.select("id", "auth")
+    h_sums = (
+        e_dst.join(auth_vec, e_dst["dst"] == auth_vec["id"])
+        .groupBy(F.col("src").alias("hid"))
+        .agg(F.sum("auth").alias("h_raw"))
+    )
+    scores_raw = (
+        state.join(h_sums, state["id"] == F.col("hid"), "left")
+        .select(
+            "id",
+            F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("hub_raw"),
+            "auth",
+        )
+        .localCheckpoint(eager=False)
+    )
+    h_mass = scores_raw.agg(F.sum("hub_raw")).first()[0] or 1.0
 
     e_src.unpersist()
     e_dst.unpersist()

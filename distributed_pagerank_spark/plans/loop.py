@@ -1,89 +1,71 @@
-"""Checkpointed iteration harness shared by all fixpoint algorithms.
+"""Checkpointed fixpoint harness shared by PageRank, CC and label propagation.
 
-Replaces the reference's crash-recovery protocol — full ``State``
-replication master→workers once per iteration
-(``pkg/node/master.go:225-241``, report §III.C: queues drain at iteration
-boundaries, a consistent cut) — with a per-iteration snapshot to
-Parquet + a JSON manifest. The manifest is written LAST and acts as the
-commit marker, so a killed job resumes from the newest *complete*
-iteration (north_rule N4: "resumable from checkpoint with per-partition
-lineage + metrics").
+The reference runs one master loop: scatter, gather, convergence check,
+then a ``State`` snapshot replicated to the workers at the iteration
+boundary (``pkg/node/master.go:106-241``). ``fixpoint`` is that loop as a
+dataflow: each superstep is the algorithm's ``step`` plan (joins and
+aggregates over cached, pre-partitioned edges), and the harness owns
+everything around it:
 
-Each manifest records:
-- iteration number, the loop's convergence statistic (delta / changed),
-- wall-clock per phase (supplied by the algorithm),
-- per-partition lineage: rows per physical partition of the snapshot
-  (``spark_partition_id`` histogram) — the evidence trail for skew.
+- resume: with ``checkpoint_dir`` set, the graph is fingerprinted
+  (``bit_xor(xxhash64(src, dst))`` plus the algorithm's parameters) and
+  the newest complete snapshot of the same job is resumed; a converged or
+  budget-exhausted snapshot is returned as is;
+- one job per iteration: the step's output is a lazy
+  ``localCheckpoint(eager=False)`` whose materializing action is the
+  algorithm's statistic aggregate, so a single job computes the
+  iteration, caches it, cuts its lineage and returns the convergence
+  statistics; the previous iteration's snapshot is then released;
+- durable saves every ``checkpoint_interval`` iterations, on convergence
+  and at ``max_iter``: a Parquet snapshot plus a JSON manifest written
+  last, as the commit marker, so a killed job resumes from the newest
+  complete iteration;
+- one metrics record per iteration, ``{iteration, <statistics>,
+  converged, total_s}``, returned and stored in that iteration's manifest
+  (with the per-partition row counts of the snapshot).
 
-Two truncation modes:
-- ``dir=None`` → ``localCheckpoint(eager=True)``: cuts lineage in memory,
-  cheapest, no resume (used inside tests/benchmarks that don't exercise
-  recovery);
-- ``dir=...`` → Parquet write + read-back: durable, resumable, and also
-  truncates lineage (the read-back plan is a fresh scan).
-
-Fault-tolerance trade (r6): the iteration loops cut lineage every
-iteration with UNREPLICATED lazy ``localCheckpoint`` snapshots — the
-documented Spark trade of executor-loss recomputability for speed. In
-local mode (one JVM) there is nothing to lose; on a cluster, losing an
-executor mid-run aborts the job and recovery is the durable
-``CheckpointManager`` path (pass ``checkpoint_dir=``), which snapshots
-state to Parquet with a commit-marked manifest at the configured
-cadence and resumes exactly — that path is unchanged and
-kill/resume-tested.
+Fault tolerance: without ``checkpoint_dir`` the iteration state lives
+only in unreplicated ``localCheckpoint`` blocks. In local mode (one JVM)
+there is nothing to lose; on a cluster, losing an executor mid-run makes
+the state unrecoverable and aborts the job. Runs that must survive that
+pass ``checkpoint_dir`` and rerun the same call after a failure: it
+resumes from the last durable manifest with identical results.
 
 Filesystem access goes through the Hadoop ``FileSystem`` API (via the
 session's JVM gateway), so the same code works on ``file:``, ``hdfs:``
-or ``s3a:`` checkpoint locations — required on a real cluster.
+or ``s3a:`` checkpoint locations.
 """
 
 from __future__ import annotations
 
 import json
+import time
 from contextlib import contextmanager
-from typing import Any
+from dataclasses import dataclass, field
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
 
-# Runtime confs pinned for the duration of an iteration loop — the
-# DEFAULT, re-measured per algorithm TWICE in r6 (tools/ab_loop_aqe.py,
-# interleaved at sf0.1/local[32]) because the answer depends on the
-# state representation. In the old persist-chain shape, AQE coalescing
-# could BREAK the state/sums co-partitioning that keeps an update join
-# exchange-free (cc measured 1.96× slower AQE-on, pagerank 1.21×). The
-# fourth-wave lazy-checkpoint states FREEZE their layout in the RDD, so
-# that failure mode is gone and AQE coalescing the per-iteration
-# exchanges wins for most loops — re-measured on the checkpoint shape
-# (min of 4, every rep faster): pagerank 0.78×, cc 0.84×, bfs 0.93×,
-# plus the loops that always won (HITS 0.70×, labelprop 0.875×). Those
-# pass KEEP_SESSION_CONFS. Still AQE-off (measured neutral-to-worse on
-# the new shape): betweenness 1.03×, ppr 1.04×, k_core ~1.2×, k_truss
-# ~1.0× — their per-round exchanges are already tiny or their loops are
-# dominated by broadcast shapes AQE re-plans for no gain. AQE stays on
-# for one-time preparation and everything outside loops.
+# Runtime confs pinned inside the k-core, k-truss, SCC, betweenness and
+# PPR loops: AQE measured neutral-to-worse there on the lazy-checkpoint
+# state shape (BENCH/ab_loop_aqe_ckpt_r6.json, sf0.1/local[32]). The other
+# loops run under the session's own confs (AQE on).
 LOOP_CONFS = {"spark.sql.adaptive.enabled": "false"}
-
-# Sentinel for loops measured FASTER under the session's own (AQE-on)
-# configuration: pins nothing, keeps the caller's runtime confs live.
-KEEP_SESSION_CONFS: dict[str, str] = {}
 
 
 @contextmanager
-def loop_conf(spark: SparkSession, confs: dict[str, str] | None = None):
-    """Set per-loop runtime confs, restoring the caller's values on exit.
+def loop_conf(spark: SparkSession):
+    """Apply LOOP_CONFS for a loop, restoring the caller's values on exit.
 
     Mutable runtime SQL confs only; safe on any session (the correctness
     driver's included). Restores on exceptions too, so a failed loop never
-    leaks its conf into the caller's session. ``confs=None`` applies the
-    LOOP_CONFS default; pass KEEP_SESSION_CONFS (or any dict) to override
-    — an empty dict pins nothing.
+    leaks its conf into the caller's session.
     """
-    confs = LOOP_CONFS if confs is None else confs
     old: dict[str, str | None] = {}
-    for k, v in confs.items():
+    for k, v in LOOP_CONFS.items():
         try:
             old[k] = spark.conf.get(k)
         except Exception:
@@ -210,27 +192,18 @@ class CheckpointManager:
     def _iter_dir(self, iteration: int) -> str:
         return f"{self.dir}/iter_{iteration:05d}"
 
-    def save(
-        self,
-        iteration: int,
-        state: DataFrame,
-        meta: dict[str, Any],
-        collect_lineage: bool = True,
-    ) -> DataFrame:
-        """Snapshot ``state``; return the read-back (lineage-truncated) DF."""
-        if not self.enabled():
-            return state.localCheckpoint(eager=True)
+    def save(self, iteration: int, state: DataFrame, meta: dict[str, Any]) -> None:
+        """Snapshot ``state`` with ``meta`` and per-partition row counts."""
         d = self._iter_dir(iteration)
         state.write.mode("overwrite").parquet(f"{d}/state.parquet")
-        reloaded = self.spark.read.parquet(f"{d}/state.parquet")
         manifest = dict(meta)
         manifest["iteration"] = iteration
-        if collect_lineage:
-            manifest["partitions"] = partition_lineage(reloaded)
-            manifest["rows"] = sum(p["rows"] for p in manifest["partitions"])
+        manifest["partitions"] = partition_lineage(
+            self.spark.read.parquet(f"{d}/state.parquet")
+        )
+        manifest["rows"] = sum(p["rows"] for p in manifest["partitions"])
         manifest["complete"] = True
         _write_text(self.spark, f"{d}/{MANIFEST}", json.dumps(manifest, indent=1))
-        return reloaded
 
     def completed_iterations(self) -> list[int]:
         if not self.enabled():
@@ -267,3 +240,117 @@ class CheckpointManager:
         return json.loads(
             _read_text(self.spark, f"{self._iter_dir(iteration)}/{MANIFEST}")
         )
+
+
+@dataclass
+class Fixpoint:
+    state: DataFrame  # the final state, in the initial state's columns
+    iterations: int
+    last: dict[str, Any] | None  # the newest metrics record, if any
+    converged: bool
+    metrics: list[dict[str, Any]] = field(default_factory=list)
+
+
+def fixpoint(
+    spark: SparkSession,
+    name: str,
+    graph: DataFrame,
+    init: Callable[[], DataFrame],
+    step: Callable[[DataFrame, dict[str, Any] | None], tuple[DataFrame, dict]],
+    stats: dict[str, Column],
+    converged: Callable[[dict[str, Any]], bool],
+    *,
+    max_iter: int,
+    num_partitions: int,
+    checkpoint_dir: str | None = None,
+    checkpoint_interval: int = 1,
+    resume: bool = True,
+    identity: str = "",
+    lazy_init: bool = False,
+    inputs: Iterable[DataFrame] = (),
+    metrics_out: list[dict[str, Any]] | None = None,
+) -> Fixpoint:
+    """Iterate ``state ← step(state)`` until ``converged`` or ``max_iter``.
+
+    ``init()`` builds the ``(id, ...)`` start state; it is skipped when a
+    checkpoint of the same job is resumed. The state is hash-partitioned
+    and sorted by ``id``, then cached: lazily when ``lazy_init`` (the
+    first statistic aggregate materializes it), else by an eager count.
+    ``inputs`` are caches the start state reads; they are unpersisted as
+    soon as that state is materialized.
+
+    ``step(state, last)`` plans the next state with any extra columns the
+    ``stats`` aggregates read, plus notes for the metrics record; ``last``
+    is this run's previous record (``None`` on the run's first
+    iteration). ``converged`` decides on the statistics. ``graph``
+    ``(src, dst)`` and ``identity`` (the algorithm's parameters)
+    fingerprint the checkpoint directory. See the module docstring for
+    the lifecycle.
+    """
+    ckpt = CheckpointManager(spark, checkpoint_dir)
+    fingerprint = None
+    if ckpt.enabled():
+        g = graph.agg(
+            F.count("*").alias("m"),
+            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
+        ).first()
+        fingerprint = f"{name}|{identity}|m={g['m']}|h={g['h']}"
+    pending = list(inputs)
+
+    def release_inputs() -> None:
+        while pending:
+            pending.pop().unpersist()
+
+    start, state, last = 0, None, None
+    latest = ckpt.latest() if resume and ckpt.enabled() else None
+    # a manifest of another graph or parameters is stale: start fresh
+    if latest is not None and latest[2].get("fingerprint") == fingerprint:
+        start, state, manifest = latest
+        last = manifest["metrics"]
+        if last["converged"] or start >= max_iter:
+            release_inputs()
+            return Fixpoint(state, start, last, last["converged"])
+    fresh = state is None
+    # id-sorted like the edge tables: the per-iteration sort-merge joins
+    # skip the state-side Sort, and the snapshots inherit the order
+    state = (
+        (init() if fresh else state)
+        .repartition(num_partitions, "id")
+        .sortWithinPartitions("id")
+    )
+    if fresh and lazy_init:
+        state = state.localCheckpoint(eager=False)
+    else:
+        state = state.persist()
+        state.count()
+        release_inputs()
+    cols = state.columns
+    prev, records, iteration, done = state, [], start, False
+    while not done and iteration < max_iter:
+        iteration += 1
+        t0 = time.monotonic()
+        nxt, notes = step(state, records[-1] if records else None)
+        snapshot = nxt.localCheckpoint(eager=False)
+        row = snapshot.agg(*[c.alias(k) for k, c in stats.items()]).first()
+        release_inputs()
+        state = snapshot.select(*cols)
+        release_local_checkpoint(prev)
+        prev = snapshot
+        # sums over an empty state are NULL
+        values = {k: 0 if row[k] is None else row[k] for k in stats}
+        done = converged(values)
+        record = {"iteration": iteration, **values, **notes,
+                  "converged": done,
+                  "total_s": round(time.monotonic() - t0, 4)}
+        records.append(record)
+        if metrics_out is not None:
+            metrics_out.append(record)
+        if ckpt.enabled() and (
+            iteration % checkpoint_interval == 0 or done or iteration >= max_iter
+        ):
+            # durable resume point; iterating continues on the cached copy
+            ckpt.save(iteration, state, {"algo": name, "fingerprint": fingerprint,
+                                         "metrics": record})
+    release_inputs()  # zero iterations: the lazy start state never ran
+    return Fixpoint(state, iteration, records[-1] if records else last, done,
+                    records)

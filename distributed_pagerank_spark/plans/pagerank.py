@@ -29,7 +29,6 @@ table — only the (|V|-sized) rank vector moves.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -41,12 +40,7 @@ from distributed_pagerank_spark.operators.degrees import (
     vertices_from_edges,
 )
 from distributed_pagerank_spark.operators.salting import hub_ids, salted_sum
-from distributed_pagerank_spark.plans.loop import (
-    CheckpointManager,
-    KEEP_SESSION_CONFS,
-    loop_conf,
-    release_local_checkpoint,
-)
+from distributed_pagerank_spark.plans.loop import fixpoint
 
 
 @dataclass
@@ -139,8 +133,6 @@ def pagerank(
     skew_salt: int | None = None,
     hub_threshold: int | None = None,
     num_partitions: int | None = None,
-    truncate_interval: int = 5,  # unused since r6 (lineage cut rides the
-    # per-iteration delta aggregate); kept for API compatibility
 ) -> PageRankResult:
     """Run PageRank to L1 convergence.
 
@@ -151,13 +143,13 @@ def pagerank(
     ``weight_col`` names an edge-weight column: the transition probability
     becomes ``w(u,v) / Σ_x w(u,x)`` instead of ``1 / out_degree`` (dup
     edges merge by summing weight; ``dup_policy`` is subsumed).
+    ``checkpoint_dir`` makes the run resumable (``plans/loop.py``).
     """
     if not 0.0 < c < 1.0:
         raise ValueError("damping c must be in (0,1)")
     num_partitions = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    ckpt = CheckpointManager(spark, checkpoint_dir)
 
     edges_w, verts, edges_cached, n_edges = _prepare_edges(
         spark, edges, dup_policy, num_partitions, weight_col=weight_col
@@ -169,28 +161,15 @@ def pagerank(
         edges_cached.unpersist()
         raise ValueError("empty edge table: no vertices to rank")
 
-    # Resume safety: a checkpoint directory is only valid for the same
-    # (graph, parameters) job. Fingerprint = order-insensitive hash of the
-    # distinct edge set + the semantic knobs; one cheap agg over the cached
-    # edge product, only paid when checkpointing is on.
-    fingerprint = None
-    if ckpt.enabled():
-        agg = edges_w.agg(
-            F.count("*").alias("m"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
+    # the personalization vector is part of the resume fingerprint:
+    # resuming with a different e must NOT continue from the old
+    # checkpoint (the old e is baked into the checkpointed ranks)
+    e_h = "uniform"
+    if e is not None and checkpoint_dir:
+        eagg = e.agg(
+            F.expr("bit_xor(xxhash64(id, round(e, 12)))").alias("eh")
         ).first()
-        # the personalization vector is part of the job identity: resuming
-        # with a different e must NOT continue from the old checkpoint
-        # (the old e is baked into the checkpointed ranks).
-        e_h = "uniform"
-        if e is not None:
-            eagg = e.agg(
-                F.expr("bit_xor(xxhash64(id, round(e, 12)))").alias("eh")
-            ).first()
-            e_h = f"{eagg['eh']}|norm={normalize_e}"
-        fingerprint = f"pagerank|c={c}|eps={eps}|dup={dup_policy}|" \
-                      f"dangling={dangling}|w={weight_col}|" \
-                      f"m={agg['m']}|h={agg['h']}|e={e_h}"
+        e_h = f"{eagg['eh']}|norm={normalize_e}"
 
     # --- E vector ----------------------------------------------------
     if e is not None:
@@ -200,16 +179,15 @@ def pagerank(
         if normalize_e:
             total_e = verts.agg(F.sum("e")).first()[0] or 1.0
             verts = verts.withColumn("e", F.col("e") / F.lit(float(total_e)))
-    # uniform e (1/n) is filled during state init below: the vertex count
-    # rides the state materialization as a broadcast one-row aggregate
-    # instead of paying its own driver job (r6; the empty-graph check
-    # rides the edge-product count above, same ValueError)
+    # uniform e (1/n) is filled by init() below: the vertex count rides
+    # the state materialization as a broadcast one-row aggregate instead
+    # of paying its own driver job
 
     # --- dangling flag (for redistribute mode) -----------------------
     # carried as a state column so the per-iteration dangling mass can be
     # computed inside the iteration's single materializing job (alongside
     # the delta aggregate) — no extra driver-side job per iteration.
-    state_cols = ["id", "e", "rank"]
+    extra_cols = []
     if dangling == "redistribute":
         srcs = edges_w.select(F.col("src").alias("id")).distinct()
         verts = (
@@ -217,244 +195,108 @@ def pagerank(
             .withColumn("dang", F.col("__out").isNull())
             .drop("__out")
         )
-        state_cols = state_cols + ["dang"]
+        extra_cols = ["dang"]
 
-    # --- initial state / resume --------------------------------------
-    start_iter, state, last_delta = 0, None, float("inf")
-    if resume and ckpt.enabled():
-        latest = ckpt.latest()
-        if latest is not None:
-            it, st, manifest = latest
-            if manifest.get("fingerprint") == fingerprint:
-                start_iter, state = it, st
-                last_delta = manifest.get("delta", float("inf"))
-                if manifest.get("converged"):
-                    # same final normalization as a fresh run (reference
-                    # pagerank.go:38-45) — checkpoints store PRE-normalized
-                    # ranks, so resume-after-converged must not skip it or
-                    # a second run returns differently-scaled ranks.
-                    ranks = st.select("id", "rank")
-                    if dangling == "reference":
-                        total = ranks.agg(F.sum("rank")).first()[0] or 1.0
-                        ranks = ranks.withColumn(
-                            "rank", F.col("rank") / F.lit(float(total))
-                        )
-                    edges_w.unpersist()
-                    edges_cached.unpersist()
-                    return PageRankResult(ranks, it, last_delta, True)
-            # mismatched fingerprint: stale dir from another job — start fresh
-    if state is None:
-        # ONE materializing job instead of three (verts count for e,
-        # verts count for rank, state count): the vertex count joins in
-        # as a broadcast one-row aggregate and ``1.0 / __n`` is the same
-        # IEEE double division the former Python literal performed.
+    def init() -> DataFrame:
+        # ``1.0 / __n`` is the same IEEE double division as a Python
+        # literal would be, without a vertex-count job of its own
         cnt = verts.agg(F.count(F.lit(1)).alias("__n"))
-        base = verts.crossJoin(F.broadcast(cnt))
-        e_col = (
-            F.col("e") if e is not None else (F.lit(1.0) / F.col("__n"))
-        )
-        state = base.select(
+        e_col = F.col("e") if e is not None else F.lit(1.0) / F.col("__n")
+        return verts.crossJoin(F.broadcast(cnt)).select(
             "id",
             e_col.alias("e"),
             (F.lit(1.0) / F.col("__n")).alias("rank"),
-            *state_cols[3:],
+            *extra_cols,
         )
-    # co-partition the state with the edge table's layout and pin it;
-    # the iteration chain keeps this partitioning (join outputs inherit
-    # it), so per-iteration exchanges touch only the contribution stream.
-    # Sorted within partitions like the edge product: the scatter and
-    # update sort-merge joins then skip their per-iteration Sort of the
-    # state side (the SMJ output stays id-sorted, so chained snapshots
-    # inherit the ordering for free).
-    state = state.repartition(num_partitions, "id").sortWithinPartitions("id")
-    n = None
-    if start_iter > 0:
-        # resume snapshots (parquet read-back) materialize eagerly as
-        # before — rare path, and the count doubles as the lineage anchor
-        state = state.persist()
-        n = state.count()
-        edges_cached.unpersist()
-        edges_cached = None
-    else:
-        # fresh state is a LAZY localCheckpoint: its materializing action
-        # is the first aggregate that touches it (iteration 1's statistic
-        # job in the default path; the seed aggregates below for the
-        # redistribute/skew paths) — no separate state-count job
-        # (emptiness was already rejected on the edge-product count
-        # above). Uniform across dangling modes, so the planner sees the
-        # same state statistics either way. The distinct-edge cache must
-        # outlive the first materialization; it is released inside the
-        # loop (or below, when a seed aggregate materializes first).
-        state = state.localCheckpoint(eager=False)
 
-    # dangling mass of the CURRENT state; seeded once here (the vertex
-    # count rides the same aggregate — which also materializes a lazy
-    # state), then updated for free each iteration by the materializing
-    # aggregate.
+    n = hubs = None
     dang_mass = 0.0
-    if dangling == "redistribute":
-        seed = state.agg(
-            F.sum(F.when(F.col("dang"), F.col("rank"))).alias("__dm"),
-            F.count(F.lit(1)).alias("__n"),
-        ).first()
-        dang_mass = seed["__dm"] or 0.0
-        if n is None:
-            n = seed["__n"]
-        if edges_cached is not None:
-            edges_cached.unpersist()
-            edges_cached = None
 
-    hubs = None
-    if skew_salt:
-        if n is None:
-            n = state.count()  # materializes the lazy state (skew path)
-            if edges_cached is not None:
-                edges_cached.unpersist()
-                edges_cached = None
-        thr = hub_threshold if hub_threshold is not None else max(
-            64, int(edges_w.count() / max(n, 1)) * 16
+    def step(state: DataFrame, last: dict[str, Any] | None):
+        nonlocal n, hubs, dang_mass
+        if last is None:
+            # first iteration of this run: seed the dangling mass of the
+            # start state (the vertex count rides the same aggregate,
+            # which also materializes a lazy start state) and the hubs
+            if dangling == "redistribute":
+                seed = state.agg(
+                    F.sum(F.when(F.col("dang"), F.col("rank"))).alias("__dm"),
+                    F.count(F.lit(1)).alias("__n"),
+                ).first()
+                dang_mass, n = seed["__dm"] or 0.0, seed["__n"]
+            if skew_salt:
+                n = n or state.count()
+                thr = hub_threshold if hub_threshold is not None else max(
+                    64, int(n_edges / max(n, 1)) * 16
+                )
+                hubs = hub_ids(edges_w, thr).persist()
+                hubs.count()
+        elif dangling == "redistribute":
+            dang_mass = last["dang_mass"]
+
+        ranks = state.select("id", "rank")
+        contrib_expr = (
+            F.col("rank") * F.col("__w") / F.col("out_degree")
+            if weight_col is not None
+            else F.col("rank") / F.col("out_degree")
         )
-        hubs = hub_ids(edges_w, thr).persist()
-        hubs.count()
-
-    metrics: list[dict[str, Any]] = []
-    iteration = start_iter
-    converged = last_delta <= eps
-    delta = last_delta
-    # Iteration state management (r6): each iteration's output is a LAZY
-    # ``localCheckpoint`` whose materializing action is the delta/Σrank
-    # aggregate itself — ONE job computes the iteration, caches it at the
-    # RDD layer, cuts lineage, and returns the convergence statistics
-    # (``rank_old`` rides the snapshot so the delta needs no second
-    # input). ``localCheckpoint`` preserves the physical partitioning and
-    # ordering in the LogicalRDD leaf, so the update join never
-    # re-exchanges the state side; and with lineage cut EVERY iteration
-    # for free, the former 2^truncate_interval Catalyst plan growth (the
-    # state is referenced twice per iteration: scatter + update) and its
-    # eager-truncation jobs disappear — iteration wall-clock measured
-    # flat at ~0.4 s/iter vs 0.40→1.24 s growth over 5 iterations in the
-    # persist-chain shape (sf0.1 transcripts, local[32]).
-    prev_snapshot = state
-    last_rank_sum = None  # Σrank of the final state (see below)
-
-    # KEEP_SESSION_CONFS since the r6 fourth wave: with checkpointed
-    # state the layout AQE used to break is frozen in the RDD, and AQE
-    # coalescing the per-iteration contribution shuffle is a measured win
-    # (tools/ab_loop_aqe.py on the checkpoint shape, min of 4, every rep
-    # faster: 3.84 -> 3.01 s AQE-on at sf0.1/local[32]; the old
-    # persist-chain shape measured the OPPOSITE, 1.21x slower).
-    with loop_conf(spark, confs=KEEP_SESSION_CONFS):
-        while not converged and iteration < max_iter:
-            iteration += 1
-            t0 = time.monotonic()
-
-            ranks = state.select("id", "rank")
-            contrib_expr = (
-                F.col("rank") * F.col("__w") / F.col("out_degree")
-                if weight_col is not None
-                else F.col("rank") / F.col("out_degree")
+        contribs = edges_w.join(ranks, edges_w["src"] == ranks["id"]).select(
+            "src", "dst", contrib_expr.alias("contrib")
+        )
+        if hubs is not None:
+            sums = salted_sum(
+                contribs, hubs, key="dst", value="contrib",
+                salt_buckets=skew_salt, salt_source="src",
             )
-            contribs = edges_w.join(ranks, edges_w["src"] == ranks["id"]).select(
-                "src", "dst", contrib_expr.alias("contrib")
-            )
-            if hubs is not None:
-                sums = salted_sum(
-                    contribs, hubs, key="dst", value="contrib",
-                    salt_buckets=skew_salt, salt_source="src",
-                )
-            else:
-                sums = contribs.groupBy("dst").agg(F.sum("contrib").alias("sum"))
+        else:
+            sums = contribs.groupBy("dst").agg(F.sum("contrib").alias("sum"))
 
-            base = F.coalesce(F.col("sum"), F.lit(0.0))
-            if dangling == "redistribute":
-                base = base + F.lit(float(dang_mass) / n)
+        base = F.coalesce(F.col("sum"), F.lit(0.0))
+        if dangling == "redistribute":
+            base = base + F.lit(float(dang_mass) / n)
+        # rank_old rides the snapshot so the L1 delta needs no second input
+        new_state = state.join(sums, state["id"] == sums["dst"], "left").select(
+            "id",
+            "e",
+            F.col("rank").alias("rank_old"),
+            (F.lit(c) * base + F.lit(1.0 - c) * F.col("e")).alias("rank"),
+            *extra_cols,
+        )
+        return new_state, {}
 
-            new_state = (
-                state.join(sums, state["id"] == sums["dst"], "left")
-                .select(
-                    "id",
-                    "e",
-                    F.col("rank").alias("rank_old"),
-                    (F.lit(c) * base + F.lit(1.0 - c) * F.col("e")).alias("rank"),
-                    *state_cols[3:],
-                )
-            )
-
-            t1 = time.monotonic()
-            # ONE job per iteration: the delta/Σrank aggregate below is the
-            # materializing action of the lazy checkpoint — it computes the
-            # iteration, caches the snapshot (rank_old included, so the L1
-            # delta needs no second input), cuts lineage, and returns the
-            # convergence statistics in the same pass.
-            agg_exprs = [F.sum(F.abs(F.col("rank") - F.col("rank_old"))).alias("delta"),
-                         # rides the same job so the final 'reference'
-                         # normalization needs no extra aggregate pass
-                         F.sum("rank").alias("rank_sum")]
-            if dangling == "redistribute":
-                agg_exprs.append(
-                    F.sum(F.when(F.col("dang"), F.col("rank"))).alias("dang_mass")
-                )
-            snapshot = new_state.localCheckpoint(eager=False)
-            t2 = time.monotonic()
-            observed = snapshot.agg(*agg_exprs).first()
-            if edges_cached is not None:
-                # the first materialization has now baked the vertex set
-                # into the checkpointed state — drop the distinct-edge cache
-                edges_cached.unpersist()
-                edges_cached = None
-            delta = observed["delta"] or 0.0
-            last_rank_sum = observed["rank_sum"]
-            if dangling == "redistribute":
-                dang_mass = observed["dang_mass"] or 0.0
-            t3 = time.monotonic()
-            converged = delta <= eps
-            state = snapshot.select(*state_cols)
-            # free the previous iteration's cached rank vector (handles both
-            # the LogicalRDD snapshots and the persisted init state)
-            if prev_snapshot is not None:
-                release_local_checkpoint(prev_snapshot)
-            prev_snapshot = snapshot
-
-            iter_metrics = {
-                "iteration": iteration,
-                "delta": delta,
-                "converged": converged,
-                "update_plan_s": round(t1 - t0, 4),
-                "materialize_s": round(t2 - t1, 4),
-                "delta_agg_s": round(t3 - t2, 4),
-            }
-            do_ckpt = ckpt.enabled() and (
-                iteration % checkpoint_interval == 0 or converged or iteration >= max_iter
-            )
-            if do_ckpt:
-                # durable snapshot (resume point); keep iterating on the cached
-                # copy — the parquet read-back is only used by resume.
-                ckpt.save(
-                    iteration,
-                    state,
-                    {"algo": "pagerank", "delta": delta, "converged": converged,
-                     "fingerprint": fingerprint, "metrics": iter_metrics},
-                )
-            iter_metrics["total_s"] = round(time.monotonic() - t0, 4)
-            metrics.append(iter_metrics)
+    stats = {
+        "delta": F.sum(F.abs(F.col("rank") - F.col("rank_old"))),
+        # Σrank of the final state feeds the 'reference' normalization
+        "rank_sum": F.sum("rank"),
+    }
+    if dangling == "redistribute":
+        stats["dang_mass"] = F.sum(F.when(F.col("dang"), F.col("rank")))
+    run = fixpoint(
+        spark, "pagerank", edges_w, init, step, stats,
+        lambda s: s["delta"] <= eps,
+        max_iter=max_iter, num_partitions=num_partitions,
+        checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
+        resume=resume, lazy_init=True, inputs=[edges_cached],
+        identity=f"c={c}|eps={eps}|dup={dup_policy}|dangling={dangling}|"
+                 f"w={weight_col}|e={e_h}",
+    )
 
     # --- final normalization (reference: pagerank.go:38-45) ----------
-    # Σrank of the final state was observed on its materializing job
-    # (state after a truncation holds the same rows, so the sum is still
-    # valid); only a zero-iteration run (resume already past eps) pays
-    # the aggregate.
-    ranks = state.select("id", "rank")
+    # checkpoints store PRE-normalized ranks; Σrank of the final state
+    # was observed on its materializing job, so only a zero-iteration
+    # fresh run pays the aggregate
+    ranks = run.state.select("id", "rank")
     if dangling == "reference":
         total = (
-            last_rank_sum
-            if last_rank_sum is not None
+            run.last["rank_sum"]
+            if run.last is not None
             else ranks.agg(F.sum("rank")).first()[0]
         ) or 1.0
         ranks = ranks.withColumn("rank", F.col("rank") / F.lit(float(total)))
 
     edges_w.unpersist()
-    if edges_cached is not None:  # zero-iteration run: nothing materialized
-        edges_cached.unpersist()
     if hubs is not None:
         hubs.unpersist()
-    return PageRankResult(ranks, iteration, delta, converged, metrics)
+    delta = run.last["delta"] if run.last is not None else float("inf")
+    return PageRankResult(ranks, run.iterations, delta, run.converged,
+                          run.metrics)

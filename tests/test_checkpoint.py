@@ -83,3 +83,58 @@ def test_components_resume(spark, tmp_path):
     got = {r["id"]: r["component"] for r in full.collect()}
     want = {r["id"]: r["component"] for r in clean.collect()}
     assert got == want
+
+
+def test_label_propagation_resume(spark, tmp_path):
+    """A run stopped after 3 rounds, then resumed to 10, equals a clean
+    10-round run; the stopped run leaves a resume point at its last round."""
+    from distributed_pagerank_spark.plans.labelprop import label_propagation
+
+    ck = str(tmp_path / "ck")
+    edges = edges_df(spark, [(i, i + 1) for i in range(12)])  # never settles
+    partial_metrics = []
+    label_propagation(spark, edges, rounds=3, checkpoint_dir=ck,
+                      metrics_out=partial_metrics)
+    assert not partial_metrics[-1]["converged"]
+    assert CheckpointManager(spark, ck).completed_iterations() == [2, 3]
+    resumed_metrics = []
+    resumed = label_propagation(spark, edges, rounds=10, checkpoint_dir=ck,
+                                metrics_out=resumed_metrics)
+    assert [m["iteration"] for m in resumed_metrics][0] == 4
+    clean = label_propagation(spark, edges, rounds=10)
+    got = {r["id"]: r["label"] for r in resumed.collect()}
+    want = {r["id"]: r["label"] for r in clean.collect()}
+    assert got == want
+
+
+def test_components_budget_stop_leaves_manifest(spark, tmp_path):
+    """Stopping at max_iter saves a resume point even off the
+    checkpoint_interval cadence."""
+    ck = str(tmp_path / "ck")
+    edges = edges_df(spark, [(i, i + 1) for i in range(20)])
+    metrics = []
+    connected_components(spark, edges, max_iter=3, checkpoint_interval=2,
+                         checkpoint_dir=ck, algorithm="hashmin",
+                         metrics_out=metrics)
+    assert not metrics[-1]["converged"]
+    mgr = CheckpointManager(spark, ck)
+    assert mgr.completed_iterations() == [2, 3]
+    assert mgr.manifest(3)["metrics"]["iteration"] == 3
+
+
+def test_loop_metrics_share_one_schema(spark):
+    """PageRank, CC and LPA report one record per iteration with the same
+    iteration / converged / total_s keys."""
+    from distributed_pagerank_spark.plans.labelprop import label_propagation
+
+    edges = edges_df(spark, CHAIN5)
+    cc_metrics, lpa_metrics = [], []
+    pr_metrics = pagerank(spark, edges, max_iter=3).metrics
+    connected_components(spark, edges, metrics_out=cc_metrics)
+    label_propagation(spark, edges, rounds=3, metrics_out=lpa_metrics)
+    for metrics in (pr_metrics, cc_metrics, lpa_metrics):
+        assert metrics
+        assert [m["iteration"] for m in metrics] == list(
+            range(1, len(metrics) + 1))
+        for m in metrics:
+            assert {"iteration", "converged", "total_s"} <= m.keys()

@@ -53,8 +53,7 @@ def test_hits_eps_convergence_and_truncation(spark):
     # a bipartite-ish graph converges; run far past truncate_interval so
     # the lineage-truncation path is exercised, and eps stops the loop
     pairs = [(0, 10), (1, 10), (1, 11), (2, 11), (3, 10), (3, 11)]
-    res = hits(spark, edges_df(spark, pairs), max_iter=50, eps=1e-12,
-               truncate_interval=3)
+    res = hits(spark, edges_df(spark, pairs), max_iter=50, eps=1e-12)
     assert res.converged
     assert res.iterations < 50
     want = hits_numpy(pairs, res.iterations)

@@ -150,7 +150,6 @@ def test_redistribute_no_extra_jobs_per_iteration(spark):
             sc.setJobGroup("", "")
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    # stay below truncate_interval so lineage truncation doesn't add jobs
     ref = jobs_for("ref-4", 4, "reference") - jobs_for("ref-2", 2, "reference")
     red = jobs_for("red-4", 4, "redistribute") - jobs_for("red-2", 2, "redistribute")
     assert red == ref  # zero extra jobs per iteration from redistribution
