@@ -11,15 +11,23 @@ everything around it:
   (``bit_xor(xxhash64(src, dst))`` plus the algorithm's parameters) and
   the newest complete snapshot of the same job is resumed; a converged or
   budget-exhausted snapshot is returned as is;
-- one job per iteration: the step's output is a lazy
-  ``localCheckpoint(eager=False)`` whose materializing action is the
-  algorithm's statistic aggregate, so a single job computes the
-  iteration, caches it, cuts its lineage and returns the convergence
-  statistics; the previous iteration's snapshot is then released;
-- durable saves every ``checkpoint_interval`` iterations, on convergence
-  and at ``max_iter``: a Parquet snapshot plus a JSON manifest written
-  last, as the commit marker, so a killed job resumes from the newest
-  complete iteration;
+- one Spark action per iteration: the step's output is a lazy
+  ``localCheckpoint(eager=False)`` snapshot, and the iteration's only
+  action is a write of it. That one job computes the iteration, caches
+  it and cuts its lineage; the convergence statistics are observed on
+  the same job (``DataFrame.observe`` with an ``Observation``), so no
+  second aggregate runs. The previous iteration's snapshot is then
+  released;
+- durable saves every ``checkpoint_interval`` iterations and at
+  ``max_iter``: on those iterations (known before the job runs) the
+  write goes to a Parquet snapshot of the state columns, on the others
+  to the ``noop`` sink. A run that converges between cadence points
+  writes its cached state through the same write. The JSON manifest is
+  written after the job, as the commit marker, so a killed job resumes
+  from the newest complete iteration;
+- per-partition lineage comes from the committed part files' Parquet
+  footers (``part-NNNNN`` is written by state partition ``NNNNN``), read
+  on the driver without a Spark job;
 - one metrics record per iteration, ``{iteration, <statistics>,
   converged, total_s}``, returned and stored in that iteration's manifest
   (with the per-partition row counts of the snapshot).
@@ -44,7 +52,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
@@ -164,21 +172,37 @@ def _read_text(spark: SparkSession, path: str) -> str:
         stream.close()
 
 
-def partition_lineage(df: DataFrame) -> list[dict[str, int]]:
-    """Rows per physical partition — the per-partition lineage record."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .agg(F.count("*").alias("rows"))
-        .orderBy("partition_id")
-        .collect()
-    )
-    return [{"partition_id": r["partition_id"], "rows": r["rows"]} for r in rows]
+def footer_lineage(spark: SparkSession, path: str) -> list[dict[str, int]]:
+    """Rows per state partition of a committed Parquet snapshot.
+
+    Read from the part files' footers on the driver (no Spark job): file
+    ``part-NNNNN-*`` was written by partition ``NNNNN``. Empty partitions
+    write no file and are absent, as in ``groupBy(spark_partition_id())``
+    (an all-empty snapshot writes one file, with 0 rows).
+    """
+    fs, hpath, jvm = _fs(spark, path)
+    conf = spark._jsc.hadoopConfiguration()
+    hadoop = jvm.org.apache.parquet.hadoop
+    parts = []
+    for status in fs.listStatus(hpath):
+        name = status.getPath().getName()
+        if not name.startswith("part-"):
+            continue
+        reader = hadoop.ParquetFileReader.open(
+            hadoop.util.HadoopInputFile.fromStatus(status, conf)
+        )
+        try:
+            parts.append({"partition_id": int(name.split("-")[1]),
+                          "rows": reader.getRecordCount()})
+        finally:
+            reader.close()
+    return sorted(parts, key=lambda p: p["partition_id"])
 
 
 class CheckpointManager:
     """Per-iteration snapshot + manifest directory layout::
 
-        {dir}/iter_00003/state.parquet/...
+        {dir}/iter_00003/state.parquet/part-NNNNN-*.parquet
         {dir}/iter_00003/manifest.json      <- written last (commit marker)
     """
 
@@ -192,18 +216,27 @@ class CheckpointManager:
     def _iter_dir(self, iteration: int) -> str:
         return f"{self.dir}/iter_{iteration:05d}"
 
-    def save(self, iteration: int, state: DataFrame, meta: dict[str, Any]) -> None:
-        """Snapshot ``state`` with ``meta`` and per-partition row counts."""
-        d = self._iter_dir(iteration)
-        state.write.mode("overwrite").parquet(f"{d}/state.parquet")
-        manifest = dict(meta)
-        manifest["iteration"] = iteration
-        manifest["partitions"] = partition_lineage(
-            self.spark.read.parquet(f"{d}/state.parquet")
-        )
-        manifest["rows"] = sum(p["rows"] for p in manifest["partitions"])
-        manifest["complete"] = True
-        _write_text(self.spark, f"{d}/{MANIFEST}", json.dumps(manifest, indent=1))
+    def _state_path(self, iteration: int) -> str:
+        return f"{self._iter_dir(iteration)}/state.parquet"
+
+    def write(self, df: DataFrame, iteration: int | None) -> None:
+        """Run ``df`` as one job: written as ``iteration``'s Parquet
+        snapshot, or to the ``noop`` sink when ``iteration`` is None."""
+        writer = df.write.mode("overwrite")
+        if iteration is None:
+            writer.format("noop").save()
+        else:
+            writer.parquet(self._state_path(iteration))
+
+    def commit(self, iteration: int, meta: dict[str, Any]) -> None:
+        """Commit ``iteration``'s written snapshot: its manifest holds
+        ``meta`` and the snapshot's per-partition row counts."""
+        partitions = footer_lineage(self.spark, self._state_path(iteration))
+        manifest = {**meta, "iteration": iteration, "partitions": partitions,
+                    "rows": sum(p["rows"] for p in partitions),
+                    "complete": True}
+        _write_text(self.spark, f"{self._iter_dir(iteration)}/{MANIFEST}",
+                    json.dumps(manifest, indent=1))
 
     def completed_iterations(self) -> list[int]:
         if not self.enabled():
@@ -234,7 +267,7 @@ class CheckpointManager:
         it = done[-1]
         d = self._iter_dir(it)
         manifest = json.loads(_read_text(self.spark, f"{d}/{MANIFEST}"))
-        return it, self.spark.read.parquet(f"{d}/state.parquet"), manifest
+        return it, self.spark.read.parquet(self._state_path(it)), manifest
 
     def manifest(self, iteration: int) -> dict[str, Any]:
         return json.loads(
@@ -275,7 +308,7 @@ def fixpoint(
     ``init()`` builds the ``(id, ...)`` start state; it is skipped when a
     checkpoint of the same job is resumed. The state is hash-partitioned
     and sorted by ``id``, then cached: lazily when ``lazy_init`` (the
-    first statistic aggregate materializes it), else by an eager count.
+    first iteration's job materializes it), else by an eager count.
     ``inputs`` are caches the start state reads; they are unpersisted as
     soon as that state is materialized.
 
@@ -325,19 +358,29 @@ def fixpoint(
         state.count()
         release_inputs()
     cols = state.columns
+    aggs = [c.alias(k) for k, c in stats.items()]
     prev, records, iteration, done = state, [], start, False
     while not done and iteration < max_iter:
         iteration += 1
         t0 = time.monotonic()
         nxt, notes = step(state, records[-1] if records else None)
         snapshot = nxt.localCheckpoint(eager=False)
-        row = snapshot.agg(*[c.alias(k) for k, c in stats.items()]).first()
+        save = ckpt.enabled() and (
+            iteration % checkpoint_interval == 0 or iteration >= max_iter
+        )
+        obs = Observation()
+        # the iteration's one job: computes, caches and truncates the
+        # snapshot, writes it (durably on a save iteration) and observes
+        # the statistics on the way
+        ckpt.write(snapshot.observe(obs, *aggs).select(*cols),
+                   iteration if save else None)
         release_inputs()
         state = snapshot.select(*cols)
         release_local_checkpoint(prev)
         prev = snapshot
         # sums over an empty state are NULL
-        values = {k: 0 if row[k] is None else row[k] for k in stats}
+        observed = obs.get
+        values = {k: 0 if observed[k] is None else observed[k] for k in stats}
         done = converged(values)
         record = {"iteration": iteration, **values, **notes,
                   "converged": done,
@@ -345,12 +388,14 @@ def fixpoint(
         records.append(record)
         if metrics_out is not None:
             metrics_out.append(record)
-        if ckpt.enabled() and (
-            iteration % checkpoint_interval == 0 or done or iteration >= max_iter
-        ):
+        if ckpt.enabled() and done and not save:
+            # converged between cadence points: save the cached state
+            save = True
+            ckpt.write(state, iteration)
+        if save:
             # durable resume point; iterating continues on the cached copy
-            ckpt.save(iteration, state, {"algo": name, "fingerprint": fingerprint,
-                                         "metrics": record})
+            ckpt.commit(iteration, {"algo": name, "fingerprint": fingerprint,
+                                    "metrics": record})
     release_inputs()  # zero iterations: the lazy start state never ran
     return Fixpoint(state, iteration, records[-1] if records else last, done,
                     records)

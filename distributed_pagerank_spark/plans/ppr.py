@@ -91,12 +91,18 @@ def personalized_pagerank_multi(
     # (k=0) pins and counts it, keeping the check and a materialized
     # backing on that path too.
     state = e_vec.select("set_id", "id", F.col("e").alias("rank"))
+
+    def empty_seeds(snapshot: DataFrame) -> ValueError:
+        # the caller gets no result to own: release every cache first
+        release_local_checkpoint(snapshot)
+        edges_w.unpersist()
+        e_vec.unpersist()
+        return ValueError("empty seeds: no personalization vectors to rank")
+
     if k < 1:
         state = state.persist()
         if state.count() == 0:
-            raise ValueError(
-                "empty seeds: no personalization vectors to rank"
-            )
+            raise empty_seeds(state)
 
     metrics = metrics_out if metrics_out is not None else []
     prev_snapshot = state if k < 1 else None
@@ -134,9 +140,7 @@ def personalized_pagerank_multi(
                 if rows == 0:
                     # state ⊇ the seed support (full-outer against e_vec):
                     # an empty barrier means the seeds were empty
-                    raise ValueError(
-                        "empty seeds: no personalization vectors to rank"
-                    )
+                    raise empty_seeds(new_state)
                 if prev_snapshot is not None:
                     release_local_checkpoint(prev_snapshot)
                 prev_snapshot = new_state

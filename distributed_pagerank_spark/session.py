@@ -9,8 +9,11 @@ small frontiers and splits skewed join partitions at 100 TB scale.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
+
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
 
 
 def get_spark(
@@ -23,6 +26,8 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; under
     ``spark-submit`` on a cluster, leave it None and don't set the env var.
+    Warns when an existing session keeps a different
+    ``spark.sql.codegen.cache.maxEntries`` than the one requested.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
@@ -52,8 +57,6 @@ def get_spark(
         # GC'd once unreferenced
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        # Iterative plans grow deep; keep the analyzer/optimizer from
-        # re-walking stale cached plan fragments.
         "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
         # The default 100-entry generated-class cache thrashes in any
         # long-lived session running many distinct queries: each query
@@ -66,13 +69,24 @@ def get_spark(
         # expression-interpreted queries unmoved. Scale-neutral: the
         # cache holds compiled bytecode keyed by source (KBs/entry), and
         # the value bounds memory, not data size.
-        "spark.sql.codegen.cache.maxEntries": "8192",
+        CODEGEN_CACHE: "8192",
     }
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # a static conf: an existing session returned by getOrCreate() keeps
+    # its own value, and the builder's is dropped without an error
+    kept = spark.conf.get(CODEGEN_CACHE)
+    if kept != conf[CODEGEN_CACHE]:
+        warnings.warn(
+            f"{CODEGEN_CACHE} is {kept}, not the "
+            f"requested {conf[CODEGEN_CACHE]}: getOrCreate() returned an "
+            "existing session, whose static confs cannot change",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     spark.sparkContext.setLogLevel("WARN")
     if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
         base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"

@@ -5,20 +5,24 @@ import pytest
 from distributed_pagerank_spark.session import get_spark
 
 
+# the shared session's get_spark arguments; a test calling get_spark again
+# passes these so getOrCreate() re-applies the same runtime confs
+SESSION_ARGS = dict(
+    app_name="dps-tests",
+    master="local[4]",
+    shuffle_partitions=2,
+    extra_conf={
+        "spark.sql.warehouse.dir": "/tmp/dps-warehouse",
+        # AQE off in tests: micro-graphs don't need runtime re-planning
+        # and it adds per-query latency to 70-iteration loops.
+        "spark.sql.adaptive.enabled": "false",
+    },
+)
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(
-        app_name="dps-tests",
-        master="local[4]",
-        shuffle_partitions=2,
-        extra_conf={
-            "spark.sql.warehouse.dir": "/tmp/dps-warehouse",
-            # AQE off in tests: micro-graphs don't need runtime re-planning
-            # and it adds per-query latency to 70-iteration loops.
-            "spark.sql.adaptive.enabled": "false",
-        },
-    )
-    yield s
+    yield get_spark(**SESSION_ARGS)
 
 
 def edges_df(spark, pairs):

@@ -1,6 +1,9 @@
 from __future__ import annotations
 
 import math
+import os
+
+from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.plans.loop import CheckpointManager
 from distributed_pagerank_spark.plans.pagerank import pagerank
@@ -53,7 +56,7 @@ def test_incomplete_snapshot_ignored(spark, tmp_path):
     edges = edges_df(spark, CHAIN5)
     pagerank(spark, edges, eps=1e-6, max_iter=2, checkpoint_dir=ck)
     # simulate a crash mid-write of iteration 3: state dir without manifest
-    import os, shutil
+    import shutil
     src = os.path.join(ck, "iter_00002")
     dst = os.path.join(ck, "iter_00003")
     shutil.copytree(src, dst)
@@ -138,3 +141,61 @@ def test_loop_metrics_share_one_schema(spark):
             range(1, len(metrics) + 1))
         for m in metrics:
             assert {"iteration", "converged", "total_s"} <= m.keys()
+
+
+def test_durable_saves_add_no_jobs_per_iteration(spark, tmp_path):
+    """The durable save is the iteration's one job: two more iterations
+    cost as many Spark jobs with a checkpoint_dir as without one."""
+    sc = spark.sparkContext
+    edges = generate_graph(spark, 20, max_edges=3, seed=2)
+
+    def jobs_for(max_iter, ck):
+        group = f"pr-{max_iter}-{ck is not None}"
+        sc.setJobGroup(group, group)
+        try:
+            pagerank(spark, edges, eps=0.0, max_iter=max_iter,
+                     checkpoint_dir=ck)
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    plain = jobs_for(4, None) - jobs_for(2, None)
+    durable = (jobs_for(4, str(tmp_path / "ck4"))
+               - jobs_for(2, str(tmp_path / "ck2")))
+    assert plain > 0 and durable == plain
+
+
+def test_manifest_partitions_are_state_partitions(spark, tmp_path):
+    """The manifest's per-partition row counts are those of the final
+    state's partitions, one per part-NNNNN file of the snapshot."""
+    ck = str(tmp_path / "ck")
+    edges = generate_graph(spark, 40, max_edges=3, seed=5)
+    res = pagerank(spark, edges, eps=0.0, max_iter=3, checkpoint_dir=ck,
+                   num_partitions=4)
+    want = {
+        r["pid"]: r["rows"]
+        for r in res.ranks.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count("*").alias("rows")).collect()
+    }
+    m = CheckpointManager(spark, ck).manifest(3)
+    got = {p["partition_id"]: p["rows"] for p in m["partitions"]}
+    assert got == want and len(want) > 1
+    files = os.listdir(os.path.join(ck, "iter_00003", "state.parquet"))
+    assert {int(f.split("-")[1]) for f in files
+            if f.startswith("part-")} == set(got)
+
+
+def test_components_self_loops_only(spark, tmp_path):
+    """Self-loops only: the symmetrized edges are empty, and every vertex
+    is its own component, saved off the checkpoint_interval cadence when
+    the run converges after one iteration."""
+    ck = str(tmp_path / "ck")
+    edges = edges_df(spark, [(0, 0), (1, 1), (7, 7)])
+    comps = connected_components(spark, edges, checkpoint_dir=ck,
+                                 checkpoint_interval=2)
+    assert {r["id"]: r["component"] for r in comps.collect()} == {
+        0: 0, 1: 1, 7: 7}
+    mgr = CheckpointManager(spark, ck)
+    assert mgr.completed_iterations() == [1]
+    assert mgr.manifest(1)["metrics"]["converged"]
+    assert mgr.manifest(1)["rows"] == 3

@@ -50,8 +50,8 @@ def test_hits_star_semantics(spark):
 
 
 def test_hits_eps_convergence_and_truncation(spark):
-    # a bipartite-ish graph converges; run far past truncate_interval so
-    # the lineage-truncation path is exercised, and eps stops the loop
+    # a bipartite-ish graph converges over many lazily checkpointed
+    # iterations, and eps stops the loop
     pairs = [(0, 10), (1, 10), (1, 11), (2, 11), (3, 10), (3, 11)]
     res = hits(spark, edges_df(spark, pairs), max_iter=50, eps=1e-12)
     assert res.converged

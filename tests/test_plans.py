@@ -92,9 +92,10 @@ def test_pagerank_iteration_no_extra_state_exchange(spark):
     # own job); at 85M+ edges these are sort-merge joins — probe that shape
     prior_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    # pin AQE off for the probe: the engine's loops run AQE-off (loop_conf)
-    # and AQE splits one count() into several jobs, breaking the one-job
-    # assertion. The session fixture disables it, but getOrCreate() from
+    # pin AQE off for the probe: AQE splits one count() into several jobs,
+    # breaking the one-job assertion (only the k-core, truss, SCC,
+    # betweenness and PPR loops run AQE-off, through loop_conf).
+    # The session fixture disables it, but getOrCreate() from
     # any other test's get_spark() call re-applies builder confs to the
     # SHARED session — so the ambient value cannot be trusted here.
     prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")

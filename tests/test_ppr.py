@@ -94,3 +94,16 @@ def test_ppr_empty_seeds_raises(spark):
     seeds = spark.createDataFrame([], "set_id int, id long, weight double")
     with pytest.raises(ValueError):
         personalized_pagerank_multi(spark, edges, seeds, k=2)
+
+
+@pytest.mark.parametrize("k", [0, 2])
+def test_ppr_empty_seeds_releases_caches(spark, k):
+    """The empty-seeds error leaves no cached RDD behind, on the barrier
+    path (k=2) and on the zero-iteration path (k=0)."""
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    seeds = spark.createDataFrame([], "set_id int, id long, weight double")
+    before = persistent().size()
+    with pytest.raises(ValueError):
+        personalized_pagerank_multi(spark, edges, seeds, k=k)
+    assert persistent().size() == before
