@@ -1,4 +1,5 @@
-"""Checkpointed fixpoint harness shared by PageRank, CC and label propagation.
+"""Checkpointed fixpoint harness shared by PageRank, CC, label propagation
+and SCC's color and reach fixpoints.
 
 The reference runs one master loop: scatter, gather, convergence check,
 then a ``State`` snapshot replicated to the workers at the iteration
@@ -11,13 +12,19 @@ everything around it:
   (``bit_xor(xxhash64(src, dst))`` plus the algorithm's parameters) and
   the newest complete snapshot of the same job is resumed; a converged or
   budget-exhausted snapshot is returned as is;
-- one Spark action per iteration: the step's output is a lazy
-  ``localCheckpoint(eager=False)`` snapshot, and the iteration's only
-  action is a write of it. That one job computes the iteration, caches
-  it and cuts its lineage; the convergence statistics are observed on
-  the same job (``DataFrame.observe`` with an ``Observation``), so no
-  second aggregate runs. The previous iteration's snapshot is then
-  released;
+- one Spark action per iteration: the start state (fresh or resumed) and
+  each step's output are lazy ``localCheckpoint(eager=False)`` leaves,
+  and the iteration's only action is a write of its snapshot. That one
+  job computes the iteration (the first one also the start state),
+  caches it and cuts its lineage; the convergence statistics are
+  observed on the same job (``DataFrame.observe`` with an
+  ``Observation``), so no second aggregate runs. The previous leaf is
+  then released, and the final one is returned for the caller to free;
+- bounded size estimates: a leaf inherits the estimated size of the plan
+  it was cut from, which a step joining the state with itself (a
+  pointer jump) squares every iteration, until planning stalls in
+  big-integer arithmetic. A leaf whose estimate exceeds Spark's
+  unknown-size default is re-wrapped without it (``bound_estimate``);
 - durable saves every ``checkpoint_interval`` iterations and at
   ``max_iter``: on those iterations (known before the job runs) the
   write goes to a Parquet snapshot of the state columns, on the others
@@ -94,23 +101,6 @@ def loop_conf(spark: SparkSession):
             except Exception:
                 pass
 
-_OBS_COUNTER = 0
-
-
-def obs_name(prefix: str) -> str:
-    """Session-unique Observation name.
-
-    ``CollectMetrics`` names must be unique within a plan tree; result
-    DataFrames keep their observe nodes (post-truncation iterations), so
-    two algorithm runs in one session would collide on plain
-    ``{prefix}_{iteration}`` names the moment their results are joined
-    ([DUPLICATED_METRICS_NAME]). A process-wide counter keeps names unique
-    across calls while staying deterministic for tests.
-    """
-    global _OBS_COUNTER
-    _OBS_COUNTER += 1
-    return f"{prefix}_r{_OBS_COUNTER}"
-
 
 def release_local_checkpoint(df: DataFrame) -> None:
     """Release an iteration-state DataFrame the loop owns.
@@ -145,6 +135,40 @@ def release_local_checkpoint(df: DataFrame) -> None:
         df.unpersist()
     except Exception:
         pass
+
+
+# Spark's size estimate for a relation of unknown size
+# (``spark.sql.defaultSizeInBytes``)
+UNKNOWN_SIZE = 2**63 - 1
+
+
+def bound_estimate(leaf: DataFrame) -> DataFrame:
+    """``leaf`` (a ``localCheckpoint``) without a size estimate above
+    UNKNOWN_SIZE.
+
+    A checkpoint leaf keeps the estimated size of the plan it was cut from
+    (``LogicalRDD.originStats``), and a join estimates the product of its
+    sides, so a step that joins the state with itself (a pointer jump)
+    squares the estimate every iteration: its bit length doubles until
+    planning stalls in big-integer multiplies. Above UNKNOWN_SIZE the
+    estimate says nothing a planner can use, so the same RDD, partitioning
+    and ordering are re-wrapped without it; smaller estimates are kept.
+    """
+    plan = leaf._jdf.queryExecution().analyzed()
+    if plan.stats().sizeInBytes() <= UNKNOWN_SIZE:
+        return leaf
+    session = leaf.sparkSession
+    jvm, jsession = session._jvm, session._jsparkSession
+    option = jvm.scala.Option
+    unbounded = plan.copy(
+        plan.output(), plan.rdd(), plan.outputPartitioning(),
+        plan.outputOrdering(), plan.isStreaming(), plan.stream(),
+        jsession, option.empty(), option.apply(plan.constraints()),
+    )
+    return DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(jsession, unbounded),
+        session,
+    )
 
 
 def _fs(spark: SparkSession, path: str):
@@ -277,7 +301,7 @@ class CheckpointManager:
 
 @dataclass
 class Fixpoint:
-    state: DataFrame  # the final state, in the initial state's columns
+    state: DataFrame  # the final snapshot leaf (or the resumed Parquet state)
     iterations: int
     last: dict[str, Any] | None  # the newest metrics record, if any
     converged: bool
@@ -299,18 +323,17 @@ def fixpoint(
     checkpoint_interval: int = 1,
     resume: bool = True,
     identity: str = "",
-    lazy_init: bool = False,
     inputs: Iterable[DataFrame] = (),
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> Fixpoint:
     """Iterate ``state ← step(state)`` until ``converged`` or ``max_iter``.
 
     ``init()`` builds the ``(id, ...)`` start state; it is skipped when a
-    checkpoint of the same job is resumed. The state is hash-partitioned
-    and sorted by ``id``, then cached: lazily when ``lazy_init`` (the
-    first iteration's job materializes it), else by an eager count.
-    ``inputs`` are caches the start state reads; they are unpersisted as
-    soon as that state is materialized.
+    checkpoint of the same job is resumed. The start state, fresh or
+    resumed, is hash-partitioned and sorted by ``id`` into a lazy
+    ``localCheckpoint`` that the first iteration's job materializes.
+    ``inputs`` are caches the start state reads; they are unpersisted
+    after that job.
 
     ``step(state, last)`` plans the next state with any extra columns the
     ``stats`` aggregates read, plus notes for the metrics record; ``last``
@@ -319,6 +342,10 @@ def fixpoint(
     ``(src, dst)`` and ``identity`` (the algorithm's parameters)
     fingerprint the checkpoint directory. See the module docstring for
     the lifecycle.
+
+    ``Fixpoint.state`` is the final snapshot itself (a leaf the caller
+    frees with ``release_local_checkpoint``), so it may carry the step's
+    extra columns besides the start state's; callers select their own.
     """
     ckpt = CheckpointManager(spark, checkpoint_dir)
     fingerprint = None
@@ -343,28 +370,23 @@ def fixpoint(
         if last["converged"] or start >= max_iter:
             release_inputs()
             return Fixpoint(state, start, last, last["converged"])
-    fresh = state is None
     # id-sorted like the edge tables: the per-iteration sort-merge joins
     # skip the state-side Sort, and the snapshots inherit the order
-    state = (
-        (init() if fresh else state)
+    state = bound_estimate(
+        (init() if state is None else state)
         .repartition(num_partitions, "id")
         .sortWithinPartitions("id")
+        .localCheckpoint(eager=False)
     )
-    if fresh and lazy_init:
-        state = state.localCheckpoint(eager=False)
-    else:
-        state = state.persist()
-        state.count()
-        release_inputs()
     cols = state.columns
     aggs = [c.alias(k) for k, c in stats.items()]
-    prev, records, iteration, done = state, [], start, False
+    records, iteration, done = [], start, False
     while not done and iteration < max_iter:
         iteration += 1
         t0 = time.monotonic()
-        nxt, notes = step(state, records[-1] if records else None)
-        snapshot = nxt.localCheckpoint(eager=False)
+        nxt, notes = step(state.select(*cols),
+                          records[-1] if records else None)
+        snapshot = bound_estimate(nxt.localCheckpoint(eager=False))
         save = ckpt.enabled() and (
             iteration % checkpoint_interval == 0 or iteration >= max_iter
         )
@@ -375,9 +397,8 @@ def fixpoint(
         ckpt.write(snapshot.observe(obs, *aggs).select(*cols),
                    iteration if save else None)
         release_inputs()
-        state = snapshot.select(*cols)
-        release_local_checkpoint(prev)
-        prev = snapshot
+        release_local_checkpoint(state)
+        state = snapshot
         # sums over an empty state are NULL
         observed = obs.get
         values = {k: 0 if observed[k] is None else observed[k] for k in stats}
@@ -391,7 +412,7 @@ def fixpoint(
         if ckpt.enabled() and done and not save:
             # converged between cadence points: save the cached state
             save = True
-            ckpt.write(state, iteration)
+            ckpt.write(state.select(*cols), iteration)
         if save:
             # durable resume point; iterating continues on the cached copy
             ckpt.commit(iteration, {"algo": name, "fingerprint": fingerprint,

@@ -276,7 +276,7 @@ def pagerank(
         lambda s: s["delta"] <= eps,
         max_iter=max_iter, num_partitions=num_partitions,
         checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
-        resume=resume, lazy_init=True, inputs=[edges_cached],
+        resume=resume, inputs=[edges_cached],
         identity=f"c={c}|eps={eps}|dup={dup_policy}|dangling={dangling}|"
                  f"w={weight_col}|e={e_h}",
     )

@@ -37,6 +37,9 @@ from distributed_pagerank_spark.plans.loop import (
 )
 from distributed_pagerank_spark.plans.pagerank import _prepare_edges
 
+# iterations chained lazily between two materialization barriers
+BARRIER_INTERVAL = 5
+
 
 def personalized_pagerank_multi(
     spark: SparkSession,
@@ -46,7 +49,6 @@ def personalized_pagerank_multi(
     k: int = 5,
     num_partitions: int | None = None,
     dup_policy: str = "reference",
-    truncate_interval: int = 5,
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """Run ``k`` PPR iterations for every seed set in ``seeds`` at once.
@@ -111,8 +113,8 @@ def personalized_pagerank_multi(
     # the state appears exactly ONCE in each iteration's plan (the
     # contribution join; the update joins the pinned seed cache, not the
     # state) — so the logical plan grows LINEARLY per iteration and
-    # iterations can chain LAZILY between materialization barriers
-    # (r6 third wave). A barrier every ``truncate_interval`` iterations
+    # iterations can chain LAZILY between materialization barriers.
+    # A barrier every ``BARRIER_INTERVAL`` iterations
     # (and always at iteration k) lazily checkpoints the chain and uses
     # the row count as the materializing action: one driver job per
     # barrier instead of one per iteration, with the same exchanges
@@ -134,7 +136,7 @@ def personalized_pagerank_multi(
                 ).alias("rank"),
             )
             rows = None
-            if iteration % truncate_interval == 0 or iteration == k:
+            if iteration % BARRIER_INTERVAL == 0 or iteration == k:
                 new_state = new_state.localCheckpoint(eager=False)
                 rows = new_state.count()
                 if rows == 0:

@@ -38,6 +38,13 @@ one-hop rounds across the two fixpoints of outer round 1 alone (~400 s
 at 32 threads, jobs dominated by fixed scheduling cost); jumping closes
 the same color fixpoint in 18 rounds (~11 s measured).
 
+Both fixpoints run on the shared ``plans.loop.fixpoint`` harness: one
+Spark job per round (the snapshot write, with the changed-label count
+observed on it), lineage cut at every round, and a ``RuntimeError``
+when ``max_prop`` rounds end before the labels settle — partial labels
+would split SCCs. The edge sets and vertex sets between fixpoints are
+``localCheckpoint`` leaves too, so no plan deepens across rounds.
+
 Scale shape: both fixpoints move only |V_r|-sized label vectors against
 a per-round cached-and-shrinking edge set (same gather-scatter economy
 as the PageRank loop); the extraction anti-join broadcasts when the
@@ -46,8 +53,8 @@ order) degrades to O(chain length) outer rounds — the same worst case
 every coloring-family SCC algorithm has without DFS.
 
 Final labels are canonicalized to the minimum member id (one
-aggregation + broadcast join), so output is independent of which member
-happened to be the color root.
+aggregation + join), so output is independent of which member happened
+to be the color root.
 """
 
 from __future__ import annotations
@@ -55,13 +62,13 @@ from __future__ import annotations
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import vertices_from_edges
 from distributed_pagerank_spark.plans.loop import (
+    fixpoint,
     loop_conf,
-    obs_name,
     release_local_checkpoint,
 )
 
@@ -69,32 +76,24 @@ from distributed_pagerank_spark.plans.loop import (
 def _max_prop(
     spark: SparkSession,
     edges_r: DataFrame,
-    state: DataFrame,
+    init: DataFrame,
     max_rounds: int,
     gather_from: str,
     group_to: str,
-    tag: str,
+    num_partitions: int,
+    name: str,
 ) -> DataFrame:
-    """Jump-accelerated directed max-label fixpoint over ``(id, c)``.
+    """Jump-accelerated directed max-label fixpoint over ``(id, c)`` →
+    the final ``fixpoint`` snapshot, a leaf the caller releases.
 
     Per round ``c(v)`` folds in (a) the max label across incident edges
     — labels read at the ``gather_from`` endpoint, delivered to the
     ``group_to`` endpoint — and (b) the pointer jump ``c(c(v))``, sound
     because every label is a vertex id carrying the fixpoint's
-    reachability invariant. Converges in O(log d) rounds.
+    reachability invariant. Converges in O(log d) rounds; a run that
+    stops at ``max_rounds`` still holds partial labels, so it raises."""
 
-    Lineage is truncated every 3 rounds with an in-memory
-    ``localCheckpoint``: each round references ``prev`` THREE times (row
-    base + edge gather + jump), so the un-truncated logical tree grows
-    ×3 per round — interval 3 caps Catalyst analysis at 27× (interval 6
-    = 729× measured as a multi-minute analysis stall on a 7-edge
-    graph). In-memory rather than a reliable checkpoint: these inner
-    fixpoints have no resume contract (the outer SCC loop is where a
-    durable snapshot would live), so a reliable-checkpoint write+read
-    would be pure overhead."""
-    prev = state
-    since_truncate, last_truncated = 0, None
-    for rnd in range(1, max_rounds + 1):
+    def step(prev: DataFrame, last: dict[str, Any] | None):
         nbr = (
             edges_r.join(prev, edges_r[gather_from] == prev["id"])
             .groupBy(group_to)
@@ -103,8 +102,7 @@ def _max_prop(
         jump = prev.select(
             F.col("id").alias("__jid"), F.col("c").alias("__jc")
         )
-        obs = Observation(obs_name(f"scc_{tag}_{rnd}"))
-        plan = (
+        return (
             prev.join(nbr, prev["id"] == nbr[group_to], "left")
             .join(jump, prev["c"] == F.col("__jid"), "left")
             .select(
@@ -116,48 +114,20 @@ def _max_prop(
                     F.coalesce("__jc", prev["c"]),
                 ).alias("c"),
             )
-            .observe(
-                obs,
-                F.sum((F.col("c") != F.col("old")).cast("long")).alias(
-                    "changed"
-                ),
-            )
-            .select("id", "c")
+        ), {}
+
+    run = fixpoint(
+        spark, name, edges_r, lambda: init, step,
+        {"changed": F.sum((F.col("c") != F.col("old")).cast("long"))},
+        lambda s: s["changed"] == 0,
+        max_iter=max_rounds, num_partitions=num_partitions,
+    )
+    if not run.converged:
+        release_local_checkpoint(run.state)
+        raise RuntimeError(
+            f"SCC {name} fixpoint did not converge in {max_rounds} rounds"
         )
-        snapshot = plan.persist()
-        snapshot.count()
-        changed = obs.get["changed"] or 0
-        # NEVER release the live truncation leaf here: later snapshots'
-        # lineage still bottoms out at it, and a released localCheckpoint
-        # cannot recompute. Leaves are released only when the NEXT
-        # truncation has materialized (same ownership protocol as the
-        # PageRank loop's prev_snapshot/last_truncated pair).
-        if prev is not None and prev is not last_truncated:
-            release_local_checkpoint(prev)
-        prev = snapshot
-        since_truncate += 1
-        if changed == 0:
-            break
-        if since_truncate >= 3:
-            truncated = prev.localCheckpoint(eager=True)
-            prev.unpersist()
-            if last_truncated is not None:
-                release_local_checkpoint(last_truncated)
-            last_truncated = truncated
-            prev = truncated
-            since_truncate = 0
-    # return a FLAT leaf, not the tail of the snapshot chain: the caller
-    # composes fixpoint outputs (class_edges = cur ⋈ colors ⋈ colors;
-    # flags = colors ⋈ m_final), and composing un-flattened ≤27× trees
-    # multiplies into a Catalyst analysis stall (measured: a 513 s outer
-    # round whose compute was ~20 s). The leaf also gives the caller
-    # clean ownership — everything internal is released here.
-    out = prev.localCheckpoint(eager=True)
-    if prev is not out:
-        release_local_checkpoint(prev)
-    if last_truncated is not None and last_truncated is not prev:
-        release_local_checkpoint(last_truncated)
-    return out
+    return run.state
 
 
 def strongly_connected_components(
@@ -169,157 +139,149 @@ def strongly_connected_components(
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """→ ``(id long, component long)``: component = min vertex id of the
-    strongly connected component (singletons label themselves)."""
+    strongly connected component (singletons label themselves).
+
+    The result is a ``localCheckpoint`` the caller owns (free it with
+    ``release_local_checkpoint``); every other cache is released here,
+    also when a round budget runs out (``RuntimeError``)."""
     num_partitions = num_partitions or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32")
     )
     metrics = metrics_out if metrics_out is not None else []
     raw = edges.select("src", "dst").persist()
-    cur = (
-        raw.where(F.col("src") != F.col("dst"))
-        .distinct()
-        .repartition(num_partitions, "src")
-        .persist()
-    )
-    cur.count()
-    # vertex set from the UN-filtered input: a vertex whose only edge is a
-    # self-loop is still a (singleton) SCC and must appear in the output
-    verts = (
-        vertices_from_edges(raw)
-        .repartition(num_partitions, "id")
-        .persist()
-    )
-    verts.count()
-    raw.unpersist()
-    assigned_parts: list[DataFrame] = []
+    held = [raw]  # every cache this call made and has not released yet
 
-    with loop_conf(spark):
-        for outer in range(1, max_outer + 1):
-            t0 = time.monotonic()
+    def leaf(df: DataFrame, eager: bool) -> DataFrame:
+        # a flat lineage leaf: each inner round embeds the plans of the
+        # edge sets and start states, so they must not deepen per round
+        out = df.localCheckpoint(eager=eager)
+        held.append(out)
+        return out
 
-            # 1. color: forward max-label fixpoint with pointer jumps
-            colors = _max_prop(
-                spark,
-                cur,
-                verts.select("id", F.col("id").alias("c")),
-                max_prop,
-                gather_from="src",
-                group_to="dst",
-                tag=f"color_{outer}",
-            )
+    def release(*dfs: DataFrame) -> None:
+        for df in dfs:
+            held.remove(df)
+            release_local_checkpoint(df)
 
-            # 2. confirm: within-class backward reachability to the root.
-            # Build the class-restricted edge set once (both endpoints the
-            # same color), then run the same jumping max fixpoint on it in
-            # the REVERSE direction: m(v) = max id reachable from v along
-            # class edges; v reaches the root iff m(v) == c(v) (the root
-            # is the class maximum).
-            csrc = colors.select(
-                F.col("id").alias("__cs"), F.col("c").alias("__ccs")
-            )
-            cdst = colors.select(
-                F.col("id").alias("__cd"), F.col("c").alias("__ccd")
-            )
-            # leaf, not persist: m-prop embeds this tree in every round
-            class_edges = (
-                cur.join(csrc, cur["src"] == F.col("__cs"))
-                .join(cdst, cur["dst"] == F.col("__cd"))
-                .where(F.col("__ccs") == F.col("__ccd"))
-                .select("src", "dst")
-                .localCheckpoint(eager=True)
-            )
-            m_final = _max_prop(
-                spark,
-                class_edges,
-                colors.select("id", F.col("id").alias("c")),
-                max_prop,
-                gather_from="dst",
-                group_to="src",
-                tag=f"reach_{outer}",
-            )
-            flags = (
-                colors.withColumnRenamed("c", "color")
-                .join(
-                    m_final.withColumnRenamed("c", "m"), "id"
+    try:
+        cur = leaf(
+            raw.where(F.col("src") != F.col("dst"))
+            .distinct()
+            .repartition(num_partitions, "src"),
+            eager=True,
+        )
+        # vertex set from the UN-filtered input: a vertex whose only edge
+        # is a self-loop is still a (singleton) SCC and must appear
+        verts = leaf(
+            vertices_from_edges(raw).repartition(num_partitions, "id"),
+            eager=True,
+        )
+        release(raw)
+        assigned_parts: list[DataFrame] = []
+        with loop_conf(spark):
+            for outer in range(1, max_outer + 1):
+                t0 = time.monotonic()
+
+                # 1. color: forward max-label fixpoint with pointer jumps
+                colors = _max_prop(
+                    spark, cur, verts.select("id", F.col("id").alias("c")),
+                    max_prop, "src", "dst", num_partitions,
+                    f"scc_color_{outer}",
                 )
-                .select(
-                    "id",
-                    F.col("color").alias("c"),
-                    (F.col("m") == F.col("color")).alias("flag"),
+                held.append(colors)
+
+                # 2. confirm: within-class backward reachability to the
+                # root. The class-restricted edge set (both endpoints the
+                # same color) gets the same jumping max fixpoint in the
+                # REVERSE direction: m(v) = max id reachable from v along
+                # class edges; v reaches the root iff m(v) == c(v) (the
+                # root is the class maximum). The reach fixpoint's first
+                # job materializes the lazy edge leaf.
+                csrc = colors.select(
+                    F.col("id").alias("__cs"), F.col("c").alias("__ccs")
                 )
-            )
+                cdst = colors.select(
+                    F.col("id").alias("__cd"), F.col("c").alias("__ccd")
+                )
+                class_edges = leaf(
+                    cur.join(csrc, cur["src"] == F.col("__cs"))
+                    .join(cdst, cur["dst"] == F.col("__cd"))
+                    .where(F.col("__ccs") == F.col("__ccd"))
+                    .select("src", "dst"),
+                    eager=False,
+                )
+                m_final = _max_prop(
+                    spark, class_edges,
+                    colors.select("id", F.col("id").alias("c")),
+                    max_prop, "dst", "src", num_partitions,
+                    f"scc_reach_{outer}",
+                )
+                held.append(m_final)
+                flags = (
+                    colors.select("id", F.col("c").alias("color"))
+                    .join(m_final.select("id", F.col("c").alias("m")), "id")
+                    .select(
+                        "id",
+                        F.col("color").alias("c"),
+                        (F.col("m") == F.col("color")).alias("flag"),
+                    )
+                )
 
-            # decouple BOTH extraction outputs from the fixpoint states as
-            # eager localCheckpoints (independent leaf blocks) BEFORE
-            # releasing colors/flags: `remaining` feeds next round's joins
-            # and broadcasts, and a released localCheckpoint cannot
-            # recompute ([CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND])
-            assigned = (
-                flags.where(F.col("flag"))
-                .select("id", F.col("c").alias("root"))
-                .localCheckpoint(eager=True)
-            )
-            n_done = assigned.count()
-            remaining = (
-                flags.where(~F.col("flag"))
-                .select("id")
-                .localCheckpoint(eager=True)
-            )
-            n_rem = remaining.count()
-            assigned_parts.append(assigned)
-            metrics.append(
-                {
-                    "outer": outer,
-                    "assigned": n_done,
-                    "remaining": n_rem,
-                    "total_s": round(time.monotonic() - t0, 4),
-                }
-            )
-            release_local_checkpoint(colors)
-            release_local_checkpoint(m_final)
-            release_local_checkpoint(class_edges)
-            if n_rem == 0:
-                remaining.unpersist()
-                verts.unpersist()
-                break
-            # shrink the subgraph to the unassigned remainder. Flattened
-            # to a localCheckpoint LEAF, not a persist: every inner
-            # fixpoint round embeds cur's logical tree (×27 after jump
-            # replication), so a persist-chained cur that deepens by two
-            # joins per outer round turns later rounds into Catalyst
-            # analysis stalls — a leaf keeps every round's plan flat.
-            rem_b = (
-                F.broadcast(remaining) if n_rem <= 1_000_000 else remaining
-            )
-            nxt_edges = (
-                cur.join(rem_b, cur["src"] == rem_b["id"], "left_semi")
-                .join(rem_b, cur["dst"] == rem_b["id"], "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            release_local_checkpoint(cur)
-            cur = nxt_edges
-            verts.unpersist()
-            verts = remaining
-        else:
-            raise RuntimeError(
-                f"SCC did not converge in {max_outer} outer rounds"
-            )
+                # 3. extract. Both outputs are leaves materialized by their
+                # counts before the fixpoint states they read are released
+                assigned = leaf(
+                    flags.where(F.col("flag"))
+                    .select("id", F.col("c").alias("root")),
+                    eager=False,
+                )
+                n_done = assigned.count()
+                remaining = leaf(
+                    flags.where(~F.col("flag")).select("id"), eager=False
+                )
+                n_rem = remaining.count()
+                assigned_parts.append(assigned)
+                metrics.append(
+                    {
+                        "outer": outer,
+                        "assigned": n_done,
+                        "remaining": n_rem,
+                        "total_s": round(time.monotonic() - t0, 4),
+                    }
+                )
+                release(colors, m_final, class_edges, verts)
+                verts = remaining
+                if n_rem == 0:
+                    break
+                # shrink the subgraph to the unassigned remainder
+                rem_b = (
+                    F.broadcast(remaining) if n_rem <= 1_000_000 else remaining
+                )
+                nxt_edges = leaf(
+                    cur.join(rem_b, cur["src"] == rem_b["id"], "left_semi")
+                    .join(rem_b, cur["dst"] == rem_b["id"], "left_semi"),
+                    eager=True,
+                )
+                release(cur)
+                cur = nxt_edges
+            else:
+                raise RuntimeError(
+                    f"SCC did not converge in {max_outer} outer rounds"
+                )
 
-    release_local_checkpoint(cur)
-    labeled = assigned_parts[0]
-    for part in assigned_parts[1:]:
-        labeled = labeled.unionByName(part)
-    # canonicalize: component = min member id (root is the max-reaching
-    # member, an artifact of the coloring order)
-    # plain equi-join: canon has one row per SCC, which can approach |V|
-    # (all-singleton graphs) — not broadcastable in general; AQE promotes
-    # it to broadcast when it is actually small
-    canon = labeled.groupBy("root").agg(F.min("id").alias("component"))
-    out = (
-        labeled.join(canon, "root")
-        .select("id", "component")
-        .localCheckpoint(eager=True)
-    )
-    for part in assigned_parts:
-        release_local_checkpoint(part)
-    return out
+        labeled = assigned_parts[0]
+        for part in assigned_parts[1:]:
+            labeled = labeled.unionByName(part)
+        # canonicalize: component = min member id (root is the
+        # max-reaching member, an artifact of the coloring order).
+        # plain equi-join: canon has one row per SCC, which can approach
+        # |V| (all-singleton graphs) — not broadcastable in general; AQE
+        # promotes it to broadcast when it is actually small
+        canon = labeled.groupBy("root").agg(F.min("id").alias("component"))
+        return (
+            labeled.join(canon, "root")
+            .select("id", "component")
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        for df in held:
+            release_local_checkpoint(df)

@@ -199,3 +199,14 @@ def test_components_self_loops_only(spark, tmp_path):
     assert mgr.completed_iterations() == [1]
     assert mgr.manifest(1)["metrics"]["converged"]
     assert mgr.manifest(1)["rows"] == 3
+
+
+def test_pointer_jump_size_estimate_bounded(spark):
+    """Pointer jumping joins the state with itself, squaring the size
+    estimate its snapshot inherits each iteration; the harness caps it at
+    Spark's unknown-size default."""
+    edges = edges_df(spark, [(i + 1, i) for i in range(40)])
+    comps = connected_components(spark, edges, algorithm="pointer")
+    size = comps._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert size <= 2**63 - 1
+    assert {r["component"] for r in comps.collect()} == {0}

@@ -5,6 +5,7 @@ from collections import defaultdict
 import pytest
 from pyspark.sql import functions as F
 
+from distributed_pagerank_spark.plans.loop import release_local_checkpoint
 from distributed_pagerank_spark.plans.scc import strongly_connected_components
 from distributed_pagerank_spark.sources.generator import generate_graph
 from tests.conftest import edges_df
@@ -85,11 +86,15 @@ def test_scc_self_loop_only_vertex(spark):
     assert run(spark, pairs) == {0: 0, 1: 0, 7: 7}
 
 
-def test_scc_generated_matches_kosaraju(spark):
+def gen80(spark):
     g = generate_graph(spark, 80, max_edges=2, seed=42)
-    edges = g.where(
+    return g.where(
         (F.col("src") != F.col("dst")) & (F.col("dst") != F.col("src") + 1)
     )
+
+
+def test_scc_generated_matches_kosaraju(spark):
+    edges = gen80(spark)
     pairs = [(r["src"], r["dst"]) for r in edges.collect()]
     want = brute_scc(pairs)
     got = {
@@ -116,3 +121,35 @@ def test_scc_metrics_and_convergence_cap(spark):
         strongly_connected_components(
             spark, edges_df(spark, [(i + 1, i) for i in range(4)]), max_outer=1
         )
+    # a color fixpoint cut off by max_prop holds partial labels (10
+    # singletons here), so it raises instead of returning them
+    with pytest.raises(RuntimeError):
+        strongly_connected_components(
+            spark, edges_df(spark, [(i, (i + 1) % 10) for i in range(10)]),
+            max_prop=1,
+        )
+
+
+def test_scc_releases_all_but_its_output(spark):
+    """Every cache SCC makes is released except the output, a leaf the
+    caller owns and frees with ``release_local_checkpoint``. Compared as
+    RDD ids rather than counts: the JVM's context cleaner may drop other
+    tests' dead caches meanwhile."""
+    sc = spark.sparkContext
+    edges = gen80(spark).persist()
+    edges.count()
+
+    def cached():
+        return set(sc._jsc.getPersistentRDDs().keySet())
+
+    base = cached()
+    out = strongly_connected_components(spark, edges)
+    out_rdd = out._jdf.queryExecution().analyzed().rdd().id()
+    assert cached() - base == {out_rdd}
+    release_local_checkpoint(out)
+    assert not cached() - base
+    # the budget error path releases everything too
+    with pytest.raises(RuntimeError):
+        strongly_connected_components(spark, edges, max_prop=1)
+    assert not cached() - base
+    edges.unpersist()
