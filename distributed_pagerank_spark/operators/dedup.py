@@ -421,29 +421,14 @@ def near_dup_clusters(
     # local import: plans.* composes operators.*; keep module import acyclic
     from distributed_pagerank_spark.plans.components import connected_components
 
-    cc_np = None
     if pairs is None:
         pairs = minhash_lsh_pairs(
             df, threshold=threshold, id_col=id_col, text_col=text_col,
             hash_fn=hash_fn, **lsh_kwargs,
         )
-        # The pair graph is a tiny fraction of the corpus (near-dup docs
-        # only), so the CC loop's partition count derives from ITS size,
-        # not the session default: ≥64k pairs per partition, capped at
-        # the configured parallelism (scale-adaptive — at 10^9 pairs it
-        # is the session default again). Our own pairs are an eager
-        # localCheckpoint, so the count scans cached blocks; caller-
-        # supplied pairs skip this (counting them could recompute an
-        # arbitrary un-persisted plan) and keep the default.
-        default_np = int(
-            spark.conf.get(
-                "spark.sql.shuffle.partitions",
-                str(spark.sparkContext.defaultParallelism),
-            )
-        )
-        cc_np = min(default_np, max(1, -(-pairs.count() // 65536)))
+    # the CC loop sizes its partitions from the pair graph's bytes
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    comp = connected_components(spark, edges, num_partitions=cc_np)
+    comp = connected_components(spark, edges)
     docs = df.select(F.col(id_col).alias("doc_id"))
     # survivor = min id present in df per cluster. With self-generated
     # pairs this equals the component id (so the twin's doc_id ==

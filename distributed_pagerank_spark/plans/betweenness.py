@@ -49,7 +49,8 @@ from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import symmetrize
 from distributed_pagerank_spark.plans.loop import (
-    loop_conf,
+    LOOP_CONFS,
+    conf_scope,
     release_local_checkpoint,
 )
 
@@ -141,7 +142,7 @@ def betweenness(
     visited = frontier.select("root", "id")
     levels.append(frontier)
     level_rows.append(None)
-    with loop_conf(spark):
+    with conf_scope(spark, LOOP_CONFS):
         for depth in range(1, max_depth + 1):
             t0 = time.monotonic()
             cand = (
@@ -196,7 +197,7 @@ def betweenness(
     contributions: list[DataFrame] = []
     delta_slices: list[DataFrame] = []  # released after `out` materializes
     delta_above: DataFrame | None = None  # (root, id, sigma, delta)
-    with loop_conf(spark):
+    with conf_scope(spark, LOOP_CONFS):
         for lev in range(last, 0, -1):
             t0 = time.monotonic()
             cur = levels[lev]

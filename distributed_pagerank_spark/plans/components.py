@@ -52,7 +52,12 @@ from distributed_pagerank_spark.operators.degrees import (
     symmetrize,
     vertices_from_edges,
 )
-from distributed_pagerank_spark.plans.loop import fixpoint
+from distributed_pagerank_spark.plans.loop import (
+    conf_scope,
+    fixpoint,
+    loop_partitions,
+    loop_policy,
+)
 
 # hybrid: a round whose ``changed`` count stays above this fraction of the
 # previous round's (without growing) arms pointer jumping
@@ -78,22 +83,23 @@ def label_exchange(
     last)`` gets the cached symmetrized ``(src, dst)`` table and plans
     ``(id, old, <label>)``; the loop stops when no label changed.
     ``loop`` passes ``max_iter`` and the checkpoint options on to
-    ``fixpoint``.
+    ``fixpoint``. The loop's partition count is ``num_partitions``, or
+    else sized from the measured bytes of the cached input
+    (``loop_partitions``).
     """
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
     # one scan of the raw input: the 2-column projection is cached and the
     # symmetrized table AND the vertex set (which must keep self-loop-only
     # vertices that symmetrize drops) both derive from it
     raw = edges.select("src", "dst").persist()
-    sym = (
-        symmetrize(raw)
-        .repartition(num_partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    sym.count()
+    num_partitions = loop_partitions(raw, num_partitions)
+    with conf_scope(spark, loop_policy(num_partitions)):
+        sym = (
+            symmetrize(raw)
+            .repartition(num_partitions, "src")
+            .sortWithinPartitions("src")
+            .persist()
+        )
+        sym.count()
     run = fixpoint(
         spark, name, sym,
         lambda: vertices_from_edges(raw).select("id", F.col("id").alias(label)),

@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import symmetrize
 from distributed_pagerank_spark.plans.loop import (
-    loop_conf,
+    LOOP_CONFS,
+    conf_scope,
     release_local_checkpoint,
 )
 
@@ -71,7 +72,7 @@ def k_core(
     # is released only AFTER the count that materializes its successor.
     pending: list[DataFrame] = []
 
-    with loop_conf(spark):
+    with conf_scope(spark, LOOP_CONFS):
         for rnd in range(1, max_iter + 1):
             t0 = time.monotonic()
             deg = cur.groupBy(F.col("src").alias("id")).agg(
@@ -175,7 +176,7 @@ def coreness(
     # released only after the count that materializes their successors.
     pending: list[DataFrame] = []
 
-    with loop_conf(spark):
+    with conf_scope(spark, LOOP_CONFS):
         k = 0
         while k < max_k:
             k += 1

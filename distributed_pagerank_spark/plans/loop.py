@@ -39,6 +39,31 @@ everything around it:
   converged, total_s}``, returned and stored in that iteration's manifest
   (with the per-partition row counts of the snapshot).
 
+Execution policy: one Spark job per iteration. The caller sizes the
+loop once, from the measured bytes of its cached edge aggregate
+(``loop_partitions``), and the edge table, the start state and every
+in-loop shuffle use that one partition count. Around its iterations
+``fixpoint`` runs with AQE off, ``spark.sql.shuffle.partitions`` at that
+count and automatic broadcast joins off (``loop_policy``), restoring the
+caller's confs on return and on raise (``conf_scope``). Then the edges
+⋈ state and state ⋈ aggregate joins are co-partitioned sort-merge joins
+over the same hash layout: each iteration is one job with at most one
+shuffle.
+The two halves only pay together. AQE on splits every query stage, and
+every runtime broadcast, into a job of its own (about 5.5 per
+iteration), and each job re-pays the driver's planning and closure
+cleaning. AQE off at the session's partition count trades those jobs
+for many near-empty tasks, which on a small loop costs more than it
+saves. Sizing is what AQE's partition coalescing did, fixed before the
+loop instead of re-planned every iteration. In-loop skew is the
+caller's to handle (PageRank's ``skew_salt``): AQE's skew-join split
+does not run inside a loop.
+
+Order-independent statistics: observed sums merge per-task partials in
+task completion order, so double-valued statistics (PageRank's
+``delta``, ``rank_sum``, ``dang_mass``) use ``exact_sum``; a run on
+many partitions gives bit-identical results every time, resumed or not.
+
 Fault tolerance: without ``checkpoint_dir`` the iteration state lives
 only in unreplicated ``localCheckpoint`` blocks. In local mode (one JVM)
 there is nothing to lose; on a cluster, losing an executor mid-run makes
@@ -64,23 +89,34 @@ from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
 
-# Runtime confs pinned inside the k-core, k-truss, SCC, betweenness and
-# PPR loops: AQE measured neutral-to-worse there on the lazy-checkpoint
-# state shape (BENCH/ab_loop_aqe_ckpt_r6.json, sf0.1/local[32]). The other
-# loops run under the session's own confs (AQE on).
+# Runtime confs pinned inside the k-core, k-truss, betweenness and SCC
+# outer loops: AQE off (BENCH/ab_loop_aqe_ckpt_r6.json, sf0.1/local[32]);
+# their small frontiers still broadcast. ``fixpoint`` loops and PPR run
+# under the fuller ``loop_policy`` instead.
 LOOP_CONFS = {"spark.sql.adaptive.enabled": "false"}
 
 
-@contextmanager
-def loop_conf(spark: SparkSession):
-    """Apply LOOP_CONFS for a loop, restoring the caller's values on exit.
+def loop_policy(num_partitions: int) -> dict[str, str]:
+    """The runtime confs a sized loop runs under (module docstring):
+    AQE off, ``num_partitions`` shuffle partitions, no automatic
+    broadcast joins."""
+    return {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(num_partitions),
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
 
-    Mutable runtime SQL confs only; safe on any session (the correctness
-    driver's included). Restores on exceptions too, so a failed loop never
-    leaks its conf into the caller's session.
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]):
+    """Apply the runtime SQL ``confs`` for a block, restoring the caller's
+    values on exit, also when the block raises.
+
+    Safe on any session (the correctness driver's included): a conf the
+    session refuses to change is left untouched.
     """
     old: dict[str, str | None] = {}
-    for k, v in LOOP_CONFS.items():
+    for k, v in confs.items():
         try:
             old[k] = spark.conf.get(k)
         except Exception:
@@ -100,6 +136,52 @@ def loop_conf(spark: SparkSession):
                     spark.conf.set(k, v)
             except Exception:
                 pass
+
+
+def loop_partitions(cached: DataFrame, requested: int | None) -> int:
+    """Partition count of a loop over the persisted edge aggregate
+    ``cached``: ``requested`` when given, otherwise sized from its
+    measured bytes.
+
+    ``cached`` is materialized here by an AQE-off count, after which its
+    size statistic is the cache's real in-memory size. The count is
+    ``ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``,
+    clamped to ``[1, spark.sql.shuffle.partitions]``: the partition size
+    AQE would coalesce to, fixed before the loop instead of re-planned
+    every iteration.
+    """
+    if requested:
+        return requested
+    spark = cached.sparkSession
+    with conf_scope(spark, LOOP_CONFS):
+        # AQE would run each of the count's stages as its own job (the
+        # cache itself keeps the plan it was persisted with)
+        cached.count()
+    plan = cached._jdf.queryExecution().optimizedPlan()
+    size = int(plan.stats().sizeInBytes())
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
+        .byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-size // advisory)))
+
+
+def exact_sum(col: Column) -> Column:
+    """``sum(col)`` of a double that does not depend on the order in
+    which tasks finish.
+
+    Observed statistics merge per-task partial sums in completion order,
+    and double addition is not associative, so a loop on more than one
+    partition could observe a different last bit on every run. Here each
+    term is split into its first 18 decimal places and the 18 after them
+    (fixed per-row roundings); each part sums exactly as a decimal, in any
+    order, and the two totals combine in double. Holds for totals below
+    10^20.
+    """
+    exact = "decimal(38,18)"  # 20 integer and 18 fraction digits
+    hi = col.cast(exact)
+    lo = ((col - hi.cast("double")) * 1e18).cast(exact)
+    return F.sum(hi).cast("double") + F.sum(lo).cast("double") * 1e-18
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -343,80 +425,84 @@ def fixpoint(
     fingerprint the checkpoint directory. See the module docstring for
     the lifecycle.
 
+    ``num_partitions`` is the loop's partition count (from
+    ``loop_partitions``); the whole call runs under ``loop_policy`` of it.
+
     ``Fixpoint.state`` is the final snapshot itself (a leaf the caller
     frees with ``release_local_checkpoint``), so it may carry the step's
     extra columns besides the start state's; callers select their own.
     """
-    ckpt = CheckpointManager(spark, checkpoint_dir)
-    fingerprint = None
-    if ckpt.enabled():
-        g = graph.agg(
-            F.count("*").alias("m"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-        ).first()
-        fingerprint = f"{name}|{identity}|m={g['m']}|h={g['h']}"
-    pending = list(inputs)
+    with conf_scope(spark, loop_policy(num_partitions)):
+        ckpt = CheckpointManager(spark, checkpoint_dir)
+        fingerprint = None
+        if ckpt.enabled():
+            g = graph.agg(
+                F.count("*").alias("m"),
+                F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
+            ).first()
+            fingerprint = f"{name}|{identity}|m={g['m']}|h={g['h']}"
+        pending = list(inputs)
 
-    def release_inputs() -> None:
-        while pending:
-            pending.pop().unpersist()
+        def release_inputs() -> None:
+            while pending:
+                pending.pop().unpersist()
 
-    start, state, last = 0, None, None
-    latest = ckpt.latest() if resume and ckpt.enabled() else None
-    # a manifest of another graph or parameters is stale: start fresh
-    if latest is not None and latest[2].get("fingerprint") == fingerprint:
-        start, state, manifest = latest
-        last = manifest["metrics"]
-        if last["converged"] or start >= max_iter:
-            release_inputs()
-            return Fixpoint(state, start, last, last["converged"])
-    # id-sorted like the edge tables: the per-iteration sort-merge joins
-    # skip the state-side Sort, and the snapshots inherit the order
-    state = bound_estimate(
-        (init() if state is None else state)
-        .repartition(num_partitions, "id")
-        .sortWithinPartitions("id")
-        .localCheckpoint(eager=False)
-    )
-    cols = state.columns
-    aggs = [c.alias(k) for k, c in stats.items()]
-    records, iteration, done = [], start, False
-    while not done and iteration < max_iter:
-        iteration += 1
-        t0 = time.monotonic()
-        nxt, notes = step(state.select(*cols),
-                          records[-1] if records else None)
-        snapshot = bound_estimate(nxt.localCheckpoint(eager=False))
-        save = ckpt.enabled() and (
-            iteration % checkpoint_interval == 0 or iteration >= max_iter
+        start, state, last = 0, None, None
+        latest = ckpt.latest() if resume and ckpt.enabled() else None
+        # a manifest of another graph or parameters is stale: start fresh
+        if latest is not None and latest[2].get("fingerprint") == fingerprint:
+            start, state, manifest = latest
+            last = manifest["metrics"]
+            if last["converged"] or start >= max_iter:
+                release_inputs()
+                return Fixpoint(state, start, last, last["converged"])
+        # id-sorted like the edge tables: the per-iteration sort-merge joins
+        # skip the state-side Sort, and the snapshots inherit the order
+        state = bound_estimate(
+            (init() if state is None else state)
+            .repartition(num_partitions, "id")
+            .sortWithinPartitions("id")
+            .localCheckpoint(eager=False)
         )
-        obs = Observation()
-        # the iteration's one job: computes, caches and truncates the
-        # snapshot, writes it (durably on a save iteration) and observes
-        # the statistics on the way
-        ckpt.write(snapshot.observe(obs, *aggs).select(*cols),
-                   iteration if save else None)
-        release_inputs()
-        release_local_checkpoint(state)
-        state = snapshot
-        # sums over an empty state are NULL
-        observed = obs.get
-        values = {k: 0 if observed[k] is None else observed[k] for k in stats}
-        done = converged(values)
-        record = {"iteration": iteration, **values, **notes,
-                  "converged": done,
-                  "total_s": round(time.monotonic() - t0, 4)}
-        records.append(record)
-        if metrics_out is not None:
-            metrics_out.append(record)
-        if ckpt.enabled() and done and not save:
-            # converged between cadence points: save the cached state
-            save = True
-            ckpt.write(state.select(*cols), iteration)
-        if save:
-            # durable resume point; iterating continues on the cached copy
-            ckpt.commit(iteration, {"algo": name, "fingerprint": fingerprint,
-                                    "metrics": record})
-    release_inputs()  # zero iterations: the lazy start state never ran
-    return Fixpoint(state, iteration, records[-1] if records else last, done,
-                    records)
+        cols = state.columns
+        aggs = [c.alias(k) for k, c in stats.items()]
+        records, iteration, done = [], start, False
+        while not done and iteration < max_iter:
+            iteration += 1
+            t0 = time.monotonic()
+            nxt, notes = step(state.select(*cols),
+                              records[-1] if records else None)
+            snapshot = bound_estimate(nxt.localCheckpoint(eager=False))
+            save = ckpt.enabled() and (
+                iteration % checkpoint_interval == 0 or iteration >= max_iter
+            )
+            obs = Observation()
+            # the iteration's one job: computes, caches and truncates the
+            # snapshot, writes it (durably on a save iteration) and observes
+            # the statistics on the way
+            ckpt.write(snapshot.observe(obs, *aggs).select(*cols),
+                       iteration if save else None)
+            release_inputs()
+            release_local_checkpoint(state)
+            state = snapshot
+            # sums over an empty state are NULL
+            observed = obs.get
+            values = {k: 0 if observed[k] is None else observed[k] for k in stats}
+            done = converged(values)
+            record = {"iteration": iteration, **values, **notes,
+                      "converged": done,
+                      "total_s": round(time.monotonic() - t0, 4)}
+            records.append(record)
+            if metrics_out is not None:
+                metrics_out.append(record)
+            if ckpt.enabled() and done and not save:
+                # converged between cadence points: save the cached state
+                save = True
+                ckpt.write(state.select(*cols), iteration)
+            if save:
+                # durable resume point; iterating continues on the cached copy
+                ckpt.commit(iteration, {"algo": name, "fingerprint": fingerprint,
+                                        "metrics": record})
+        release_inputs()  # zero iterations: the lazy start state never ran
+        return Fixpoint(state, iteration, records[-1] if records else last, done,
+                        records)

@@ -18,13 +18,16 @@ Semantics are the reference's, re-derived (not ported) from
   graph.go:83 — irreproducible); defaults to uniform ``1/|V|`` and is
   normalized to sum 1 like the reference load path (graph.go:93-97).
 
-The per-iteration physical plan is: one shuffle of the rank vector into
-the (cached, pre-partitioned) edge table's layout, one aggregation shuffle
-keyed by ``dst`` (map-side partial combine — optionally salted two-stage
-for hubs), one left join back to the vertex table, and a scalar delta agg.
-The static ``edges ⋈ out_degree`` product is computed once, repartitioned
-by ``src`` and persisted so iterations never reshuffle the (huge) edge
-table — only the (|V|-sized) rank vector moves.
+The per-iteration physical plan is one job with at most one shuffle:
+the rank vector already has the (cached, pre-partitioned) edge table's
+layout, so the scatter join reads both in place; the aggregation keyed
+by ``dst`` (map-side partial combine — optionally salted two-stage for
+hubs) is the shuffle, and its output joins back to the rank vector in
+the same layout, with the delta observed on the snapshot write
+(``plans/loop.py``). The static ``edges ⋈ out_degree`` product is
+computed once, hash-partitioned by ``src`` into the loop's sized
+partition count and persisted, so iterations never reshuffle the (huge)
+edge table — only the |V|-sized contribution sums move.
 """
 
 from __future__ import annotations
@@ -40,7 +43,13 @@ from distributed_pagerank_spark.operators.degrees import (
     vertices_from_edges,
 )
 from distributed_pagerank_spark.operators.salting import hub_ids, salted_sum
-from distributed_pagerank_spark.plans.loop import fixpoint
+from distributed_pagerank_spark.plans.loop import (
+    conf_scope,
+    exact_sum,
+    fixpoint,
+    loop_partitions,
+    loop_policy,
+)
 
 
 @dataclass
@@ -56,9 +65,9 @@ def _prepare_edges(
     spark: SparkSession,
     edges: DataFrame,
     dup_policy: str,
-    num_partitions: int,
+    num_partitions: int | None,
     weight_col: str | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, int]:
+) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
     """Static per-run edge product: (src, dst, out_degree), partitioned by
     src and persisted. The in-link side dedups duplicates in both policies
     (the reference stores in-links in a map, collapsing dups); the
@@ -72,10 +81,13 @@ def _prepare_edges(
     startup cost, so re-reading it per derived artifact (the round-2 shape:
     distinct + degrees + vertices = 4 scans) is not acceptable.
 
-    Returns ``(edge_product, vertices, cached_distinct_edges, edge_count)``;
-    the caller unpersists the third once the vertex-derived state is
-    materialized, and gets the edge-product row count for free (the
-    materializing count — doubles as the empty-graph check).
+    The loop's partition count is ``num_partitions``, or else sized from
+    the measured bytes of the cached aggregate (``loop_partitions``).
+
+    Returns ``(edge_product, vertices, cached_distinct_edges, edge_count,
+    partitions)``; the caller unpersists the third once the vertex-derived
+    state is materialized, and gets the edge-product row count for free
+    (the materializing count — doubles as the empty-graph check).
     """
     if weight_col is not None:
         # weighted graph: duplicate (src, dst) rows merge by SUMMING their
@@ -104,16 +116,20 @@ def _prepare_edges(
         )
         e = ecnt.select("src", "dst")
         edge_cols = ["src", "dst", "out_degree"]
-    ew = (
-        e.join(deg, e["src"] == deg["id"])
-        .select(*edge_cols)
-        .repartition(num_partitions, "src")
-        .sortWithinPartitions("src")  # CSR-style: sort-merge joins skip the
-        .persist()                    # per-iteration sort of the edge side
-    )
-    m = ew.count()  # materialize (fills the ecnt cache in the same job)
+    num_partitions = loop_partitions(ecnt, num_partitions)
+    # built under the loop's policy: one job, and the join's own shuffle
+    # by src already is the edge table's layout
+    with conf_scope(spark, loop_policy(num_partitions)):
+        ew = (
+            e.join(deg, e["src"] == deg["id"])
+            .select(*edge_cols)
+            .repartition(num_partitions, "src")
+            .sortWithinPartitions("src")  # CSR-style: sort-merge joins skip
+            .persist()                    # the per-iteration edge-side sort
+        )
+        m = ew.count()  # materialize (fills the ecnt cache if not yet filled)
     verts = vertices_from_edges(e)  # reads the cache, not the raw input
-    return ew, verts, ecnt, m
+    return ew, verts, ecnt, m, num_partitions
 
 
 def pagerank(
@@ -147,11 +163,7 @@ def pagerank(
     """
     if not 0.0 < c < 1.0:
         raise ValueError("damping c must be in (0,1)")
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-
-    edges_w, verts, edges_cached, n_edges = _prepare_edges(
+    edges_w, verts, edges_cached, n_edges, num_partitions = _prepare_edges(
         spark, edges, dup_policy, num_partitions, weight_col=weight_col
     )
     # empty-graph check rides the edge-product count (no vertex without an
@@ -265,12 +277,12 @@ def pagerank(
         return new_state, {}
 
     stats = {
-        "delta": F.sum(F.abs(F.col("rank") - F.col("rank_old"))),
+        "delta": exact_sum(F.abs(F.col("rank") - F.col("rank_old"))),
         # Σrank of the final state feeds the 'reference' normalization
-        "rank_sum": F.sum("rank"),
+        "rank_sum": exact_sum(F.col("rank")),
     }
     if dangling == "redistribute":
-        stats["dang_mass"] = F.sum(F.when(F.col("dang"), F.col("rank")))
+        stats["dang_mass"] = exact_sum(F.when(F.col("dang"), F.col("rank")))
     run = fixpoint(
         spark, "pagerank", edges_w, init, step, stats,
         lambda s: s["delta"] <= eps,

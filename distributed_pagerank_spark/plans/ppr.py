@@ -32,7 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.plans.loop import (
-    loop_conf,
+    conf_scope,
+    loop_policy,
     release_local_checkpoint,
 )
 from distributed_pagerank_spark.plans.pagerank import _prepare_edges
@@ -63,8 +64,7 @@ def personalized_pagerank_multi(
     co-partitioned full-outer against the cached seed vectors. The edge
     product is built and persisted ONCE for all sets and iterations.
     """
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    edges_w, _verts, ecnt, _m = _prepare_edges(
+    edges_w, _verts, ecnt, _m, num_partitions = _prepare_edges(
         spark, edges, dup_policy, num_partitions
     )
     ecnt.unpersist()  # PPR never needs the vertex set — only edge reach
@@ -120,7 +120,7 @@ def personalized_pagerank_multi(
     # barrier instead of one per iteration, with the same exchanges
     # inside. ``state_rows`` is recorded at barriers (None between —
     # nothing materializes there to count).
-    with loop_conf(spark):
+    with conf_scope(spark, loop_policy(num_partitions)):
         for iteration in range(1, k + 1):
             t0 = time.monotonic()
             contribs = (

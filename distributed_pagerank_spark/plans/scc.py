@@ -43,7 +43,9 @@ Spark job per round (the snapshot write, with the changed-label count
 observed on it), lineage cut at every round, and a ``RuntimeError``
 when ``max_prop`` rounds end before the labels settle — partial labels
 would split SCCs. The edge sets and vertex sets between fixpoints are
-``localCheckpoint`` leaves too, so no plan deepens across rounds.
+``localCheckpoint`` leaves too, so no plan deepens across rounds. Every
+round runs at one partition count, sized from the input edges' bytes
+(``plans.loop.loop_partitions``) unless ``num_partitions`` is given.
 
 Scale shape: both fixpoints move only |V_r|-sized label vectors against
 a per-round cached-and-shrinking edge set (same gather-scatter economy
@@ -67,8 +69,10 @@ from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import vertices_from_edges
 from distributed_pagerank_spark.plans.loop import (
+    LOOP_CONFS,
+    conf_scope,
     fixpoint,
-    loop_conf,
+    loop_partitions,
     release_local_checkpoint,
 )
 
@@ -144,9 +148,6 @@ def strongly_connected_components(
     The result is a ``localCheckpoint`` the caller owns (free it with
     ``release_local_checkpoint``); every other cache is released here,
     also when a round budget runs out (``RuntimeError``)."""
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
     metrics = metrics_out if metrics_out is not None else []
     raw = edges.select("src", "dst").persist()
     held = [raw]  # every cache this call made and has not released yet
@@ -164,6 +165,7 @@ def strongly_connected_components(
             release_local_checkpoint(df)
 
     try:
+        num_partitions = loop_partitions(raw, num_partitions)
         cur = leaf(
             raw.where(F.col("src") != F.col("dst"))
             .distinct()
@@ -178,7 +180,7 @@ def strongly_connected_components(
         )
         release(raw)
         assigned_parts: list[DataFrame] = []
-        with loop_conf(spark):
+        with conf_scope(spark, LOOP_CONFS):
             for outer in range(1, max_outer + 1):
                 t0 = time.monotonic()
 

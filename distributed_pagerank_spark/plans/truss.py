@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.plans.loop import (
-    loop_conf,
+    LOOP_CONFS,
+    conf_scope,
     release_local_checkpoint,
 )
 
@@ -151,7 +152,7 @@ def k_truss(
     n_cur = cur.count()
     out = None
 
-    with loop_conf(spark):
+    with conf_scope(spark, LOOP_CONFS):
         for rnd in range(1, max_iter + 1):
             t0 = time.monotonic()
             if n_cur == 0:

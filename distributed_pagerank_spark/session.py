@@ -2,8 +2,11 @@
 
 Local-mode defaults match the sandbox (single JVM, many cores); on a real
 cluster the same settings apply except master/memory, which come from
-``spark-submit``. AQE stays on: it coalesces the per-iteration shuffles of
-small frontiers and splits skewed join partitions at 100 TB scale.
+``spark-submit``. AQE is on for one-shot queries: it coalesces their
+shuffles and splits skewed join partitions at 100 TB scale. Fixpoint
+loops turn it off around their iterations and size their partitions
+from measured bytes instead (``plans/loop.py``), since AQE would split
+every iteration into several jobs.
 """
 
 from __future__ import annotations
