@@ -20,12 +20,12 @@ persisted edge table (the multi-source-BFS economy, ``plans/bfs.py``):
   ``sigma(v)/sigma(w) · (1 + delta(w))`` along edges into the level
   below; betweenness(v) = Σ over roots of delta(v), roots excluded.
 
-State is keyed ``(root, id)``; per-level slices are kept as flat
-localCheckpoint snapshots (bounded by max_depth), so lineage never
-grows and the backward pass re-reads exactly the rows it needs. The
-visited set is a lazy union over those slice leaves — never its own
-checkpoint — so no level pays an O(|visited|) re-materialization
-(r6 second wave).
+The forward pass is ``plans.loop.frontier``, keyed ``(root, id)``: one
+job per level, each level a flat localCheckpoint slice (bounded by
+max_depth) with its exact row count, so lineage never grows and the
+backward pass re-reads exactly the rows it needs. The visited set is a
+lazy union over those slice leaves, so no level pays an O(|visited|)
+re-materialization.
 
 The backward hand-back picks its join shape per level from the EXACT
 slice row counts the forward pass already established (checkpoint
@@ -41,7 +41,7 @@ classic agg + left-join shape runs, with size-gated broadcast hints.
 
 from __future__ import annotations
 
-import time
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -49,29 +49,13 @@ from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import symmetrize
 from distributed_pagerank_spark.plans.loop import (
-    LOOP_CONFS,
     conf_scope,
+    edge_table,
+    frontier,
+    loop_partitions,
+    loop_policy,
     release_local_checkpoint,
 )
-
-
-def _parse_bytes(raw: object) -> int:
-    """Spark size-conf string → bytes (``"10485760b"``, ``"10MB"``, ``-1``)."""
-    s = str(raw).strip().lower()
-    mult = 1
-    for suf, m in (
-        ("kb", 1024), ("mb", 1024**2), ("gb", 1024**3), ("tb", 1024**4),
-        ("k", 1024), ("m", 1024**2), ("g", 1024**3), ("t", 1024**4),
-        ("b", 1),
-    ):
-        if s.endswith(suf):
-            s = s[: -len(suf)]
-            mult = m
-            break
-    try:
-        return int(float(s)) * mult
-    except ValueError:
-        return 0
 
 
 def _broadcast_row_limit(spark: SparkSession) -> int:
@@ -82,14 +66,12 @@ def _broadcast_row_limit(spark: SparkSession) -> int:
     slice's exact row count from the forward pass. Gate on the session's
     own ``autoBroadcastJoinThreshold`` (0 when disabled) at a
     conservative 64 bytes/row (32 data + hashed-relation overhead), so
-    the hint scales with the conf, not with this sandbox.
+    the hint scales with the conf, not with one host's memory. Read it before
+    entering ``loop_policy``, which turns automatic broadcasts off.
     """
-    try:
-        raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    except Exception:
-        return 0
-    n = _parse_bytes(raw)
-    return max(0, n) // 64
+    threshold = spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    return max(0, threshold) // 64
 
 
 def betweenness(
@@ -107,104 +89,68 @@ def betweenness(
     ``roots``: one ``root`` column (vertex ids). ``directed=False``
     (default) symmetrizes the edge table. A vertex's score counts only
     dependencies of the sampled roots (scale by |V|/K for the
-    Brandes–Pich estimate of the full sum).
+    Brandes–Pich estimate of the full sum). The result is a
+    ``localCheckpoint`` the caller owns; every other cache is released.
     """
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    metrics = metrics_out if metrics_out is not None else []
-    e = edges if directed else symmetrize(edges)
-    e = (
-        e.select("src", "dst")
+    cached = (
+        (edges if directed else symmetrize(edges))
+        .select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .repartition(num_partitions, "src")
         .persist()
     )
-    e.count()
+    num_partitions = loop_partitions(cached, num_partitions)
+    e = edge_table(cached, num_partitions)
+    bcast_rows = _broadcast_row_limit(spark)
 
     # ---- forward pass: per-level (root, id, sigma) slices
-    levels: list[DataFrame] = []  # levels[i] = vertices at dist i
-    level_rows: list[int | None] = []  # exact slice counts (index 0 unused)
-    frontier = (
+    def expand(level: DataFrame, depth: int) -> DataFrame:
+        # aggregate BEFORE the anti-join (guide §2.3): the sigma sum
+        # gets map-side partial aggregation, so the (root,id,sigma)
+        # exchange carries one row per pair instead of one per path,
+        # and the anti-join then reuses the groupBy's (root,id)
+        # partitioning — one exchange of the candidate stream, not
+        # two. Identical result: pairs the anti-join drops are
+        # dropped whole, kept pairs sum the same rows.
+        return (
+            level.join(e, level["id"] == e["src"])
+            .select("root", F.col("dst").alias("id"), "sigma")
+            .groupBy("root", "id")
+            .agg(F.sum("sigma").alias("sigma"))
+        )
+
+    # levels[i] = vertices at dist i, level_rows[i] its exact row count
+    levels, level_rows = frontier(
+        spark,
         roots.select(
             F.col("root").cast("long").alias("root"),
             F.col("root").cast("long").alias("id"),
             F.lit(1.0).alias("sigma"),
-        )
-        .distinct()
-        # lazy: materialized inside the depth-1 job on first use
-        .localCheckpoint(eager=False)
+        ).distinct(),
+        expand, key=("root", "id"), max_depth=max_depth,
+        num_partitions=num_partitions, metrics_out=metrics_out,
     )
-    # The visited set is a LAZY UNION over the checkpointed slice leaves
-    # (each already flat) — the anti-join reads the same cached bytes a
-    # checkpointed union would hold, but no depth pays the O(|visited|)
-    # union re-materialization job, and the slices aren't double-cached
-    # (r6 second wave).
-    visited = frontier.select("root", "id")
-    levels.append(frontier)
-    level_rows.append(None)
-    with conf_scope(spark, LOOP_CONFS):
-        for depth in range(1, max_depth + 1):
-            t0 = time.monotonic()
-            cand = (
-                frontier.join(e, frontier["id"] == e["src"])
-                .select("root", F.col("dst").alias("id"), "sigma")
-            )
-            # aggregate BEFORE the anti-join (guide §2.3): the sigma sum
-            # gets map-side partial aggregation, so the (root,id,sigma)
-            # exchange carries one row per pair instead of one per path,
-            # and the anti-join then reuses the groupBy's (root,id)
-            # partitioning — one exchange of the candidate stream, not
-            # two. Identical result: pairs the anti-join drops are
-            # dropped whole, kept pairs sum the same rows.
-            # LAZY checkpoint: the termination count right below is the
-            # materializing action, so each depth pays ONE job for
-            # compute+cache+count instead of an eager-checkpoint job
-            # followed by a count job (r6 third wave).
-            nxt = (
-                cand.groupBy("root", "id")
-                .agg(F.sum("sigma").alias("sigma"))
-                .join(visited, ["root", "id"], "left_anti")
-                .localCheckpoint(eager=False)
-            )
-            n = nxt.count()
-            metrics.append(
-                {"phase": "forward", "depth": depth, "rows": n,
-                 "total_s": round(time.monotonic() - t0, 4)}
-            )
-            if n == 0:
-                release_local_checkpoint(nxt)
-                break
-            visited = visited.unionByName(nxt.select("root", "id"))
-            levels.append(nxt)
-            level_rows.append(n)
-            frontier = nxt
 
     # ---- backward pass: delta accumulates deepest-level-first. Each
-    # level's delta slice is a LAZY localCheckpoint: no driver ACTION
-    # runs until the final betweenness aggregation below, so the
-    # backward data path executes inside that one action — each slice
-    # materializes (and cuts lineage) the first time the level below,
-    # or the final union, computes it there. (Broadcast-shape levels
-    # still submit their own broadcast-collect jobs when the plan
-    # compiles, so the Spark UI shows one action job plus one small
-    # broadcast job per factor-aggregate level — the per-level EAGER
-    # checkpoint jobs are what disappeared.) The per-level join-shape
-    # choices only need the forward pass's exact counts, never a
-    # backward runtime value, so laziness costs nothing (r6 fourth
-    # wave).
-    last = len(levels) - 1
-    bcast_rows = _broadcast_row_limit(spark)
+    # level's delta slice is a LAZY localCheckpoint: no action runs until
+    # the final betweenness aggregation below, so the backward data path
+    # executes inside that one action — each slice materializes (and cuts
+    # lineage) the first time the level below, or the final union,
+    # computes it there. (Broadcast-shape levels still submit their own
+    # broadcast-collect jobs when the plan compiles.) The per-level
+    # join-shape choices only need the forward pass's exact counts, never
+    # a backward runtime value, so laziness costs nothing. It runs under
+    # the loop's policy, where only the explicit hints below broadcast.
     contributions: list[DataFrame] = []
     delta_slices: list[DataFrame] = []  # released after `out` materializes
     delta_above: DataFrame | None = None  # (root, id, sigma, delta)
-    with conf_scope(spark, LOOP_CONFS):
-        for lev in range(last, 0, -1):
-            t0 = time.monotonic()
+    with conf_scope(spark, loop_policy(num_partitions)):
+        for lev in range(len(levels) - 1, 0, -1):
             cur = levels[lev]
             if delta_above is None:
                 # deepest level: delta is a literal over an
                 # already-checkpointed slice — no data to snapshot, no
-                # lineage to cut, so no checkpoint job (r6: one job less)
+                # lineage to cut, so no checkpoint job
                 cur_delta = cur.select(
                     "root", "id", "sigma", F.lit(0.0).alias("delta")
                 )
@@ -217,17 +163,8 @@ def betweenness(
                 # calls itself (module docstring, guide §3).
                 w_rows = level_rows[lev + 1]
                 cur_rows = level_rows[lev]
-                bcast_w = (
-                    bcast_rows
-                    and w_rows is not None
-                    and w_rows <= bcast_rows
-                )
-                bcast_cur = (
-                    bcast_rows
-                    and cur_rows is not None
-                    and cur_rows <= bcast_rows
-                )
-                if bcast_w and cur_rows is not None and w_rows < cur_rows:
+                bcast_cur = cur_rows <= bcast_rows
+                if w_rows <= bcast_rows and w_rows < cur_rows:
                     # factor-aggregate shape: delta_v = sigma_v · Σ f_w
                     # with f = (1+delta_w)/sigma_w per successor pair.
                     # The edge table probes the BROADCAST factor slice
@@ -295,29 +232,22 @@ def betweenness(
                     )
             delta_above = cur_delta
             delta_slices.append(cur_delta)
-            contributions.append(
-                cur_delta.select("id", "delta")
-            )
-            metrics.append(
-                {"phase": "backward", "depth": lev,
-                 "total_s": round(time.monotonic() - t0, 4)}
-            )
+            contributions.append(cur_delta.select("id", "delta"))
 
-    if not contributions:
-        out = spark.createDataFrame([], "id long, betweenness double")
-        out = out.localCheckpoint(eager=True)
-    else:
-        allc = contributions[0]
-        for c in contributions[1:]:
-            allc = allc.unionByName(c)
-        out = (
-            allc.groupBy("id")
-            .agg(F.sum("delta").alias("betweenness"))
-            .localCheckpoint(eager=True)
-        )
+        if not contributions:
+            out = spark.createDataFrame([], "id long, betweenness double")
+            out = out.localCheckpoint(eager=True)
+        else:
+            out = (
+                reduce(DataFrame.unionByName, contributions)
+                .groupBy("id")
+                .agg(F.sum("delta").alias("betweenness"))
+                .localCheckpoint(eager=True)
+            )
     for sl in delta_slices:
         release_local_checkpoint(sl)
     for lv in levels:
         release_local_checkpoint(lv)
     e.unpersist()
+    cached.unpersist()
     return out

@@ -15,27 +15,28 @@ Unweighted shortest paths only: the first round that reaches a vertex
 fixes its distance, so no relaxation or re-visits occur — each round is
 one join + one distinct + one anti-join against the visited set.
 
-Each round's new frontier is a LAZILY localCheckpoint-ed slice whose
-termination count doubles as the materializing action — ONE job per
-depth that computes and caches only the |frontier| new rows. The
-visited set is a lazy union over those flat slice leaves (the
-betweenness forward-pass economy, ``plans/betweenness.py``): the
+The loop is ``plans.loop.frontier``: each depth is one job that
+computes, caches and counts only the new slice of ``(root, id)`` rows.
+The visited set is a lazy union over those flat slice leaves, so the
 anti-join reads the same cached bytes a materialized union would hold,
-but no depth ever re-writes the O(|visited|) union, and lineage stays
-flat without any separate truncation step.
+but no depth ever re-writes the O(|visited|) union. The edge table is
+sized from its measured bytes and laid out once by ``src``.
 """
 
 from __future__ import annotations
 
-import time
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import symmetrize
-
-from distributed_pagerank_spark.plans.loop import release_local_checkpoint
+from distributed_pagerank_spark.plans.loop import (
+    edge_table,
+    frontier,
+    loop_partitions,
+)
 
 
 def multi_source_bfs(
@@ -57,57 +58,34 @@ def multi_source_bfs(
     view; pass ``True`` to follow edge direction.
 
     Rounds run to ``max_depth`` or until every frontier is empty,
-    whichever is first. The visited set is the result.
+    whichever is first. The result is the union of the per-depth slices,
+    ``localCheckpoint`` leaves the caller owns (free each with
+    ``release_local_checkpoint``). Empty ``sources`` raise ``ValueError``.
     """
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism
-    e = edges if directed else symmetrize(edges)
-    e = (
-        e.select("src", "dst")
-        .repartition(num_partitions, "src")
+    cached = (
+        (edges if directed else symmetrize(edges))
+        .select("src", "dst")
         .persist()
     )
-    e.count()
+    num_partitions = loop_partitions(cached, num_partitions)
+    e = edge_table(cached, num_partitions)
 
-    frontier = (
-        sources.select("root", "id", F.lit(0).alias("dist"))
-        .distinct()
-        .repartition(num_partitions, "id")
-        .persist()
-    )
-    if frontier.count() == 0:
-        e.unpersist()
-        raise ValueError("empty sources: no BFS roots")
-    # the visited set is a lazy union over the per-depth slices (module
-    # docstring); every slice is part of the returned result, so nothing
-    # is released in-loop
-    visited = frontier  # depth 0: the visited set IS the frontier
-    metrics = metrics_out if metrics_out is not None else []
-
-    for depth in range(1, max_depth + 1):
-        t0 = time.monotonic()
-        candidates = (
-            frontier.join(e, frontier["id"] == e["src"])
+    def expand(level: DataFrame, depth: int) -> DataFrame:
+        return (
+            level.join(e, level["id"] == e["src"])
             .select("root", F.col("dst").alias("id"))
             .distinct()
             .withColumn("dist", F.lit(depth))
         )
-        # LAZY checkpoint: the termination count below is the
-        # materializing action — ONE job per depth, writing only the
-        # |frontier| new rows, never the whole visited union.
-        new_frontier = (
-            candidates.join(visited, ["root", "id"], "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        n_new = new_frontier.count()
-        metrics.append(
-            {"depth": depth, "frontier_rows": n_new,
-             "total_s": round(time.monotonic() - t0, 4)}
-        )
-        if n_new == 0:
-            release_local_checkpoint(new_frontier)
-            break
-        visited = visited.unionByName(new_frontier)
-        frontier = new_frontier
 
+    slices, _ = frontier(
+        spark,
+        sources.select("root", "id", F.lit(0).alias("dist")).distinct(),
+        expand, key=("root", "id"), max_depth=max_depth,
+        num_partitions=num_partitions, metrics_out=metrics_out,
+    )
     e.unpersist()
-    return visited.select("root", "id", "dist")
+    cached.unpersist()
+    if not slices:
+        raise ValueError("empty sources: no BFS roots")
+    return reduce(DataFrame.unionByName, slices)

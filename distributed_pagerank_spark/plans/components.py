@@ -105,7 +105,7 @@ def label_exchange(
         lambda: vertices_from_edges(raw).select("id", F.col("id").alias(label)),
         lambda labels, last: step(sym, labels, last),
         {"changed": F.sum((F.col(label) != F.col("old")).cast("long"))},
-        lambda s: s["changed"] == 0,
+        lambda s, _: s["changed"] == 0,
         num_partitions=num_partitions, inputs=[raw], **loop,
     )
     sym.unpersist()
@@ -126,6 +126,9 @@ def connected_components(
     """→ ``(id long, component long)`` at fixpoint.
 
     ``checkpoint_dir`` makes the run resumable (``plans/loop.py``).
+    Without it the iteration state lives in unreplicated local
+    checkpoints, and losing an executor mid-run aborts the run; with it,
+    rerunning the same call resumes from the last durable iteration.
     """
     if algorithm not in ("hashmin", "pointer", "hybrid"):
         raise ValueError(f"unknown algorithm {algorithm!r}")

@@ -34,7 +34,11 @@ def label_propagation(
 ) -> DataFrame:
     """→ ``(id long, label long)`` after ``rounds`` synchronous rounds
     (early-stops at fixpoint). ``checkpoint_dir`` makes the run resumable
-    (``plans/loop.py``)."""
+    (``plans/loop.py``). Without it the iteration state lives in
+    unreplicated local checkpoints, and losing an executor mid-run aborts
+    the run; with it, rerunning the same call resumes from the last
+    durable iteration.
+    """
 
     def step(sym: DataFrame, labels: DataFrame, last: dict[str, Any] | None):
         freq = (

@@ -1,5 +1,7 @@
-"""Checkpointed fixpoint harness shared by PageRank, CC, label propagation
-and SCC's color and reach fixpoints.
+"""The loop harnesses every iterative plan runs on: ``fixpoint`` for
+PageRank, CC, label propagation, SCC's color and reach fixpoints and the
+k-core, coreness and k-truss peels; ``frontier`` for multi-source BFS and
+betweenness' forward pass.
 
 The reference runs one master loop: scatter, gather, convergence check,
 then a ``State`` snapshot replicated to the workers at the iteration
@@ -39,13 +41,29 @@ everything around it:
   converged, total_s}``, returned and stored in that iteration's manifest
   (with the per-partition row counts of the snapshot).
 
+The state is keyed by a tuple of columns, ``("id",)`` for a vertex
+state. A peel's state is its surviving edge set, keyed by an endpoint;
+its statistic is the row count, and ``converged`` gets the previous
+record, so a round that removes nothing ends it (``rows_settled``).
+Loops whose partial state is a wrong answer (SCC's fixpoints, the peels)
+raise when their budget stops them unconverged (``Fixpoint.settled``).
+
+``frontier`` is the other loop shape: level-synchronous expansion,
+where level ``d`` is what ``expand`` reaches from level ``d−1`` minus
+the visited set, a lazy union of the earlier levels' slices. Each level
+is one job that caches its slice and observes its row count; the slices
+and their counts are the caller's. It stops at an empty slice or at
+``max_depth`` (declared truncation, which does not raise).
+
 Execution policy: one Spark job per iteration. The caller sizes the
 loop once, from the measured bytes of its cached edge aggregate
-(``loop_partitions``), and the edge table, the start state and every
-in-loop shuffle use that one partition count. Around its iterations
-``fixpoint`` runs with AQE off, ``spark.sql.shuffle.partitions`` at that
-count and automatic broadcast joins off (``loop_policy``), restoring the
-caller's confs on return and on raise (``conf_scope``). Then the edges
+(``loop_partitions``, or ``measure`` when it needs the row count too),
+and the edge table (``edge_table``), the start state and every in-loop
+shuffle use that one partition count. Around its iterations
+``fixpoint`` (and ``frontier``) runs with AQE off,
+``spark.sql.shuffle.partitions`` at that count and automatic broadcast
+joins off (``loop_policy``), restoring the caller's confs on return and
+on raise (``conf_scope``). Then the edges
 ⋈ state and state ⋈ aggregate joins are co-partitioned sort-merge joins
 over the same hash layout: each iteration is one job with at most one
 shuffle.
@@ -89,10 +107,9 @@ from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
 
-# Runtime confs pinned inside the k-core, k-truss, betweenness and SCC
-# outer loops: AQE off (BENCH/ab_loop_aqe_ckpt_r6.json, sf0.1/local[32]);
-# their small frontiers still broadcast. ``fixpoint`` loops and PPR run
-# under the fuller ``loop_policy`` instead.
+# Runtime confs of SCC's outer rounds and of ``measure``'s count: AQE off
+# (BENCH/ab_loop_aqe_ckpt_r6.json, sf0.1/local[32]), broadcasts still on.
+# ``fixpoint``, ``frontier`` and PPR run under the fuller ``loop_policy``.
 LOOP_CONFS = {"spark.sql.adaptive.enabled": "false"}
 
 
@@ -138,32 +155,54 @@ def conf_scope(spark: SparkSession, confs: dict[str, str]):
                 pass
 
 
-def loop_partitions(cached: DataFrame, requested: int | None) -> int:
-    """Partition count of a loop over the persisted edge aggregate
-    ``cached``: ``requested`` when given, otherwise sized from its
-    measured bytes.
+def measure(cached: DataFrame, requested: int | None) -> tuple[int, int]:
+    """Rows of the persisted edge aggregate ``cached`` and the partition
+    count of a loop over it: ``requested`` when given, otherwise sized
+    from its measured bytes.
 
-    ``cached`` is materialized here by an AQE-off count, after which its
-    size statistic is the cache's real in-memory size. The count is
+    ``cached`` is materialized here by one AQE-off count, after which its
+    size statistic is the cache's real in-memory size. The sized count is
     ``ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``,
     clamped to ``[1, spark.sql.shuffle.partitions]``: the partition size
     AQE would coalesce to, fixed before the loop instead of re-planned
     every iteration.
     """
-    if requested:
-        return requested
     spark = cached.sparkSession
     with conf_scope(spark, LOOP_CONFS):
         # AQE would run each of the count's stages as its own job (the
         # cache itself keeps the plan it was persisted with)
-        cached.count()
+        rows = cached.count()
+    if requested:
+        return rows, requested
     plan = cached._jdf.queryExecution().optimizedPlan()
     size = int(plan.stats().sizeInBytes())
     advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
         .byteStringAsBytes(
             spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return max(1, min(cap, -(-size // advisory)))
+    return rows, max(1, min(cap, -(-size // advisory)))
+
+
+def loop_partitions(cached: DataFrame, requested: int | None) -> int:
+    """Partition count of a loop over the persisted edge aggregate
+    ``cached`` (``measure``); counts it only when sizing."""
+    return requested or measure(cached, None)[1]
+
+
+def edge_table(edges: DataFrame, num_partitions: int) -> DataFrame:
+    """``edges`` as a loop's static side: hash-partitioned by ``src`` into
+    the loop's ``num_partitions`` and sorted by it (CSR-style), persisted
+    with a plan made under ``loop_policy``. A loop's joins on ``src`` then
+    read it in place, with no edge-side shuffle or sort. The loop's first
+    job that reads it fills the cache, so ``edges`` must stay readable
+    until then; the caller unpersists the table.
+    """
+    with conf_scope(edges.sparkSession, loop_policy(num_partitions)):
+        return (
+            edges.repartition(num_partitions, "src")
+            .sortWithinPartitions("src")
+            .persist()
+        )
 
 
 def exact_sum(col: Column) -> Column:
@@ -389,6 +428,23 @@ class Fixpoint:
     converged: bool
     metrics: list[dict[str, Any]] = field(default_factory=list)
 
+    def settled(self, what: str) -> DataFrame:
+        """The final state of a loop whose partial state is a wrong
+        answer: when the budget stopped it unconverged, the state is
+        released and a ``RuntimeError`` raised instead."""
+        if not self.converged:
+            release_local_checkpoint(self.state)
+            raise RuntimeError(
+                f"{what} did not converge in {self.iterations} iterations")
+        return self.state
+
+
+def rows_settled(rows: int) -> Callable[[dict, dict | None], bool]:
+    """Convergence test of a peel whose statistic is its state's row
+    count: the round removed nothing (the previous count is the last
+    record's, or ``rows`` before the first round), or nothing is left."""
+    return lambda s, last: s["rows"] in (0, last["rows"] if last else rows)
+
 
 def fixpoint(
     spark: SparkSession,
@@ -397,9 +453,10 @@ def fixpoint(
     init: Callable[[], DataFrame],
     step: Callable[[DataFrame, dict[str, Any] | None], tuple[DataFrame, dict]],
     stats: dict[str, Column],
-    converged: Callable[[dict[str, Any]], bool],
+    converged: Callable[[dict[str, Any], dict[str, Any] | None], bool],
     *,
     max_iter: int,
+    key: tuple[str, ...] = ("id",),
     num_partitions: int,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 1,
@@ -410,9 +467,10 @@ def fixpoint(
 ) -> Fixpoint:
     """Iterate ``state ← step(state)`` until ``converged`` or ``max_iter``.
 
-    ``init()`` builds the ``(id, ...)`` start state; it is skipped when a
-    checkpoint of the same job is resumed. The start state, fresh or
-    resumed, is hash-partitioned and sorted by ``id`` into a lazy
+    ``init()`` builds the start state; it is skipped when a checkpoint of
+    the same job is resumed. The start state, fresh or resumed, is
+    hash-partitioned and sorted by its ``key`` columns (a vertex ``id``
+    by default; a peel's edge set by an endpoint) into a lazy
     ``localCheckpoint`` that the first iteration's job materializes.
     ``inputs`` are caches the start state reads; they are unpersisted
     after that job.
@@ -420,7 +478,8 @@ def fixpoint(
     ``step(state, last)`` plans the next state with any extra columns the
     ``stats`` aggregates read, plus notes for the metrics record; ``last``
     is this run's previous record (``None`` on the run's first
-    iteration). ``converged`` decides on the statistics. ``graph``
+    iteration). ``converged(stats, last)`` decides on the statistics and
+    the same previous record. ``graph``
     ``(src, dst)`` and ``identity`` (the algorithm's parameters)
     fingerprint the checkpoint directory. See the module docstring for
     the lifecycle.
@@ -456,12 +515,12 @@ def fixpoint(
             if last["converged"] or start >= max_iter:
                 release_inputs()
                 return Fixpoint(state, start, last, last["converged"])
-        # id-sorted like the edge tables: the per-iteration sort-merge joins
-        # skip the state-side Sort, and the snapshots inherit the order
+        # key-sorted like the edge tables: the per-iteration sort-merge
+        # joins skip the state-side Sort, and the snapshots inherit the order
         state = bound_estimate(
             (init() if state is None else state)
-            .repartition(num_partitions, "id")
-            .sortWithinPartitions("id")
+            .repartition(num_partitions, *key)
+            .sortWithinPartitions(*key)
             .localCheckpoint(eager=False)
         )
         cols = state.columns
@@ -470,8 +529,8 @@ def fixpoint(
         while not done and iteration < max_iter:
             iteration += 1
             t0 = time.monotonic()
-            nxt, notes = step(state.select(*cols),
-                              records[-1] if records else None)
+            prev = records[-1] if records else None
+            nxt, notes = step(state.select(*cols), prev)
             snapshot = bound_estimate(nxt.localCheckpoint(eager=False))
             save = ckpt.enabled() and (
                 iteration % checkpoint_interval == 0 or iteration >= max_iter
@@ -488,7 +547,7 @@ def fixpoint(
             # sums over an empty state are NULL
             observed = obs.get
             values = {k: 0 if observed[k] is None else observed[k] for k in stats}
-            done = converged(values)
+            done = converged(values, prev)
             record = {"iteration": iteration, **values, **notes,
                       "converged": done,
                       "total_s": round(time.monotonic() - t0, 4)}
@@ -506,3 +565,60 @@ def fixpoint(
         release_inputs()  # zero iterations: the lazy start state never ran
         return Fixpoint(state, iteration, records[-1] if records else last, done,
                         records)
+
+
+def frontier(
+    spark: SparkSession,
+    start: DataFrame,
+    expand: Callable[[DataFrame, int], DataFrame],
+    *,
+    key: tuple[str, ...],
+    max_depth: int,
+    num_partitions: int,
+    metrics_out: list[dict[str, Any]] | None = None,
+) -> tuple[list[DataFrame], list[int]]:
+    """Level-synchronous expansion from ``start`` → ``(slices, rows)``.
+
+    Slice 0 is ``start``; slice ``d`` is ``expand(slice d−1, d)`` minus
+    every ``key`` an earlier slice holds. That visited set is a lazy
+    union of the slice leaves, so no level re-materializes it. Each level
+    is one job: the slice is computed into a lazy ``localCheckpoint``,
+    cached, and its row count observed on the way. The loop stops after
+    an empty slice (released here) or at ``max_depth``; depth truncation
+    is the caller's declared semantics, so it does not raise.
+
+    The slices and their exact row counts are the caller's; it frees the
+    slices with ``release_local_checkpoint``. The loop runs under
+    ``loop_policy(num_partitions)``, and levels 1.. append
+    ``{iteration, rows, converged, total_s}`` records (converged: the
+    slice is empty) to ``metrics_out``.
+    """
+    slices: list[DataFrame] = []
+    rows: list[int] = []
+    visited = None
+    with conf_scope(spark, loop_policy(num_partitions)):
+        for depth in range(max_depth + 1):
+            t0 = time.monotonic()
+            plan = (
+                start.repartition(num_partitions, *key)
+                if visited is None
+                else expand(slices[-1], depth).join(visited, list(key),
+                                                    "left_anti")
+            )
+            level = bound_estimate(plan.localCheckpoint(eager=False))
+            obs = Observation()
+            level.observe(obs, F.count("*").alias("rows")) \
+                .write.format("noop").mode("overwrite").save()
+            n = obs.get["rows"]
+            if depth and metrics_out is not None:
+                metrics_out.append({"iteration": depth, "rows": n,
+                                    "converged": n == 0,
+                                    "total_s": round(time.monotonic() - t0, 4)})
+            if n == 0:
+                release_local_checkpoint(level)
+                break
+            slices.append(level)
+            rows.append(n)
+            seen = level.select(*key)
+            visited = seen if visited is None else visited.unionByName(seen)
+    return slices, rows

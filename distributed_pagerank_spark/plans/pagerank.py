@@ -160,6 +160,9 @@ def pagerank(
     becomes ``w(u,v) / Σ_x w(u,x)`` instead of ``1 / out_degree`` (dup
     edges merge by summing weight; ``dup_policy`` is subsumed).
     ``checkpoint_dir`` makes the run resumable (``plans/loop.py``).
+    Without it the iteration state lives in unreplicated local
+    checkpoints, and losing an executor mid-run aborts the run; with it,
+    rerunning the same call resumes from the last durable iteration.
     """
     if not 0.0 < c < 1.0:
         raise ValueError("damping c must be in (0,1)")
@@ -285,7 +288,7 @@ def pagerank(
         stats["dang_mass"] = exact_sum(F.when(F.col("dang"), F.col("rank")))
     run = fixpoint(
         spark, "pagerank", edges_w, init, step, stats,
-        lambda s: s["delta"] <= eps,
+        lambda s, _: s["delta"] <= eps,
         max_iter=max_iter, num_partitions=num_partitions,
         checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
         resume=resume, inputs=[edges_cached],

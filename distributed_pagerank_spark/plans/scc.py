@@ -123,15 +123,10 @@ def _max_prop(
     run = fixpoint(
         spark, name, edges_r, lambda: init, step,
         {"changed": F.sum((F.col("c") != F.col("old")).cast("long"))},
-        lambda s: s["changed"] == 0,
+        lambda s, _: s["changed"] == 0,
         max_iter=max_rounds, num_partitions=num_partitions,
     )
-    if not run.converged:
-        release_local_checkpoint(run.state)
-        raise RuntimeError(
-            f"SCC {name} fixpoint did not converge in {max_rounds} rounds"
-        )
-    return run.state
+    return run.settled(f"SCC {name} fixpoint")
 
 
 def strongly_connected_components(

@@ -18,24 +18,28 @@ only tightens as edges peel. That makes a round three built-in steps
 over the oriented survivor set: adjacency-list aggregation, the
 two-sided intersect join exploding each triangle to its three oriented
 edges, and one map-side-combined support count whose ≥ k−2 filter IS
-the next edge set (support keys ⊆ edge set) — one eager localCheckpoint
-plus its count per round, nothing else. At 100 TB the full-graph
+the next edge set (support keys ⊆ edge set). At 100 TB the full-graph
 enumeration is paid once on the raw scan; later rounds touch only the
 surviving (typically much smaller) subgraph.
+
+The peel is one ``plans.loop.fixpoint``: the state is the oriented
+survivor set keyed by ``a``, each round is one job, and its row count,
+observed on that job, settles the peel when a round removes no edge. A
+peel stopped by its round budget raises ``RuntimeError``: its survivors
+are a supergraph of the truss, a wrong answer.
 """
 
 from __future__ import annotations
 
-import time
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.plans.loop import (
-    LOOP_CONFS,
-    conf_scope,
-    release_local_checkpoint,
+    fixpoint,
+    measure,
+    rows_settled,
 )
 
 
@@ -138,82 +142,28 @@ def k_truss(
 
     Empty result when no k-truss exists. ``k < 3`` is rejected (the
     2-truss is the whole edge set — no triangle constraint to enforce).
+    Raises ``RuntimeError`` when ``max_iter`` rounds end before the peel
+    settles. The result reads the final edge set, a ``localCheckpoint``
+    leaf the caller owns (free it with ``release_local_checkpoint``).
     """
     if k < 3:
         raise ValueError("k must be >= 3")
-    metrics = metrics_out if metrics_out is not None else []
-    # LAZY checkpoints throughout the peel: each count right below is
-    # the materializing action, so every round pays ONE job for
-    # compute+cache+count instead of two (r6 third wave).
-    cur = (
-        _orient_by_degree(_canonical(edges))
-        .localCheckpoint(eager=False)
-    )
-    n_cur = cur.count()
-    out = None
-
-    with conf_scope(spark, LOOP_CONFS):
-        for rnd in range(1, max_iter + 1):
-            t0 = time.monotonic()
-            if n_cur == 0:
-                break
-            survivors = (
-                _oriented_support(cur.select("a", "b"))
-                .where(F.col("support") >= k - 2)
-                .localCheckpoint(eager=False)
-            )
-            n_next = survivors.count()
-            metrics.append(
-                {"round": rnd, "removed": n_cur - n_next,
-                 "total_s": round(time.monotonic() - t0, 4)}
-            )
-            if n_next == n_cur:
-                # fixpoint: survivors' support was computed on a graph
-                # identical to the final subgraph
-                release_local_checkpoint(cur)
-                out = survivors
-                break
-            release_local_checkpoint(cur)
-            cur = survivors
-            n_cur = n_next
-
-    if out is None:
-        if n_cur == 0:
-            out = (
-                cur.select(
-                    F.col("a").alias("src"),
-                    F.col("b").alias("dst"),
-                    F.lit(0).cast("long").alias("support"),
-                )
-                .where(F.lit(False))
-                .localCheckpoint(eager=True)
-            )
-            release_local_checkpoint(cur)
-            return out
-        # max_iter exhausted mid-peel: current survivor set with its
-        # support — a supergraph of the k-truss (peeling truncated
-        # early, never over-deleted)
-        sup = _oriented_support(cur.select("a", "b"))
-        out = (
-            cur.select("a", "b")
-            .join(sup, ["a", "b"], "left")
-            .select(
-                "a", "b",
-                F.coalesce("support", F.lit(0))
-                .cast("long").alias("support"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        release_local_checkpoint(cur)
-
+    oriented = _orient_by_degree(_canonical(edges)).persist()
+    rows, num_partitions = measure(oriented, None)
+    # at the fixpoint the survivors' support was computed on a graph
+    # identical to the final subgraph
+    truss = fixpoint(
+        spark, "k_truss", oriented, lambda: oriented,
+        lambda o, last: (
+            _oriented_support(o).where(F.col("support") >= k - 2), {}
+        ),
+        {"rows": F.count("*")}, rows_settled(rows),
+        key=("a",), max_iter=max_iter, num_partitions=num_partitions,
+        inputs=[oriented], metrics_out=metrics_out,
+    ).settled(f"{k}-truss peel")
     # orientation → canonical (src < dst) output
-    final = (
-        out.select(
-            F.least("a", "b").alias("src"),
-            F.greatest("a", "b").alias("dst"),
-            "support",
-        )
-        .localCheckpoint(eager=True)
+    return truss.select(
+        F.least("a", "b").alias("src"),
+        F.greatest("a", "b").alias("dst"),
+        "support",
     )
-    release_local_checkpoint(out)
-    return final

@@ -55,3 +55,34 @@ ALL_FIXTURES = {
     "self_loop": SELF_LOOP,
     "triangle_plus": TRIANGLE_PLUS,
 }
+
+
+def cached_rdds(spark):
+    """Ids of the RDDs the JVM holds persisted. Compare them as sets: the
+    context cleaner may drop other tests' dead caches meanwhile."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _leaves(df):
+    plan = df._jdf.queryExecution().analyzed().collectLeaves()
+    leaves = (plan.apply(i) for i in range(plan.size()))
+    return [p for p in leaves if p.getClass().getSimpleName() == "LogicalRDD"]
+
+
+def leaf_rdds(df):
+    """Ids of the checkpointed RDDs ``df``'s plan reads."""
+    return {leaf.rdd().id() for leaf in _leaves(df)}
+
+
+def collect_owned(spark, call):
+    """Rows of the DataFrame ``call()`` returns. Checks that the caches
+    the call left are exactly the result's leaves, which the caller owns;
+    releases them after the collect and checks nothing else is left."""
+    base = cached_rdds(spark)
+    out = call()
+    assert cached_rdds(spark) - base == leaf_rdds(out)
+    rows = out.collect()
+    for leaf in _leaves(out):
+        leaf.rdd().unpersist(False)
+    assert not cached_rdds(spark) - base
+    return rows

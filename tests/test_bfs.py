@@ -8,6 +8,8 @@ import pytest
 
 from distributed_pagerank_spark.plans.bfs import multi_source_bfs
 
+from tests.conftest import cached_rdds
+
 EDGES = [
     (1, 2), (2, 3), (3, 4), (4, 5),      # path
     (2, 6), (6, 7),                      # branch
@@ -85,3 +87,12 @@ def test_bfs_empty_sources_raises(spark):
     sources = spark.createDataFrame([], "root long, id long")
     with pytest.raises(ValueError):
         multi_source_bfs(spark, edges, sources)
+
+
+def test_bfs_empty_sources_releases_caches(spark):
+    edges = spark.createDataFrame(EDGES, "src long, dst long")
+    sources = spark.createDataFrame([], "root long, id long")
+    base = cached_rdds(spark)
+    with pytest.raises(ValueError):
+        multi_source_bfs(spark, edges, sources)
+    assert not cached_rdds(spark) - base

@@ -2,9 +2,9 @@ from __future__ import annotations
 
 import pytest
 
-from distributed_pagerank_spark.plans.kcore import k_core
+from distributed_pagerank_spark.plans.kcore import coreness, k_core
 from distributed_pagerank_spark.sources.generator import generate_graph
-from tests.conftest import ALL_FIXTURES, edges_df
+from tests.conftest import ALL_FIXTURES, cached_rdds, edges_df
 
 
 def brute_k_core(pairs, k):
@@ -113,3 +113,30 @@ def test_coreness_self_loop_only_vertex_core0(spark):
     got = {r["id"]: r["core"] for r in
            coreness(spark, edges_df(spark, [(0, 1), (7, 7)])).collect()}
     assert got == {0: 1, 1: 1, 7: 0}
+
+
+PATH4 = [(1, 2), (2, 3), (3, 4)]
+
+
+@pytest.mark.parametrize("call", [
+    # one round peels 1 and 4 but the 2-core is empty
+    lambda s: k_core(s, edges_df(s, PATH4), k=2, max_iter=1),
+    # level 2 needs the same two rounds
+    lambda s: coreness(s, edges_df(s, PATH4), max_iter_per_level=1),
+    # the 2-core {3, 4, 5} is not empty: level 1 cannot label it
+    lambda s: coreness(s, edges_df(s, [(1, 2), (2, 3), (3, 4), (4, 5),
+                                       (5, 3)]), max_k=1),
+], ids=["k_core_max_iter", "coreness_max_iter_per_level", "coreness_max_k"])
+def test_peel_budget_exhausted_raises_and_releases(spark, call):
+    """A peel stopped by its budget is a supergraph of the core: it must
+    raise, not return it, and leave no cache behind."""
+    base = cached_rdds(spark)
+    with pytest.raises(RuntimeError, match="did not converge|not empty"):
+        call(spark)
+    assert not cached_rdds(spark) - base
+
+
+def test_k_core_budget_that_suffices(spark):
+    # the same path with one round more settles on the empty 2-core
+    got = k_core(spark, edges_df(spark, PATH4), k=2, max_iter=2).collect()
+    assert got == []

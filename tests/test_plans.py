@@ -93,9 +93,9 @@ def test_pagerank_iteration_no_extra_state_exchange(spark):
     prior_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     # pin AQE off for the probe: AQE splits one count() into several jobs,
-    # breaking the one-job assertion (the fixpoint loops and PPR run
-    # AQE-off under loop.loop_policy; k-core, truss, betweenness and SCC's
-    # outer rounds under loop.LOOP_CONFS; both through loop.conf_scope).
+    # breaking the one-job assertion (the fixpoint and frontier loops and
+    # PPR run AQE-off under loop.loop_policy, SCC's outer rounds under
+    # loop.LOOP_CONFS; both through loop.conf_scope).
     # The session fixture disables it, but getOrCreate() from
     # any other test's get_spark() call re-applies builder confs to the
     # SHARED session — so the ambient value cannot be trusted here.

@@ -8,6 +8,8 @@ import pytest
 
 from distributed_pagerank_spark.plans.ppr import personalized_pagerank_multi
 
+from tests.conftest import cached_rdds
+
 EDGES = [
     (1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4),
     (6, 7), (7, 6),                      # separate 2-cycle island
@@ -100,10 +102,9 @@ def test_ppr_empty_seeds_raises(spark):
 def test_ppr_empty_seeds_releases_caches(spark, k):
     """The empty-seeds error leaves no cached RDD behind, on the barrier
     path (k=2) and on the zero-iteration path (k=0)."""
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     seeds = spark.createDataFrame([], "set_id int, id long, weight double")
-    before = persistent().size()
+    before = cached_rdds(spark)
     with pytest.raises(ValueError):
         personalized_pagerank_multi(spark, edges, seeds, k=k)
-    assert persistent().size() == before
+    assert not cached_rdds(spark) - before

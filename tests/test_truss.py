@@ -9,7 +9,7 @@ import pytest
 from distributed_pagerank_spark.plans.truss import k_truss
 from distributed_pagerank_spark.sources.generator import generate_graph
 
-from tests.conftest import edges_df
+from tests.conftest import cached_rdds, edges_df
 
 
 def brute_truss(pairs, k):
@@ -75,3 +75,17 @@ def test_k_truss_dups_and_self_loops_ignored(spark):
              (0, 1), (1, 2), (0, 2)]
     got = run(spark, pairs, 3)
     assert got == {(0, 1): 1, (0, 2): 1, (1, 2): 1}
+
+
+def test_k_truss_budget_exhausted_raises_and_releases(spark):
+    """K4 plus a fan on 4 and 5: one round peels (2,4), (4,5) and (3,5),
+    leaving (3,4) without a triangle. Stopped there the survivors are a
+    supergraph of the truss: it must raise and leave no cache behind."""
+    pairs = [(a, b) for a in range(4) for b in range(a + 1, 4)]
+    pairs += [(3, 4), (2, 4), (4, 5), (3, 5)]
+    base = cached_rdds(spark)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        k_truss(spark, edges_df(spark, pairs), k=4, max_iter=1)
+    assert not cached_rdds(spark) - base
+    assert set(run(spark, pairs, 4)) == {
+        (0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)}

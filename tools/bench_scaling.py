@@ -329,7 +329,7 @@ def main() -> None:
 
     # metric label derives from the levels actually run — a hardcoded
     # "local8_vs_local32" on a 4v16 campaign invited silent mispooling
-    # (ADVICE r4): pool_scaling.py now also asserts level-set consistency.
+    # (ADVICE r4); pool only result files whose labels match.
     lvl_sorted = sorted(samples)
     metric_label = (
         f"pagerank_scaling_efficiency_local{lvl_sorted[0]}"
