@@ -11,42 +11,38 @@ with per-step L1 normalization:
 power iteration, and L1 keeps the fixed-k oracle twin in exact decimal
 SQL, no sqrt.)
 
-One materializing job per iteration over AUTH-ONLY state: because L1
-normalization is scale-invariant, substituting the hub update into the
-auth update gives ``auth_i = norm(Eᵀ·(E·auth_{i-1}))`` EXACTLY — the
-intermediate hub vector needs no normalization of its own (the scalar
-cancels inside norm), so the loop carries just the auth vector and
-chains both gathers inside a single DAG per iteration. Each iteration's
-raw snapshot is a LAZY ``localCheckpoint`` whose materializing action is
-the L1 auth-mass aggregate itself (r6: one job per iteration computes
-the state, caches it at the RDD layer, cuts lineage, AND returns the
-scalar — no Observation, no separate persist, zero truncation jobs);
-the normalizing division is applied lazily as a driver literal over the
-checkpointed snapshot — exact per-step normalization, no magnitude
-drift. The hub vector is derived once after the loop
-(``hub = norm(E·auth_k)``).
+The loop is one ``fixpoint`` (``plans/loop.py``) of ``max_iter + 1``
+supersteps, one Spark job each, over the state ``(id, auth_raw, auth,
+hub_raw)``. Because L1 normalization is scale-invariant, the hub vector
+needs no normalization of its own inside the loop (the scalar cancels in
+the next auth normalization). Superstep ``j``:
 
-Cutting lineage EVERY iteration (free here — the checkpoint rides the
-mass job) also kills the ×2-per-iteration logical-plan growth the state
-double-reference used to cause (row base + gather source), which is why
-the old shape needed an interval-2 eager-truncation cadence (r6 A/B:
-interval 4 → 11.2 s, 5 → 43 s of pure Catalyst analysis; a
-hub-and-auth state would double TWICE per round and measured 14.8 s for
-iteration 8 alone).
+- normalizes the raw ``auth_{j-1}`` by the previous record's ``a_mass``
+  into ``auth``;
+- gathers ``hub_raw = E·auth_{j-1}`` (superstep 1 uses the uniform
+  ``hub_0`` of the start state directly) and from it the next raw
+  authority vector ``auth_raw = Eᵀ·hub_raw``;
+- observes on its write ``a_mass = Σ auth_raw``, ``h_mass = Σ hub_raw``
+  and ``delta = Σ|auth_{j-1} − auth_{j-2}|`` (0 on superstep 1), all with
+  ``exact_sum``.
 
-Scale shape: the edge table is cached TWICE, once partitioned+sorted by
-``src`` (the auth gather joins hub contributions on src) and once by
-``dst`` (the hub gather joins auth on dst) — both gathers are then
-co-located sort-merge joins where only the |V|-sized score vectors move,
-the same one-shuffle-per-gather property as the PageRank loop
-(``plans/pagerank.py``). At 100 TB the duplicated edge cache trades 2×
-storage for zero per-iteration edge shuffles — the right trade when
-iterations dominate.
+So the metrics record of superstep ``j`` reports iteration ``j − 1``'s
+delta, which stops the loop when ``eps > 0`` and ``delta ≤ eps``; the
+final leaf then already holds that iteration's authorities and its
+un-normalized hubs, read off with ``h_mass``. The last superstep's
+``auth_raw`` gather goes unused: it is the price of reading the hubs off
+the loop's own write instead of a job of their own.
+
+Scale shape: the edge table is cached twice in the loop's sized
+partition count, forward (partitioned by ``src``) and reversed
+(partitioned by ``dst``), so both gathers join the state in place and
+only the |V|-sized score vectors are shuffled — two shuffles per
+superstep, no edge re-shuffle. At 100 TB the duplicated edge cache
+trades 2× storage for zero per-iteration edge shuffles.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -54,7 +50,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import vertices_from_edges
-from distributed_pagerank_spark.plans.loop import release_local_checkpoint
+from distributed_pagerank_spark.plans.loop import (
+    edge_table,
+    exact_sum,
+    fixpoint,
+    measure,
+)
 
 
 @dataclass
@@ -73,149 +74,82 @@ def hits(
     eps: float = 0.0,
     num_partitions: int | None = None,
 ) -> HitsResult:
-    """Run HITS to ``max_iter`` rounds (or L1-delta ≤ eps on auth, when
-    eps > 0 — the delta check costs one extra scalar agg per round over
-    the cached state, so the fixed-k path sets eps=0 and pays nothing).
+    """Run HITS to ``max_iter`` rounds, or until the L1 delta of the
+    authority vector is ≤ ``eps`` when ``eps > 0``.
 
     Returns normalized ``(id, hub, auth)`` over all vertices; vertices
-    with no in-links get auth 0, with no out-links hub 0.
+    with no in-links get auth 0, with no out-links hub 0. The scores read
+    the final snapshot, a ``localCheckpoint`` leaf the caller owns (free
+    it with ``release_local_checkpoint``). The iteration state lives
+    only in unreplicated local checkpoints, so losing an executor
+    mid-run aborts the run.
     """
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    # one scan of the raw input feeds both cached orientations
     e = edges.select("src", "dst").distinct().persist()
-    e_src = (
-        e.repartition(num_partitions, "src").sortWithinPartitions("src").persist()
-    )
-    e_dst = (
-        e.repartition(num_partitions, "dst").sortWithinPartitions("dst").persist()
-    )
-    # one materializing job fills BOTH orientation caches: evaluating the
-    # union evaluates each child, populating its persisted blocks (r6;
-    # same observation-era fusion pattern as plans/bfs.py). Its count also
-    # carries the empty-graph check (no vertex without an edge), so the
-    # init state below needs no eager count of its own.
-    if e_src.unionByName(e_dst).count() == 0:
+    rows, num_partitions = measure(e, num_partitions)
+    if rows == 0:
         e.unpersist()
-        e_src.unpersist()
-        e_dst.unpersist()
         raise ValueError("empty edge table: no vertices to score")
-    verts = vertices_from_edges(e)
-
-    # auth-only state (module docstring): hub_0 is the uniform 1/n vector,
-    # so round 1's hub gather source IS the init state. The vertex count
-    # rides the state materialization as a broadcast one-row aggregate
-    # (1.0/__n is the same IEEE double division as the former Python
-    # literal), and the state itself is a LAZY localCheckpoint whose
-    # materializing action is iteration 1's mass aggregate (r6) — zero
-    # setup jobs beyond the cache fill. ``e`` must outlive that first
-    # materialization; it is released inside the loop.
-    cnt = verts.agg(F.count(F.lit(1)).alias("__n"))
-    state = (
-        verts.crossJoin(F.broadcast(cnt))
-        .select("id", (F.lit(1.0) / F.col("__n")).alias("auth"))
-        .repartition(num_partitions, "id")
-        .sortWithinPartitions("id")
-        .localCheckpoint(eager=False)
+    fwd = edge_table(e, num_partitions)
+    rev = edge_table(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+        num_partitions,
     )
 
-    metrics: list[dict[str, Any]] = []
-    iteration, delta, converged = 0, float("inf"), False
-    prev_snapshot = state
+    def init() -> DataFrame:
+        # auth_0 = hub_0 = 1/n; the vertex count rides the first job
+        verts = vertices_from_edges(e)
+        cnt = verts.agg(F.count(F.lit(1)).alias("__n"))
+        uniform = F.lit(1.0) / F.col("__n")
+        return verts.crossJoin(F.broadcast(cnt)).select(
+            "id", uniform.alias("auth_raw"), uniform.alias("auth"),
+            uniform.alias("hub_raw"),
+        )
 
-    # session confs (AQE on): coalescing the two per-iteration gather
-    # exchanges measured ~30% faster (BENCH/ab_hits_r6.json)
-    while iteration < max_iter and not converged:
-        iteration += 1
-        t0 = time.monotonic()
-        auth_vec = state.select("id", "auth")
-        if iteration == 1:
-            # hub_0 == the uniform init vector: gather it directly
-            h_tmp = auth_vec.select(
-                F.col("id").alias("hid"), F.col("auth").alias("h")
-            )
-        else:
-            # un-normalized intermediate hub E·auth — the scalar
-            # cancels inside the auth normalization below
-            h_tmp = (
-                e_dst.join(auth_vec, e_dst["dst"] == auth_vec["id"])
-                .groupBy(F.col("src").alias("hid"))
+    def step(state: DataFrame, last: dict[str, Any] | None):
+        auth = F.col("auth_raw")
+        if last is not None:
+            auth = auth / F.lit(float(last["a_mass"] or 1.0))
+        cur = state.select("id", auth.alias("auth"),
+                           F.col("auth").alias("auth_old"), "hub_raw")
+        if last is not None:  # superstep 1 reads the start state's hub_0
+            hub = (
+                rev.join(cur, rev["src"] == cur["id"])
+                .groupBy(F.col("dst").alias("hid"))
                 .agg(F.sum("auth").alias("h"))
             )
+            cur = cur.join(hub, cur["id"] == hub["hid"], "left").select(
+                "id", "auth", "auth_old",
+                F.coalesce(F.col("h"), F.lit(0.0)).alias("hub_raw"),
+            )
         a_sums = (
-            e_src.join(h_tmp, e_src["src"] == F.col("hid"))
+            fwd.join(cur, fwd["src"] == cur["id"])
             .groupBy("dst")
-            .agg(F.sum("h").alias("a_raw"))
+            .agg(F.sum("hub_raw").alias("a"))
         )
-        # lazy localCheckpoint: the mass aggregate below is the
-        # materializing action — ONE job computes the iteration,
-        # caches the raw snapshot at the RDD layer, cuts lineage,
-        # and returns the L1 mass scalar
-        snapshot = (
-            state.join(a_sums, state["id"] == a_sums["dst"], "left")
-            .select(
-                "id", F.coalesce(F.col("a_raw"), F.lit(0.0)).alias("auth_raw")
-            )
-            .localCheckpoint(eager=False)
-        )
-        a_mass = snapshot.agg(F.sum("auth_raw")).first()[0] or 1.0
-        if iteration == 1:
-            # the init state (and everything derived from the raw
-            # input) is now baked into the checkpointed snapshot —
-            # drop the distinct-edge cache
-            e.unpersist()
-        # lazy normalization: a driver literal over the cached snapshot
-        new_state = snapshot.select(
-            "id", (F.col("auth_raw") / F.lit(float(a_mass))).alias("auth")
-        )
-        if eps > 0.0:
-            delta = (
-                new_state.select("id", F.col("auth").alias("na"))
-                .join(state.select("id", F.col("auth").alias("oa")), "id")
-                .agg(F.sum(F.abs(F.col("na") - F.col("oa"))))
-                .first()[0]
-                or 0.0
-            )
-            converged = delta <= eps
-        if prev_snapshot is not None:
-            release_local_checkpoint(prev_snapshot)
-        prev_snapshot = snapshot
-        state = new_state
-        metrics.append(
-            {
-                "iteration": iteration,
-                "a_mass": a_mass,
-                "delta": delta if eps > 0 else None,
-                "total_s": round(time.monotonic() - t0, 4),
-            }
-        )
+        return cur.join(a_sums, cur["id"] == a_sums["dst"], "left").select(
+            "id", F.coalesce(F.col("a"), F.lit(0.0)).alias("auth_raw"),
+            "auth", "hub_raw", "auth_old",
+        ), {}
 
-    # final hub vector: hub_k = norm(E·auth_k) — one extra job
-    auth_vec = state.select("id", "auth")
-    h_sums = (
-        e_dst.join(auth_vec, e_dst["dst"] == auth_vec["id"])
-        .groupBy(F.col("src").alias("hid"))
-        .agg(F.sum("auth").alias("h_raw"))
-    )
-    scores_raw = (
-        state.join(h_sums, state["id"] == F.col("hid"), "left")
-        .select(
-            "id",
-            F.coalesce(F.col("h_raw"), F.lit(0.0)).alias("hub_raw"),
-            "auth",
+    stats = {
+        "a_mass": exact_sum(F.col("auth_raw")),
+        "h_mass": exact_sum(F.col("hub_raw")),
+        "delta": exact_sum(F.abs(F.col("auth") - F.col("auth_old"))),
+    }
+    try:
+        run = fixpoint(
+            spark, "hits", e, init, step, stats,
+            lambda s, last: eps > 0 and last is not None and s["delta"] <= eps,
+            max_iter=max_iter + 1, num_partitions=num_partitions, inputs=[e],
         )
-        .localCheckpoint(eager=False)
+    finally:
+        for table in (e, fwd, rev):
+            table.unpersist()
+    h_mass = float(run.last["h_mass"] or 1.0)
+    scores = run.state.select(
+        "id", (F.col("hub_raw") / F.lit(h_mass)).alias("hub"), "auth"
     )
-    h_mass = scores_raw.agg(F.sum("hub_raw")).first()[0] or 1.0
-
-    e_src.unpersist()
-    e_dst.unpersist()
-    if prev_snapshot is not None and prev_snapshot is not scores_raw:
-        release_local_checkpoint(prev_snapshot)
-    scores = scores_raw.select(
-        "id", (F.col("hub_raw") / F.lit(float(h_mass))).alias("hub"), "auth"
-    )
-    return HitsResult(scores, iteration, delta, converged, metrics)
+    return HitsResult(scores, run.iterations - 1, run.last["delta"],
+                      run.converged, run.metrics)

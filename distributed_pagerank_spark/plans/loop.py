@@ -1,7 +1,7 @@
 """The loop harnesses every iterative plan runs on: ``fixpoint`` for
-PageRank, CC, label propagation, SCC's color and reach fixpoints and the
-k-core, coreness and k-truss peels; ``frontier`` for multi-source BFS and
-betweenness' forward pass.
+PageRank, CC, label propagation, HITS, SCC's color and reach fixpoints
+and the k-core, coreness and k-truss peels; ``frontier`` for
+multi-source BFS and betweenness' forward pass.
 
 The reference runs one master loop: scatter, gather, convergence check,
 then a ``State`` snapshot replicated to the workers at the iteration

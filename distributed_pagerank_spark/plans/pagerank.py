@@ -38,10 +38,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_pagerank_spark.operators.degrees import (
-    out_degrees,
-    vertices_from_edges,
-)
+from distributed_pagerank_spark.operators.degrees import vertices_from_edges
 from distributed_pagerank_spark.operators.salting import hub_ids, salted_sum
 from distributed_pagerank_spark.plans.loop import (
     conf_scope,

@@ -119,7 +119,9 @@ def personalized_pagerank_multi(
     # the row count as the materializing action: one driver job per
     # barrier instead of one per iteration, with the same exchanges
     # inside. ``state_rows`` is recorded at barriers (None between —
-    # nothing materializes there to count).
+    # nothing materializes there to count). The chain stays off
+    # ``fixpoint``: a port to one job per iteration ran slower on the
+    # contract's seed sets (ROADMAP item 2).
     with conf_scope(spark, loop_policy(num_partitions)):
         for iteration in range(1, k + 1):
             t0 = time.monotonic()

@@ -126,8 +126,9 @@ def test_components_budget_stop_leaves_manifest(spark, tmp_path):
 
 
 def test_loop_metrics_share_one_schema(spark):
-    """PageRank, CC and LPA report one record per iteration with the same
-    iteration / converged / total_s keys."""
+    """PageRank, CC, LPA and HITS report one record per iteration with the
+    same iteration / converged / total_s keys."""
+    from distributed_pagerank_spark.plans.hits import hits
     from distributed_pagerank_spark.plans.labelprop import label_propagation
 
     edges = edges_df(spark, CHAIN5)
@@ -135,7 +136,8 @@ def test_loop_metrics_share_one_schema(spark):
     pr_metrics = pagerank(spark, edges, max_iter=3).metrics
     connected_components(spark, edges, metrics_out=cc_metrics)
     label_propagation(spark, edges, rounds=3, metrics_out=lpa_metrics)
-    for metrics in (pr_metrics, cc_metrics, lpa_metrics):
+    hits_metrics = hits(spark, edges, max_iter=3).metrics
+    for metrics in (pr_metrics, cc_metrics, lpa_metrics, hits_metrics):
         assert metrics
         assert [m["iteration"] for m in metrics] == list(
             range(1, len(metrics) + 1))

@@ -1,21 +1,25 @@
-"""The peels and the frontier loops against networkx on small generated
-graphs with self-loops, duplicate edges, negative ids and ids above
-2^31. Every call must also leave exactly its result's leaves cached.
+"""The peels and the frontier loops against networkx, and HITS against a
+dense numpy oracle, on small generated graphs with self-loops, duplicate
+edges, negative ids and ids above 2^31. Every call must also leave
+exactly its result's leaves cached.
 Calls that take ``num_partitions`` run on 3, so their shuffles run too
 (sized from bytes, these graphs get one partition)."""
 
 from __future__ import annotations
 
 import networkx as nx
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from distributed_pagerank_spark.plans.betweenness import betweenness
 from distributed_pagerank_spark.plans.bfs import multi_source_bfs
+from distributed_pagerank_spark.plans.hits import hits
 from distributed_pagerank_spark.plans.kcore import coreness, k_core
 from distributed_pagerank_spark.plans.truss import k_truss
 
 from tests.conftest import collect_owned, edges_df
+from tests.test_hits import hits_numpy
 
 IDS = [-(2**40), -1, 0, 1, 2**31 - 1, 2**31, 2**62]
 
@@ -115,3 +119,26 @@ def test_betweenness_all_roots_matches_networkx(spark, pairs):
     assert set(got) <= set(want)
     for v, x in want.items():
         assert abs(got.get(v, 0.0) - 2 * x) < 1e-9, v
+
+
+@pytest.mark.parametrize("eps", [0.0, 1e-9])
+@few
+@given(pairs=graphs)
+@example(pairs=RICH)
+def test_hits_matches_numpy(spark, pairs, eps):
+    """Self-loops count as links; duplicates collapse. With ``eps > 0``
+    the run is checked at the iteration it stopped."""
+    res = None
+
+    def call():
+        nonlocal res
+        res = hits(spark, edges_df(spark, pairs), max_iter=6, eps=eps,
+                   num_partitions=3)
+        return res.scores
+
+    rows = collect_owned(spark, call)
+    want = hits_numpy(pairs, res.iterations)
+    assert {r["id"] for r in rows} == set(want)
+    for r in rows:
+        hub, auth = want[r["id"]]
+        assert abs(r["hub"] - hub) < 1e-9 and abs(r["auth"] - auth) < 1e-9

@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 
 from distributed_pagerank_spark.plans.hits import hits
-from tests.conftest import CHAIN5, STAR_IN, STAR_OUT, edges_df
+from tests.conftest import CHAIN5, STAR_IN, STAR_OUT, cached_rdds, edges_df
 
 
 def hits_numpy(pairs, k):
@@ -72,3 +72,31 @@ def test_hits_dup_edges_collapse(spark):
     for x, y in zip(a, b):
         assert x["hub"] == pytest.approx(y["hub"])
         assert x["auth"] == pytest.approx(y["auth"])
+
+
+@pytest.mark.parametrize("eps", [0.0, 1e-300])
+def test_hits_one_job_per_iteration(spark, eps):
+    """Each iteration is one Spark job, the delta check included."""
+    sc = spark.sparkContext
+    edges = edges_df(spark, [(0, 1), (0, 2), (1, 2), (3, 1), (3, 2)])
+
+    def jobs_for(max_iter):
+        group = f"hits-{max_iter}-{eps}"
+        sc.setJobGroup(group, group)
+        try:
+            res = hits(spark, edges, max_iter=max_iter, eps=eps)
+        finally:
+            sc.setJobGroup("", "")
+        assert res.iterations == max_iter and not res.converged
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_for(6) - jobs_for(4) == 2
+
+
+def test_hits_empty_edges_releases_caches(spark):
+    """The empty-edge-table error leaves no cached RDD behind."""
+    edges = spark.createDataFrame([], "src long, dst long")
+    before = cached_rdds(spark)
+    with pytest.raises(ValueError):
+        hits(spark, edges, max_iter=3)
+    assert not cached_rdds(spark) - before

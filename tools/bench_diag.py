@@ -13,10 +13,11 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def rest(port, path):

@@ -57,6 +57,9 @@ EDGES_PATH = os.environ.get(
 
 
 SCRATCH_ROOT = "/dev/shm/scaling-scratch"
+# the checkout this script belongs to
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BENCH_DIR = os.path.join(ROOT, "BENCH")
 
 
 def _population_key() -> dict:
@@ -104,7 +107,7 @@ def generate_once() -> None:
     if os.path.exists(os.path.join(EDGES_PATH, "_SUCCESS")):
         return
     if "--generate" in sys.argv:
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, ROOT)
         from distributed_pagerank_spark.session import get_spark
         from distributed_pagerank_spark.sources.transcripts import (
             derive_edges,
@@ -120,12 +123,12 @@ def generate_once() -> None:
         return
     subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--generate"],
-        check=True, timeout=7200, cwd="/root/repo",
+        check=True, timeout=7200, cwd=ROOT,
     )
 
 
 def worker(cores: int) -> None:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from distributed_pagerank_spark.session import get_spark
     from distributed_pagerank_spark.plans.pagerank import pagerank
 
@@ -248,7 +251,7 @@ def main() -> None:
     samples: dict[int, dict] = {}
     seen_levels: set[int] = set()
     skip_legs = 0
-    partial_path = "/root/repo/BENCH/scaling_partial.json"
+    partial_path = os.path.join(BENCH_DIR, "scaling_partial.json")
     if os.environ.get("SCALING_RESUME") == "1" and os.path.exists(partial_path):
         # resume a killed campaign: scaling_partial.json is written after
         # every leg, so completed legs' samples are seeded verbatim and the
@@ -297,7 +300,7 @@ def main() -> None:
         seen_levels.add(cores)
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--worker", str(cores)],
-            capture_output=True, text=True, timeout=7200, cwd="/root/repo",
+            capture_output=True, text=True, timeout=7200, cwd=ROOT,
             env=env,
         )
         json_lines = [ln for ln in out.stdout.splitlines() if ln.startswith("{")]
@@ -321,7 +324,7 @@ def main() -> None:
         if r["phases_s"]:
             s["phases_s"].append(r["phases_s"])
         # crash-safe: park everything gathered so far after every leg
-        with open("/root/repo/BENCH/scaling_partial.json", "w") as f:
+        with open(partial_path, "w") as f:
             json.dump({"completed_legs": run_i + 1, "sequence": SEQUENCE,
                        "population": _population_key(),
                        "samples": {str(k): v for k, v in samples.items()}},
@@ -382,8 +385,8 @@ def main() -> None:
             / factor, 3
         )
     print(json.dumps({k: v for k, v in result.items() if k != "levels"}))
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
-    with open("/root/repo/BENCH/scaling_result.json", "w") as f:
+    os.makedirs(BENCH_DIR, exist_ok=True)
+    with open(os.path.join(BENCH_DIR, "scaling_result.json"), "w") as f:
         json.dump(result, f, indent=1)
     _clean_leg_scratch()
 

@@ -8,11 +8,12 @@ column names, and order-insensitive values. Usage:
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from distributed_pagerank_spark.session import get_spark  # noqa: E402
