@@ -127,20 +127,22 @@ IVF_PROBE = 3  # cells probed per query (~3/8 of the corpus scanned)
 NEAR_DUP_THRESHOLD = 0.4  # non-vacuous at sf0.01's cosine distribution
 JACCARD_DF_CAP = 5  # hot-shingle DF cap; bites at sf0.01 (max shingle df=7)
 DUP_OFFSET = 10_000_000  # re-keyed duplicate sample for exact-dedup check
+# the checkout this file lives in; every path below is inside it
+ROOT = os.path.dirname(os.path.abspath(__file__))
 # the flagship query materializes its derived edge table here so the
 # DuckDB twin can read the identical bytes (the driver runs the Spark side
 # of each query before its oracle); gitignored scratch inside the repo.
-TRANSCRIPT_EDGES_PATH = "/root/repo/.cache/transcript_edges.parquet"
+TRANSCRIPT_EDGES_PATH = os.path.join(ROOT, ".cache/transcript_edges.parquet")
 # transcript-analytics entries materialize the synthetic table here so
 # their DuckDB twins read the identical bytes (driver runs Spark first)
-TRANSCRIPTS_PATH = "/root/repo/.cache/transcripts.parquet"
+TRANSCRIPTS_PATH = os.path.join(ROOT, ".cache/transcripts.parquet")
 # scratch for the streaming-sessionizer driver entry: staged source dir,
 # stream checkpoint, and the parquet sink the returned DataFrame reads
-SESSIONIZE_STREAM_DIR = "/root/repo/.cache/sessionize_stream"
-EDGELIST_FILE_DIR = "/root/repo/.cache/edgelist_file"
+SESSIONIZE_STREAM_DIR = os.path.join(ROOT, ".cache/sessionize_stream")
+EDGELIST_FILE_DIR = os.path.join(ROOT, ".cache/edgelist_file")
 # the refined-IVF entry materializes its Lloyd-refined centroids here so
 # the DuckDB twin's cell CTE reads the identical bytes
-REFINED_CENTROIDS_PATH = "/root/repo/.cache/ivf_refined_centroids.parquet"
+REFINED_CENTROIDS_PATH = os.path.join(ROOT, ".cache/ivf_refined_centroids.parquet")
 IVF_REFINE_ITERS = 2
 
 _TUNE_CONFS = {
@@ -1403,7 +1405,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         class H(http.server.SimpleHTTPRequestHandler):
             def __init__(self, *a, **kw):
-                super().__init__(*a, directory="/root/repo/tests/fixtures", **kw)
+                super().__init__(
+                    *a, directory=os.path.join(ROOT, "tests/fixtures"), **kw)
 
             def log_message(self, *a):
                 pass

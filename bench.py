@@ -13,7 +13,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -290,7 +291,7 @@ def main() -> None:
     # queries_reps inlined overflowed that window — the captured tail
     # began mid-line and BENCH_r04.json recorded parsed: null.
     try:
-        with open("/root/repo/BENCH/bench_detail.json", "w") as f:
+        with open(os.path.join(ROOT, "BENCH/bench_detail.json"), "w") as f:
             json.dump({**headline, "queries_reps": per_rep}, f, indent=1)
     except OSError:
         pass

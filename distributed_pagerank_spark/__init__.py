@@ -16,7 +16,7 @@ see ``/root/reference``), re-expressed Spark-first:
 
 Beyond the reference's single algorithm, the engine implements connected
 components (hash-min), label propagation, and triangle counting (degree
-ordered wedge joins), plus a training-data toolkit (dedup, similarity
+ordered compact-forward), plus a training-data toolkit (dedup, similarity
 search, text analysis, multimodal plumbing) over document/embedding tables.
 """
 

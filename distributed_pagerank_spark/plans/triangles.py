@@ -1,19 +1,28 @@
-"""Triangle counting via degree-ordered wedge joins (north-rule N3).
+"""Triangle counting, triangle rows and local clustering over one
+degree-ordered compact-forward kernel (north-rule N3).
 
 Semantics (SURVEY §2.4): count each unordered vertex triangle of the
-undirected simple graph exactly once. Algorithm: orient every undirected
-edge from the lower-(degree, id) endpoint to the higher one; join oriented
-edges on the middle vertex to enumerate wedges ``a→b→c``; a wedge closes
-into a triangle iff the oriented edge ``a→c`` exists (left-semi join).
-Degree ordering bounds the out-degree of every vertex by O(sqrt(m)), so
-the wedge join is skew-resistant even on power-law graphs — the standard
-trick the naive ``src<dst`` orientation lacks.
+undirected simple graph exactly once. The kernel is two pieces, and
+``triangle_count``, ``triangle_rows``, ``local_clustering_coefficient``
+and ``plans.truss.k_truss`` all run on them:
 
-Everything is built-in joins/aggregations (sort-merge or broadcast as AQE
-decides); no UDFs, no driver loops.
+- ``oriented_edges`` is the one orientation: every undirected edge goes
+  from the lower-(degree, id) endpoint to the higher one. Degree
+  ordering bounds every out-degree by O(√m), so the adjacency lists
+  below stay small even on power-law graphs — the standard trick the
+  naive ``src<dst`` orientation lacks.
+- ``compact_forward`` is the one intersect join: for every oriented edge
+  ``(a, b)`` the third corners are ``N⁺(a) ∩ N⁺(b)``, an
+  ``array_intersect`` of two adjacency lists in codegen. Only ``m`` rows
+  flow through its joins instead of the ``Σ deg²`` rows of an explicit
+  wedge join.
+
+Everything is built-in joins and aggregations; no UDFs, no driver loops.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -21,15 +30,10 @@ from pyspark.sql import functions as F
 from distributed_pagerank_spark.operators.degrees import symmetrize
 
 
-def oriented_edges(edges: DataFrame, _sym: DataFrame | None = None) -> DataFrame:
-    """Undirected simple edges oriented low-(degree,id) → high-(degree,id).
-
-    Output ``(a, b)`` — each undirected edge exactly once. ``_sym`` lets a
-    caller that already holds a cached symmetrized table (triangle_count)
-    pass it in, so the degree agg and the orientation join share one scan
-    instead of re-symmetrizing the raw input for each.
-    """
-    sym = _sym if _sym is not None else symmetrize(edges)
+def oriented_edges(sym: DataFrame) -> DataFrame:
+    """The symmetrized table ``sym`` (``symmetrize``) oriented
+    low-(degree, id) → high-(degree, id) → ``(a, b)``, each undirected
+    edge exactly once. ``sym`` is read twice: its degrees and the join."""
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
     e = (
         sym.join(deg.withColumnRenamed("deg", "deg_src"), sym["src"] == deg["id"])
@@ -46,46 +50,53 @@ def oriented_edges(edges: DataFrame, _sym: DataFrame | None = None) -> DataFrame
     ).select(F.col("src").alias("a"), F.col("dst").alias("b"))
 
 
-def triangle_rows(
-    spark: SparkSession, edges: DataFrame, _sym: DataFrame | None = None
-) -> DataFrame:
-    """Enumerate each undirected triangle exactly once → ``(a, b, c)``.
-
-    Compact-forward over the degree-ordered orientation: for every
-    oriented edge ``(a, b)``, the third corners are
-    ``N⁺(a) ∩ N⁺(b)`` — exploded instead of counted (triangle_count's
-    per-edge ``size()``), so downstream per-vertex statistics can
-    attribute each triangle to its three corners. Rows out = triangle
-    count; the degree ordering bounds every adjacency list at O(√m), so
-    the explode is skew-safe on power-law graphs.
-    """
-    # _sym: a caller-held symmetrized cache (symmetrize is idempotent on
-    # result, so re-symmetrizing it only wasted a second explode+distinct
-    # pass + cache — r6); only a self-built cache is released here.
-    sym = _sym if _sym is not None else symmetrize(edges).persist()
-    o = oriented_edges(edges, _sym=sym).persist()
-    o.count()
-    if _sym is None:
-        sym.unpersist()
+def compact_forward(o: DataFrame) -> DataFrame:
+    """Every oriented edge of ``o`` (``oriented_edges`` or a subset of
+    it) with its closing corners → ``(a, b, common)``, LAZY. ``common`` =
+    ``N⁺(a) ∩ N⁺(b)`` within ``o``; each triangle is one corner of one row,
+    and its three edges ``a→b``, ``a→c``, ``b→c`` are all in ``o``."""
     adj = o.groupBy(F.col("a").alias("v")).agg(F.collect_list("b").alias("nbrs"))
     with_a = o.join(adj, o["a"] == adj["v"]).select(
         "a", "b", F.col("nbrs").alias("na")
     )
-    tris = (
-        with_a.join(adj, with_a["b"] == adj["v"], "left")
-        .select(
-            "a",
-            "b",
-            F.explode(
-                F.array_intersect(
-                    "na", F.coalesce("nbrs", F.array().cast("array<long>"))
-                )
-            ).alias("c"),
-        )
+    # left join: a 'b' endpoint with no out-neighbors closes nothing
+    return with_a.join(adj, with_a["b"] == adj["v"], "left").select(
+        "a",
+        "b",
+        F.array_intersect(
+            "na", F.coalesce("nbrs", F.array().cast("array<long>"))
+        ).alias("common"),
     )
-    out = tris.localCheckpoint(eager=True)
-    o.unpersist()
-    return out
+
+
+def triangles_of(o: DataFrame) -> DataFrame:
+    """Each triangle of ``o`` exactly once → ``(a, b, c)``, LAZY."""
+    return compact_forward(o).select("a", "b", F.explode("common").alias("c"))
+
+
+def _on_oriented(
+    edges: DataFrame, plan: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """``plan`` over the cached orientation of ``edges``, as an eager
+    ``localCheckpoint`` the caller owns. The symmetrized table is cached
+    while the orientation is built, so its degree aggregation and its
+    join share one scan of the raw input. Both caches are released on
+    return and on raise."""
+    sym = symmetrize(edges).persist()
+    o = oriented_edges(sym).persist()
+    try:
+        o.count()
+        sym.unpersist()
+        return plan(o).localCheckpoint(eager=True)
+    finally:
+        sym.unpersist()
+        o.unpersist()
+
+
+def triangle_rows(spark: SparkSession, edges: DataFrame) -> DataFrame:
+    """Each undirected triangle exactly once → ``(a, b, c)``; rows out =
+    triangle count."""
+    return _on_oriented(edges, triangles_of)
 
 
 def local_clustering_coefficient(
@@ -96,106 +107,38 @@ def local_clustering_coefficient(
 
     ``clustering(v) = 2·tri(v) / (deg(v)·(deg(v)−1))`` — the fraction of
     a vertex's neighbor pairs that are themselves connected; 0.0 for
-    degree < 2. ``tri(v)`` attributes each enumerated triangle to its
-    three corners (one explode + one map-side-combined count); degree is
-    one aggregation over the symmetrized table. No reference counterpart
-    (the reference computes only PageRank); standard definition, exact.
+    degree < 2. ``tri(v)`` attributes each triangle to its three corners
+    and ``deg(v)`` counts the oriented edges at ``v`` (one explode + one
+    map-side-combined count each). No reference counterpart (the
+    reference computes only PageRank); standard definition, exact.
     """
-    sym = symmetrize(edges).persist()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("degree")
-    )
-    corners = (
-        triangle_rows(spark, sym, _sym=sym)
-        .select(F.explode(F.array("a", "b", "c")).alias("id"))
-        .groupBy("id")
-        .agg(F.count("*").alias("triangles"))
-    )
-    out = (
-        deg.join(corners, "id", "left")
-        .select(
+
+    def per_vertex(o: DataFrame) -> DataFrame:
+        deg = o.select(F.explode(F.array("a", "b")).alias("id")).groupBy(
+            "id"
+        ).agg(F.count("*").alias("degree"))
+        corners = triangles_of(o).select(
+            F.explode(F.array("a", "b", "c")).alias("id")
+        ).groupBy("id").agg(F.count("*").alias("triangles"))
+        tri = F.coalesce("triangles", F.lit(0))
+        return deg.join(corners, "id", "left").select(
             "id",
             "degree",
-            F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles"),
+            tri.cast("long").alias("triangles"),
             F.when(F.col("degree") < 2, F.lit(0.0))
-            .otherwise(
-                2.0
-                * F.coalesce("triangles", F.lit(0))
-                / (F.col("degree") * (F.col("degree") - 1.0))
-            )
+            .otherwise(2.0 * tri / (F.col("degree") * (F.col("degree") - 1.0)))
             .alias("clustering"),
         )
-        .localCheckpoint(eager=True)
+
+    return _on_oriented(edges, per_vertex)
+
+
+def triangle_count(spark: SparkSession, edges: DataFrame) -> DataFrame:
+    """→ single-row ``(triangles long)``: the sum of ``|N⁺(a) ∩ N⁺(b)|``
+    over the oriented edges, with no row per triangle."""
+    return _on_oriented(
+        edges,
+        lambda o: compact_forward(o)
+        .select(F.size("common").alias("closed"))
+        .agg(F.coalesce(F.sum("closed"), F.lit(0)).cast("long").alias("triangles")),
     )
-    sym.unpersist()
-    return out
-
-
-def triangle_count(
-    spark: SparkSession, edges: DataFrame, algorithm: str = "intersect"
-) -> DataFrame:
-    """→ single-row ``(triangles long)``.
-
-    ``algorithm``:
-
-    - ``"intersect"`` (default) — compact-forward: build the oriented
-      adjacency list per vertex (out-degree ≤ O(sqrt m) thanks to the
-      degree ordering), then for every oriented edge ``(a, b)`` count
-      ``|N⁺(a) ∩ N⁺(b)|`` with ``array_intersect`` in codegen. The bytes
-      shuffled equal the wedge count either way, but only ``m`` rows flow
-      through the joins instead of ``Σ deg²`` wedge rows — on dense
-      graphs that removes the dominant hash-exchange (measured ~6×
-      faster steady-state on the sf0.1 supplier co-occurrence graph:
-      2.7 s vs 16 s, interleaved reps, local[32]).
-    - ``"wedge"`` — explicit wedge enumeration + left-semi closure join;
-      rows = wedge count. Preferable when per-vertex neighbor lists
-      could not fit a row (pathological skew beyond the sqrt(m) bound).
-
-    Both count each undirected triangle exactly once; results identical.
-    """
-    # cache the symmetrized table: the degree agg and the orientation join
-    # both read it, so the raw input is scanned once (symmetrize itself is
-    # a single-scan explode) instead of 4× in the uncached shape
-    sym = symmetrize(edges).persist()
-    o = oriented_edges(edges, _sym=sym).persist()
-    o.count()
-    sym.unpersist()
-    if algorithm == "intersect":
-        adj = o.groupBy(F.col("a").alias("v")).agg(
-            F.collect_list("b").alias("nbrs")
-        )
-        with_a = (
-            o.join(adj, o["a"] == adj["v"])
-            .select("a", "b", F.col("nbrs").alias("na"))
-        )
-        # left join: a 'b' endpoint with no out-neighbors closes nothing
-        per_edge = (
-            with_a.join(adj, with_a["b"] == adj["v"], "left")
-            .select(
-                F.size(
-                    F.array_intersect(
-                        "na", F.coalesce("nbrs", F.array().cast("array<long>"))
-                    )
-                ).alias("closed")
-            )
-        )
-        result = per_edge.agg(
-            F.coalesce(F.sum("closed"), F.lit(0)).cast("long").alias("triangles")
-        )
-    elif algorithm == "wedge":
-        x, y = o.alias("x"), o.alias("y")
-        wedges = x.join(y, F.col("x.b") == F.col("y.a")).select(
-            F.col("x.a").alias("a"), F.col("y.b").alias("c")
-        )
-        closing = o.select(F.col("a").alias("ca"), F.col("b").alias("cc"))
-        tris = wedges.join(
-            closing,
-            (wedges["a"] == closing["ca"]) & (wedges["c"] == closing["cc"]),
-            "left_semi",
-        )
-        result = tris.agg(F.count("*").alias("triangles"))
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    out = result.localCheckpoint(eager=True)
-    o.unpersist()
-    return out

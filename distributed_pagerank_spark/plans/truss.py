@@ -8,19 +8,19 @@ subgraph*. Obtained by repeatedly deleting edges whose in-subgraph
 support drops below k−2; the fixpoint is unique (deletion order does
 not matter), so level-synchronous rounds compute the exact truss.
 
-The orientation is computed ONCE: undirected edges are oriented
-low-(degree, id) → high by the ORIGINAL degrees. Any acyclic
-orientation enumerates each triangle exactly once under compact-forward
-(the three edges of a discovered triangle a→b, a→c, b→c are themselves
-oriented edges), and a fixed orientation stays acyclic on every
-subgraph, while its out-degree bound — O(√m) from the degree ordering —
-only tightens as edges peel. That makes a round three built-in steps
-over the oriented survivor set: adjacency-list aggregation, the
-two-sided intersect join exploding each triangle to its three oriented
-edges, and one map-side-combined support count whose ≥ k−2 filter IS
-the next edge set (support keys ⊆ edge set). At 100 TB the full-graph
-enumeration is paid once on the raw scan; later rounds touch only the
-surviving (typically much smaller) subgraph.
+The orientation is computed ONCE, by ``plans.triangles.oriented_edges``
+on the ORIGINAL degrees, and every round runs the same compact-forward
+kernel as triangle counting (``plans.triangles.triangles_of``). Any
+acyclic orientation enumerates each triangle exactly once under
+compact-forward (the three edges of a discovered triangle a→b, a→c, b→c
+are themselves oriented edges), and a fixed orientation stays acyclic on
+every subgraph, while its out-degree bound — O(√m) from the degree
+ordering — only tightens as edges peel. That makes a round the kernel's
+triangles, exploded to their three oriented edges, and one
+map-side-combined support count whose ≥ k−2 filter IS the next edge set
+(support keys ⊆ edge set). At 100 TB the full-graph enumeration is paid
+once on the raw scan; later rounds touch only the surviving (typically
+much smaller) subgraph.
 
 The peel is one ``plans.loop.fixpoint``: the state is the oriented
 survivor set keyed by ``a``, each round is one job, and its row count,
@@ -36,87 +36,22 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from distributed_pagerank_spark.operators.degrees import symmetrize
 from distributed_pagerank_spark.plans.loop import (
     fixpoint,
     measure,
     rows_settled,
 )
-
-
-def _canonical(edges: DataFrame) -> DataFrame:
-    """Undirected simple edges as ``(src, dst)`` with src < dst, deduped;
-    self-loops carry no triangles and are dropped."""
-    return (
-        edges.where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-        .distinct()
-    )
-
-
-def _orient_by_degree(canon: DataFrame) -> DataFrame:
-    """Orient each canonical edge low-(degree, id) → high → ``(a, b)``."""
-    sym = canon.unionByName(
-        canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("deg")
-    )
-    return (
-        canon.join(
-            deg.select(F.col("id").alias("src"), F.col("deg").alias("ds")),
-            "src",
-        )
-        .join(
-            deg.select(F.col("id").alias("dst"), F.col("deg").alias("dd")),
-            "dst",
-        )
-        .select(
-            F.when(
-                (F.col("ds") < F.col("dd"))
-                | (
-                    (F.col("ds") == F.col("dd"))
-                    & (F.col("src") < F.col("dst"))
-                ),
-                F.struct(
-                    F.col("src").alias("a"), F.col("dst").alias("b")
-                ),
-            )
-            .otherwise(
-                F.struct(F.col("dst").alias("a"), F.col("src").alias("b"))
-            )
-            .alias("e")
-        )
-        .select("e.a", "e.b")
-    )
+from distributed_pagerank_spark.plans.triangles import (
+    oriented_edges,
+    triangles_of,
+)
 
 
 def _oriented_support(o: DataFrame) -> DataFrame:
     """Per-oriented-edge triangle count within ``o`` → ``(a, b, support)``,
-    LAZY. Compact-forward: for every oriented edge (a, b) the closing
-    corners are N⁺(a) ∩ N⁺(b); each triangle's three edges are oriented
-    edges, so support aggregates directly on the oriented key. Edges in
-    no triangle are absent (support 0 implied)."""
-    adj = o.groupBy(F.col("a").alias("v")).agg(
-        F.collect_list("b").alias("nbrs")
-    )
-    tris = (
-        o.join(adj, o["a"] == adj["v"])
-        .select("a", "b", F.col("nbrs").alias("na"))
-        .join(adj, F.col("b") == adj["v"], "left")
-        .select(
-            "a",
-            "b",
-            F.explode(
-                F.array_intersect(
-                    "na", F.coalesce("nbrs", F.array().cast("array<long>"))
-                )
-            ).alias("c"),
-        )
-    )
-    corners = tris.select(
+    LAZY. Edges in no triangle are absent (support 0 implied)."""
+    corners = triangles_of(o).select(
         F.explode(
             F.array(
                 F.struct("a", "b"),
@@ -148,7 +83,7 @@ def k_truss(
     """
     if k < 3:
         raise ValueError("k must be >= 3")
-    oriented = _orient_by_degree(_canonical(edges)).persist()
+    oriented = oriented_edges(symmetrize(edges)).persist()
     rows, num_partitions = measure(oriented, None)
     # at the fixpoint the survivors' support was computed on a graph
     # identical to the final subgraph

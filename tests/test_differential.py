@@ -1,7 +1,7 @@
-"""The peels and the frontier loops against networkx, and HITS against a
-dense numpy oracle, on small generated graphs with self-loops, duplicate
-edges, negative ids and ids above 2^31. Every call must also leave
-exactly its result's leaves cached.
+"""The peels, the frontier loops and the triangle kernel's users against
+networkx, and HITS against a dense numpy oracle, on small generated
+graphs with self-loops, duplicate edges, negative ids and ids above
+2^31. Every call must also leave exactly its result's leaves cached.
 Calls that take ``num_partitions`` run on 3, so their shuffles run too
 (sized from bytes, these graphs get one partition)."""
 
@@ -16,6 +16,11 @@ from distributed_pagerank_spark.plans.betweenness import betweenness
 from distributed_pagerank_spark.plans.bfs import multi_source_bfs
 from distributed_pagerank_spark.plans.hits import hits
 from distributed_pagerank_spark.plans.kcore import coreness, k_core
+from distributed_pagerank_spark.plans.triangles import (
+    local_clustering_coefficient,
+    triangle_count,
+    triangle_rows,
+)
 from distributed_pagerank_spark.plans.truss import k_truss
 
 from tests.conftest import collect_owned, edges_df
@@ -81,6 +86,48 @@ def test_k_truss_matches_networkx(spark, pairs, k):
         for a, b in truss.edges()
     }
     assert {(r["src"], r["dst"]): r["support"] for r in rows} == want
+
+
+@few
+@given(pairs=graphs)
+@example(pairs=RICH)
+def test_triangle_count_matches_networkx(spark, pairs):
+    rows = collect_owned(spark, lambda: triangle_count(
+        spark, edges_df(spark, pairs)))
+    assert rows[0]["triangles"] == \
+        sum(nx.triangles(nx_graph(pairs)).values()) // 3
+
+
+@few
+@given(pairs=graphs)
+@example(pairs=RICH)
+def test_triangle_rows_match_networkx(spark, pairs):
+    """One row per triangle: as many rows as networkx counts, no triangle
+    twice, and each row's three corners pairwise adjacent."""
+    g = nx_graph(pairs)
+    rows = collect_owned(spark, lambda: triangle_rows(
+        spark, edges_df(spark, pairs)))
+    assert len(rows) == sum(nx.triangles(g).values()) // 3
+    assert len({frozenset(r) for r in rows}) == len(rows)
+    for a, b, c in rows:
+        assert g.has_edge(a, b) and g.has_edge(a, c) and g.has_edge(b, c)
+
+
+@few
+@given(pairs=graphs)
+@example(pairs=RICH)
+def test_clustering_matches_networkx(spark, pairs):
+    """Every vertex with an edge has a row; a vertex with only a
+    self-loop has none."""
+    g = nx_graph(pairs)
+    rows = collect_owned(spark, lambda: local_clustering_coefficient(
+        spark, edges_df(spark, pairs)))
+    tri, cl = nx.triangles(g), nx.clustering(g)
+    assert {r["id"] for r in rows} == {v for v in g if g.degree(v)}
+    for r in rows:
+        v = r["id"]
+        assert (r["degree"], r["triangles"]) == (g.degree(v), tri[v]), v
+        assert abs(r["clustering"] - cl[v]) < 1e-12, v
 
 
 @few

@@ -9,7 +9,12 @@ from distributed_pagerank_spark.oracle import (
 )
 from distributed_pagerank_spark.plans.components import connected_components
 from distributed_pagerank_spark.plans.labelprop import label_propagation
-from distributed_pagerank_spark.plans.triangles import triangle_count
+from distributed_pagerank_spark.plans.triangles import (
+    local_clustering_coefficient,
+    triangle_count,
+    triangle_rows,
+)
+from distributed_pagerank_spark.plans.truss import k_truss
 from distributed_pagerank_spark.sources.generator import generate_graph
 
 from tests.conftest import ALL_FIXTURES, edges_df
@@ -34,25 +39,21 @@ def test_components_generated(spark):
     assert set(got.values()) == {0}
 
 
-@pytest.mark.parametrize("algorithm", ["intersect", "wedge"])
 @pytest.mark.parametrize(
     "name,expected",
     [("triangle_plus", 1), ("chain5", 0), ("cycle4", 0), ("star_in", 0)],
 )
-def test_triangles_fixtures(spark, name, expected, algorithm):
+def test_triangles_fixtures(spark, name, expected):
     pairs = ALL_FIXTURES[name]
     assert brute_triangles(pairs) == expected  # sanity: oracle agrees
-    got = triangle_count(
-        spark, edges_df(spark, pairs), algorithm=algorithm
-    ).first()["triangles"]
+    got = triangle_count(spark, edges_df(spark, pairs)).first()["triangles"]
     assert got == expected
 
 
-@pytest.mark.parametrize("algorithm", ["intersect", "wedge"])
-def test_triangles_generated(spark, algorithm):
+def test_triangles_generated(spark):
     edges = generate_graph(spark, 40, max_edges=6, seed=3)
     pairs = [(r["src"], r["dst"]) for r in edges.collect()]
-    got = triangle_count(spark, edges, algorithm=algorithm).first()["triangles"]
+    got = triangle_count(spark, edges).first()["triangles"]
     assert got == brute_triangles(pairs)
     assert got > 0
 
@@ -137,20 +138,27 @@ def _counting_edges(spark, pairs):
     return spark.createDataFrame(rdd, "src long, dst long"), acc
 
 
-@pytest.mark.parametrize("algo", ["cc", "lpa", "triangles"])
+@pytest.mark.parametrize(
+    "algo", ["cc", "lpa", "triangles", "clustering", "k_truss"]
+)
 def test_single_scan_of_raw_edge_input(spark, algo):
-    """CC / LPA / triangle count each evaluate the raw edge input exactly
-    once: the symmetrized table, vertex set, and degree agg all derive from
-    one cached projection (the round-2 shapes re-scanned the input 2-4×
-    via union-based symmetrize / vertices)."""
+    """CC / LPA / triangle count / clustering / k-truss each evaluate the
+    raw edge input exactly once: the symmetrized table, vertex set, degree
+    agg and orientation all derive from one scan (the round-2 shapes
+    re-scanned the input 2-4× via union-based symmetrize / vertices, and
+    k-truss's own orientation read it 3×)."""
     pairs = ALL_FIXTURES["triangle_plus"] + [(9, 9)]  # incl. a self-loop
     edges, acc = _counting_edges(spark, pairs)
     if algo == "cc":
         out = connected_components(spark, edges)
     elif algo == "lpa":
         out = label_propagation(spark, edges, rounds=3)
-    else:
+    elif algo == "triangles":
         out = triangle_count(spark, edges)
+    elif algo == "clustering":
+        out = local_clustering_coefficient(spark, edges)
+    else:
+        out = k_truss(spark, edges, k=3)
     out.collect()
     assert acc.value == 1, f"raw edge input scanned {acc.value}x (want 1)"
 
@@ -185,9 +193,6 @@ def brute_clustering(pairs):
 
 
 def test_clustering_coefficient_fixture(spark):
-    from distributed_pagerank_spark.plans.triangles import (
-        local_clustering_coefficient,
-    )
     pairs = ALL_FIXTURES["triangle_plus"]
     rows = local_clustering_coefficient(spark, edges_df(spark, pairs)).collect()
     got = {r["id"]: (r["degree"], r["triangles"], r["clustering"]) for r in rows}
@@ -200,10 +205,6 @@ def test_clustering_coefficient_fixture(spark):
 
 
 def test_clustering_coefficient_generated(spark):
-    from distributed_pagerank_spark.plans.triangles import (
-        local_clustering_coefficient,
-        triangle_rows,
-    )
     edges = generate_graph(spark, 40, max_edges=6, seed=3)
     pairs = [(r["src"], r["dst"]) for r in edges.collect()]
     want = brute_clustering(pairs)

@@ -273,44 +273,43 @@ def test_bfs_round_no_cartesian_two_jobs(spark):
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
 
 
-def test_truss_round_reuses_adjacency_exchange_two_jobs(spark):
-    """One k-truss peel round: the oriented adjacency aggregation is
-    referenced by both sides of the intersect join — the plan must pay
-    its shuffle ONCE (ReusedExchange), and materializing the round is at
-    most two jobs (the eager localCheckpoint + its count on the cached
-    result). A lost reuse doubles the dominant shuffle at scale."""
-    from distributed_pagerank_spark.plans.truss import (
-        _canonical,
-        _orient_by_degree,
-        _oriented_support,
-    )
+def test_truss_round_two_exchanges_two_jobs(spark):
+    """One k-truss peel round on the state the peel's ``fixpoint`` hands
+    it: the oriented survivor set hash-partitioned and sorted by ``a``, as
+    a ``localCheckpoint`` leaf. The adjacency aggregation and its join on
+    ``a`` read that partitioning in place, so the round plans exactly two
+    exchanges (the ``b``-side of the intersect join and the support
+    count), no cartesian product, and materializing it is at most two
+    jobs (the eager localCheckpoint + its count on the cached result).
+    Another exchange re-shuffles the whole survivor set every round."""
+    from distributed_pagerank_spark.operators.degrees import symmetrize
+    from distributed_pagerank_spark.plans.loop import conf_scope, loop_policy
+    from distributed_pagerank_spark.plans.triangles import oriented_edges
+    from distributed_pagerank_spark.plans.truss import _oriented_support
 
     edges = spark.createDataFrame(
         [(i, (i + 1) % 30) for i in range(30)]
         + [(i, (i + 2) % 30) for i in range(30)],
         "src long, dst long",
     )
-    prior_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    prior_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc = spark.sparkContext
     try:
-        cur = _orient_by_degree(_canonical(edges)).localCheckpoint(
-            eager=True
-        )
-        survivors = _oriented_support(cur.select("a", "b")).where(
-            F.col("support") >= 1
-        )
-        plan = survivors._jdf.queryExecution().executedPlan().toString()
-        assert "ReusedExchange" in plan
-        assert "Cartesian" not in plan
-        sc.setJobGroup("truss-probe", "truss-probe")
-        snap = survivors.localCheckpoint(eager=True)
-        snap.count()
+        with conf_scope(spark, loop_policy(3)):
+            cur = (
+                oriented_edges(symmetrize(edges))
+                .repartition(3, "a")
+                .sortWithinPartitions("a")
+                .localCheckpoint(eager=True)
+            )
+            survivors = _oriented_support(cur).where(F.col("support") >= 1)
+            plan = survivors._jdf.queryExecution().executedPlan().toString()
+            exchanges = plan.count("Exchange") - plan.count("ReusedExchange")
+            assert exchanges == 2, plan
+            assert "Cartesian" not in plan
+            sc.setJobGroup("truss-probe", "truss-probe")
+            snap = survivors.localCheckpoint(eager=True)
+            snap.count()
     finally:
         sc.setJobGroup("", "")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior_bc)
-        spark.conf.set("spark.sql.adaptive.enabled", prior_aqe)
     jobs = sc.statusTracker().getJobIdsForGroup("truss-probe")
     assert len(jobs) <= 2, f"{len(jobs)} jobs for one truss round (want <=2)"

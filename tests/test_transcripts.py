@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.sources.transcripts import (
@@ -119,7 +121,7 @@ def test_http_edgelist_matches_file_reader(spark, tmp_path):
         read_edge_list_http,
     )
 
-    fixture_dir = "/root/repo/tests/fixtures"
+    fixture_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
     class H(http.server.SimpleHTTPRequestHandler):
         def __init__(self, *a, **kw):
