@@ -83,6 +83,7 @@ from distributed_pagerank_spark.sources.generator import (
     random_e_vector,
 )
 from distributed_pagerank_spark.plans.labelprop import label_propagation
+from distributed_pagerank_spark.plans.loop import conf_scope
 from distributed_pagerank_spark.plans.pagerank import pagerank
 from distributed_pagerank_spark.plans.bfs import multi_source_bfs
 from distributed_pagerank_spark.plans.betweenness import betweenness
@@ -159,12 +160,13 @@ def _tune(spark: SparkSession) -> None:
     The correctness driver runs these queries under ITS OWN SparkSession —
     typically with the 200-partition default, which at sf0.01 spends more
     time scheduling empty tasks than computing. Every query callable is
-    wrapped by :func:`_scoped`, which captures the prior values before the
-    first ``_tune`` and restores them when the callable returns — the
-    tuning covers the eager iterative work inside the query but does not
-    leak into a session this module does not own. (Still-lazy results
-    execute under the caller's own confs; with Spark's default AQE that is
-    correct and adequately fast.)"""
+    wrapped by :func:`_scoped`, which tunes the session for the call and
+    restores the caller's values when it returns — the tuning covers the
+    eager iterative work inside the query but does not leak into a
+    session this module does not own. (Still-lazy results execute under
+    the caller's own confs; with Spark's default AQE that is correct and
+    adequately fast.) The table readers call this too, for callers such as
+    ``bench.py`` that build inputs outside any query."""
     try:
         for k, v in _TUNE_CONFS.items():
             spark.conf.set(k, v)
@@ -174,27 +176,12 @@ def _tune(spark: SparkSession) -> None:
 
 def _scoped(fn):
     """Wrap a query callable: tune the session for its duration, then
-    restore the caller's prior conf values (unset keys are re-unset)."""
+    restore the caller's prior conf values, re-unsetting unset keys
+    (``conf_scope``)."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        prior = {}
-        for k in _TUNE_CONFS:
-            try:
-                prior[k] = spark.conf.get(k, None)
-            except Exception:
-                prior[k] = None
-        _tune(spark)
-        try:
+        with conf_scope(spark, _TUNE_CONFS):
             return fn(spark, sf_dir)
-        finally:
-            for k, v in prior.items():
-                try:
-                    if v is None:
-                        spark.conf.unset(k)
-                    else:
-                        spark.conf.set(k, v)
-                except Exception:
-                    pass
 
     return wrapped
 

@@ -49,11 +49,9 @@ from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import symmetrize
 from distributed_pagerank_spark.plans.loop import (
-    conf_scope,
     edge_table,
     frontier,
-    loop_partitions,
-    loop_policy,
+    measure,
     release_local_checkpoint,
 )
 
@@ -66,8 +64,9 @@ def _broadcast_row_limit(spark: SparkSession) -> int:
     slice's exact row count from the forward pass. Gate on the session's
     own ``autoBroadcastJoinThreshold`` (0 when disabled) at a
     conservative 64 bytes/row (32 data + hashed-relation overhead), so
-    the hint scales with the conf, not with one host's memory. Read it before
-    entering ``loop_policy``, which turns automatic broadcasts off.
+    the hint scales with the conf, not with one host's memory. Read it
+    before ``measure`` applies ``loop_policy``, which turns automatic
+    broadcasts off.
     """
     threshold = spark._jsparkSession.sessionState().conf() \
         .autoBroadcastJoinThreshold()
@@ -92,59 +91,56 @@ def betweenness(
     Brandes–Pich estimate of the full sum). The result is a
     ``localCheckpoint`` the caller owns; every other cache is released.
     """
-    cached = (
+    bcast_rows = _broadcast_row_limit(spark)
+    with measure(
         (edges if directed else symmetrize(edges))
         .select("src", "dst")
         .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
-    )
-    num_partitions = loop_partitions(cached, num_partitions)
-    e = edge_table(cached, num_partitions)
-    bcast_rows = _broadcast_row_limit(spark)
+        .distinct(),
+        num_partitions,
+    ) as (cached, _, num_partitions):
+        e = edge_table(cached, num_partitions)
 
-    # ---- forward pass: per-level (root, id, sigma) slices
-    def expand(level: DataFrame, depth: int) -> DataFrame:
-        # aggregate BEFORE the anti-join (guide §2.3): the sigma sum
-        # gets map-side partial aggregation, so the (root,id,sigma)
-        # exchange carries one row per pair instead of one per path,
-        # and the anti-join then reuses the groupBy's (root,id)
-        # partitioning — one exchange of the candidate stream, not
-        # two. Identical result: pairs the anti-join drops are
-        # dropped whole, kept pairs sum the same rows.
-        return (
-            level.join(e, level["id"] == e["src"])
-            .select("root", F.col("dst").alias("id"), "sigma")
-            .groupBy("root", "id")
-            .agg(F.sum("sigma").alias("sigma"))
+        # ---- forward pass: per-level (root, id, sigma) slices
+        def expand(level: DataFrame, depth: int) -> DataFrame:
+            # aggregate BEFORE the anti-join (guide §2.3): the sigma sum
+            # gets map-side partial aggregation, so the (root,id,sigma)
+            # exchange carries one row per pair instead of one per path,
+            # and the anti-join then reuses the groupBy's (root,id)
+            # partitioning — one exchange of the candidate stream, not
+            # two. Identical result: pairs the anti-join drops are
+            # dropped whole, kept pairs sum the same rows.
+            return (
+                level.join(e, level["id"] == e["src"])
+                .select("root", F.col("dst").alias("id"), "sigma")
+                .groupBy("root", "id")
+                .agg(F.sum("sigma").alias("sigma"))
+            )
+
+        # levels[i] = vertices at dist i, level_rows[i] its exact row count
+        levels, level_rows = frontier(
+            roots.select(
+                F.col("root").cast("long").alias("root"),
+                F.col("root").cast("long").alias("id"),
+                F.lit(1.0).alias("sigma"),
+            ).distinct(),
+            expand, key=("root", "id"), max_depth=max_depth,
+            num_partitions=num_partitions, metrics_out=metrics_out,
         )
 
-    # levels[i] = vertices at dist i, level_rows[i] its exact row count
-    levels, level_rows = frontier(
-        spark,
-        roots.select(
-            F.col("root").cast("long").alias("root"),
-            F.col("root").cast("long").alias("id"),
-            F.lit(1.0).alias("sigma"),
-        ).distinct(),
-        expand, key=("root", "id"), max_depth=max_depth,
-        num_partitions=num_partitions, metrics_out=metrics_out,
-    )
-
-    # ---- backward pass: delta accumulates deepest-level-first. Each
-    # level's delta slice is a LAZY localCheckpoint: no action runs until
-    # the final betweenness aggregation below, so the backward data path
-    # executes inside that one action — each slice materializes (and cuts
-    # lineage) the first time the level below, or the final union,
-    # computes it there. (Broadcast-shape levels still submit their own
-    # broadcast-collect jobs when the plan compiles.) The per-level
-    # join-shape choices only need the forward pass's exact counts, never
-    # a backward runtime value, so laziness costs nothing. It runs under
-    # the loop's policy, where only the explicit hints below broadcast.
-    contributions: list[DataFrame] = []
-    delta_slices: list[DataFrame] = []  # released after `out` materializes
-    delta_above: DataFrame | None = None  # (root, id, sigma, delta)
-    with conf_scope(spark, loop_policy(num_partitions)):
+        # ---- backward pass: delta accumulates deepest-level-first. Each
+        # level's delta slice is a LAZY localCheckpoint: no action runs until
+        # the final betweenness aggregation below, so the backward data path
+        # executes inside that one action — each slice materializes (and cuts
+        # lineage) the first time the level below, or the final union,
+        # computes it there. (Broadcast-shape levels still submit their own
+        # broadcast-collect jobs when the plan compiles.) The per-level
+        # join-shape choices only need the forward pass's exact counts, never
+        # a backward runtime value, so laziness costs nothing. Under the
+        # plan's policy only the explicit hints below broadcast.
+        contributions: list[DataFrame] = []
+        delta_slices: list[DataFrame] = []  # released after `out` materializes
+        delta_above: DataFrame | None = None  # (root, id, sigma, delta)
         for lev in range(len(levels) - 1, 0, -1):
             cur = levels[lev]
             if delta_above is None:
@@ -244,10 +240,9 @@ def betweenness(
                 .agg(F.sum("delta").alias("betweenness"))
                 .localCheckpoint(eager=True)
             )
-    for sl in delta_slices:
-        release_local_checkpoint(sl)
-    for lv in levels:
-        release_local_checkpoint(lv)
-    e.unpersist()
-    cached.unpersist()
+        for sl in delta_slices:
+            release_local_checkpoint(sl)
+        for lv in levels:
+            release_local_checkpoint(lv)
+        e.unpersist()
     return out

@@ -35,7 +35,7 @@ from distributed_pagerank_spark.operators.degrees import symmetrize
 from distributed_pagerank_spark.plans.loop import (
     edge_table,
     frontier,
-    loop_partitions,
+    measure,
 )
 
 
@@ -62,30 +62,26 @@ def multi_source_bfs(
     ``localCheckpoint`` leaves the caller owns (free each with
     ``release_local_checkpoint``). Empty ``sources`` raise ``ValueError``.
     """
-    cached = (
-        (edges if directed else symmetrize(edges))
-        .select("src", "dst")
-        .persist()
-    )
-    num_partitions = loop_partitions(cached, num_partitions)
-    e = edge_table(cached, num_partitions)
+    with measure(
+        (edges if directed else symmetrize(edges)).select("src", "dst"),
+        num_partitions,
+    ) as (cached, _, num_partitions):
+        e = edge_table(cached, num_partitions)
 
-    def expand(level: DataFrame, depth: int) -> DataFrame:
-        return (
-            level.join(e, level["id"] == e["src"])
-            .select("root", F.col("dst").alias("id"))
-            .distinct()
-            .withColumn("dist", F.lit(depth))
+        def expand(level: DataFrame, depth: int) -> DataFrame:
+            return (
+                level.join(e, level["id"] == e["src"])
+                .select("root", F.col("dst").alias("id"))
+                .distinct()
+                .withColumn("dist", F.lit(depth))
+            )
+
+        slices, _ = frontier(
+            sources.select("root", "id", F.lit(0).alias("dist")).distinct(),
+            expand, key=("root", "id"), max_depth=max_depth,
+            num_partitions=num_partitions, metrics_out=metrics_out,
         )
-
-    slices, _ = frontier(
-        spark,
-        sources.select("root", "id", F.lit(0).alias("dist")).distinct(),
-        expand, key=("root", "id"), max_depth=max_depth,
-        num_partitions=num_partitions, metrics_out=metrics_out,
-    )
-    e.unpersist()
-    cached.unpersist()
+        e.unpersist()
     if not slices:
         raise ValueError("empty sources: no BFS roots")
     return reduce(DataFrame.unionByName, slices)

@@ -53,10 +53,9 @@ from distributed_pagerank_spark.operators.degrees import (
     vertices_from_edges,
 )
 from distributed_pagerank_spark.plans.loop import (
-    conf_scope,
+    edge_table,
     fixpoint,
-    loop_partitions,
-    loop_policy,
+    measure,
 )
 
 # hybrid: a round whose ``changed`` count stays above this fraction of the
@@ -83,32 +82,26 @@ def label_exchange(
     last)`` gets the cached symmetrized ``(src, dst)`` table and plans
     ``(id, old, <label>)``; the loop stops when no label changed.
     ``loop`` passes ``max_iter`` and the checkpoint options on to
-    ``fixpoint``. The loop's partition count is ``num_partitions``, or
-    else sized from the measured bytes of the cached input
-    (``loop_partitions``).
+    ``fixpoint``. The run's partition count is ``num_partitions``, or
+    else sized from the measured bytes of the cached input (``measure``).
     """
     # one scan of the raw input: the 2-column projection is cached and the
     # symmetrized table AND the vertex set (which must keep self-loop-only
     # vertices that symmetrize drops) both derive from it
-    raw = edges.select("src", "dst").persist()
-    num_partitions = loop_partitions(raw, num_partitions)
-    with conf_scope(spark, loop_policy(num_partitions)):
-        sym = (
-            symmetrize(raw)
-            .repartition(num_partitions, "src")
-            .sortWithinPartitions("src")
-            .persist()
-        )
-        sym.count()
-    run = fixpoint(
-        spark, name, sym,
-        lambda: vertices_from_edges(raw).select("id", F.col("id").alias(label)),
-        lambda labels, last: step(sym, labels, last),
-        {"changed": F.sum((F.col(label) != F.col("old")).cast("long"))},
-        lambda s, _: s["changed"] == 0,
-        num_partitions=num_partitions, inputs=[raw], **loop,
-    )
-    sym.unpersist()
+    with measure(edges.select("src", "dst"), num_partitions) as (raw, _, n):
+        sym = edge_table(symmetrize(raw), n)
+        try:
+            run = fixpoint(
+                spark, name, sym,
+                lambda: vertices_from_edges(raw).select(
+                    "id", F.col("id").alias(label)),
+                lambda labels, last: step(sym, labels, last),
+                {"changed": F.sum((F.col(label) != F.col("old")).cast("long"))},
+                lambda s, _: s["changed"] == 0,
+                num_partitions=n, inputs=[raw], **loop,
+            )
+        finally:
+            sym.unpersist()
     return run.state.select("id", label)
 
 

@@ -86,67 +86,67 @@ def hits(
     """
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
-    e = edges.select("src", "dst").distinct().persist()
-    rows, num_partitions = measure(e, num_partitions)
-    if rows == 0:
-        e.unpersist()
-        raise ValueError("empty edge table: no vertices to score")
-    fwd = edge_table(e, num_partitions)
-    rev = edge_table(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-        num_partitions,
-    )
-
-    def init() -> DataFrame:
-        # auth_0 = hub_0 = 1/n; the vertex count rides the first job
-        verts = vertices_from_edges(e)
-        cnt = verts.agg(F.count(F.lit(1)).alias("__n"))
-        uniform = F.lit(1.0) / F.col("__n")
-        return verts.crossJoin(F.broadcast(cnt)).select(
-            "id", uniform.alias("auth_raw"), uniform.alias("auth"),
-            uniform.alias("hub_raw"),
+    with measure(edges.select("src", "dst").distinct(), num_partitions) as (
+        e, rows, num_partitions
+    ):
+        if rows == 0:
+            raise ValueError("empty edge table: no vertices to score")
+        fwd = edge_table(e, num_partitions)
+        rev = edge_table(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
+            num_partitions,
         )
 
-    def step(state: DataFrame, last: dict[str, Any] | None):
-        auth = F.col("auth_raw")
-        if last is not None:
-            auth = auth / F.lit(float(last["a_mass"] or 1.0))
-        cur = state.select("id", auth.alias("auth"),
-                           F.col("auth").alias("auth_old"), "hub_raw")
-        if last is not None:  # superstep 1 reads the start state's hub_0
-            hub = (
-                rev.join(cur, rev["src"] == cur["id"])
-                .groupBy(F.col("dst").alias("hid"))
-                .agg(F.sum("auth").alias("h"))
+        def init() -> DataFrame:
+            # auth_0 = hub_0 = 1/n; the vertex count rides the first job
+            verts = vertices_from_edges(e)
+            cnt = verts.agg(F.count(F.lit(1)).alias("__n"))
+            uniform = F.lit(1.0) / F.col("__n")
+            return verts.crossJoin(F.broadcast(cnt)).select(
+                "id", uniform.alias("auth_raw"), uniform.alias("auth"),
+                uniform.alias("hub_raw"),
             )
-            cur = cur.join(hub, cur["id"] == hub["hid"], "left").select(
-                "id", "auth", "auth_old",
-                F.coalesce(F.col("h"), F.lit(0.0)).alias("hub_raw"),
-            )
-        a_sums = (
-            fwd.join(cur, fwd["src"] == cur["id"])
-            .groupBy("dst")
-            .agg(F.sum("hub_raw").alias("a"))
-        )
-        return cur.join(a_sums, cur["id"] == a_sums["dst"], "left").select(
-            "id", F.coalesce(F.col("a"), F.lit(0.0)).alias("auth_raw"),
-            "auth", "hub_raw", "auth_old",
-        ), {}
 
-    stats = {
-        "a_mass": exact_sum(F.col("auth_raw")),
-        "h_mass": exact_sum(F.col("hub_raw")),
-        "delta": exact_sum(F.abs(F.col("auth") - F.col("auth_old"))),
-    }
-    try:
-        run = fixpoint(
-            spark, "hits", e, init, step, stats,
-            lambda s, last: eps > 0 and last is not None and s["delta"] <= eps,
-            max_iter=max_iter + 1, num_partitions=num_partitions, inputs=[e],
-        )
-    finally:
-        for table in (e, fwd, rev):
-            table.unpersist()
+        def step(state: DataFrame, last: dict[str, Any] | None):
+            auth = F.col("auth_raw")
+            if last is not None:
+                auth = auth / F.lit(float(last["a_mass"] or 1.0))
+            cur = state.select("id", auth.alias("auth"),
+                               F.col("auth").alias("auth_old"), "hub_raw")
+            if last is not None:  # superstep 1 reads the start state's hub_0
+                hub = (
+                    rev.join(cur, rev["src"] == cur["id"])
+                    .groupBy(F.col("dst").alias("hid"))
+                    .agg(F.sum("auth").alias("h"))
+                )
+                cur = cur.join(hub, cur["id"] == hub["hid"], "left").select(
+                    "id", "auth", "auth_old",
+                    F.coalesce(F.col("h"), F.lit(0.0)).alias("hub_raw"),
+                )
+            a_sums = (
+                fwd.join(cur, fwd["src"] == cur["id"])
+                .groupBy("dst")
+                .agg(F.sum("hub_raw").alias("a"))
+            )
+            return cur.join(a_sums, cur["id"] == a_sums["dst"], "left").select(
+                "id", F.coalesce(F.col("a"), F.lit(0.0)).alias("auth_raw"),
+                "auth", "hub_raw", "auth_old",
+            ), {}
+
+        stats = {
+            "a_mass": exact_sum(F.col("auth_raw")),
+            "h_mass": exact_sum(F.col("hub_raw")),
+            "delta": exact_sum(F.abs(F.col("auth") - F.col("auth_old"))),
+        }
+        try:
+            run = fixpoint(
+                spark, "hits", e, init, step, stats,
+                lambda s, last: eps > 0 and last is not None and s["delta"] <= eps,
+                max_iter=max_iter + 1, num_partitions=num_partitions, inputs=[e],
+            )
+        finally:
+            fwd.unpersist()
+            rev.unpersist()
     h_mass = float(run.last["h_mass"] or 1.0)
     scores = run.state.select(
         "id", (F.col("hub_raw") / F.lit(h_mass)).alias("hub"), "auth"

@@ -101,10 +101,8 @@ def k_core(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    sym = symmetrize(edges).persist()
-    rows, num_partitions = measure(sym, num_partitions)
-    core, _ = _peel(spark, sym, k, rows, max_iter, num_partitions,
-                    metrics_out, [sym])
+    with measure(symmetrize(edges), num_partitions) as (sym, rows, n):
+        core, _ = _peel(spark, sym, k, rows, max_iter, n, metrics_out, [sym])
     return core.groupBy(F.col("src").alias("id")).agg(
         F.count("*").cast("long").alias("degree")
     )
@@ -135,38 +133,39 @@ def coreness(
     empty (its vertices' cores are unknown). The result is a
     ``localCheckpoint`` the caller owns.
     """
-    raw = edges.select("src", "dst").persist()
-    sym = symmetrize(raw).persist()
-    rows, num_partitions = measure(sym, num_partitions)
-    # level 1: every vertex with a non-self-loop edge is in the 1-core
-    labels = [raw.select(
-        F.explode(F.array("src", "dst")).alias("id"),
-        (F.col("src") != F.col("dst")).cast("long").alias("core"),
-    )]
-    cores: list[DataFrame] = []
-    try:
-        while rows:
-            k = len(cores) + 2
-            if k > max_k:
-                raise RuntimeError(f"the {max_k}-core is not empty")
-            # level k starts from the (k−1)-core: sym, then the last core
-            core, rows = _peel(
-                spark, cores[-1] if cores else sym, k, rows,
-                max_iter_per_level, num_partitions, metrics_out,
-                [] if cores else [sym],
+    # the raw projection is cached for the level-1 labels (self-loop-only
+    # vertices, which symmetrize drops, get core 0); the run is sized from
+    # the symmetrized table
+    with measure(edges.select("src", "dst"), num_partitions) as (raw, _, _), \
+            measure(symmetrize(raw), num_partitions) as (sym, rows, n):
+        # level 1: every vertex with a non-self-loop edge is in the 1-core
+        labels = [raw.select(
+            F.explode(F.array("src", "dst")).alias("id"),
+            (F.col("src") != F.col("dst")).cast("long").alias("core"),
+        )]
+        cores: list[DataFrame] = []
+        try:
+            while rows:
+                k = len(cores) + 2
+                if k > max_k:
+                    raise RuntimeError(f"the {max_k}-core is not empty")
+                # level k starts from the (k−1)-core: sym, then the last core
+                core, rows = _peel(
+                    spark, cores[-1] if cores else sym, k, rows,
+                    max_iter_per_level, n, metrics_out,
+                    [] if cores else [sym],
+                )
+                cores.append(core)
+                labels.append(core.select(
+                    F.col("src").alias("id"),
+                    F.lit(k).cast("long").alias("core"),
+                ))
+            return (
+                reduce(DataFrame.unionByName, labels)
+                .groupBy("id")
+                .agg(F.max("core").alias("core"))
+                .localCheckpoint(eager=True)
             )
-            cores.append(core)
-            labels.append(core.select(
-                F.col("src").alias("id"), F.lit(k).cast("long").alias("core")
-            ))
-        return (
-            reduce(DataFrame.unionByName, labels)
-            .groupBy("id")
-            .agg(F.max("core").alias("core"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for core in cores:
-            release_local_checkpoint(core)
-        sym.unpersist()
-        raw.unpersist()
+        finally:
+            for core in cores:
+                release_local_checkpoint(core)

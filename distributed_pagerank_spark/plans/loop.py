@@ -55,27 +55,29 @@ is one job that caches its slice and observes its row count; the slices
 and their counts are the caller's. It stops at an empty slice or at
 ``max_depth`` (declared truncation, which does not raise).
 
-Execution policy: one Spark job per iteration. The caller sizes the
-loop once, from the measured bytes of its cached edge aggregate
-(``loop_partitions``, or ``measure`` when it needs the row count too),
-and the edge table (``edge_table``), the start state and every in-loop
-shuffle use that one partition count. Around its iterations
-``fixpoint`` (and ``frontier``) runs with AQE off,
-``spark.sql.shuffle.partitions`` at that count and automatic broadcast
-joins off (``loop_policy``), restoring the caller's confs on return and
-on raise (``conf_scope``). Then the edges
-⋈ state and state ⋈ aggregate joins are co-partitioned sort-merge joins
-over the same hash layout: each iteration is one job with at most one
-shuffle.
+Execution policy: one for the whole plan, chosen once from what the
+plan measures first. A plan's first job persists and counts its edge
+aggregate with AQE off (``measure``), and sizes the plan from the
+cache's measured bytes, as AQE's partition coalescing would. Every later
+job of the plan, from its setup tables (``edge_table``) through the loop
+to the finalization, runs under ``loop_policy`` of that count: AQE off,
+``spark.sql.shuffle.partitions`` at it, and automatic broadcast joins
+off; the caller's confs come back on return and on raise
+(``conf_scope``). In a loop the edges ⋈ state and state ⋈ aggregate
+joins are then co-partitioned sort-merge joins over the same hash
+layout: each iteration is one job with at most one shuffle, and a
+one-shot plan (the triangle kernel) runs its shuffles inside the jobs of
+its actions.
 The two halves only pay together. AQE on splits every query stage, and
-every runtime broadcast, into a job of its own (about 5.5 per
-iteration), and each job re-pays the driver's planning and closure
+every runtime broadcast, into a job of its own (about 5.5 jobs per loop
+iteration; 16 jobs for a triangle count that takes 4 under the
+policy), and each job re-pays the driver's planning and closure
 cleaning. AQE off at the session's partition count trades those jobs
-for many near-empty tasks, which on a small loop costs more than it
-saves. Sizing is what AQE's partition coalescing did, fixed before the
-loop instead of re-planned every iteration. In-loop skew is the
-caller's to handle (PageRank's ``skew_salt``): AQE's skew-join split
-does not run inside a loop.
+for many near-empty tasks, which on a small graph costs more than it
+saves. Skew is the plan's to
+handle (PageRank's ``skew_salt``): AQE's skew-join split does not run
+under the policy, and joins broadcast only where the plan hints it from
+counts it knows (betweenness, SCC's extraction).
 
 Order-independent statistics: observed sums merge per-task partials in
 task completion order, so double-valued statistics (PageRank's
@@ -100,21 +102,16 @@ import json
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any, Callable, Iterable
+from typing import Any, Callable, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
 
-# Runtime confs of SCC's outer rounds and of ``measure``'s count: AQE off
-# (BENCH/ab_loop_aqe_ckpt_r6.json, sf0.1/local[32]), broadcasts still on.
-# ``fixpoint``, ``frontier`` and PPR run under the fuller ``loop_policy``.
-LOOP_CONFS = {"spark.sql.adaptive.enabled": "false"}
-
 
 def loop_policy(num_partitions: int) -> dict[str, str]:
-    """The runtime confs a sized loop runs under (module docstring):
+    """The runtime confs a sized plan runs under (module docstring):
     AQE off, ``num_partitions`` shuffle partitions, no automatic
     broadcast joins."""
     return {
@@ -132,16 +129,14 @@ def conf_scope(spark: SparkSession, confs: dict[str, str]):
     Safe on any session (the correctness driver's included): a conf the
     session refuses to change is left untouched.
     """
-    old: dict[str, str | None] = {}
+    old: dict[str, str | None] = {}  # None: unset, so re-unset on exit
     for k, v in confs.items():
         try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        try:
+            prior = spark.conf.get(k, None)
             spark.conf.set(k, v)
+            old[k] = prior
         except Exception:
-            old.pop(k, None)  # immutable/unknown conf: leave untouched
+            pass  # immutable/unknown conf: leave untouched
     try:
         yield
     finally:
@@ -155,54 +150,56 @@ def conf_scope(spark: SparkSession, confs: dict[str, str]):
                 pass
 
 
-def measure(cached: DataFrame, requested: int | None) -> tuple[int, int]:
-    """Rows of the persisted edge aggregate ``cached`` and the partition
-    count of a loop over it: ``requested`` when given, otherwise sized
-    from its measured bytes.
+@contextmanager
+def measure(
+    aggregate: DataFrame, requested: int | None
+) -> Iterator[tuple[DataFrame, int, int]]:
+    """Size a plan from its edge aggregate, then run the rest of the plan
+    under that size: a block that gets ``(cached, rows, n)``.
 
-    ``cached`` is materialized here by one AQE-off count, after which its
-    size statistic is the cache's real in-memory size. The sized count is
-    ``ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``,
-    clamped to ``[1, spark.sql.shuffle.partitions]``: the partition size
-    AQE would coalesce to, fixed before the loop instead of re-planned
-    every iteration.
+    ``aggregate`` (un-persisted) is persisted and counted with AQE off,
+    in one job; the cache keeps that AQE-off plan. ``n`` is ``requested``
+    when given, otherwise sized from the cache's measured in-memory
+    bytes: ``ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``,
+    clamped to ``[1, spark.sql.shuffle.partitions]`` — the partition size
+    AQE would coalesce to, fixed once instead of re-planned every job.
+    The block runs under ``loop_policy(n)``; on exit, also on raise, the
+    caller's confs are restored and the cache is released.
     """
-    spark = cached.sparkSession
-    with conf_scope(spark, LOOP_CONFS):
-        # AQE would run each of the count's stages as its own job (the
-        # cache itself keeps the plan it was persisted with)
-        rows = cached.count()
-    if requested:
-        return rows, requested
-    plan = cached._jdf.queryExecution().optimizedPlan()
-    size = int(plan.stats().sizeInBytes())
-    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
-        .byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return rows, max(1, min(cap, -(-size // advisory)))
-
-
-def loop_partitions(cached: DataFrame, requested: int | None) -> int:
-    """Partition count of a loop over the persisted edge aggregate
-    ``cached`` (``measure``); counts it only when sizing."""
-    return requested or measure(cached, None)[1]
+    spark = aggregate.sparkSession
+    try:
+        with conf_scope(spark, {"spark.sql.adaptive.enabled": "false"}):
+            # AQE would run each shuffle map stage of the cache's plan as
+            # a job of its own
+            rows = aggregate.persist().count()
+        n = requested
+        if not n:
+            plan = aggregate._jdf.queryExecution().optimizedPlan()
+            size = int(plan.stats().sizeInBytes())
+            advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
+                .byteStringAsBytes(spark.conf.get(
+                    "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+            cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+            n = max(1, min(cap, -(-size // advisory)))
+        with conf_scope(spark, loop_policy(n)):
+            yield aggregate, rows, n
+    finally:
+        aggregate.unpersist()
 
 
 def edge_table(edges: DataFrame, num_partitions: int) -> DataFrame:
     """``edges`` as a loop's static side: hash-partitioned by ``src`` into
     the loop's ``num_partitions`` and sorted by it (CSR-style), persisted
-    with a plan made under ``loop_policy``. A loop's joins on ``src`` then
-    read it in place, with no edge-side shuffle or sort. The loop's first
-    job that reads it fills the cache, so ``edges`` must stay readable
-    until then; the caller unpersists the table.
+    with the plan of the enclosing ``measure`` block's policy. A loop's
+    joins on ``src`` then read it in place, with no edge-side shuffle or
+    sort. The first job that reads it fills the cache, so ``edges`` must
+    stay readable until then; the caller unpersists the table.
     """
-    with conf_scope(edges.sparkSession, loop_policy(num_partitions)):
-        return (
-            edges.repartition(num_partitions, "src")
-            .sortWithinPartitions("src")
-            .persist()
-        )
+    return (
+        edges.repartition(num_partitions, "src")
+        .sortWithinPartitions("src")
+        .persist()
+    )
 
 
 def exact_sum(col: Column) -> Column:
@@ -484,91 +481,89 @@ def fixpoint(
     fingerprint the checkpoint directory. See the module docstring for
     the lifecycle.
 
-    ``num_partitions`` is the loop's partition count (from
-    ``loop_partitions``); the whole call runs under ``loop_policy`` of it.
+    ``num_partitions`` is the ``n`` of the enclosing ``measure`` block,
+    whose ``loop_policy`` the call runs under.
 
     ``Fixpoint.state`` is the final snapshot itself (a leaf the caller
     frees with ``release_local_checkpoint``), so it may carry the step's
     extra columns besides the start state's; callers select their own.
     """
-    with conf_scope(spark, loop_policy(num_partitions)):
-        ckpt = CheckpointManager(spark, checkpoint_dir)
-        fingerprint = None
-        if ckpt.enabled():
-            g = graph.agg(
-                F.count("*").alias("m"),
-                F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
-            ).first()
-            fingerprint = f"{name}|{identity}|m={g['m']}|h={g['h']}"
-        pending = list(inputs)
+    ckpt = CheckpointManager(spark, checkpoint_dir)
+    fingerprint = None
+    if ckpt.enabled():
+        g = graph.agg(
+            F.count("*").alias("m"),
+            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),
+        ).first()
+        fingerprint = f"{name}|{identity}|m={g['m']}|h={g['h']}"
+    pending = list(inputs)
 
-        def release_inputs() -> None:
-            while pending:
-                pending.pop().unpersist()
+    def release_inputs() -> None:
+        while pending:
+            pending.pop().unpersist()
 
-        start, state, last = 0, None, None
-        latest = ckpt.latest() if resume and ckpt.enabled() else None
-        # a manifest of another graph or parameters is stale: start fresh
-        if latest is not None and latest[2].get("fingerprint") == fingerprint:
-            start, state, manifest = latest
-            last = manifest["metrics"]
-            if last["converged"] or start >= max_iter:
-                release_inputs()
-                return Fixpoint(state, start, last, last["converged"])
-        # key-sorted like the edge tables: the per-iteration sort-merge
-        # joins skip the state-side Sort, and the snapshots inherit the order
-        state = bound_estimate(
-            (init() if state is None else state)
-            .repartition(num_partitions, *key)
-            .sortWithinPartitions(*key)
-            .localCheckpoint(eager=False)
-        )
-        cols = state.columns
-        aggs = [c.alias(k) for k, c in stats.items()]
-        records, iteration, done = [], start, False
-        while not done and iteration < max_iter:
-            iteration += 1
-            t0 = time.monotonic()
-            prev = records[-1] if records else None
-            nxt, notes = step(state.select(*cols), prev)
-            snapshot = bound_estimate(nxt.localCheckpoint(eager=False))
-            save = ckpt.enabled() and (
-                iteration % checkpoint_interval == 0 or iteration >= max_iter
-            )
-            obs = Observation()
-            # the iteration's one job: computes, caches and truncates the
-            # snapshot, writes it (durably on a save iteration) and observes
-            # the statistics on the way
-            ckpt.write(snapshot.observe(obs, *aggs).select(*cols),
-                       iteration if save else None)
+    start, state, last = 0, None, None
+    latest = ckpt.latest() if resume and ckpt.enabled() else None
+    # a manifest of another graph or parameters is stale: start fresh
+    if latest is not None and latest[2].get("fingerprint") == fingerprint:
+        start, state, manifest = latest
+        last = manifest["metrics"]
+        if last["converged"] or start >= max_iter:
             release_inputs()
-            release_local_checkpoint(state)
-            state = snapshot
-            # sums over an empty state are NULL
-            observed = obs.get
-            values = {k: 0 if observed[k] is None else observed[k] for k in stats}
-            done = converged(values, prev)
-            record = {"iteration": iteration, **values, **notes,
-                      "converged": done,
-                      "total_s": round(time.monotonic() - t0, 4)}
-            records.append(record)
-            if metrics_out is not None:
-                metrics_out.append(record)
-            if ckpt.enabled() and done and not save:
-                # converged between cadence points: save the cached state
-                save = True
-                ckpt.write(state.select(*cols), iteration)
-            if save:
-                # durable resume point; iterating continues on the cached copy
-                ckpt.commit(iteration, {"algo": name, "fingerprint": fingerprint,
-                                        "metrics": record})
-        release_inputs()  # zero iterations: the lazy start state never ran
-        return Fixpoint(state, iteration, records[-1] if records else last, done,
-                        records)
+            return Fixpoint(state, start, last, last["converged"])
+    # key-sorted like the edge tables: the per-iteration sort-merge
+    # joins skip the state-side Sort, and the snapshots inherit the order
+    state = bound_estimate(
+        (init() if state is None else state)
+        .repartition(num_partitions, *key)
+        .sortWithinPartitions(*key)
+        .localCheckpoint(eager=False)
+    )
+    cols = state.columns
+    aggs = [c.alias(k) for k, c in stats.items()]
+    records, iteration, done = [], start, False
+    while not done and iteration < max_iter:
+        iteration += 1
+        t0 = time.monotonic()
+        prev = records[-1] if records else None
+        nxt, notes = step(state.select(*cols), prev)
+        snapshot = bound_estimate(nxt.localCheckpoint(eager=False))
+        save = ckpt.enabled() and (
+            iteration % checkpoint_interval == 0 or iteration >= max_iter
+        )
+        obs = Observation()
+        # the iteration's one job: computes, caches and truncates the
+        # snapshot, writes it (durably on a save iteration) and observes
+        # the statistics on the way
+        ckpt.write(snapshot.observe(obs, *aggs).select(*cols),
+                   iteration if save else None)
+        release_inputs()
+        release_local_checkpoint(state)
+        state = snapshot
+        # sums over an empty state are NULL
+        observed = obs.get
+        values = {k: 0 if observed[k] is None else observed[k] for k in stats}
+        done = converged(values, prev)
+        record = {"iteration": iteration, **values, **notes,
+                  "converged": done,
+                  "total_s": round(time.monotonic() - t0, 4)}
+        records.append(record)
+        if metrics_out is not None:
+            metrics_out.append(record)
+        if ckpt.enabled() and done and not save:
+            # converged between cadence points: save the cached state
+            save = True
+            ckpt.write(state.select(*cols), iteration)
+        if save:
+            # durable resume point; iterating continues on the cached copy
+            ckpt.commit(iteration, {"algo": name, "fingerprint": fingerprint,
+                                    "metrics": record})
+    release_inputs()  # zero iterations: the lazy start state never ran
+    return Fixpoint(state, iteration, records[-1] if records else last, done,
+                    records)
 
 
 def frontier(
-    spark: SparkSession,
     start: DataFrame,
     expand: Callable[[DataFrame, int], DataFrame],
     *,
@@ -588,37 +583,36 @@ def frontier(
     is the caller's declared semantics, so it does not raise.
 
     The slices and their exact row counts are the caller's; it frees the
-    slices with ``release_local_checkpoint``. The loop runs under
-    ``loop_policy(num_partitions)``, and levels 1.. append
+    slices with ``release_local_checkpoint``. ``num_partitions`` is the
+    ``n`` of the enclosing ``measure`` block, and levels 1.. append
     ``{iteration, rows, converged, total_s}`` records (converged: the
     slice is empty) to ``metrics_out``.
     """
     slices: list[DataFrame] = []
     rows: list[int] = []
     visited = None
-    with conf_scope(spark, loop_policy(num_partitions)):
-        for depth in range(max_depth + 1):
-            t0 = time.monotonic()
-            plan = (
-                start.repartition(num_partitions, *key)
-                if visited is None
-                else expand(slices[-1], depth).join(visited, list(key),
-                                                    "left_anti")
-            )
-            level = bound_estimate(plan.localCheckpoint(eager=False))
-            obs = Observation()
-            level.observe(obs, F.count("*").alias("rows")) \
-                .write.format("noop").mode("overwrite").save()
-            n = obs.get["rows"]
-            if depth and metrics_out is not None:
-                metrics_out.append({"iteration": depth, "rows": n,
-                                    "converged": n == 0,
-                                    "total_s": round(time.monotonic() - t0, 4)})
-            if n == 0:
-                release_local_checkpoint(level)
-                break
-            slices.append(level)
-            rows.append(n)
-            seen = level.select(*key)
-            visited = seen if visited is None else visited.unionByName(seen)
+    for depth in range(max_depth + 1):
+        t0 = time.monotonic()
+        plan = (
+            start.repartition(num_partitions, *key)
+            if visited is None
+            else expand(slices[-1], depth).join(visited, list(key),
+                                                "left_anti")
+        )
+        level = bound_estimate(plan.localCheckpoint(eager=False))
+        obs = Observation()
+        level.observe(obs, F.count("*").alias("rows")) \
+            .write.format("noop").mode("overwrite").save()
+        n = obs.get["rows"]
+        if depth and metrics_out is not None:
+            metrics_out.append({"iteration": depth, "rows": n,
+                                "converged": n == 0,
+                                "total_s": round(time.monotonic() - t0, 4)})
+        if n == 0:
+            release_local_checkpoint(level)
+            break
+        slices.append(level)
+        rows.append(n)
+        seen = level.select(*key)
+        visited = seen if visited is None else visited.unionByName(seen)
     return slices, rows

@@ -32,8 +32,9 @@ edge table — only the |V|-sized contribution sums move.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,11 +42,10 @@ from pyspark.sql import functions as F
 from distributed_pagerank_spark.operators.degrees import vertices_from_edges
 from distributed_pagerank_spark.operators.salting import hub_ids, salted_sum
 from distributed_pagerank_spark.plans.loop import (
-    conf_scope,
+    edge_table,
     exact_sum,
     fixpoint,
-    loop_partitions,
-    loop_policy,
+    measure,
 )
 
 
@@ -58,13 +58,13 @@ class PageRankResult:
     metrics: list[dict[str, Any]] = field(default_factory=list)
 
 
+@contextmanager
 def _prepare_edges(
-    spark: SparkSession,
     edges: DataFrame,
     dup_policy: str,
     num_partitions: int | None,
     weight_col: str | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
+) -> Iterator[tuple[DataFrame, DataFrame, DataFrame, int, int]]:
     """Static per-run edge product: (src, dst, out_degree), partitioned by
     src and persisted. The in-link side dedups duplicates in both policies
     (the reference stores in-links in a map, collapsing dups); the
@@ -78,55 +78,43 @@ def _prepare_edges(
     startup cost, so re-reading it per derived artifact (the round-2 shape:
     distinct + degrees + vertices = 4 scans) is not acceptable.
 
-    The loop's partition count is ``num_partitions``, or else sized from
-    the measured bytes of the cached aggregate (``loop_partitions``).
-
-    Returns ``(edge_product, vertices, cached_distinct_edges, edge_count,
-    partitions)``; the caller unpersists the third once the vertex-derived
-    state is materialized, and gets the edge-product row count for free
-    (the materializing count — doubles as the empty-graph check).
+    A ``measure`` block over that aggregate: it sizes the run (unless
+    ``num_partitions`` is given) and the block runs under its policy. The
+    block gets ``(edge_product, vertices, cached_distinct_edges,
+    edge_count, partitions)``; the edge count is the aggregate's, which
+    the edge product shares (the empty-graph check). The edge product
+    fills on the first job that reads it, and the aggregate must stay
+    cached until then; both caches are released on exit.
     """
     if weight_col is not None:
         # weighted graph: duplicate (src, dst) rows merge by SUMMING their
         # weights; the normalizer is the src's total out-weight (strength),
         # so the transition column is w / strength — dup_policy does not
         # apply (weights subsume multiplicity)
-        ecnt = (
-            edges.groupBy("src", "dst")
-            .agg(F.sum(F.col(weight_col).cast("double")).alias("__w"))
-            .persist()
-        )
+        ecnt = edges.groupBy("src", "dst").agg(
+            F.sum(F.col(weight_col).cast("double")).alias("__w"))
         deg = ecnt.groupBy(F.col("src").alias("id")).agg(
             F.sum("__w").alias("out_degree")
         )
         e = ecnt.select("src", "dst", "__w")
         edge_cols = ["src", "dst", "__w", "out_degree"]
     else:
-        ecnt = (
-            edges.groupBy("src", "dst")
-            .agg(F.count("*").alias("__cnt"))
-            .persist()
-        )
+        ecnt = edges.groupBy("src", "dst").agg(F.count("*").alias("__cnt"))
         deg_agg = F.sum("__cnt") if dup_policy == "reference" else F.count("*")
         deg = ecnt.groupBy(F.col("src").alias("id")).agg(
             deg_agg.cast("long").alias("out_degree")
         )
         e = ecnt.select("src", "dst")
         edge_cols = ["src", "dst", "out_degree"]
-    num_partitions = loop_partitions(ecnt, num_partitions)
-    # built under the loop's policy: one job, and the join's own shuffle
-    # by src already is the edge table's layout
-    with conf_scope(spark, loop_policy(num_partitions)):
-        ew = (
-            e.join(deg, e["src"] == deg["id"])
-            .select(*edge_cols)
-            .repartition(num_partitions, "src")
-            .sortWithinPartitions("src")  # CSR-style: sort-merge joins skip
-            .persist()                    # the per-iteration edge-side sort
-        )
-        m = ew.count()  # materialize (fills the ecnt cache if not yet filled)
-    verts = vertices_from_edges(e)  # reads the cache, not the raw input
-    return ew, verts, ecnt, m, num_partitions
+    with measure(ecnt, num_partitions) as (ecnt, m, num_partitions):
+        # the join's own shuffle by src already is the edge table's layout
+        ew = edge_table(e.join(deg, e["src"] == deg["id"]).select(*edge_cols),
+                        num_partitions)
+        try:
+            # the vertex set reads the cache, not the raw input
+            yield ew, vertices_from_edges(e), ecnt, m, num_partitions
+        finally:
+            ew.unpersist()
 
 
 def pagerank(
@@ -163,152 +151,149 @@ def pagerank(
     """
     if not 0.0 < c < 1.0:
         raise ValueError("damping c must be in (0,1)")
-    edges_w, verts, edges_cached, n_edges, num_partitions = _prepare_edges(
-        spark, edges, dup_policy, num_partitions, weight_col=weight_col
-    )
-    # empty-graph check rides the edge-product count (no vertex without an
-    # edge): the fresh-start state below needs no eager count of its own
-    if n_edges == 0:
-        edges_w.unpersist()
-        edges_cached.unpersist()
-        raise ValueError("empty edge table: no vertices to rank")
+    with _prepare_edges(edges, dup_policy, num_partitions, weight_col) as (
+        edges_w, verts, edges_cached, n_edges, num_partitions
+    ):
+        # empty-graph check rides measure's count of the edge aggregate (no
+        # vertex without an edge): the fresh-start state needs no count
+        if n_edges == 0:
+            raise ValueError("empty edge table: no vertices to rank")
 
-    # the personalization vector is part of the resume fingerprint:
-    # resuming with a different e must NOT continue from the old
-    # checkpoint (the old e is baked into the checkpointed ranks)
-    e_h = "uniform"
-    if e is not None and checkpoint_dir:
-        eagg = e.agg(
-            F.expr("bit_xor(xxhash64(id, round(e, 12)))").alias("eh")
-        ).first()
-        e_h = f"{eagg['eh']}|norm={normalize_e}"
+        # the personalization vector is part of the resume fingerprint:
+        # resuming with a different e must NOT continue from the old
+        # checkpoint (the old e is baked into the checkpointed ranks)
+        e_h = "uniform"
+        if e is not None and checkpoint_dir:
+            eagg = e.agg(
+                F.expr("bit_xor(xxhash64(id, round(e, 12)))").alias("eh")
+            ).first()
+            e_h = f"{eagg['eh']}|norm={normalize_e}"
 
-    # --- E vector ----------------------------------------------------
-    if e is not None:
-        verts = verts.join(e, "id", "left").withColumn(
-            "e", F.coalesce(F.col("e"), F.lit(0.0)).cast("double")
-        )
-        if normalize_e:
-            total_e = verts.agg(F.sum("e")).first()[0] or 1.0
-            verts = verts.withColumn("e", F.col("e") / F.lit(float(total_e)))
-    # uniform e (1/n) is filled by init() below: the vertex count rides
-    # the state materialization as a broadcast one-row aggregate instead
-    # of paying its own driver job
-
-    # --- dangling flag (for redistribute mode) -----------------------
-    # carried as a state column so the per-iteration dangling mass can be
-    # computed inside the iteration's single materializing job (alongside
-    # the delta aggregate) — no extra driver-side job per iteration.
-    extra_cols = []
-    if dangling == "redistribute":
-        srcs = edges_w.select(F.col("src").alias("id")).distinct()
-        verts = (
-            verts.join(srcs.withColumn("__out", F.lit(True)), "id", "left")
-            .withColumn("dang", F.col("__out").isNull())
-            .drop("__out")
-        )
-        extra_cols = ["dang"]
-
-    def init() -> DataFrame:
-        # ``1.0 / __n`` is the same IEEE double division as a Python
-        # literal would be, without a vertex-count job of its own
-        cnt = verts.agg(F.count(F.lit(1)).alias("__n"))
-        e_col = F.col("e") if e is not None else F.lit(1.0) / F.col("__n")
-        return verts.crossJoin(F.broadcast(cnt)).select(
-            "id",
-            e_col.alias("e"),
-            (F.lit(1.0) / F.col("__n")).alias("rank"),
-            *extra_cols,
-        )
-
-    n = hubs = None
-    dang_mass = 0.0
-
-    def step(state: DataFrame, last: dict[str, Any] | None):
-        nonlocal n, hubs, dang_mass
-        if last is None:
-            # first iteration of this run: seed the dangling mass of the
-            # start state (the vertex count rides the same aggregate,
-            # which also materializes a lazy start state) and the hubs
-            if dangling == "redistribute":
-                seed = state.agg(
-                    F.sum(F.when(F.col("dang"), F.col("rank"))).alias("__dm"),
-                    F.count(F.lit(1)).alias("__n"),
-                ).first()
-                dang_mass, n = seed["__dm"] or 0.0, seed["__n"]
-            if skew_salt:
-                n = n or state.count()
-                thr = hub_threshold if hub_threshold is not None else max(
-                    64, int(n_edges / max(n, 1)) * 16
-                )
-                hubs = hub_ids(edges_w, thr).persist()
-                hubs.count()
-        elif dangling == "redistribute":
-            dang_mass = last["dang_mass"]
-
-        ranks = state.select("id", "rank")
-        contrib_expr = (
-            F.col("rank") * F.col("__w") / F.col("out_degree")
-            if weight_col is not None
-            else F.col("rank") / F.col("out_degree")
-        )
-        contribs = edges_w.join(ranks, edges_w["src"] == ranks["id"]).select(
-            "src", "dst", contrib_expr.alias("contrib")
-        )
-        if hubs is not None:
-            sums = salted_sum(
-                contribs, hubs, key="dst", value="contrib",
-                salt_buckets=skew_salt, salt_source="src",
+        # --- E vector ----------------------------------------------------
+        if e is not None:
+            verts = verts.join(e, "id", "left").withColumn(
+                "e", F.coalesce(F.col("e"), F.lit(0.0)).cast("double")
             )
-        else:
-            sums = contribs.groupBy("dst").agg(F.sum("contrib").alias("sum"))
+            if normalize_e:
+                total_e = verts.agg(F.sum("e")).first()[0] or 1.0
+                verts = verts.withColumn("e", F.col("e") / F.lit(float(total_e)))
+        # uniform e (1/n) is filled by init() below: the vertex count rides
+        # the state materialization as a broadcast one-row aggregate instead
+        # of paying its own driver job
 
-        base = F.coalesce(F.col("sum"), F.lit(0.0))
+        # --- dangling flag (for redistribute mode) -----------------------
+        # carried as a state column so the per-iteration dangling mass can be
+        # computed inside the iteration's single materializing job (alongside
+        # the delta aggregate) — no extra driver-side job per iteration.
+        extra_cols = []
         if dangling == "redistribute":
-            base = base + F.lit(float(dang_mass) / n)
-        # rank_old rides the snapshot so the L1 delta needs no second input
-        new_state = state.join(sums, state["id"] == sums["dst"], "left").select(
-            "id",
-            "e",
-            F.col("rank").alias("rank_old"),
-            (F.lit(c) * base + F.lit(1.0 - c) * F.col("e")).alias("rank"),
-            *extra_cols,
+            srcs = edges_w.select(F.col("src").alias("id")).distinct()
+            verts = (
+                verts.join(srcs.withColumn("__out", F.lit(True)), "id", "left")
+                .withColumn("dang", F.col("__out").isNull())
+                .drop("__out")
+            )
+            extra_cols = ["dang"]
+
+        def init() -> DataFrame:
+            # ``1.0 / __n`` is the same IEEE double division as a Python
+            # literal would be, without a vertex-count job of its own
+            cnt = verts.agg(F.count(F.lit(1)).alias("__n"))
+            e_col = F.col("e") if e is not None else F.lit(1.0) / F.col("__n")
+            return verts.crossJoin(F.broadcast(cnt)).select(
+                "id",
+                e_col.alias("e"),
+                (F.lit(1.0) / F.col("__n")).alias("rank"),
+                *extra_cols,
+            )
+
+        n = hubs = None
+        dang_mass = 0.0
+
+        def step(state: DataFrame, last: dict[str, Any] | None):
+            nonlocal n, hubs, dang_mass
+            if last is None:
+                # first iteration of this run: seed the dangling mass of the
+                # start state (the vertex count rides the same aggregate,
+                # which also materializes a lazy start state) and the hubs
+                if dangling == "redistribute":
+                    seed = state.agg(
+                        F.sum(F.when(F.col("dang"), F.col("rank"))).alias("__dm"),
+                        F.count(F.lit(1)).alias("__n"),
+                    ).first()
+                    dang_mass, n = seed["__dm"] or 0.0, seed["__n"]
+                if skew_salt:
+                    n = n or state.count()
+                    thr = hub_threshold if hub_threshold is not None else max(
+                        64, int(n_edges / max(n, 1)) * 16
+                    )
+                    hubs = hub_ids(edges_w, thr).persist()
+                    hubs.count()
+            elif dangling == "redistribute":
+                dang_mass = last["dang_mass"]
+
+            ranks = state.select("id", "rank")
+            contrib_expr = (
+                F.col("rank") * F.col("__w") / F.col("out_degree")
+                if weight_col is not None
+                else F.col("rank") / F.col("out_degree")
+            )
+            contribs = edges_w.join(ranks, edges_w["src"] == ranks["id"]).select(
+                "src", "dst", contrib_expr.alias("contrib")
+            )
+            if hubs is not None:
+                sums = salted_sum(
+                    contribs, hubs, key="dst", value="contrib",
+                    salt_buckets=skew_salt, salt_source="src",
+                )
+            else:
+                sums = contribs.groupBy("dst").agg(F.sum("contrib").alias("sum"))
+
+            base = F.coalesce(F.col("sum"), F.lit(0.0))
+            if dangling == "redistribute":
+                base = base + F.lit(float(dang_mass) / n)
+            # rank_old rides the snapshot so the L1 delta needs no second input
+            new_state = state.join(sums, state["id"] == sums["dst"], "left").select(
+                "id",
+                "e",
+                F.col("rank").alias("rank_old"),
+                (F.lit(c) * base + F.lit(1.0 - c) * F.col("e")).alias("rank"),
+                *extra_cols,
+            )
+            return new_state, {}
+
+        stats = {
+            "delta": exact_sum(F.abs(F.col("rank") - F.col("rank_old"))),
+            # Σrank of the final state feeds the 'reference' normalization
+            "rank_sum": exact_sum(F.col("rank")),
+        }
+        if dangling == "redistribute":
+            stats["dang_mass"] = exact_sum(F.when(F.col("dang"), F.col("rank")))
+        run = fixpoint(
+            spark, "pagerank", edges_w, init, step, stats,
+            lambda s, _: s["delta"] <= eps,
+            max_iter=max_iter, num_partitions=num_partitions,
+            checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
+            resume=resume, inputs=[edges_cached],
+            identity=f"c={c}|eps={eps}|dup={dup_policy}|dangling={dangling}|"
+                     f"w={weight_col}|e={e_h}",
         )
-        return new_state, {}
 
-    stats = {
-        "delta": exact_sum(F.abs(F.col("rank") - F.col("rank_old"))),
-        # Σrank of the final state feeds the 'reference' normalization
-        "rank_sum": exact_sum(F.col("rank")),
-    }
-    if dangling == "redistribute":
-        stats["dang_mass"] = exact_sum(F.when(F.col("dang"), F.col("rank")))
-    run = fixpoint(
-        spark, "pagerank", edges_w, init, step, stats,
-        lambda s, _: s["delta"] <= eps,
-        max_iter=max_iter, num_partitions=num_partitions,
-        checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
-        resume=resume, inputs=[edges_cached],
-        identity=f"c={c}|eps={eps}|dup={dup_policy}|dangling={dangling}|"
-                 f"w={weight_col}|e={e_h}",
-    )
+        # --- final normalization (reference: pagerank.go:38-45) ----------
+        # checkpoints store PRE-normalized ranks; Σrank of the final state
+        # was observed on its materializing job, so only a zero-iteration
+        # fresh run pays the aggregate
+        ranks = run.state.select("id", "rank")
+        if dangling == "reference":
+            total = (
+                run.last["rank_sum"]
+                if run.last is not None
+                else ranks.agg(F.sum("rank")).first()[0]
+            ) or 1.0
+            ranks = ranks.withColumn("rank", F.col("rank") / F.lit(float(total)))
 
-    # --- final normalization (reference: pagerank.go:38-45) ----------
-    # checkpoints store PRE-normalized ranks; Σrank of the final state
-    # was observed on its materializing job, so only a zero-iteration
-    # fresh run pays the aggregate
-    ranks = run.state.select("id", "rank")
-    if dangling == "reference":
-        total = (
-            run.last["rank_sum"]
-            if run.last is not None
-            else ranks.agg(F.sum("rank")).first()[0]
-        ) or 1.0
-        ranks = ranks.withColumn("rank", F.col("rank") / F.lit(float(total)))
-
-    edges_w.unpersist()
-    if hubs is not None:
-        hubs.unpersist()
-    delta = run.last["delta"] if run.last is not None else float("inf")
-    return PageRankResult(ranks, run.iterations, delta, run.converged,
-                          run.metrics)
+        if hubs is not None:
+            hubs.unpersist()
+        delta = run.last["delta"] if run.last is not None else float("inf")
+        return PageRankResult(ranks, run.iterations, delta, run.converged,
+                              run.metrics)

@@ -31,11 +31,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_pagerank_spark.plans.loop import (
-    conf_scope,
-    loop_policy,
-    release_local_checkpoint,
-)
+from distributed_pagerank_spark.plans.loop import release_local_checkpoint
 from distributed_pagerank_spark.plans.pagerank import _prepare_edges
 
 # iterations chained lazily between two materialization barriers
@@ -64,65 +60,62 @@ def personalized_pagerank_multi(
     co-partitioned full-outer against the cached seed vectors. The edge
     product is built and persisted ONCE for all sets and iterations.
     """
-    edges_w, _verts, ecnt, _m, num_partitions = _prepare_edges(
-        spark, edges, dup_policy, num_partitions
-    )
-    ecnt.unpersist()  # PPR never needs the vertex set — only edge reach
-
-    # per-set normalized seed vector, pinned on (set_id, id): both the
-    # per-iteration full-outer and the final per-set sum reuse this layout
-    totals = seeds.groupBy("set_id").agg(F.sum("weight").alias("__tot"))
-    e_vec = (
-        seeds.join(F.broadcast(totals), "set_id")
-        .select(
-            "set_id", "id",
-            (F.col("weight").cast("double") / F.col("__tot")).alias("e"),
+    # PPR never needs the vertex set, only edge reach
+    with _prepare_edges(edges, dup_policy, num_partitions) as (
+        edges_w, _verts, ecnt, _m, num_partitions
+    ):
+        # per-set normalized seed vector, pinned on (set_id, id): both the
+        # per-iteration full-outer and the final per-set sum reuse this layout
+        totals = seeds.groupBy("set_id").agg(F.sum("weight").alias("__tot"))
+        e_vec = (
+            seeds.join(F.broadcast(totals), "set_id")
+            .select(
+                "set_id", "id",
+                (F.col("weight").cast("double") / F.col("__tot")).alias("e"),
+            )
+            .repartition(num_partitions, "set_id", "id")
+            .persist()
         )
-        .repartition(num_partitions, "set_id", "id")
-        .persist()
-    )
-    # no eager count: the cache fills inside the first barrier job below
-    # (the chained plan references e_vec once per iteration — the first
-    # task computing a partition caches it, the rest read it), and the
-    # empty-seeds check rides the barrier's row count (state is a
-    # full-outer against e_vec, so state rows ⊇ seed rows — 0 at a
-    # barrier iff the seeds were empty). One setup job less (r6).
+        # no eager count: the cache fills inside the first barrier job below
+        # (the chained plan references e_vec once per iteration — the first
+        # task computing a partition caches it, the rest read it), and the
+        # empty-seeds check rides the barrier's row count (state is a
+        # full-outer against e_vec, so state rows ⊇ seed rows — 0 at a
+        # barrier iff the seeds were empty). One setup job less (r6).
 
-    # initial state is a projection over e_vec. Iteration 1 reads it
-    # through the (lazily-filled) cache; only a zero-iteration call
-    # (k=0) pins and counts it, keeping the check and a materialized
-    # backing on that path too.
-    state = e_vec.select("set_id", "id", F.col("e").alias("rank"))
+        # initial state is a projection over e_vec. Iteration 1 reads it
+        # through the (lazily-filled) cache; only a zero-iteration call
+        # (k=0) pins and counts it, keeping the check and a materialized
+        # backing on that path too.
+        state = e_vec.select("set_id", "id", F.col("e").alias("rank"))
 
-    def empty_seeds(snapshot: DataFrame) -> ValueError:
-        # the caller gets no result to own: release every cache first
-        release_local_checkpoint(snapshot)
-        edges_w.unpersist()
-        e_vec.unpersist()
-        return ValueError("empty seeds: no personalization vectors to rank")
+        def empty_seeds(snapshot: DataFrame) -> ValueError:
+            # the caller gets no result to own: release every cache first
+            release_local_checkpoint(snapshot)
+            e_vec.unpersist()
+            return ValueError("empty seeds: no personalization vectors to rank")
 
-    if k < 1:
-        state = state.persist()
-        if state.count() == 0:
-            raise empty_seeds(state)
+        if k < 1:
+            state = state.persist()
+            if state.count() == 0:
+                raise empty_seeds(state)
 
-    metrics = metrics_out if metrics_out is not None else []
-    prev_snapshot = state if k < 1 else None
+        metrics = metrics_out if metrics_out is not None else []
+        prev_snapshot = state if k < 1 else None
 
-    # Fixed iteration count, no per-iteration convergence statistic, and
-    # the state appears exactly ONCE in each iteration's plan (the
-    # contribution join; the update joins the pinned seed cache, not the
-    # state) — so the logical plan grows LINEARLY per iteration and
-    # iterations can chain LAZILY between materialization barriers.
-    # A barrier every ``BARRIER_INTERVAL`` iterations
-    # (and always at iteration k) lazily checkpoints the chain and uses
-    # the row count as the materializing action: one driver job per
-    # barrier instead of one per iteration, with the same exchanges
-    # inside. ``state_rows`` is recorded at barriers (None between —
-    # nothing materializes there to count). The chain stays off
-    # ``fixpoint``: a port to one job per iteration ran slower on the
-    # contract's seed sets (ROADMAP item 2).
-    with conf_scope(spark, loop_policy(num_partitions)):
+        # Fixed iteration count, no per-iteration convergence statistic, and
+        # the state appears exactly ONCE in each iteration's plan (the
+        # contribution join; the update joins the pinned seed cache, not the
+        # state) — so the logical plan grows LINEARLY per iteration and
+        # iterations can chain LAZILY between materialization barriers.
+        # A barrier every ``BARRIER_INTERVAL`` iterations
+        # (and always at iteration k) lazily checkpoints the chain and uses
+        # the row count as the materializing action: one driver job per
+        # barrier instead of one per iteration, with the same exchanges
+        # inside. ``state_rows`` is recorded at barriers (None between —
+        # nothing materializes there to count). The chain stays off
+        # ``fixpoint``: a port to one job per iteration ran slower on the
+        # contract's seed sets (ROADMAP item 2).
         for iteration in range(1, k + 1):
             t0 = time.monotonic()
             contribs = (
@@ -148,19 +141,19 @@ def personalized_pagerank_multi(
                 if prev_snapshot is not None:
                     release_local_checkpoint(prev_snapshot)
                 prev_snapshot = new_state
+                ecnt.unpersist()  # the barrier filled edges_w from it
             state = new_state
             metrics.append(
                 {"iteration": iteration, "state_rows": rows,
                  "total_s": round(time.monotonic() - t0, 4)}
             )
 
-    sums = state.groupBy("set_id").agg(F.sum("rank").alias("__sum"))
-    out = (
-        state.join(F.broadcast(sums), "set_id")
-        .select("set_id", "id", (F.col("rank") / F.col("__sum")).alias("rank"))
-    )
-    # the result reads the materialized state cache; inputs can go (a
-    # cache eviction would recompute them from lineage, correctly)
-    edges_w.unpersist()
-    e_vec.unpersist()
-    return out
+        sums = state.groupBy("set_id").agg(F.sum("rank").alias("__sum"))
+        out = (
+            state.join(F.broadcast(sums), "set_id")
+            .select("set_id", "id", (F.col("rank") / F.col("__sum")).alias("rank"))
+        )
+        # the result reads the materialized state cache; inputs can go (a
+        # cache eviction would recompute them from lineage, correctly)
+        e_vec.unpersist()
+        return out

@@ -43,9 +43,10 @@ Spark job per round (the snapshot write, with the changed-label count
 observed on it), lineage cut at every round, and a ``RuntimeError``
 when ``max_prop`` rounds end before the labels settle — partial labels
 would split SCCs. The edge sets and vertex sets between fixpoints are
-``localCheckpoint`` leaves too, so no plan deepens across rounds. Every
-round runs at one partition count, sized from the input edges' bytes
-(``plans.loop.loop_partitions``) unless ``num_partitions`` is given.
+``localCheckpoint`` leaves too, so no plan deepens across rounds. The
+whole call, set-up leaves, outer rounds and canonicalization included,
+runs under one policy at one partition count, sized from the input
+edges' bytes (``plans.loop.measure``) unless ``num_partitions`` is given.
 
 Scale shape: both fixpoints move only |V_r|-sized label vectors against
 a per-round cached-and-shrinking edge set (same gather-scatter economy
@@ -69,10 +70,8 @@ from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import vertices_from_edges
 from distributed_pagerank_spark.plans.loop import (
-    LOOP_CONFS,
-    conf_scope,
     fixpoint,
-    loop_partitions,
+    measure,
     release_local_checkpoint,
 )
 
@@ -144,8 +143,7 @@ def strongly_connected_components(
     ``release_local_checkpoint``); every other cache is released here,
     also when a round budget runs out (``RuntimeError``)."""
     metrics = metrics_out if metrics_out is not None else []
-    raw = edges.select("src", "dst").persist()
-    held = [raw]  # every cache this call made and has not released yet
+    held: list[DataFrame] = []  # every leaf this call made and still holds
 
     def leaf(df: DataFrame, eager: bool) -> DataFrame:
         # a flat lineage leaf: each inner round embeds the plans of the
@@ -159,23 +157,24 @@ def strongly_connected_components(
             held.remove(df)
             release_local_checkpoint(df)
 
-    try:
-        num_partitions = loop_partitions(raw, num_partitions)
-        cur = leaf(
-            raw.where(F.col("src") != F.col("dst"))
-            .distinct()
-            .repartition(num_partitions, "src"),
-            eager=True,
-        )
-        # vertex set from the UN-filtered input: a vertex whose only edge
-        # is a self-loop is still a (singleton) SCC and must appear
-        verts = leaf(
-            vertices_from_edges(raw).repartition(num_partitions, "id"),
-            eager=True,
-        )
-        release(raw)
-        assigned_parts: list[DataFrame] = []
-        with conf_scope(spark, LOOP_CONFS):
+    with measure(edges.select("src", "dst"), num_partitions) as (
+        raw, _, num_partitions
+    ):
+        try:
+            cur = leaf(
+                raw.where(F.col("src") != F.col("dst"))
+                .distinct()
+                .repartition(num_partitions, "src"),
+                eager=True,
+            )
+            # vertex set from the UN-filtered input: a vertex whose only
+            # edge is a self-loop is still a (singleton) SCC and must appear
+            verts = leaf(
+                vertices_from_edges(raw).repartition(num_partitions, "id"),
+                eager=True,
+            )
+            raw.unpersist()
+            assigned_parts: list[DataFrame] = []
             for outer in range(1, max_outer + 1):
                 t0 = time.monotonic()
 
@@ -265,20 +264,20 @@ def strongly_connected_components(
                     f"SCC did not converge in {max_outer} outer rounds"
                 )
 
-        labeled = assigned_parts[0]
-        for part in assigned_parts[1:]:
-            labeled = labeled.unionByName(part)
-        # canonicalize: component = min member id (root is the
-        # max-reaching member, an artifact of the coloring order).
-        # plain equi-join: canon has one row per SCC, which can approach
-        # |V| (all-singleton graphs) — not broadcastable in general; AQE
-        # promotes it to broadcast when it is actually small
-        canon = labeled.groupBy("root").agg(F.min("id").alias("component"))
-        return (
-            labeled.join(canon, "root")
-            .select("id", "component")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for df in held:
-            release_local_checkpoint(df)
+            labeled = assigned_parts[0]
+            for part in assigned_parts[1:]:
+                labeled = labeled.unionByName(part)
+            # canonicalize: component = min member id (root is the
+            # max-reaching member, an artifact of the coloring order).
+            # plain equi-join: canon has one row per SCC, which can approach
+            # |V| (all-singleton graphs) — not broadcastable in general, so
+            # it is a sort-merge join at the run's partition count
+            canon = labeled.groupBy("root").agg(F.min("id").alias("component"))
+            return (
+                labeled.join(canon, "root")
+                .select("id", "component")
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            for df in held:
+                release_local_checkpoint(df)

@@ -17,17 +17,26 @@ and ``plans.truss.k_truss`` all run on them:
   flow through its joins instead of the ``Σ deg²`` rows of an explicit
   wedge join.
 
+``orientation`` is the one sized setup every user starts from: a
+``plans.loop.measure`` block that caches and counts the orientation in
+one AQE-off job and sizes the plan from its bytes. The plan over it —
+the final count, rows or per-vertex aggregate, or the truss peel — runs
+under the same policy at that partition count, so a triangle count is
+one job for the setup and one for the plan (AQE would run each of their
+shuffle map stages as a job of its own).
+
 Everything is built-in joins and aggregations; no UDFs, no driver loops.
 """
 
 from __future__ import annotations
 
-from typing import Callable
+from typing import Callable, ContextManager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import symmetrize
+from distributed_pagerank_spark.plans.loop import measure
 
 
 def oriented_edges(sym: DataFrame) -> DataFrame:
@@ -74,23 +83,24 @@ def triangles_of(o: DataFrame) -> DataFrame:
     return compact_forward(o).select("a", "b", F.explode("common").alias("c"))
 
 
+def orientation(
+    edges: DataFrame,
+) -> ContextManager[tuple[DataFrame, int, int]]:
+    """The one sized orientation setup: a ``plans.loop.measure`` block
+    over ``oriented_edges`` of ``edges``, which gets ``(o, rows, n)`` —
+    the cached orientation, its edge count and the plan's partition
+    count — and runs under the plan's policy."""
+    return measure(oriented_edges(symmetrize(edges)), None)
+
+
 def _on_oriented(
     edges: DataFrame, plan: Callable[[DataFrame], DataFrame]
 ) -> DataFrame:
     """``plan`` over the cached orientation of ``edges``, as an eager
-    ``localCheckpoint`` the caller owns. The symmetrized table is cached
-    while the orientation is built, so its degree aggregation and its
-    join share one scan of the raw input. Both caches are released on
+    ``localCheckpoint`` the caller owns; the orientation is released on
     return and on raise."""
-    sym = symmetrize(edges).persist()
-    o = oriented_edges(sym).persist()
-    try:
-        o.count()
-        sym.unpersist()
+    with orientation(edges) as (o, _, _):
         return plan(o).localCheckpoint(eager=True)
-    finally:
-        sym.unpersist()
-        o.unpersist()
 
 
 def triangle_rows(spark: SparkSession, edges: DataFrame) -> DataFrame:

@@ -8,8 +8,10 @@ subgraph*. Obtained by repeatedly deleting edges whose in-subgraph
 support drops below k−2; the fixpoint is unique (deletion order does
 not matter), so level-synchronous rounds compute the exact truss.
 
-The orientation is computed ONCE, by ``plans.triangles.oriented_edges``
-on the ORIGINAL degrees, and every round runs the same compact-forward
+The orientation is computed ONCE, on the ORIGINAL degrees, by the setup
+triangle counting shares (``plans.triangles.orientation``: cached,
+counted and sized, with the whole peel run under the plan's policy at
+that partition count), and every round runs the same compact-forward
 kernel as triangle counting (``plans.triangles.triangles_of``). Any
 acyclic orientation enumerates each triangle exactly once under
 compact-forward (the three edges of a discovered triangle a→b, a→c, b→c
@@ -36,14 +38,9 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from distributed_pagerank_spark.operators.degrees import symmetrize
-from distributed_pagerank_spark.plans.loop import (
-    fixpoint,
-    measure,
-    rows_settled,
-)
+from distributed_pagerank_spark.plans.loop import fixpoint, rows_settled
 from distributed_pagerank_spark.plans.triangles import (
-    oriented_edges,
+    orientation,
     triangles_of,
 )
 
@@ -83,19 +80,18 @@ def k_truss(
     """
     if k < 3:
         raise ValueError("k must be >= 3")
-    oriented = oriented_edges(symmetrize(edges)).persist()
-    rows, num_partitions = measure(oriented, None)
-    # at the fixpoint the survivors' support was computed on a graph
-    # identical to the final subgraph
-    truss = fixpoint(
-        spark, "k_truss", oriented, lambda: oriented,
-        lambda o, last: (
-            _oriented_support(o).where(F.col("support") >= k - 2), {}
-        ),
-        {"rows": F.count("*")}, rows_settled(rows),
-        key=("a",), max_iter=max_iter, num_partitions=num_partitions,
-        inputs=[oriented], metrics_out=metrics_out,
-    ).settled(f"{k}-truss peel")
+    with orientation(edges) as (oriented, rows, num_partitions):
+        # at the fixpoint the survivors' support was computed on a graph
+        # identical to the final subgraph
+        truss = fixpoint(
+            spark, "k_truss", oriented, lambda: oriented,
+            lambda o, last: (
+                _oriented_support(o).where(F.col("support") >= k - 2), {}
+            ),
+            {"rows": F.count("*")}, rows_settled(rows),
+            key=("a",), max_iter=max_iter, num_partitions=num_partitions,
+            inputs=[oriented], metrics_out=metrics_out,
+        ).settled(f"{k}-truss peel")
     # orientation → canonical (src < dst) output
     return truss.select(
         F.least("a", "b").alias("src"),

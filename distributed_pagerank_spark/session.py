@@ -3,10 +3,11 @@
 Local-mode defaults match the sandbox (single JVM, many cores); on a real
 cluster the same settings apply except master/memory, which come from
 ``spark-submit``. AQE is on for one-shot queries: it coalesces their
-shuffles and splits skewed join partitions at 100 TB scale. Fixpoint
-loops turn it off around their iterations and size their partitions
-from measured bytes instead (``plans/loop.py``), since AQE would split
-every iteration into several jobs.
+shuffles and splits skewed join partitions at 100 TB scale. The graph
+plans (``plans/``) turn it off for the whole call, setup, loop and
+finalization alike, and size their partitions from the measured bytes
+of their edge aggregate instead (``plans/loop.py``), since AQE would
+split every loop iteration and every one-shot plan into several jobs.
 """
 
 from __future__ import annotations

@@ -1,21 +1,30 @@
-"""The peels, the frontier loops and the triangle kernel's users against
-networkx, and HITS against a dense numpy oracle, on small generated
-graphs with self-loops, duplicate edges, negative ids and ids above
-2^31. Every call must also leave exactly its result's leaves cached.
-Calls that take ``num_partitions`` run on 3, so their shuffles run too
-(sized from bytes, these graphs get one partition)."""
+"""The peels, the frontier loops, connected and strongly connected
+components, PageRank and the triangle kernel's users against networkx,
+label propagation against a pure-Python oracle, and HITS against a dense
+numpy oracle, on small generated graphs with self-loops, duplicate
+edges, negative ids and ids above 2^31. Every call must also leave
+exactly its result's leaves cached. Calls that take ``num_partitions``
+run on 3, so their shuffles run too (sized from bytes, these graphs get
+one partition)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import networkx as nx
+import numpy as np
 import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from distributed_pagerank_spark.plans.betweenness import betweenness
 from distributed_pagerank_spark.plans.bfs import multi_source_bfs
+from distributed_pagerank_spark.plans.components import connected_components
 from distributed_pagerank_spark.plans.hits import hits
 from distributed_pagerank_spark.plans.kcore import coreness, k_core
+from distributed_pagerank_spark.plans.labelprop import label_propagation
+from distributed_pagerank_spark.plans.pagerank import pagerank
+from distributed_pagerank_spark.plans.scc import strongly_connected_components
 from distributed_pagerank_spark.plans.triangles import (
     local_clustering_coefficient,
     triangle_count,
@@ -51,6 +60,90 @@ def nx_graph(pairs):
     g.add_nodes_from(v for e in pairs for v in e)
     g.add_edges_from((s, d) for s, d in pairs if s != d)
     return g
+
+
+def nx_digraph(pairs):
+    """Directed simple graph of ``pairs``, self-loops kept."""
+    g = nx.DiGraph()
+    g.add_edges_from(pairs)
+    return g
+
+
+def min_labels(components):
+    """Each vertex → the smallest id of its component."""
+    return {v: min(c) for c in components for v in c}
+
+
+@few
+@given(pairs=graphs)
+@example(pairs=RICH)
+def test_connected_components_match_networkx(spark, pairs):
+    rows = collect_owned(spark, lambda: connected_components(
+        spark, edges_df(spark, pairs), num_partitions=3))
+    assert {r["id"]: r["component"] for r in rows} == \
+        min_labels(nx.connected_components(nx_graph(pairs)))
+
+
+@few
+@given(pairs=graphs)
+@example(pairs=RICH)
+def test_scc_matches_networkx(spark, pairs):
+    rows = collect_owned(spark, lambda: strongly_connected_components(
+        spark, edges_df(spark, pairs), num_partitions=3))
+    assert {r["id"]: r["component"] for r in rows} == \
+        min_labels(nx.strongly_connected_components(nx_digraph(pairs)))
+
+
+def lpa_oracle(pairs, rounds):
+    """Synchronous label propagation: every vertex takes its neighbours'
+    most frequent label, ties to the smallest; no neighbour, no change."""
+    g = nx_graph(pairs)
+    labels = {v: v for v in g}
+    for _ in range(rounds):
+        counts = {v: Counter(labels[u] for u in g[v]) for v in g}
+        nxt = {v: min(c, key=lambda x: (-c[x], x)) if c else labels[v]
+               for v, c in counts.items()}
+        if nxt == labels:
+            break
+        labels = nxt
+    return labels
+
+
+@few
+@given(pairs=graphs, rounds=st.integers(1, 4))
+@example(pairs=RICH, rounds=3)
+def test_label_propagation_matches_oracle(spark, pairs, rounds):
+    rows = collect_owned(spark, lambda: label_propagation(
+        spark, edges_df(spark, pairs), rounds=rounds, num_partitions=3))
+    assert {r["id"]: r["label"] for r in rows} == lpa_oracle(pairs, rounds)
+
+
+@few
+@given(pairs=graphs)
+@example(pairs=RICH)
+def test_pagerank_matches_networkx(spark, pairs):
+    """Up to eight power iterations from the uniform vector on networkx's
+    Google matrix (fewer when an iteration leaves the ranks unchanged):
+    dangling mass redistributed uniformly, a self-loop an out-link on
+    both sides."""
+    res = None
+
+    def call():
+        nonlocal res
+        res = pagerank(spark, edges_df(spark, pairs), eps=0.0, max_iter=8,
+                       dangling="redistribute", num_partitions=3)
+        return res.ranks
+
+    rows = collect_owned(spark, call)
+    g = nx_digraph(pairs)
+    google = nx.google_matrix(g, alpha=0.85, nodelist=list(g))
+    x = np.full(len(g), 1.0 / len(g))
+    for _ in range(res.iterations):
+        x = x @ google
+    want = dict(zip(g, x))
+    assert {r["id"] for r in rows} == set(want)
+    for r in rows:
+        assert abs(r["rank"] - want[r["id"]]) < 1e-12, r["id"]
 
 
 @few

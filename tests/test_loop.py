@@ -1,25 +1,33 @@
-"""The fixpoint harness's execution policy: partition count sized from
-measured bytes, one Spark job per iteration whatever the session's AQE
-setting, the caller's confs restored, and statistics that do not depend
-on task completion order."""
+"""The plans' execution policy: partition count sized from measured
+bytes, one Spark job per iteration and the same jobs per call whatever
+the session's AQE setting, the caller's confs restored, and statistics
+that do not depend on task completion order."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from distributed_pagerank_spark.plans.bfs import multi_source_bfs
 from distributed_pagerank_spark.plans.components import connected_components
+from distributed_pagerank_spark.plans.hits import hits
+from distributed_pagerank_spark.plans.kcore import k_core
 from distributed_pagerank_spark.plans.labelprop import label_propagation
 from distributed_pagerank_spark.plans.loop import (
     conf_scope,
     exact_sum,
-    loop_partitions,
+    measure,
 )
 from distributed_pagerank_spark.plans.pagerank import pagerank
 from distributed_pagerank_spark.plans.scc import strongly_connected_components
+from distributed_pagerank_spark.plans.triangles import (
+    local_clustering_coefficient,
+    triangle_count,
+)
+from distributed_pagerank_spark.plans.truss import k_truss
 from distributed_pagerank_spark.sources.generator import generate_graph
 
-from tests.conftest import edges_df
+from tests.conftest import collect_owned, edges_df
 
 SCOPED = (
     "spark.sql.adaptive.enabled",
@@ -32,22 +40,27 @@ def ranks_of(res):
     return {r["id"]: r["rank"] for r in res.ranks.collect()}
 
 
-def test_loop_partitions_sized_from_bytes(spark):
+def test_measure_sized_from_bytes(spark):
     """Tiny inputs size to one partition; an advisory size below the
     input's bytes sizes up to the session's shuffle partitions; an
-    explicit count wins."""
-    cached = spark.range(2000).selectExpr("id as src", "id + 1 as dst") \
-        .persist()
-    try:
-        assert loop_partitions(cached, None) == 1
-        assert loop_partitions(cached, 7) == 7
-        with conf_scope(spark, {
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
-            "spark.sql.shuffle.partitions": "5",
-        }):
-            assert loop_partitions(cached, None) == 5
-    finally:
-        cached.unpersist()
+    explicit count wins. The block runs under the sized policy, gets the
+    aggregate's row count, and releases its cache on exit."""
+
+    def sized(requested):
+        edges = spark.range(2000).selectExpr("id as src", "id + 1 as dst")
+        with measure(edges, requested) as (cached, rows, n):
+            assert rows == 2000 and cached.is_cached
+            assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
+        assert not cached.is_cached
+        return n
+
+    assert sized(None) == 1
+    assert sized(7) == 7
+    with conf_scope(spark, {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
+        "spark.sql.shuffle.partitions": "5",
+    }):
+        assert sized(None) == 5
 
 
 def _chain(spark, n=30):
@@ -94,6 +107,48 @@ def test_one_job_per_iteration_with_session_aqe_on(spark, run):
 
     with conf_scope(spark, {"spark.sql.adaptive.enabled": "true"}):
         assert jobs_for(4) - jobs_for(2) == 2
+
+
+PLANS = {
+    "triangle_count": triangle_count,
+    "clustering": local_clustering_coefficient,
+    "k_truss": lambda spark, e: k_truss(spark, e, 3),
+    "scc": strongly_connected_components,
+    "pagerank": lambda spark, e: pagerank(spark, e, max_iter=5).ranks,
+    "cc": connected_components,
+    "hits": lambda spark, e: hits(spark, e, max_iter=3).scores,
+    "k_core": lambda spark, e: k_core(spark, e, 2),
+    "bfs": lambda spark, e: multi_source_bfs(
+        spark, e, spark.createDataFrame([(0, 0), (9, 9)], "root long, id long"),
+        max_depth=3),
+}
+
+
+@pytest.mark.parametrize("name", list(PLANS))
+def test_plan_jobs_same_with_session_aqe_on(spark, name):
+    """Every job a plan runs inside the call runs under the plan's own
+    policy, so the call runs as many Spark jobs, with the same result,
+    whether the session's AQE is on or off."""
+    pairs = [tuple(r) for r in
+             generate_graph(spark, 30, max_edges=3, seed=5).collect()]
+    sc = spark.sparkContext
+
+    def run(aqe):
+        group = f"aqe-{name}-{aqe}"
+
+        def call():
+            sc.setJobGroup(group, group)
+            try:
+                return PLANS[name](spark, edges_df(spark, pairs))
+            finally:
+                sc.setJobGroup("", "")
+
+        with conf_scope(spark, {"spark.sql.adaptive.enabled": aqe}):
+            rows = collect_owned(spark, call)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), sorted(rows)
+
+    assert run("false") == run("true")
 
 
 def test_fixpoint_restores_caller_confs(spark):
