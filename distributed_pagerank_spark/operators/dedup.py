@@ -15,6 +15,12 @@ Four tiers, all DataFrame-native:
   64 conditional aggregates in one pass; near-dups = signatures within a
   Hamming ball, candidates via 16-bit chunk banding.
 
+The three pair tiers each run in a ``plans.loop.measure`` block over
+what they read more than once (the shingle index, the signatures): one
+AQE-off job caches and counts it, and the pair search runs at the
+partition count sized from its bytes, AQE off, returning an eager
+``localCheckpoint`` the caller owns.
+
 All hashing is deterministic across runs, partitionings, and cluster
 sizes. Two hash families, selected by ``hash_fn``:
 
@@ -29,12 +35,18 @@ sizes. Two hash families, selected by ``hash_fn``:
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.functions.text import (
     normalized_fingerprint,
     word_shingles,
+)
+from distributed_pagerank_spark.plans.loop import (
+    measure,
+    release_local_checkpoint,
 )
 
 _SEP = "\x1f"  # unit separator: cannot appear in \s+-split tokens
@@ -112,47 +124,44 @@ def jaccard_pairs(
     Jaccard over the capped shingle set — the standard scale guard.
     Uncapped (None) is the small-scale oracle tier only.
     """
-    # Persist the raw index FIRST: the DF cap, the sizes agg, and both
-    # sides of the self-join all read from this one cache, so the document
-    # table is scanned exactly once regardless of the cap. (Round-2 shape
-    # rebuilt the index for the DF computation and again for the capped
-    # join — a double scan that 2.5×'d the sf0.1 benchmark.)
-    raw_idx = shingle_index(df, id_col, text_col, n).persist()
-    idx = raw_idx
-    if max_shingle_df is not None:
-        hot = (
-            raw_idx.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_shingle_df)
-            .select("shingle")
+    # The raw index is the outer block's cache: the DF cap, the sizes agg
+    # and both sides of the self-join read it, so the document table is
+    # scanned exactly once regardless of the cap. The capped index, read
+    # three times, is a nested block of its own.
+    with ExitStack() as blocks:
+        idx, _, _ = blocks.enter_context(
+            measure(shingle_index(df, id_col, text_col, n), None))
+        if max_shingle_df is not None:
+            hot = (
+                idx.groupBy("shingle")
+                .agg(F.count("*").alias("df"))
+                .where(F.col("df") > max_shingle_df)
+                .select("shingle")
+            )
+            # the cap's cost is one agg over the cached index plus a
+            # broadcast anti-join, run by the nested block's count
+            idx, _, _ = blocks.enter_context(measure(
+                idx.join(F.broadcast(hot), "shingle", "left_anti"), None))
+        sizes = idx.groupBy("id").agg(F.count("*").alias("n_sh"))
+        a = idx.withColumnRenamed("id", "id_a")
+        b = idx.withColumnRenamed("id", "id_b")
+        common = (
+            a.join(b, "shingle")
+            .where(F.col("id_a") < F.col("id_b"))
+            .groupBy("id_a", "id_b")
+            .agg(F.count("*").alias("common"))
         )
-        # no eager count job for a log line — the cap's cost is one agg
-        # over the cached index plus a broadcast anti-join
-        idx = raw_idx.join(F.broadcast(hot), "shingle", "left_anti").persist()
-    sizes = idx.groupBy("id").agg(F.count("*").alias("n_sh"))
-    a = idx.withColumnRenamed("id", "id_a")
-    b = idx.withColumnRenamed("id", "id_b")
-    common = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("common"))
-    )
-    out = (
-        common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "na"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "nb"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("na") + F.col("nb") - F.col("common")),
+        return (
+            common.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "na"), "id_a")
+            .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "nb"), "id_b")
+            .withColumn(
+                "jaccard",
+                F.col("common") / (F.col("na") + F.col("nb") - F.col("common")),
+            )
+            .where(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard")
+            .localCheckpoint(eager=True)
         )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    res = out.localCheckpoint(eager=True)
-    idx.unpersist()
-    if idx is not raw_idx:
-        raw_idx.unpersist()
-    return res
 
 
 # ----------------------------------------------------------- MinHash/LSH
@@ -204,9 +213,6 @@ def minhash_lsh_pairs(
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
     r = num_hashes // bands
-    sig = minhash_signatures(
-        df, num_hashes, id_col, text_col, n, seed, hash_fn
-    ).persist()
     if hash_fn == "md5":
         # string bucket with an exact SQL twin: md5 over '|'-joined mins
         def _bucket(bi):
@@ -227,36 +233,37 @@ def minhash_lsh_pairs(
             for bi in range(bands)
         ]
     )
-    buckets = sig.select("id", F.explode(band_arr).alias("bb")).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-    cand = (
-        buckets.alias("x")
-        .join(buckets.alias("y"), ["band", "bucket"])
-        .where(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .distinct()
-    )
-    sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "est_jaccard",
-            F.aggregate(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                F.lit(0),
-                lambda acc, v: acc + v,
-            ).cast("double")
-            / F.lit(num_hashes),
+    sigs = minhash_signatures(df, num_hashes, id_col, text_col, n, seed,
+                              hash_fn)
+    with measure(sigs, None) as (sig, _, _):
+        buckets = sig.select("id", F.explode(band_arr).alias("bb")).select(
+            "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
         )
-        .where(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-    out = est.localCheckpoint(eager=True)
-    sig.unpersist()
-    return out
+        cand = (
+            buckets.alias("x")
+            .join(buckets.alias("y"), ["band", "bucket"])
+            .where(F.col("x.id") < F.col("y.id"))
+            .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
+            .distinct()
+        )
+        sa = sig.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
+        sb = sig.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
+        est = (
+            cand.join(sa, "id_a")
+            .join(sb, "id_b")
+            .withColumn(
+                "est_jaccard",
+                F.aggregate(
+                    F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
+                    F.lit(0),
+                    lambda acc, v: acc + v,
+                ).cast("double")
+                / F.lit(num_hashes),
+            )
+            .where(F.col("est_jaccard") >= threshold)
+            .select("id_a", "id_b", "est_jaccard")
+        )
+        return est.localCheckpoint(eager=True)
 
 
 # --------------------------------------------------------------- SimHash
@@ -331,48 +338,46 @@ def simhash_pairs(
     n_chunks = max_hamming + 1
     if n_chunks > bits:
         raise ValueError("max_hamming + 1 chunks need max_hamming < bits")
-    sig = simhash_signatures(
-        df, id_col, text_col, bits=bits, seed=seed, hash_fn=hash_fn
-    ).persist()
     width = -(-bits // n_chunks)  # ceil
     spans = [
         (i * width, min((i + 1) * width, bits)) for i in range(n_chunks)
     ]
-    chunks = sig.select(
-        "id",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("chunk"),
-                    F.shiftrightunsigned("simhash", lo)
-                    .bitwiseAND(F.lit((1 << (hi - lo)) - 1))
-                    .alias("val"),
-                )
-                for i, (lo, hi) in enumerate(spans)
-            ])
-        ).alias("cb"),
-    ).select("id", "simhash", F.col("cb.chunk").alias("chunk"), F.col("cb.val").alias("val"))
-    cand = (
-        chunks.alias("x")
-        .join(chunks.alias("y"), ["chunk", "val"])
-        .where(F.col("x.id") < F.col("y.id"))
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-            F.col("x.simhash").alias("ha"),
-            F.col("y.simhash").alias("hb"),
+    sigs = simhash_signatures(df, id_col, text_col, bits=bits, seed=seed,
+                              hash_fn=hash_fn)
+    with measure(sigs, None) as (sig, _, _):
+        chunks = sig.select(
+            "id",
+            "simhash",
+            F.explode(
+                F.array(*[
+                    F.struct(
+                        F.lit(i).alias("chunk"),
+                        F.shiftrightunsigned("simhash", lo)
+                        .bitwiseAND(F.lit((1 << (hi - lo)) - 1))
+                        .alias("val"),
+                    )
+                    for i, (lo, hi) in enumerate(spans)
+                ])
+            ).alias("cb"),
+        ).select("id", "simhash", F.col("cb.chunk").alias("chunk"), F.col("cb.val").alias("val"))
+        cand = (
+            chunks.alias("x")
+            .join(chunks.alias("y"), ["chunk", "val"])
+            .where(F.col("x.id") < F.col("y.id"))
+            .select(
+                F.col("x.id").alias("id_a"),
+                F.col("y.id").alias("id_b"),
+                F.col("x.simhash").alias("ha"),
+                F.col("y.simhash").alias("hb"),
+            )
+            .distinct()
         )
-        .distinct()
-    )
-    out = (
-        cand.withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
-    res = out.localCheckpoint(eager=True)
-    sig.unpersist()
-    return res
+        return (
+            cand.withColumn("hamming", F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))))
+            .where(F.col("hamming") <= max_hamming)
+            .select("id_a", "id_b", "hamming")
+            .localCheckpoint(eager=True)
+        )
 
 
 # ------------------------------------------- fuzzy-dedup clustering
@@ -399,11 +404,13 @@ def near_dup_clusters(
     1. pairs = :func:`minhash_lsh_pairs` (or any ``(id_a, id_b, ...)``
        DataFrame passed via ``pairs`` — jaccard/simhash/embedding pairs
        all fit).
-    2. clusters = pointer-jumping connected components
-       (:func:`~distributed_pagerank_spark.plans.components.connected_components`)
-       over the pair graph — O(log diameter) rounds; the pair graph holds
-       only near-dup docs, a tiny fraction of the corpus, so the CC loop
-       state is small even at 10^9 docs.
+    2. clusters = connected components
+       (:func:`~distributed_pagerank_spark.plans.components.connected_components`,
+       its default ``hybrid`` hash-min that arms pointer jumps on a long
+       chain) over the pair graph; the pair graph holds only near-dup
+       docs, a tiny fraction of the corpus, so the CC loop state is small
+       even at 10^9 docs. Pairs made here are released once CC has
+       returned; caller-supplied ``pairs`` stay the caller's.
     3. left join back to the corpus: unpaired docs are their own
        singleton cluster. ``component`` = min doc id in the cluster; the
        survivor is the min id PRESENT IN ``df`` per cluster (computed on
@@ -412,8 +419,8 @@ def near_dup_clusters(
        for caller-supplied ``pairs`` referencing ids absent from ``df``
        it guarantees every cluster with at least one present member still
        keeps exactly one survivor (the foreign min id may still name the
-       cluster). At 100 TB the cluster and survivor maps join in
-       broadcast via AQE.
+       cluster). The result is lazy: it joins the corpus's doc ids with
+       the cluster and survivor maps under the caller's session confs.
 
     ``keep`` is int (1/0) rather than boolean for exact cross-engine
     oracle hashing.
@@ -421,14 +428,19 @@ def near_dup_clusters(
     # local import: plans.* composes operators.*; keep module import acyclic
     from distributed_pagerank_spark.plans.components import connected_components
 
-    if pairs is None:
+    made = pairs is None
+    if made:
         pairs = minhash_lsh_pairs(
             df, threshold=threshold, id_col=id_col, text_col=text_col,
             hash_fn=hash_fn, **lsh_kwargs,
         )
     # the CC loop sizes its partitions from the pair graph's bytes
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    comp = connected_components(spark, edges)
+    try:
+        comp = connected_components(spark, edges)
+    finally:
+        if made:  # CC's result is a leaf of its own
+            release_local_checkpoint(pairs)
     docs = df.select(F.col(id_col).alias("doc_id"))
     # survivor = min id present in df per cluster. With self-generated
     # pairs this equals the component id (so the twin's doc_id ==

@@ -7,7 +7,11 @@ vertices. No reference counterpart (the reference computes only
 PageRank); standard definitions.
 
 Both are one or two shuffles over the edge table with scalar outputs —
-no iteration, no UDFs, no driver-side loops.
+no iteration, no UDFs, no driver-side loops. Each runs in a
+``plans.loop.measure`` block over the table it reads more than once
+(the deduped or the symmetrized edges): one AQE-off job caches and
+counts it, and the rest of the call runs at the partition count sized
+from its bytes.
 """
 
 from __future__ import annotations
@@ -16,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import symmetrize
+from distributed_pagerank_spark.plans.loop import measure
 
 
 def reciprocity(spark: SparkSession, edges: DataFrame) -> DataFrame:
@@ -26,21 +31,19 @@ def reciprocity(spark: SparkSession, edges: DataFrame) -> DataFrame:
     so the big side streams once); 1.0 on a symmetric graph, 0.0 on a
     DAG or bipartite one-way graph.
     """
-    e = (
+    simple = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .persist()
     )
-    total = e.count()
-    rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    recip = e.join(rev, ["src", "dst"], "left_semi").count()
-    e.unpersist()
-    row = [(int(recip), int(total),
-            0.0 if total == 0 else recip / total)]
-    return spark.createDataFrame(
-        row, "reciprocal_edges long, total_edges long, reciprocity double"
-    )
+    with measure(simple, None) as (e, total, _):
+        rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        return e.join(rev, ["src", "dst"], "left_semi").agg(
+            F.count("*").alias("reciprocal_edges"),
+            F.lit(total).cast("long").alias("total_edges"),
+            # an empty edge set has no reciprocal edge: 0 / 1
+            (F.count("*") / F.lit(max(total, 1))).alias("reciprocity"),
+        ).localCheckpoint(eager=True)
 
 
 def degree_assortativity(spark: SparkSession, edges: DataFrame) -> DataFrame:
@@ -53,32 +56,30 @@ def degree_assortativity(spark: SparkSession, edges: DataFrame) -> DataFrame:
     formulation). Negative on hub-and-spoke / bipartite graphs,
     positive on social-style graphs.
     """
-    sym = symmetrize(edges).persist()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("deg")
-    )
-    du = deg.select(F.col("id").alias("src"), F.col("deg").alias("du"))
-    dv = deg.select(F.col("id").alias("dst"), F.col("deg").alias("dv"))
-    # explicit moments instead of F.corr: under ANSI mode (Spark 4
-    # default) corr raises DIVIDE_BY_ZERO on zero-variance input (regular
-    # graphs); the CASE guard returns NULL there instead
-    moments = (
-        sym.join(du, "src")
-        .join(dv, "dst")
-        .agg(
-            F.covar_samp("du", "dv").alias("cov"),
-            F.stddev_samp("du").alias("su"),
-            F.stddev_samp("dv").alias("sv"),
+    with measure(symmetrize(edges), None) as (sym, _, _):
+        deg = sym.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("deg")
         )
-    )
-    out = moments.select(
-        F.when(
-            (F.col("su") > 0) & (F.col("sv") > 0),
-            F.col("cov") / (F.col("su") * F.col("sv")),
-        ).alias("assortativity")
-    ).localCheckpoint(eager=True)
-    sym.unpersist()
-    return out
+        du = deg.select(F.col("id").alias("src"), F.col("deg").alias("du"))
+        dv = deg.select(F.col("id").alias("dst"), F.col("deg").alias("dv"))
+        # explicit moments instead of F.corr: under ANSI mode (Spark 4
+        # default) corr raises DIVIDE_BY_ZERO on zero-variance input
+        # (regular graphs); the CASE guard returns NULL there instead
+        moments = (
+            sym.join(du, "src")
+            .join(dv, "dst")
+            .agg(
+                F.covar_samp("du", "dv").alias("cov"),
+                F.stddev_samp("du").alias("su"),
+                F.stddev_samp("dv").alias("sv"),
+            )
+        )
+        return moments.select(
+            F.when(
+                (F.col("su") > 0) & (F.col("sv") > 0),
+                F.col("cov") / (F.col("su") * F.col("sv")),
+            ).alias("assortativity")
+        ).localCheckpoint(eager=True)
 
 
 def avg_neighbor_degree(spark: SparkSession, edges: DataFrame) -> DataFrame:
@@ -93,27 +94,25 @@ def avg_neighbor_degree(spark: SparkSession, edges: DataFrame) -> DataFrame:
     the already-partitioned symmetric edge set), and the tiny per-degree
     rollup. Output cardinality = number of distinct degrees (≪ |V|).
     """
-    sym = symmetrize(edges).persist()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("deg")
-    )
-    dv = deg.select(F.col("id").alias("dst"), F.col("deg").alias("dv"))
-    per_vertex = (
-        sym.join(dv, "dst")
-        .groupBy(F.col("src").alias("id"))
-        .agg(F.avg("dv").alias("avg_nbr_deg"))
-    )
-    out = (
-        per_vertex.join(deg, "id")
-        .groupBy(F.col("deg").alias("degree"))
-        .agg(
-            F.avg("avg_nbr_deg").alias("knn"),
-            F.count("*").cast("long").alias("n_vertices"),
+    with measure(symmetrize(edges), None) as (sym, _, _):
+        deg = sym.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("deg")
         )
-        .localCheckpoint(eager=True)
-    )
-    sym.unpersist()
-    return out
+        dv = deg.select(F.col("id").alias("dst"), F.col("deg").alias("dv"))
+        per_vertex = (
+            sym.join(dv, "dst")
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.avg("dv").alias("avg_nbr_deg"))
+        )
+        return (
+            per_vertex.join(deg, "id")
+            .groupBy(F.col("deg").alias("degree"))
+            .agg(
+                F.avg("avg_nbr_deg").alias("knn"),
+                F.count("*").cast("long").alias("n_vertices"),
+            )
+            .localCheckpoint(eager=True)
+        )
 
 
 def modularity(
@@ -130,7 +129,7 @@ def modularity(
     canonical-edge scan joined twice against the label vector plus one
     degree aggregation — no iteration.
     """
-    e = (
+    canonical = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .select(
@@ -138,51 +137,46 @@ def modularity(
             F.greatest("src", "dst").alias("dst"),
         )
         .distinct()
-        .persist()
     )
-    m = e.count()
-    if m == 0:
-        e.unpersist()
-        return spark.createDataFrame(
-            [(None, 0, 0)],
-            "modularity double, m_edges long, n_communities long",
+    with measure(canonical, None) as (e, m, _):
+        if m == 0:
+            return spark.createDataFrame(
+                [(None, 0, 0)],
+                "modularity double, m_edges long, n_communities long",
+            )
+        lab = labels.select("id", "label")
+        lu = lab.select(F.col("id").alias("src"), F.col("label").alias("lu"))
+        lv = lab.select(F.col("id").alias("dst"), F.col("label").alias("lv"))
+        labeled = (
+            e.join(lu, "src", "left")
+            .join(lv, "dst", "left")
+            .select(
+                F.coalesce("lu", F.col("src")).alias("lu"),
+                F.coalesce("lv", F.col("dst")).alias("lv"),
+            )
         )
-    lab = labels.select("id", "label")
-    lu = lab.select(F.col("id").alias("src"), F.col("label").alias("lu"))
-    lv = lab.select(F.col("id").alias("dst"), F.col("label").alias("lv"))
-    labeled = (
-        e.join(lu, "src", "left")
-        .join(lv, "dst", "left")
-        .select(
-            F.coalesce("lu", F.col("src")).alias("lu"),
-            F.coalesce("lv", F.col("dst")).alias("lv"),
+        intra = (
+            labeled.where(F.col("lu") == F.col("lv"))
+            .groupBy(F.col("lu").alias("label"))
+            .agg(F.count("*").alias("m_c"))
         )
-    )
-    intra = (
-        labeled.where(F.col("lu") == F.col("lv"))
-        .groupBy(F.col("lu").alias("label"))
-        .agg(F.count("*").alias("m_c"))
-    )
-    sym = symmetrize(e)
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("deg")
-    )
-    d_c = (
-        deg.join(lab, "id", "left")
-        .select(F.coalesce("label", F.col("id")).alias("label"), "deg")
-        .groupBy("label")
-        .agg(F.sum("deg").alias("d_c"))
-    )
-    per_comm = d_c.join(intra, "label", "left").select(
-        (
-            F.coalesce("m_c", F.lit(0)) / F.lit(float(m))
-            - (F.col("d_c") / F.lit(2.0 * m)) ** 2
-        ).alias("q_c")
-    )
-    out = per_comm.agg(
-        F.sum("q_c").alias("modularity"),
-        F.lit(int(m)).cast("long").alias("m_edges"),
-        F.count("*").cast("long").alias("n_communities"),
-    ).localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+        deg = symmetrize(e).groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("deg")
+        )
+        d_c = (
+            deg.join(lab, "id", "left")
+            .select(F.coalesce("label", F.col("id")).alias("label"), "deg")
+            .groupBy("label")
+            .agg(F.sum("deg").alias("d_c"))
+        )
+        per_comm = d_c.join(intra, "label", "left").select(
+            (
+                F.coalesce("m_c", F.lit(0)) / F.lit(float(m))
+                - (F.col("d_c") / F.lit(2.0 * m)) ** 2
+            ).alias("q_c")
+        )
+        return per_comm.agg(
+            F.sum("q_c").alias("modularity"),
+            F.lit(int(m)).cast("long").alias("m_edges"),
+            F.count("*").cast("long").alias("n_communities"),
+        ).localCheckpoint(eager=True)

@@ -19,8 +19,8 @@ Scale: the wedge join emits Σ_w deg(w)² rows — quadratic in hub degree.
 vertex adjacent to everything certifies nothing, and its Adamic–Adar
 weight 1/ln(deg) is already ~0), turning the worst-case hub fanout into
 a bounded candidate stream; the cap column comes from the same degree
-aggregate the scores need anyway, so it costs one broadcast-size filter,
-not an extra shuffle.
+aggregate the scores need anyway, so it costs one filter, not an extra
+shuffle.
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import symmetrize
+from distributed_pagerank_spark.plans.loop import measure
 
 METHODS = ("adamic_adar", "common_neighbors", "jaccard")
 
@@ -46,66 +47,63 @@ def link_prediction(
     ``(u, v)`` is each unordered candidate pair (u < v) at distance 2
     with no existing edge; ``common`` = shared-neighbor count; ``score``
     per ``method``; ``rank`` = 1..top_k within u (score desc, v asc).
+
+    The symmetrized edge table is cached and counted in one AQE-off job
+    (``plans.loop.measure``), and the whole plan runs at
+    ``num_partitions`` shuffle partitions with AQE off: by default sized
+    from that table's cached bytes, as for the graph plans.
     """
     if method not in METHODS:
         raise ValueError(f"unknown method {method!r}; one of {METHODS}")
-    num_partitions = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    sym = (
-        symmetrize(edges)
-        .repartition(num_partitions, "src")
-        .persist()
-    )
-    sym.count()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("degree")
-    )
-
-    # middle-vertex stream (w, endpoint), optionally hub-capped
-    mid = sym.select(F.col("src").alias("w"), F.col("dst").alias("end"))
-    wdeg = deg.select(F.col("id").alias("w"), F.col("degree").alias("wdeg"))
-    mid = mid.join(wdeg, "w")
-    if max_middle_degree is not None:
-        mid = mid.where(F.col("wdeg") <= max_middle_degree)
-
-    a = mid.select("w", F.col("end").alias("u"), "wdeg")
-    b = mid.select(F.col("w").alias("w2"), F.col("end").alias("v"))
-    wedges = a.join(b, a["w"] == b["w2"]).where(F.col("u") < F.col("v"))
-
-    und = sym.where(F.col("src") < F.col("dst")).select(
-        F.col("src").alias("u"), F.col("dst").alias("v")
-    )
-    candidates = wedges.join(und, ["u", "v"], "left_anti")
-
-    agg_cols = [F.count("*").cast("long").alias("common")]
-    if method == "adamic_adar":
-        agg_cols.append(
-            F.sum(1.0 / F.log(F.col("wdeg").cast("double"))).alias("score")
+    with measure(symmetrize(edges), num_partitions) as (sym, _, _):
+        deg = sym.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("degree")
         )
-    scored = candidates.groupBy("u", "v").agg(*agg_cols)
-    if method == "common_neighbors":
-        scored = scored.withColumn("score", F.col("common").cast("double"))
-    elif method == "jaccard":
-        du = deg.select(F.col("id").alias("u"), F.col("degree").alias("du"))
-        dv = deg.select(F.col("id").alias("v"), F.col("degree").alias("dv"))
-        scored = (
-            scored.join(du, "u")
-            .join(dv, "v")
-            .withColumn(
-                "score",
-                F.col("common")
-                / (F.col("du") + F.col("dv") - F.col("common")).cast("double"),
+
+        # middle-vertex stream (w, endpoint), optionally hub-capped
+        mid = sym.select(F.col("src").alias("w"), F.col("dst").alias("end"))
+        wdeg = deg.select(F.col("id").alias("w"),
+                          F.col("degree").alias("wdeg"))
+        mid = mid.join(wdeg, "w")
+        if max_middle_degree is not None:
+            mid = mid.where(F.col("wdeg") <= max_middle_degree)
+
+        a = mid.select("w", F.col("end").alias("u"), "wdeg")
+        b = mid.select(F.col("w").alias("w2"), F.col("end").alias("v"))
+        wedges = a.join(b, a["w"] == b["w2"]).where(F.col("u") < F.col("v"))
+
+        und = sym.where(F.col("src") < F.col("dst")).select(
+            F.col("src").alias("u"), F.col("dst").alias("v")
+        )
+        candidates = wedges.join(und, ["u", "v"], "left_anti")
+
+        agg_cols = [F.count("*").cast("long").alias("common")]
+        if method == "adamic_adar":
+            agg_cols.append(
+                F.sum(1.0 / F.log(F.col("wdeg").cast("double"))).alias("score")
             )
-            .drop("du", "dv")
-        )
+        scored = candidates.groupBy("u", "v").agg(*agg_cols)
+        if method == "common_neighbors":
+            scored = scored.withColumn("score", F.col("common").cast("double"))
+        elif method == "jaccard":
+            du = deg.select(F.col("id").alias("u"), F.col("degree").alias("du"))
+            dv = deg.select(F.col("id").alias("v"), F.col("degree").alias("dv"))
+            scored = (
+                scored.join(du, "u")
+                .join(dv, "v")
+                .withColumn(
+                    "score",
+                    F.col("common")
+                    / (F.col("du") + F.col("dv") - F.col("common"))
+                    .cast("double"),
+                )
+                .drop("du", "dv")
+            )
 
-    w = Window.partitionBy("u").orderBy(F.desc("score"), F.asc("v"))
-    out = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= top_k)
-        .select("u", "v", "common", "score", "rank")
-        .localCheckpoint(eager=True)
-    )
-    sym.unpersist()
-    return out
+        w = Window.partitionBy("u").orderBy(F.desc("score"), F.asc("v"))
+        return (
+            scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= top_k)
+            .select("u", "v", "common", "score", "rank")
+            .localCheckpoint(eager=True)
+        )

@@ -55,29 +55,35 @@ is one job that caches its slice and observes its row count; the slices
 and their counts are the caller's. It stops at an empty slice or at
 ``max_depth`` (declared truncation, which does not raise).
 
-Execution policy: one for the whole plan, chosen once from what the
-plan measures first. A plan's first job persists and counts its edge
-aggregate with AQE off (``measure``), and sizes the plan from the
-cache's measured bytes, as AQE's partition coalescing would. Every later
-job of the plan, from its setup tables (``edge_table``) through the loop
-to the finalization, runs under ``loop_policy`` of that count: AQE off,
-``spark.sql.shuffle.partitions`` at it, and automatic broadcast joins
-off; the caller's confs come back on return and on raise
-(``conf_scope``). In a loop the edges ⋈ state and state ⋈ aggregate
-joins are then co-partitioned sort-merge joins over the same hash
-layout: each iteration is one job with at most one shuffle, and a
-one-shot plan (the triangle kernel) runs its shuffles inside the jobs of
-its actions.
+Execution policy: one for the whole call, chosen once from what the call
+measures first. This holds for every plan here and for the one-shot
+operators too (``operators.graphstats``, ``operators.linkpred`` and the
+dedup tiers of ``operators.dedup``). A call's first job persists and
+counts the input aggregate it reads more than once, with AQE off
+(``measure``): a plan's edges, an operator's deduped or symmetrized
+edges, shingle index or signatures. It sizes the call from the cache's
+measured bytes, as AQE's partition coalescing would. Every later job of
+the call, from its setup tables (``edge_table``) through the loop to the
+finalization or an operator's final plan, runs under ``loop_policy`` of
+that count: AQE off, ``spark.sql.shuffle.partitions`` at it, and
+automatic broadcast joins off; the caller's confs come back on return
+and on raise (``conf_scope``), and the cache is released then too. In a
+loop the edges ⋈ state and state ⋈ aggregate joins are then
+co-partitioned sort-merge joins over the same hash layout: each
+iteration is one job with at most one shuffle, and a one-shot plan (the
+triangle kernel, an operator) runs its shuffles inside the jobs of its
+actions.
 The two halves only pay together. AQE on splits every query stage, and
 every runtime broadcast, into a job of its own (about 5.5 jobs per loop
 iteration; 16 jobs for a triangle count that takes 4 under the
-policy), and each job re-pays the driver's planning and closure
-cleaning. AQE off at the session's partition count trades those jobs
-for many near-empty tasks, which on a small graph costs more than it
-saves. Skew is the plan's to
+policy, 11 for a MinHash pair search that takes 4), and each job
+re-pays the driver's planning and closure cleaning. AQE off at the
+session's partition count trades those jobs for many near-empty tasks,
+which on a small graph costs more than it saves. Skew is the plan's to
 handle (PageRank's ``skew_salt``): AQE's skew-join split does not run
-under the policy, and joins broadcast only where the plan hints it from
-counts it knows (betweenness, SCC's extraction).
+under the policy, and joins broadcast only where the plan hints it
+(betweenness and SCC's extraction from counts they know, the Jaccard
+tier's hot-shingle anti-join).
 
 Order-independent statistics: observed sums merge per-task partials in
 task completion order, so double-valued statistics (PageRank's
@@ -154,8 +160,10 @@ def conf_scope(spark: SparkSession, confs: dict[str, str]):
 def measure(
     aggregate: DataFrame, requested: int | None
 ) -> Iterator[tuple[DataFrame, int, int]]:
-    """Size a plan from its edge aggregate, then run the rest of the plan
-    under that size: a block that gets ``(cached, rows, n)``.
+    """Size a plan or operator from the input aggregate it reads more
+    than once (a plan's edges, an operator's symmetrized table, shingle
+    index or signatures), then run the rest of the call under that size:
+    a block that gets ``(cached, rows, n)``.
 
     ``aggregate`` (un-persisted) is persisted and counted with AQE off,
     in one job; the cache keeps that AQE-off plan. ``n`` is ``requested``

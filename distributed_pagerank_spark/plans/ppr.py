@@ -113,7 +113,8 @@ def personalized_pagerank_multi(
         # the row count as the materializing action: one driver job per
         # barrier instead of one per iteration, with the same exchanges
         # inside. ``state_rows`` is recorded at barriers (None between —
-        # nothing materializes there to count). The chain stays off
+        # nothing materializes there to count); ``converged`` is always
+        # False, a fixed-k run, as HITS reports at eps=0. The chain stays off
         # ``fixpoint``: a port to one job per iteration ran slower on the
         # contract's seed sets (ROADMAP item 2).
         for iteration in range(1, k + 1):
@@ -145,6 +146,7 @@ def personalized_pagerank_multi(
             state = new_state
             metrics.append(
                 {"iteration": iteration, "state_rows": rows,
+                 "converged": False,
                  "total_s": round(time.monotonic() - t0, 4)}
             )
 

@@ -141,7 +141,9 @@ def strongly_connected_components(
 
     The result is a ``localCheckpoint`` the caller owns (free it with
     ``release_local_checkpoint``); every other cache is released here,
-    also when a round budget runs out (``RuntimeError``)."""
+    also when a round budget runs out (``RuntimeError``). ``metrics_out``
+    gets one ``{iteration, assigned, remaining, converged, total_s}``
+    record per outer round; ``converged`` is ``remaining == 0``."""
     metrics = metrics_out if metrics_out is not None else []
     held: list[DataFrame] = []  # every leaf this call made and still holds
 
@@ -238,9 +240,10 @@ def strongly_connected_components(
                 assigned_parts.append(assigned)
                 metrics.append(
                     {
-                        "outer": outer,
+                        "iteration": outer,
                         "assigned": n_done,
                         "remaining": n_rem,
+                        "converged": n_rem == 0,
                         "total_s": round(time.monotonic() - t0, 4),
                     }
                 )

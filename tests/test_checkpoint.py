@@ -126,18 +126,32 @@ def test_components_budget_stop_leaves_manifest(spark, tmp_path):
 
 
 def test_loop_metrics_share_one_schema(spark):
-    """PageRank, CC, LPA and HITS report one record per iteration with the
-    same iteration / converged / total_s keys."""
+    """PageRank, CC, LPA, HITS, PPR and SCC report one record per
+    iteration with the same iteration / converged / total_s keys."""
     from distributed_pagerank_spark.plans.hits import hits
     from distributed_pagerank_spark.plans.labelprop import label_propagation
+    from distributed_pagerank_spark.plans.ppr import (
+        personalized_pagerank_multi,
+    )
+    from distributed_pagerank_spark.plans.scc import (
+        strongly_connected_components,
+    )
 
     edges = edges_df(spark, CHAIN5)
-    cc_metrics, lpa_metrics = [], []
+    cc_metrics, lpa_metrics, ppr_metrics, scc_metrics = [], [], [], []
     pr_metrics = pagerank(spark, edges, max_iter=3).metrics
     connected_components(spark, edges, metrics_out=cc_metrics)
     label_propagation(spark, edges, rounds=3, metrics_out=lpa_metrics)
     hits_metrics = hits(spark, edges, max_iter=3).metrics
-    for metrics in (pr_metrics, cc_metrics, lpa_metrics, hits_metrics):
+    seeds = spark.createDataFrame([(0, 0, 1.0)],
+                                  "set_id int, id long, weight double")
+    personalized_pagerank_multi(spark, edges, seeds, k=3,
+                                metrics_out=ppr_metrics)
+    strongly_connected_components(spark, edges, metrics_out=scc_metrics)
+    assert [m["converged"] for m in ppr_metrics] == [False] * 3
+    assert scc_metrics[-1]["converged"] and scc_metrics[-1]["remaining"] == 0
+    for metrics in (pr_metrics, cc_metrics, lpa_metrics, hits_metrics,
+                    ppr_metrics, scc_metrics):
         assert metrics
         assert [m["iteration"] for m in metrics] == list(
             range(1, len(metrics) + 1))

@@ -276,3 +276,20 @@ def test_near_dup_clusters_from_lsh(spark, docs):
     for cid, members in clusters.items():
         keeps = [m.doc_id for m in members if m.keep == 1]
         assert keeps == [min(m.doc_id for m in members)] == [cid]
+
+
+def test_near_dup_clusters_releases_the_pairs_it_made(spark, docs, tmp_path):
+    """With no ``pairs`` given, the MinHash pairs it makes are released
+    once CC has returned: only the result's leaves stay cached. (The docs
+    are read from Parquet: a ``createDataFrame`` table would be an
+    uncached RDD leaf of the result.)"""
+    from distributed_pagerank_spark.operators.dedup import near_dup_clusters
+    from tests.conftest import collect_owned
+
+    docs.write.parquet(str(tmp_path / "docs"))
+    stored = spark.read.parquet(str(tmp_path / "docs"))
+    rows = collect_owned(
+        spark, lambda: near_dup_clusters(spark, stored, threshold=0.5))
+    by_id = {r.doc_id: (r.cluster_id, r.keep) for r in rows}
+    assert len(by_id) == len(DOCS)
+    assert by_id[2] == (1, 0) and by_id[5] == (5, 1)
