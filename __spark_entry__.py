@@ -1446,11 +1446,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return read_edge_list(s, EDGELIST_FILE_DIR)
     q["edgelist_file"] = _q_edgelist_file
 
-    # the oracle twin unrolls exactly CC_ITERS hash-min exchanges, so this
-    # entry pins algorithm='hashmin' (the engine default is 'hybrid':
-    # hash-min until changed-decay stalls, then pointer jumps)
+    # the oracle twin unrolls exactly CC_ITERS hash-min exchanges; the
+    # engine's hash-min arms pointer jumps only when its changed count
+    # stalls, which this graph never does (it settles in 4 rounds)
     q["connected_components"] = lambda s, d: connected_components(
-        s, _graph_edges(s, d), max_iter=CC_ITERS, algorithm="hashmin"
+        s, _graph_edges(s, d), max_iter=CC_ITERS
     )
 
     # the connectivity report every web-graph analysis starts with:
@@ -1462,17 +1462,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # edges never cross strata, so the graph provably fragments.
     def _q_component_sizes(s, d):
         return (
-            connected_components(
-                s, _sparse_edges(s, d), max_iter=CC_ITERS, algorithm="hashmin"
-            )
+            connected_components(s, _sparse_edges(s, d), max_iter=CC_ITERS)
             .groupBy("component").agg(F.count("*").alias("size"))
             .groupBy("size").agg(F.count("*").alias("n_components"))
         )
     q["component_size_histogram"] = _q_component_sizes
 
-    # the DEFAULT hybrid path, driver-verified: run to the fixpoint (the
-    # sf graph converges well inside CC_ITERS hash-min rounds, so the
-    # unrolled k-round twin has already reached the same fixpoint)
+    # run to the fixpoint, driver-verified (the sf graph converges well
+    # inside CC_ITERS hash-min rounds, so the unrolled k-round twin has
+    # already reached the same fixpoint)
     q["connected_components_hybrid"] = lambda s, d: connected_components(
         s, _graph_edges(s, d), max_iter=50
     )

@@ -57,7 +57,6 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--checkpoint-interval", type=int, default=1)
     p.add_argument("--no-resume", action="store_true")
-    p.add_argument("--num-partitions", type=int, default=None)
     p.add_argument("--output", default=None, help="parquet output path")
     p.add_argument("--dot", action="store_true",
                    help="print a DOT digraph of the edges (small graphs)")
@@ -124,7 +123,6 @@ def main(argv=None) -> int:
             checkpoint_interval=args.checkpoint_interval,
             resume=not args.no_resume, skew_salt=args.skew_salt,
             hub_threshold=args.hub_threshold,
-            num_partitions=args.num_partitions,
         )
         out = res.ranks.orderBy("id")
         meta = {"algo": "pagerank", "iterations": res.iterations,
@@ -134,7 +132,7 @@ def main(argv=None) -> int:
             spark, edges, max_iter=args.max_iter,
             checkpoint_dir=args.checkpoint_dir,
             checkpoint_interval=args.checkpoint_interval,
-            resume=not args.no_resume, num_partitions=args.num_partitions,
+            resume=not args.no_resume,
         )
         meta = {"algo": "components",
                 "n_components": out.select("component").distinct().count()}
@@ -143,7 +141,7 @@ def main(argv=None) -> int:
             spark, edges, rounds=args.rounds,
             checkpoint_dir=args.checkpoint_dir,
             checkpoint_interval=args.checkpoint_interval,
-            resume=not args.no_resume, num_partitions=args.num_partitions,
+            resume=not args.no_resume,
         )
         meta = {"algo": "labelprop",
                 "n_labels": out.select("label").distinct().count()}

@@ -129,8 +129,8 @@ def jaccard_pairs(
     # scanned exactly once regardless of the cap. The capped index, read
     # three times, is a nested block of its own.
     with ExitStack() as blocks:
-        idx, _, _ = blocks.enter_context(
-            measure(shingle_index(df, id_col, text_col, n), None))
+        idx, _ = blocks.enter_context(
+            measure(shingle_index(df, id_col, text_col, n)))
         if max_shingle_df is not None:
             hot = (
                 idx.groupBy("shingle")
@@ -140,8 +140,8 @@ def jaccard_pairs(
             )
             # the cap's cost is one agg over the cached index plus a
             # broadcast anti-join, run by the nested block's count
-            idx, _, _ = blocks.enter_context(measure(
-                idx.join(F.broadcast(hot), "shingle", "left_anti"), None))
+            idx, _ = blocks.enter_context(measure(
+                idx.join(F.broadcast(hot), "shingle", "left_anti")))
         sizes = idx.groupBy("id").agg(F.count("*").alias("n_sh"))
         a = idx.withColumnRenamed("id", "id_a")
         b = idx.withColumnRenamed("id", "id_b")
@@ -235,7 +235,7 @@ def minhash_lsh_pairs(
     )
     sigs = minhash_signatures(df, num_hashes, id_col, text_col, n, seed,
                               hash_fn)
-    with measure(sigs, None) as (sig, _, _):
+    with measure(sigs) as (sig, _):
         buckets = sig.select("id", F.explode(band_arr).alias("bb")).select(
             "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
         )
@@ -344,7 +344,7 @@ def simhash_pairs(
     ]
     sigs = simhash_signatures(df, id_col, text_col, bits=bits, seed=seed,
                               hash_fn=hash_fn)
-    with measure(sigs, None) as (sig, _, _):
+    with measure(sigs) as (sig, _):
         chunks = sig.select(
             "id",
             "simhash",
@@ -406,11 +406,11 @@ def near_dup_clusters(
        all fit).
     2. clusters = connected components
        (:func:`~distributed_pagerank_spark.plans.components.connected_components`,
-       its default ``hybrid`` hash-min that arms pointer jumps on a long
-       chain) over the pair graph; the pair graph holds only near-dup
-       docs, a tiny fraction of the corpus, so the CC loop state is small
-       even at 10^9 docs. Pairs made here are released once CC has
-       returned; caller-supplied ``pairs`` stay the caller's.
+       hash-min that arms pointer jumps on a long chain) over the pair
+       graph; the pair graph holds only near-dup docs, a tiny fraction of
+       the corpus, so the CC loop state is small even at 10^9 docs.
+       Pairs made here are released once CC has returned;
+       caller-supplied ``pairs`` stay the caller's.
     3. left join back to the corpus: unpaired docs are their own
        singleton cluster. ``component`` = min doc id in the cluster; the
        survivor is the min id PRESENT IN ``df`` per cluster (computed on

@@ -36,7 +36,7 @@ def reciprocity(spark: SparkSession, edges: DataFrame) -> DataFrame:
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    with measure(simple, None) as (e, total, _):
+    with measure(simple) as (e, total):
         rev = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         return e.join(rev, ["src", "dst"], "left_semi").agg(
             F.count("*").alias("reciprocal_edges"),
@@ -56,7 +56,7 @@ def degree_assortativity(spark: SparkSession, edges: DataFrame) -> DataFrame:
     formulation). Negative on hub-and-spoke / bipartite graphs,
     positive on social-style graphs.
     """
-    with measure(symmetrize(edges), None) as (sym, _, _):
+    with measure(symmetrize(edges)) as (sym, _):
         deg = sym.groupBy(F.col("src").alias("id")).agg(
             F.count("*").alias("deg")
         )
@@ -94,7 +94,7 @@ def avg_neighbor_degree(spark: SparkSession, edges: DataFrame) -> DataFrame:
     the already-partitioned symmetric edge set), and the tiny per-degree
     rollup. Output cardinality = number of distinct degrees (≪ |V|).
     """
-    with measure(symmetrize(edges), None) as (sym, _, _):
+    with measure(symmetrize(edges)) as (sym, _):
         deg = sym.groupBy(F.col("src").alias("id")).agg(
             F.count("*").alias("deg")
         )
@@ -138,7 +138,7 @@ def modularity(
         )
         .distinct()
     )
-    with measure(canonical, None) as (e, m, _):
+    with measure(canonical) as (e, m):
         if m == 0:
             return spark.createDataFrame(
                 [(None, 0, 0)],

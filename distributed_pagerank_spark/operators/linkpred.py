@@ -40,7 +40,6 @@ def link_prediction(
     method: str = "adamic_adar",
     top_k: int = 10,
     max_middle_degree: int | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Top-k predicted links per vertex → ``(u, v, common, score, rank)``.
 
@@ -49,13 +48,13 @@ def link_prediction(
     per ``method``; ``rank`` = 1..top_k within u (score desc, v asc).
 
     The symmetrized edge table is cached and counted in one AQE-off job
-    (``plans.loop.measure``), and the whole plan runs at
-    ``num_partitions`` shuffle partitions with AQE off: by default sized
-    from that table's cached bytes, as for the graph plans.
+    (``plans.loop.measure``), and the whole plan runs with AQE off at a
+    partition count sized from that table's cached bytes, as for the
+    graph plans.
     """
     if method not in METHODS:
         raise ValueError(f"unknown method {method!r}; one of {METHODS}")
-    with measure(symmetrize(edges), num_partitions) as (sym, _, _):
+    with measure(symmetrize(edges)) as (sym, _):
         deg = sym.groupBy(F.col("src").alias("id")).agg(
             F.count("*").alias("degree")
         )

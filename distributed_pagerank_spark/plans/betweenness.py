@@ -79,7 +79,6 @@ def betweenness(
     roots: DataFrame,
     max_depth: int = 10,
     directed: bool = False,
-    num_partitions: int | None = None,
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """Depth-truncated Brandes betweenness from ``roots`` →
@@ -96,10 +95,9 @@ def betweenness(
         (edges if directed else symmetrize(edges))
         .select("src", "dst")
         .where(F.col("src") != F.col("dst"))
-        .distinct(),
-        num_partitions,
-    ) as (cached, _, num_partitions):
-        e = edge_table(cached, num_partitions)
+        .distinct()
+    ) as (cached, _):
+        e = edge_table(cached)
 
         # ---- forward pass: per-level (root, id, sigma) slices
         def expand(level: DataFrame, depth: int) -> DataFrame:
@@ -125,7 +123,7 @@ def betweenness(
                 F.lit(1.0).alias("sigma"),
             ).distinct(),
             expand, key=("root", "id"), max_depth=max_depth,
-            num_partitions=num_partitions, metrics_out=metrics_out,
+            metrics_out=metrics_out,
         )
 
         # ---- backward pass: delta accumulates deepest-level-first. Each

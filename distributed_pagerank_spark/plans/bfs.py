@@ -45,7 +45,6 @@ def multi_source_bfs(
     sources: DataFrame,
     max_depth: int = 10,
     directed: bool = False,
-    num_partitions: int | None = None,
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """Hop distances ``(root, id, dist)`` from every root in ``sources``.
@@ -63,10 +62,9 @@ def multi_source_bfs(
     ``release_local_checkpoint``). Empty ``sources`` raise ``ValueError``.
     """
     with measure(
-        (edges if directed else symmetrize(edges)).select("src", "dst"),
-        num_partitions,
-    ) as (cached, _, num_partitions):
-        e = edge_table(cached, num_partitions)
+        (edges if directed else symmetrize(edges)).select("src", "dst")
+    ) as (cached, _):
+        e = edge_table(cached)
 
         def expand(level: DataFrame, depth: int) -> DataFrame:
             return (
@@ -79,7 +77,7 @@ def multi_source_bfs(
         slices, _ = frontier(
             sources.select("root", "id", F.lit(0).alias("dist")).distinct(),
             expand, key=("root", "id"), max_depth=max_depth,
-            num_partitions=num_partitions, metrics_out=metrics_out,
+            metrics_out=metrics_out,
         )
         e.unpersist()
     if not slices:

@@ -12,37 +12,33 @@ the same shuffle structure as the PageRank loop, so the same scale
 properties hold (static edges cached + pre-partitioned; only the label
 vector moves). Convergence = zero changed labels (scalar agg).
 
-Three algorithms, identical output (same fixpoint):
+One algorithm: hash-min, the plain exchange above, O(diameter) rounds,
+which turns pointer jumping on for the rest of the run the first time
+the per-round ``changed`` count goes FLAT (``0.7 × prev < changed ≤
+prev``). A jumping round also folds in ``label(label(v))`` via a
+self-join of the label vector, halving pointer-chain depth per round →
+O(log diameter) rounds. Labels only ever decrease and always name a
+vertex of the same component, and any state that is not the
+component-min is not a hash-min fixpoint, so the fixpoint is hash-min's
+either way: a 10^5-long chain converges in ~17 rounds instead of 10^5.
 
-- ``algorithm='hashmin'`` — the plain exchange above: O(diameter)
-  rounds. Fine for shallow graphs (conversation chains of ≤12 turns),
-  and the SQL-twinnable oracle tier (fixed-iteration unrolled twin).
-- ``algorithm='pointer'`` — hash-min + pointer jumping: each round
-  additionally folds in ``label(label(v))`` via a self-join of the
-  label vector, halving pointer-chain depth per round →
-  O(log diameter) rounds. Labels only ever decrease and always name a
-  vertex of the same component, and any state that is not the
-  component-min is not a hash-min fixpoint, so the fixpoint is identical
-  to hash-min's. This is the deep-graph path: a 10^5-long chain
-  converges in ~17 rounds instead of 10^5.
-- ``algorithm='hybrid'`` (DEFAULT) — plain hash-min, switching the jump
-  join on permanently the first time the per-round ``changed`` count
-  goes FLAT (``0.7 × prev < changed ≤ prev``). Flat decay is the
-  signature of a long pointer chain draining one hop per round (a
-  length-n chain changes n−t labels in round t → ratio ≈ 1), which is
-  exactly when pointer jumping pays. Shallow graphs never trip it:
-  their ``changed`` series is an expanding-then-collapsing wave
-  (measured on the supplier co-occurrence graph: [1000, 14998, 937,
-  1602, 0] — every ratio is either growth > 1 or collapse < 0.7), so
-  the |V|-sized jump self-join — a measured ~1.3× per-round tax that
-  buys zero round reduction there — never runs. A round-20 backstop
-  arms the jumps unconditionally in case an adversarial ``changed``
-  series ping-pongs around the flat band forever, bounding any run at
-  20 + O(log diameter) rounds.
+Flat decay is the signature of a long pointer chain draining one hop
+per round (a length-n chain changes n−t labels in round t → ratio ≈ 1),
+which is exactly when pointer jumping pays. Shallow graphs never trip
+it: their ``changed`` series is an expanding-then-collapsing wave
+(measured on the supplier co-occurrence graph: [1000, 14998, 937, 1602,
+0] — every ratio is either growth > 1 or collapse < 0.7), so the
+|V|-sized jump self-join — a measured ~1.3× per-round tax that buys zero
+round reduction there — never runs, and the rounds are plain hash-min's
+(the SQL-twinnable oracle tier: a fixed-iteration unrolled twin). A
+round-20 backstop arms the jumps unconditionally in case an adversarial
+``changed`` series ping-pongs around the flat band forever, bounding any
+run at 20 + O(log diameter) rounds.
 """
 
 from __future__ import annotations
 
+import warnings
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,10 +54,10 @@ from distributed_pagerank_spark.plans.loop import (
     measure,
 )
 
-# hybrid: a round whose ``changed`` count stays above this fraction of the
+# a round whose ``changed`` count stays above this fraction of the
 # previous round's (without growing) arms pointer jumping
 STALL_DECAY = 0.7
-# hybrid: rounds after which pointer jumping is armed unconditionally
+# rounds after which pointer jumping is armed unconditionally
 JUMP_BACKSTOP_ROUND = 20
 
 
@@ -72,7 +68,6 @@ def label_exchange(
     label: str,
     step: Callable[[DataFrame, DataFrame, dict[str, Any] | None],
                    tuple[DataFrame, dict]],
-    num_partitions: int | None = None,
     **loop: Any,
 ) -> DataFrame:
     """Run a label-exchange fixpoint over the undirected view of ``edges``
@@ -80,16 +75,17 @@ def label_exchange(
 
     Every vertex starts labelled with its own id. ``step(sym, labels,
     last)`` gets the cached symmetrized ``(src, dst)`` table and plans
-    ``(id, old, <label>)``; the loop stops when no label changed.
+    ``(id, old, <label>)``; the loop stops when no label changed, and a
+    run that ``max_iter`` stops first emits a ``RuntimeWarning``.
     ``loop`` passes ``max_iter`` and the checkpoint options on to
-    ``fixpoint``. The run's partition count is ``num_partitions``, or
-    else sized from the measured bytes of the cached input (``measure``).
+    ``fixpoint``. The run is sized from the measured bytes of the cached
+    input (``measure``).
     """
     # one scan of the raw input: the 2-column projection is cached and the
     # symmetrized table AND the vertex set (which must keep self-loop-only
     # vertices that symmetrize drops) both derive from it
-    with measure(edges.select("src", "dst"), num_partitions) as (raw, _, n):
-        sym = edge_table(symmetrize(raw), n)
+    with measure(edges.select("src", "dst")) as (raw, _):
+        sym = edge_table(symmetrize(raw))
         try:
             run = fixpoint(
                 spark, name, sym,
@@ -98,10 +94,16 @@ def label_exchange(
                 lambda labels, last: step(sym, labels, last),
                 {"changed": F.sum((F.col(label) != F.col("old")).cast("long"))},
                 lambda s, _: s["changed"] == 0,
-                num_partitions=n, inputs=[raw], **loop,
+                inputs=[raw], **loop,
             )
         finally:
             sym.unpersist()
+    if not run.converged:
+        # stacklevel 3: the line that called connected_components or
+        # label_propagation
+        warnings.warn(
+            f"{name} did not converge in {run.iterations} iterations: "
+            "labels were still changing", RuntimeWarning, stacklevel=3)
     return run.state.select("id", label)
 
 
@@ -112,20 +114,18 @@ def connected_components(
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 1,
     resume: bool = True,
-    num_partitions: int | None = None,
     metrics_out: list[dict[str, Any]] | None = None,
-    algorithm: str = "hybrid",
 ) -> DataFrame:
     """→ ``(id long, component long)`` at fixpoint.
 
     ``checkpoint_dir`` makes the run resumable (``plans/loop.py``).
     Without it the iteration state lives in unreplicated local
     checkpoints, and losing an executor mid-run aborts the run; with it,
-    rerunning the same call resumes from the last durable iteration.
+    rerunning the same call resumes from the last durable iteration. A
+    run that ``max_iter`` stops before the labels settle emits a
+    ``RuntimeWarning``.
     """
-    if algorithm not in ("hashmin", "pointer", "hybrid"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
-    jumping = algorithm == "pointer"  # hybrid arms this on stall
+    jumping = False  # armed on a stall or at the backstop round
     prev_changed: int | None = None
     rounds = 0
 
@@ -133,7 +133,7 @@ def connected_components(
         nonlocal jumping, prev_changed, rounds
         if last is not None:
             changed = last["changed"]
-            if algorithm == "hybrid" and not jumping and (
+            if not jumping and (
                 (
                     prev_changed is not None
                     and STALL_DECAY * prev_changed < changed <= prev_changed
@@ -173,7 +173,7 @@ def connected_components(
 
     return label_exchange(
         spark, edges, "connected_components", "component", step,
-        num_partitions=num_partitions, max_iter=max_iter,
+        max_iter=max_iter,
         checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
         resume=resume, metrics_out=metrics_out,
     )

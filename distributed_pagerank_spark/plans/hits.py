@@ -72,7 +72,6 @@ def hits(
     edges: DataFrame,
     max_iter: int = 20,
     eps: float = 0.0,
-    num_partitions: int | None = None,
 ) -> HitsResult:
     """Run HITS to ``max_iter`` rounds, or until the L1 delta of the
     authority vector is ≤ ``eps`` when ``eps > 0``.
@@ -86,16 +85,12 @@ def hits(
     """
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
-    with measure(edges.select("src", "dst").distinct(), num_partitions) as (
-        e, rows, num_partitions
-    ):
+    with measure(edges.select("src", "dst").distinct()) as (e, rows):
         if rows == 0:
             raise ValueError("empty edge table: no vertices to score")
-        fwd = edge_table(e, num_partitions)
+        fwd = edge_table(e)
         rev = edge_table(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            num_partitions,
-        )
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
 
         def init() -> DataFrame:
             # auth_0 = hub_0 = 1/n; the vertex count rides the first job
@@ -142,7 +137,7 @@ def hits(
             run = fixpoint(
                 spark, "hits", e, init, step, stats,
                 lambda s, last: eps > 0 and last is not None and s["delta"] <= eps,
-                max_iter=max_iter + 1, num_partitions=num_partitions, inputs=[e],
+                max_iter=max_iter + 1, inputs=[e],
             )
         finally:
             fwd.unpersist()

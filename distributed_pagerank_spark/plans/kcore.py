@@ -45,7 +45,6 @@ def _peel(
     k: int,
     rows: int,
     max_iter: int,
-    num_partitions: int,
     metrics_out: list[dict[str, Any]] | None,
     inputs: list[DataFrame],
 ) -> tuple[DataFrame, int]:
@@ -75,8 +74,8 @@ def _peel(
     run = fixpoint(
         spark, "k_core", start, lambda: start, step,
         {"rows": F.count("*")}, rows_settled(rows),
-        key=("src",), max_iter=max_iter, num_partitions=num_partitions,
-        inputs=inputs, metrics_out=metrics_out,
+        key=("src",), max_iter=max_iter, inputs=inputs,
+        metrics_out=metrics_out,
     )
     return run.settled(f"{k}-core peel"), run.last["rows"]
 
@@ -86,7 +85,6 @@ def k_core(
     edges: DataFrame,
     k: int,
     max_iter: int = 100,
-    num_partitions: int | None = None,
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """Vertices of the k-core with their in-core degree → ``(id, degree)``.
@@ -101,8 +99,8 @@ def k_core(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    with measure(symmetrize(edges), num_partitions) as (sym, rows, n):
-        core, _ = _peel(spark, sym, k, rows, max_iter, n, metrics_out, [sym])
+    with measure(symmetrize(edges)) as (sym, rows):
+        core, _ = _peel(spark, sym, k, rows, max_iter, metrics_out, [sym])
     return core.groupBy(F.col("src").alias("id")).agg(
         F.count("*").cast("long").alias("degree")
     )
@@ -113,7 +111,6 @@ def coreness(
     edges: DataFrame,
     max_k: int = 1000,
     max_iter_per_level: int = 100,
-    num_partitions: int | None = None,
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """Full core decomposition → ``(id, core)`` for every vertex of the
@@ -136,8 +133,8 @@ def coreness(
     # the raw projection is cached for the level-1 labels (self-loop-only
     # vertices, which symmetrize drops, get core 0); the run is sized from
     # the symmetrized table
-    with measure(edges.select("src", "dst"), num_partitions) as (raw, _, _), \
-            measure(symmetrize(raw), num_partitions) as (sym, rows, n):
+    with measure(edges.select("src", "dst")) as (raw, _), \
+            measure(symmetrize(raw)) as (sym, rows):
         # level 1: every vertex with a non-self-loop edge is in the 1-core
         labels = [raw.select(
             F.explode(F.array("src", "dst")).alias("id"),
@@ -152,7 +149,7 @@ def coreness(
                 # level k starts from the (k−1)-core: sym, then the last core
                 core, rows = _peel(
                     spark, cores[-1] if cores else sym, k, rows,
-                    max_iter_per_level, n, metrics_out,
+                    max_iter_per_level, metrics_out,
                     [] if cores else [sym],
                 )
                 cores.append(core)

@@ -29,7 +29,6 @@ def label_propagation(
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 2,
     resume: bool = True,
-    num_partitions: int | None = None,
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """→ ``(id long, label long)`` after ``rounds`` synchronous rounds
@@ -37,7 +36,8 @@ def label_propagation(
     (``plans/loop.py``). Without it the iteration state lives in
     unreplicated local checkpoints, and losing an executor mid-run aborts
     the run; with it, rerunning the same call resumes from the last
-    durable iteration.
+    durable iteration. A run that ``rounds`` stops before the labels
+    settle emits a ``RuntimeWarning``.
     """
 
     def step(sym: DataFrame, labels: DataFrame, last: dict[str, Any] | None):
@@ -59,7 +59,7 @@ def label_propagation(
 
     return label_exchange(
         spark, edges, "label_propagation", "label", step,
-        num_partitions=num_partitions, max_iter=rounds,
+        max_iter=rounds,
         checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
         resume=resume, metrics_out=metrics_out,
     )

@@ -62,7 +62,10 @@ dedup tiers of ``operators.dedup``). A call's first job persists and
 counts the input aggregate it reads more than once, with AQE off
 (``measure``): a plan's edges, an operator's deduped or symmetrized
 edges, shingle index or signatures. It sizes the call from the cache's
-measured bytes, as AQE's partition coalescing would. Every later job of
+measured bytes, as AQE's partition coalescing would; no call takes a
+partition count, and a session that wants another size sets
+``spark.sql.adaptive.advisoryPartitionSizeInBytes`` and
+``spark.sql.shuffle.partitions`` (the cap). Every later job of
 the call, from its setup tables (``edge_table``) through the loop to the
 finalization or an operator's final plan, runs under ``loop_policy`` of
 that count: AQE off, ``spark.sql.shuffle.partitions`` at it, and
@@ -157,21 +160,21 @@ def conf_scope(spark: SparkSession, confs: dict[str, str]):
 
 
 @contextmanager
-def measure(
-    aggregate: DataFrame, requested: int | None
-) -> Iterator[tuple[DataFrame, int, int]]:
+def measure(aggregate: DataFrame) -> Iterator[tuple[DataFrame, int]]:
     """Size a plan or operator from the input aggregate it reads more
     than once (a plan's edges, an operator's symmetrized table, shingle
     index or signatures), then run the rest of the call under that size:
-    a block that gets ``(cached, rows, n)``.
+    a block that gets ``(cached, rows)``.
 
     ``aggregate`` (un-persisted) is persisted and counted with AQE off,
-    in one job; the cache keeps that AQE-off plan. ``n`` is ``requested``
-    when given, otherwise sized from the cache's measured in-memory
-    bytes: ``ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``,
+    in one job; the cache keeps that AQE-off plan. The partition count is
+    sized from the cache's measured in-memory bytes:
+    ``ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)``,
     clamped to ``[1, spark.sql.shuffle.partitions]`` — the partition size
     AQE would coalesce to, fixed once instead of re-planned every job.
-    The block runs under ``loop_policy(n)``; on exit, also on raise, the
+    Those two confs are the only way to set it. The block runs under
+    ``loop_policy`` of that count, so every ``repartition(*key)`` and
+    shuffle planned in it uses the count; on exit, also on raise, the
     caller's confs are restored and the cache is released.
     """
     spark = aggregate.sparkSession
@@ -180,34 +183,28 @@ def measure(
             # AQE would run each shuffle map stage of the cache's plan as
             # a job of its own
             rows = aggregate.persist().count()
-        n = requested
-        if not n:
-            plan = aggregate._jdf.queryExecution().optimizedPlan()
-            size = int(plan.stats().sizeInBytes())
-            advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
-                .byteStringAsBytes(spark.conf.get(
-                    "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-            cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            n = max(1, min(cap, -(-size // advisory)))
+        plan = aggregate._jdf.queryExecution().optimizedPlan()
+        size = int(plan.stats().sizeInBytes())
+        advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
+            .byteStringAsBytes(spark.conf.get(
+                "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n = max(1, min(cap, -(-size // advisory)))
         with conf_scope(spark, loop_policy(n)):
-            yield aggregate, rows, n
+            yield aggregate, rows
     finally:
         aggregate.unpersist()
 
 
-def edge_table(edges: DataFrame, num_partitions: int) -> DataFrame:
+def edge_table(edges: DataFrame) -> DataFrame:
     """``edges`` as a loop's static side: hash-partitioned by ``src`` into
-    the loop's ``num_partitions`` and sorted by it (CSR-style), persisted
-    with the plan of the enclosing ``measure`` block's policy. A loop's
+    the enclosing ``measure`` block's partition count and sorted by it
+    (CSR-style), persisted with the plan of that block's policy. A loop's
     joins on ``src`` then read it in place, with no edge-side shuffle or
     sort. The first job that reads it fills the cache, so ``edges`` must
     stay readable until then; the caller unpersists the table.
     """
-    return (
-        edges.repartition(num_partitions, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    return edges.repartition("src").sortWithinPartitions("src").persist()
 
 
 def exact_sum(col: Column) -> Column:
@@ -462,7 +459,6 @@ def fixpoint(
     *,
     max_iter: int,
     key: tuple[str, ...] = ("id",),
-    num_partitions: int,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 1,
     resume: bool = True,
@@ -489,8 +485,8 @@ def fixpoint(
     fingerprint the checkpoint directory. See the module docstring for
     the lifecycle.
 
-    ``num_partitions`` is the ``n`` of the enclosing ``measure`` block,
-    whose ``loop_policy`` the call runs under.
+    The call runs in a ``measure`` block, whose partition count the
+    state's ``repartition`` takes from ``loop_policy``.
 
     ``Fixpoint.state`` is the final snapshot itself (a leaf the caller
     frees with ``release_local_checkpoint``), so it may carry the step's
@@ -523,7 +519,7 @@ def fixpoint(
     # joins skip the state-side Sort, and the snapshots inherit the order
     state = bound_estimate(
         (init() if state is None else state)
-        .repartition(num_partitions, *key)
+        .repartition(*key)
         .sortWithinPartitions(*key)
         .localCheckpoint(eager=False)
     )
@@ -577,7 +573,6 @@ def frontier(
     *,
     key: tuple[str, ...],
     max_depth: int,
-    num_partitions: int,
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> tuple[list[DataFrame], list[int]]:
     """Level-synchronous expansion from ``start`` → ``(slices, rows)``.
@@ -591,10 +586,10 @@ def frontier(
     is the caller's declared semantics, so it does not raise.
 
     The slices and their exact row counts are the caller's; it frees the
-    slices with ``release_local_checkpoint``. ``num_partitions`` is the
-    ``n`` of the enclosing ``measure`` block, and levels 1.. append
-    ``{iteration, rows, converged, total_s}`` records (converged: the
-    slice is empty) to ``metrics_out``.
+    slices with ``release_local_checkpoint``. The call runs in a
+    ``measure`` block, and levels 1.. append ``{iteration, rows,
+    converged, total_s}`` records (converged: the slice is empty) to
+    ``metrics_out``.
     """
     slices: list[DataFrame] = []
     rows: list[int] = []
@@ -602,7 +597,7 @@ def frontier(
     for depth in range(max_depth + 1):
         t0 = time.monotonic()
         plan = (
-            start.repartition(num_partitions, *key)
+            start.repartition(*key)
             if visited is None
             else expand(slices[-1], depth).join(visited, list(key),
                                                 "left_anti")

@@ -32,6 +32,7 @@ edge table — only the |V|-sized contribution sums move.
 
 from __future__ import annotations
 
+import warnings
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Any, Iterator
@@ -62,9 +63,8 @@ class PageRankResult:
 def _prepare_edges(
     edges: DataFrame,
     dup_policy: str,
-    num_partitions: int | None,
     weight_col: str | None = None,
-) -> Iterator[tuple[DataFrame, DataFrame, DataFrame, int, int]]:
+) -> Iterator[tuple[DataFrame, DataFrame, DataFrame, int]]:
     """Static per-run edge product: (src, dst, out_degree), partitioned by
     src and persisted. The in-link side dedups duplicates in both policies
     (the reference stores in-links in a map, collapsing dups); the
@@ -78,13 +78,13 @@ def _prepare_edges(
     startup cost, so re-reading it per derived artifact (the round-2 shape:
     distinct + degrees + vertices = 4 scans) is not acceptable.
 
-    A ``measure`` block over that aggregate: it sizes the run (unless
-    ``num_partitions`` is given) and the block runs under its policy. The
-    block gets ``(edge_product, vertices, cached_distinct_edges,
-    edge_count, partitions)``; the edge count is the aggregate's, which
-    the edge product shares (the empty-graph check). The edge product
-    fills on the first job that reads it, and the aggregate must stay
-    cached until then; both caches are released on exit.
+    A ``measure`` block over that aggregate: it sizes the run and the
+    block runs under its policy. The block gets ``(edge_product,
+    vertices, cached_distinct_edges, edge_count)``; the edge count is the
+    aggregate's, which the edge product shares (the empty-graph check).
+    The edge product fills on the first job that reads it, and the
+    aggregate must stay cached until then; both caches are released on
+    exit.
     """
     if weight_col is not None:
         # weighted graph: duplicate (src, dst) rows merge by SUMMING their
@@ -106,13 +106,12 @@ def _prepare_edges(
         )
         e = ecnt.select("src", "dst")
         edge_cols = ["src", "dst", "out_degree"]
-    with measure(ecnt, num_partitions) as (ecnt, m, num_partitions):
+    with measure(ecnt) as (ecnt, m):
         # the join's own shuffle by src already is the edge table's layout
-        ew = edge_table(e.join(deg, e["src"] == deg["id"]).select(*edge_cols),
-                        num_partitions)
+        ew = edge_table(e.join(deg, e["src"] == deg["id"]).select(*edge_cols))
         try:
             # the vertex set reads the cache, not the raw input
-            yield ew, vertices_from_edges(e), ecnt, m, num_partitions
+            yield ew, vertices_from_edges(e), ecnt, m
         finally:
             ew.unpersist()
 
@@ -133,7 +132,6 @@ def pagerank(
     resume: bool = True,
     skew_salt: int | None = None,
     hub_threshold: int | None = None,
-    num_partitions: int | None = None,
 ) -> PageRankResult:
     """Run PageRank to L1 convergence.
 
@@ -148,11 +146,15 @@ def pagerank(
     Without it the iteration state lives in unreplicated local
     checkpoints, and losing an executor mid-run aborts the run; with it,
     rerunning the same call resumes from the last durable iteration.
+
+    A run with ``eps > 0`` that stops at ``max_iter`` unconverged emits a
+    ``RuntimeWarning`` (and returns ``converged=False``); ``eps=0`` asks
+    for exactly ``max_iter`` iterations and does not warn.
     """
     if not 0.0 < c < 1.0:
         raise ValueError("damping c must be in (0,1)")
-    with _prepare_edges(edges, dup_policy, num_partitions, weight_col) as (
-        edges_w, verts, edges_cached, n_edges, num_partitions
+    with _prepare_edges(edges, dup_policy, weight_col) as (
+        edges_w, verts, edges_cached, n_edges
     ):
         # empty-graph check rides measure's count of the edge aggregate (no
         # vertex without an edge): the fresh-start state needs no count
@@ -272,12 +274,17 @@ def pagerank(
         run = fixpoint(
             spark, "pagerank", edges_w, init, step, stats,
             lambda s, _: s["delta"] <= eps,
-            max_iter=max_iter, num_partitions=num_partitions,
-            checkpoint_dir=checkpoint_dir, checkpoint_interval=checkpoint_interval,
+            max_iter=max_iter, checkpoint_dir=checkpoint_dir,
+            checkpoint_interval=checkpoint_interval,
             resume=resume, inputs=[edges_cached],
             identity=f"c={c}|eps={eps}|dup={dup_policy}|dangling={dangling}|"
                      f"w={weight_col}|e={e_h}",
         )
+        if eps > 0 and not run.converged:
+            warnings.warn(
+                f"pagerank did not converge in {run.iterations} iterations "
+                f"(eps={eps})",
+                RuntimeWarning, stacklevel=2)
 
         # --- final normalization (reference: pagerank.go:38-45) ----------
         # checkpoints store PRE-normalized ranks; Σrank of the final state

@@ -44,7 +44,6 @@ def personalized_pagerank_multi(
     seeds: DataFrame,
     c: float = 0.85,
     k: int = 5,
-    num_partitions: int | None = None,
     dup_policy: str = "reference",
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
@@ -61,9 +60,7 @@ def personalized_pagerank_multi(
     product is built and persisted ONCE for all sets and iterations.
     """
     # PPR never needs the vertex set, only edge reach
-    with _prepare_edges(edges, dup_policy, num_partitions) as (
-        edges_w, _verts, ecnt, _m, num_partitions
-    ):
+    with _prepare_edges(edges, dup_policy) as (edges_w, _verts, ecnt, _m):
         # per-set normalized seed vector, pinned on (set_id, id): both the
         # per-iteration full-outer and the final per-set sum reuse this layout
         totals = seeds.groupBy("set_id").agg(F.sum("weight").alias("__tot"))
@@ -73,7 +70,7 @@ def personalized_pagerank_multi(
                 "set_id", "id",
                 (F.col("weight").cast("double") / F.col("__tot")).alias("e"),
             )
-            .repartition(num_partitions, "set_id", "id")
+            .repartition("set_id", "id")
             .persist()
         )
         # no eager count: the cache fills inside the first barrier job below

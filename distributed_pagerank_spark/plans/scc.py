@@ -46,7 +46,7 @@ would split SCCs. The edge sets and vertex sets between fixpoints are
 ``localCheckpoint`` leaves too, so no plan deepens across rounds. The
 whole call, set-up leaves, outer rounds and canonicalization included,
 runs under one policy at one partition count, sized from the input
-edges' bytes (``plans.loop.measure``) unless ``num_partitions`` is given.
+edges' bytes (``plans.loop.measure``).
 
 Scale shape: both fixpoints move only |V_r|-sized label vectors against
 a per-round cached-and-shrinking edge set (same gather-scatter economy
@@ -83,7 +83,6 @@ def _max_prop(
     max_rounds: int,
     gather_from: str,
     group_to: str,
-    num_partitions: int,
     name: str,
 ) -> DataFrame:
     """Jump-accelerated directed max-label fixpoint over ``(id, c)`` →
@@ -123,7 +122,7 @@ def _max_prop(
         spark, name, edges_r, lambda: init, step,
         {"changed": F.sum((F.col("c") != F.col("old")).cast("long"))},
         lambda s, _: s["changed"] == 0,
-        max_iter=max_rounds, num_partitions=num_partitions,
+        max_iter=max_rounds,
     )
     return run.settled(f"SCC {name} fixpoint")
 
@@ -133,7 +132,6 @@ def strongly_connected_components(
     edges: DataFrame,
     max_outer: int = 50,
     max_prop: int = 200,
-    num_partitions: int | None = None,
     metrics_out: list[dict[str, Any]] | None = None,
 ) -> DataFrame:
     """→ ``(id long, component long)``: component = min vertex id of the
@@ -159,20 +157,18 @@ def strongly_connected_components(
             held.remove(df)
             release_local_checkpoint(df)
 
-    with measure(edges.select("src", "dst"), num_partitions) as (
-        raw, _, num_partitions
-    ):
+    with measure(edges.select("src", "dst")) as (raw, _):
         try:
             cur = leaf(
                 raw.where(F.col("src") != F.col("dst"))
                 .distinct()
-                .repartition(num_partitions, "src"),
+                .repartition("src"),
                 eager=True,
             )
             # vertex set from the UN-filtered input: a vertex whose only
             # edge is a self-loop is still a (singleton) SCC and must appear
             verts = leaf(
-                vertices_from_edges(raw).repartition(num_partitions, "id"),
+                vertices_from_edges(raw).repartition("id"),
                 eager=True,
             )
             raw.unpersist()
@@ -183,8 +179,7 @@ def strongly_connected_components(
                 # 1. color: forward max-label fixpoint with pointer jumps
                 colors = _max_prop(
                     spark, cur, verts.select("id", F.col("id").alias("c")),
-                    max_prop, "src", "dst", num_partitions,
-                    f"scc_color_{outer}",
+                    max_prop, "src", "dst", f"scc_color_{outer}",
                 )
                 held.append(colors)
 
@@ -211,8 +206,7 @@ def strongly_connected_components(
                 m_final = _max_prop(
                     spark, class_edges,
                     colors.select("id", F.col("id").alias("c")),
-                    max_prop, "dst", "src", num_partitions,
-                    f"scc_reach_{outer}",
+                    max_prop, "dst", "src", f"scc_reach_{outer}",
                 )
                 held.append(m_final)
                 flags = (

@@ -83,14 +83,12 @@ def triangles_of(o: DataFrame) -> DataFrame:
     return compact_forward(o).select("a", "b", F.explode("common").alias("c"))
 
 
-def orientation(
-    edges: DataFrame,
-) -> ContextManager[tuple[DataFrame, int, int]]:
+def orientation(edges: DataFrame) -> ContextManager[tuple[DataFrame, int]]:
     """The one sized orientation setup: a ``plans.loop.measure`` block
-    over ``oriented_edges`` of ``edges``, which gets ``(o, rows, n)`` —
-    the cached orientation, its edge count and the plan's partition
-    count — and runs under the plan's policy."""
-    return measure(oriented_edges(symmetrize(edges)), None)
+    over ``oriented_edges`` of ``edges``, which gets ``(o, rows)`` — the
+    cached orientation and its edge count — and runs under the plan's
+    policy."""
+    return measure(oriented_edges(symmetrize(edges)))
 
 
 def _on_oriented(
@@ -99,7 +97,7 @@ def _on_oriented(
     """``plan`` over the cached orientation of ``edges``, as an eager
     ``localCheckpoint`` the caller owns; the orientation is released on
     return and on raise."""
-    with orientation(edges) as (o, _, _):
+    with orientation(edges) as (o, _):
         return plan(o).localCheckpoint(eager=True)
 
 

@@ -80,7 +80,7 @@ def k_truss(
     """
     if k < 3:
         raise ValueError("k must be >= 3")
-    with orientation(edges) as (oriented, rows, num_partitions):
+    with orientation(edges) as (oriented, rows):
         # at the fixpoint the survivors' support was computed on a graph
         # identical to the final subgraph
         truss = fixpoint(
@@ -89,8 +89,8 @@ def k_truss(
                 _oriented_support(o).where(F.col("support") >= k - 2), {}
             ),
             {"rows": F.count("*")}, rows_settled(rows),
-            key=("a",), max_iter=max_iter, num_partitions=num_partitions,
-            inputs=[oriented], metrics_out=metrics_out,
+            key=("a",), max_iter=max_iter, inputs=[oriented],
+            metrics_out=metrics_out,
         ).settled(f"{k}-truss peel")
     # orientation → canonical (src < dst) output
     return truss.select(

@@ -31,7 +31,7 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; under
     ``spark-submit`` on a cluster, leave it None and don't set the env var.
     Warns when an existing session keeps a different
-    ``spark.sql.codegen.cache.maxEntries`` than the one requested.
+    ``spark.sql.codegen.cache.maxEntries`` than the one asked for.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
@@ -57,9 +57,6 @@ def get_spark(
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.ui.enabled": "false",
-        # reliable df.checkpoint() files (iteration lineage truncation) are
-        # GC'd once unreferenced
-        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
         "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
         "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
         # The default 100-entry generated-class cache thrashes in any
@@ -86,13 +83,10 @@ def get_spark(
     if kept != conf[CODEGEN_CACHE]:
         warnings.warn(
             f"{CODEGEN_CACHE} is {kept}, not the "
-            f"requested {conf[CODEGEN_CACHE]}: getOrCreate() returned an "
+            f"{conf[CODEGEN_CACHE]} asked for: getOrCreate() returned an "
             "existing session, whose static confs cannot change",
             RuntimeWarning,
             stacklevel=2,
         )
     spark.sparkContext.setLogLevel("WARN")
-    if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-        base = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
-        spark.sparkContext.setCheckpointDir(f"{base}/dps-rdd-checkpoints")
     return spark

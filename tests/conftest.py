@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import pytest
 
+from distributed_pagerank_spark.plans.loop import conf_scope
 from distributed_pagerank_spark.session import get_spark
 
 
@@ -23,6 +24,16 @@ SESSION_ARGS = dict(
 @pytest.fixture(scope="session")
 def spark():
     yield get_spark(**SESSION_ARGS)
+
+
+def partitions(spark, n):
+    """A block in which every plan and operator runs on ``n`` partitions:
+    a 1-byte advisory partition size sizes ``loop.measure`` up to its
+    cap, the session's shuffle partitions, here ``n``."""
+    return conf_scope(spark, {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
+        "spark.sql.shuffle.partitions": str(n),
+    })
 
 
 def edges_df(spark, pairs):

@@ -2,15 +2,19 @@ from __future__ import annotations
 
 import math
 import os
+import warnings
 
+import pytest
 from pyspark.sql import functions as F
 
+from distributed_pagerank_spark.plans.components import connected_components
+from distributed_pagerank_spark.plans.hits import hits
+from distributed_pagerank_spark.plans.labelprop import label_propagation
 from distributed_pagerank_spark.plans.loop import CheckpointManager
 from distributed_pagerank_spark.plans.pagerank import pagerank
-from distributed_pagerank_spark.plans.components import connected_components
 from distributed_pagerank_spark.sources.generator import generate_graph
 
-from tests.conftest import CHAIN5, edges_df
+from tests.conftest import CHAIN5, edges_df, partitions
 
 
 def ranks_of(res):
@@ -38,8 +42,8 @@ def test_resume_identical_to_uninterrupted(spark, tmp_path):
 def test_manifest_lineage_and_metrics(spark, tmp_path):
     ck = str(tmp_path / "ck")
     edges = generate_graph(spark, 20, max_edges=3, seed=2)
-    pagerank(spark, edges, eps=0.0, max_iter=3, checkpoint_dir=ck,
-             num_partitions=4)
+    with partitions(spark, 4):
+        pagerank(spark, edges, eps=0.0, max_iter=3, checkpoint_dir=ck)
     mgr = CheckpointManager(spark, ck)
     done = mgr.completed_iterations()
     assert done == [1, 2, 3]
@@ -91,8 +95,6 @@ def test_components_resume(spark, tmp_path):
 def test_label_propagation_resume(spark, tmp_path):
     """A run stopped after 3 rounds, then resumed to 10, equals a clean
     10-round run; the stopped run leaves a resume point at its last round."""
-    from distributed_pagerank_spark.plans.labelprop import label_propagation
-
     ck = str(tmp_path / "ck")
     edges = edges_df(spark, [(i, i + 1) for i in range(12)])  # never settles
     partial_metrics = []
@@ -117,19 +119,58 @@ def test_components_budget_stop_leaves_manifest(spark, tmp_path):
     edges = edges_df(spark, [(i, i + 1) for i in range(20)])
     metrics = []
     connected_components(spark, edges, max_iter=3, checkpoint_interval=2,
-                         checkpoint_dir=ck, algorithm="hashmin",
-                         metrics_out=metrics)
+                         checkpoint_dir=ck, metrics_out=metrics)
     assert not metrics[-1]["converged"]
     mgr = CheckpointManager(spark, ck)
     assert mgr.completed_iterations() == [2, 3]
     assert mgr.manifest(3)["metrics"]["iteration"] == 3
 
 
+LOOPS = {
+    "pagerank": lambda spark, e, budget: pagerank(
+        spark, e, eps=1e-9, max_iter=budget).ranks,
+    "cc": lambda spark, e, budget: connected_components(
+        spark, e, max_iter=budget),
+    "lpa": lambda spark, e, budget: label_propagation(
+        spark, e, rounds=budget),
+}
+
+
+def runtime_warnings(call):
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        call()
+    return [w for w in caught if issubclass(w.category, RuntimeWarning)]
+
+
+@pytest.mark.parametrize("name", list(LOOPS))
+def test_budget_stop_warns(spark, name):
+    """A loop stopped by its budget before converging emits one
+    RuntimeWarning, attributed to the caller's line."""
+    chain = edges_df(spark, [(i, i + 1) for i in range(12)])
+    caught = runtime_warnings(lambda: LOOPS[name](spark, chain, 2))
+    assert len(caught) == 1, caught
+    assert caught[0].filename == __file__
+
+
+@pytest.mark.parametrize("name", [*LOOPS, "pagerank_eps0", "hits_eps0"])
+def test_converged_or_fixed_k_run_is_silent(spark, name):
+    """A run that converges within its budget does not warn, nor do the
+    fixed-iteration runs: PageRank and HITS at ``eps=0``."""
+    triangle = edges_df(spark, [(0, 1), (1, 2), (2, 0)])
+    call = {
+        **LOOPS,
+        "pagerank_eps0": lambda spark, e, budget: pagerank(
+            spark, e, eps=0.0, max_iter=2).ranks,
+        "hits_eps0": lambda spark, e, budget: hits(
+            spark, e, max_iter=2).scores,
+    }[name]
+    assert not runtime_warnings(lambda: call(spark, triangle, 10))
+
+
 def test_loop_metrics_share_one_schema(spark):
     """PageRank, CC, LPA, HITS, PPR and SCC report one record per
     iteration with the same iteration / converged / total_s keys."""
-    from distributed_pagerank_spark.plans.hits import hits
-    from distributed_pagerank_spark.plans.labelprop import label_propagation
     from distributed_pagerank_spark.plans.ppr import (
         personalized_pagerank_multi,
     )
@@ -186,8 +227,8 @@ def test_manifest_partitions_are_state_partitions(spark, tmp_path):
     state's partitions, one per part-NNNNN file of the snapshot."""
     ck = str(tmp_path / "ck")
     edges = generate_graph(spark, 40, max_edges=3, seed=5)
-    res = pagerank(spark, edges, eps=0.0, max_iter=3, checkpoint_dir=ck,
-                   num_partitions=4)
+    with partitions(spark, 4):
+        res = pagerank(spark, edges, eps=0.0, max_iter=3, checkpoint_dir=ck)
     want = {
         r["pid"]: r["rows"]
         for r in res.ranks.groupBy(F.spark_partition_id().alias("pid"))
@@ -220,9 +261,12 @@ def test_components_self_loops_only(spark, tmp_path):
 def test_pointer_jump_size_estimate_bounded(spark):
     """Pointer jumping joins the state with itself, squaring the size
     estimate its snapshot inherits each iteration; the harness caps it at
-    Spark's unknown-size default."""
+    Spark's unknown-size default. A chain's flat decay turns the jumps
+    on."""
     edges = edges_df(spark, [(i + 1, i) for i in range(40)])
-    comps = connected_components(spark, edges, algorithm="pointer")
+    metrics = []
+    comps = connected_components(spark, edges, metrics_out=metrics)
+    assert any(m["jumping"] for m in metrics)
     size = comps._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     assert size <= 2**63 - 1
     assert {r["component"] for r in comps.collect()} == {0}

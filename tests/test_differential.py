@@ -3,9 +3,9 @@ components, PageRank and the triangle kernel's users against networkx,
 label propagation against a pure-Python oracle, and HITS against a dense
 numpy oracle, on small generated graphs with self-loops, duplicate
 edges, negative ids and ids above 2^31. Every call must also leave
-exactly its result's leaves cached. Calls that take ``num_partitions``
-run on 3, so their shuffles run too (sized from bytes, these graphs get
-one partition)."""
+exactly its result's leaves cached. The loops run on 3 partitions
+(``conftest.partitions``), so their shuffles run too (sized from bytes,
+these graphs get one partition)."""
 
 from __future__ import annotations
 
@@ -32,7 +32,7 @@ from distributed_pagerank_spark.plans.triangles import (
 )
 from distributed_pagerank_spark.plans.truss import k_truss
 
-from tests.conftest import collect_owned, edges_df
+from tests.conftest import collect_owned, edges_df, partitions
 from tests.test_hits import hits_numpy
 
 IDS = [-(2**40), -1, 0, 1, 2**31 - 1, 2**31, 2**62]
@@ -78,8 +78,9 @@ def min_labels(components):
 @given(pairs=graphs)
 @example(pairs=RICH)
 def test_connected_components_match_networkx(spark, pairs):
-    rows = collect_owned(spark, lambda: connected_components(
-        spark, edges_df(spark, pairs), num_partitions=3))
+    with partitions(spark, 3):
+        rows = collect_owned(spark, lambda: connected_components(
+            spark, edges_df(spark, pairs)))
     assert {r["id"]: r["component"] for r in rows} == \
         min_labels(nx.connected_components(nx_graph(pairs)))
 
@@ -88,8 +89,9 @@ def test_connected_components_match_networkx(spark, pairs):
 @given(pairs=graphs)
 @example(pairs=RICH)
 def test_scc_matches_networkx(spark, pairs):
-    rows = collect_owned(spark, lambda: strongly_connected_components(
-        spark, edges_df(spark, pairs), num_partitions=3))
+    with partitions(spark, 3):
+        rows = collect_owned(spark, lambda: strongly_connected_components(
+            spark, edges_df(spark, pairs)))
     assert {r["id"]: r["component"] for r in rows} == \
         min_labels(nx.strongly_connected_components(nx_digraph(pairs)))
 
@@ -113,8 +115,9 @@ def lpa_oracle(pairs, rounds):
 @given(pairs=graphs, rounds=st.integers(1, 4))
 @example(pairs=RICH, rounds=3)
 def test_label_propagation_matches_oracle(spark, pairs, rounds):
-    rows = collect_owned(spark, lambda: label_propagation(
-        spark, edges_df(spark, pairs), rounds=rounds, num_partitions=3))
+    with partitions(spark, 3):
+        rows = collect_owned(spark, lambda: label_propagation(
+            spark, edges_df(spark, pairs), rounds=rounds))
     assert {r["id"]: r["label"] for r in rows} == lpa_oracle(pairs, rounds)
 
 
@@ -131,10 +134,11 @@ def test_pagerank_matches_networkx(spark, pairs):
     def call():
         nonlocal res
         res = pagerank(spark, edges_df(spark, pairs), eps=0.0, max_iter=8,
-                       dangling="redistribute", num_partitions=3)
+                       dangling="redistribute")
         return res.ranks
 
-    rows = collect_owned(spark, call)
+    with partitions(spark, 3):
+        rows = collect_owned(spark, call)
     g = nx_digraph(pairs)
     google = nx.google_matrix(g, alpha=0.85, nodelist=list(g))
     x = np.full(len(g), 1.0 / len(g))
@@ -150,8 +154,9 @@ def test_pagerank_matches_networkx(spark, pairs):
 @given(pairs=graphs, k=st.integers(1, 3))
 @example(pairs=RICH, k=3)
 def test_k_core_matches_networkx(spark, pairs, k):
-    rows = collect_owned(spark, lambda: k_core(
-        spark, edges_df(spark, pairs), k, num_partitions=3))
+    with partitions(spark, 3):
+        rows = collect_owned(spark, lambda: k_core(
+            spark, edges_df(spark, pairs), k))
     core = nx.k_core(nx_graph(pairs), k)
     want = {v: d for v, d in core.degree() if d}  # isolated: no edge row
     assert {r["id"]: r["degree"] for r in rows} == want
@@ -161,8 +166,9 @@ def test_k_core_matches_networkx(spark, pairs, k):
 @given(pairs=graphs)
 @example(pairs=RICH)
 def test_coreness_matches_networkx(spark, pairs):
-    rows = collect_owned(spark, lambda: coreness(
-        spark, edges_df(spark, pairs), num_partitions=3))
+    with partitions(spark, 3):
+        rows = collect_owned(spark, lambda: coreness(
+            spark, edges_df(spark, pairs)))
     assert {r["id"]: r["core"] for r in rows} == \
         nx.core_number(nx_graph(pairs))
 
@@ -231,9 +237,9 @@ def test_bfs_matches_networkx(spark, pairs, n_roots, max_depth):
     roots = sorted(g)[:n_roots]
     sources = spark.createDataFrame([(r, r) for r in roots],
                                     "root long, id long")
-    rows = collect_owned(spark, lambda: multi_source_bfs(
-        spark, edges_df(spark, pairs), sources, max_depth=max_depth,
-        num_partitions=3))
+    with partitions(spark, 3):
+        rows = collect_owned(spark, lambda: multi_source_bfs(
+            spark, edges_df(spark, pairs), sources, max_depth=max_depth))
     want = {
         (r, v): d
         for r in roots
@@ -251,14 +257,65 @@ def test_betweenness_all_roots_matches_networkx(spark, pairs):
     from both of its endpoints: twice networkx's undirected value."""
     g = nx_graph(pairs)
     roots = spark.createDataFrame([(v,) for v in g], "root long")
-    rows = collect_owned(spark, lambda: betweenness(
-        spark, edges_df(spark, pairs), roots, max_depth=len(g),
-        num_partitions=3))
+    with partitions(spark, 3):
+        rows = collect_owned(spark, lambda: betweenness(
+            spark, edges_df(spark, pairs), roots, max_depth=len(g)))
     got = {r["id"]: r["betweenness"] for r in rows}
     want = nx.betweenness_centrality(g, normalized=False)
     assert set(got) <= set(want)
     for v, x in want.items():
         assert abs(got.get(v, 0.0) - 2 * x) < 1e-9, v
+
+
+def brandes_oracle(pairs, roots, max_depth):
+    """Brandes dependency accumulation from each of ``roots`` over the
+    undirected simple graph, counting only targets at most ``max_depth``
+    hops away; a vertex's score is summed over the roots that reach it
+    in 1..``max_depth`` hops."""
+    g = nx_graph(pairs)
+    out = {}
+    for s in roots:
+        if s not in g:
+            continue
+        levels, sigma = [[s]], {s: 1.0}
+        while len(levels) <= max_depth:
+            nxt = {}
+            for v in levels[-1]:
+                for w in g[v]:
+                    if w not in sigma:
+                        nxt[w] = nxt.get(w, 0.0) + sigma[v]
+            if not nxt:
+                break
+            sigma.update(nxt)
+            levels.append(list(nxt))
+        delta = dict.fromkeys(sigma, 0.0)
+        for d in range(len(levels) - 1, 0, -1):
+            below = set(levels[d + 1]) if d + 1 < len(levels) else set()
+            for v in levels[d]:
+                delta[v] = sum(sigma[v] / sigma[w] * (1.0 + delta[w])
+                               for w in g[v] if w in below)
+                out[v] = out.get(v, 0.0) + delta[v]
+    return out
+
+
+@few
+@given(pairs=graphs, roots=st.sets(st.sampled_from(IDS), min_size=1,
+                                   max_size=3),
+       max_depth=st.integers(1, 3))
+@example(pairs=RICH, roots={2**62, 0, 2**31 - 1}, max_depth=2)
+def test_betweenness_sampled_roots_match_brandes(spark, pairs, roots,
+                                                 max_depth):
+    """Sampled roots (some may be absent from the graph) and a depth cut:
+    the same scores, and the same scored vertices, as the oracle."""
+    root_df = spark.createDataFrame([(r,) for r in roots], "root long")
+    with partitions(spark, 3):
+        rows = collect_owned(spark, lambda: betweenness(
+            spark, edges_df(spark, pairs), root_df, max_depth=max_depth))
+    got = {r["id"]: r["betweenness"] for r in rows}
+    want = brandes_oracle(pairs, roots, max_depth)
+    assert set(got) == set(want)
+    for v, x in want.items():
+        assert abs(got[v] - x) < 1e-9, v
 
 
 @pytest.mark.parametrize("eps", [0.0, 1e-9])
@@ -272,11 +329,11 @@ def test_hits_matches_numpy(spark, pairs, eps):
 
     def call():
         nonlocal res
-        res = hits(spark, edges_df(spark, pairs), max_iter=6, eps=eps,
-                   num_partitions=3)
+        res = hits(spark, edges_df(spark, pairs), max_iter=6, eps=eps)
         return res.scores
 
-    rows = collect_owned(spark, call)
+    with partitions(spark, 3):
+        rows = collect_owned(spark, call)
     want = hits_numpy(pairs, res.iterations)
     assert {r["id"] for r in rows} == set(want)
     for r in rows:

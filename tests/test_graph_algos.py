@@ -84,21 +84,18 @@ def chain_edges(n):
     return [(i, i + 1) for i in range(n - 1)]
 
 
-@pytest.mark.parametrize("algorithm", ["pointer", "hybrid"])
-def test_components_algorithms_match_hashmin(spark, algorithm):
+def test_components_match_brute_on_generated_graph(spark):
     edges = generate_graph(spark, 300, max_edges=4, seed=11)
-    a = {r["id"]: r["component"] for r in
-         connected_components(spark, edges, algorithm="hashmin").collect()}
-    b = {r["id"]: r["component"] for r in
-         connected_components(spark, edges, algorithm=algorithm).collect()}
-    assert a == b
+    got = {r["id"]: r["component"] for r in
+           connected_components(spark, edges).collect()}
+    assert got == brute_components(
+        [(r["src"], r["dst"]) for r in edges.collect()])
 
 
 def test_components_default_is_logarithmic_on_chain(spark):
     """A length-n chain needs ~n hash-min rounds but O(log n) once pointer
-    jumping kicks in — the DEFAULT (hybrid, no algorithm argument) must
-    detect the linear-decay stall within a couple of rounds and still meet
-    the logarithmic bound."""
+    jumping kicks in — the stall detector must see the linear decay within
+    a couple of rounds and still meet the logarithmic bound."""
     import math as m
     n = 1024
     metrics = []
@@ -112,9 +109,9 @@ def test_components_default_is_logarithmic_on_chain(spark):
 
 
 def test_components_hybrid_never_jumps_on_shallow_graph(spark):
-    """On a shallow graph (diameter ~2) the hybrid default must stay plain
-    hash-min: the |V|-sized jump self-join is a per-round tax that buys no
-    round reduction there (the round-3 bench regression)."""
+    """On a shallow graph (diameter ~2) CC must stay plain hash-min: the
+    |V|-sized jump self-join is a per-round tax that buys no round
+    reduction there (the round-3 bench regression)."""
     star = [(i, 0) for i in range(1, 20)]
     metrics = []
     got = {r["id"]: r["component"] for r in connected_components(

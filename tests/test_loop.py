@@ -39,7 +39,7 @@ from distributed_pagerank_spark.plans.triangles import (
 from distributed_pagerank_spark.plans.truss import k_truss
 from distributed_pagerank_spark.sources.generator import generate_graph
 
-from tests.conftest import collect_owned, edges_df
+from tests.conftest import collect_owned, edges_df, partitions
 
 SCOPED = (
     "spark.sql.adaptive.enabled",
@@ -54,25 +54,24 @@ def ranks_of(res):
 
 def test_measure_sized_from_bytes(spark):
     """Tiny inputs size to one partition; an advisory size below the
-    input's bytes sizes up to the session's shuffle partitions; an
-    explicit count wins. The block runs under the sized policy, gets the
-    aggregate's row count, and releases its cache on exit."""
+    input's bytes sizes up to the session's shuffle partitions. The block
+    runs under the sized policy, whose count a ``repartition`` by key
+    planned in it takes, gets the aggregate's row count, and releases its
+    cache on exit."""
 
-    def sized(requested):
+    def sized():
         edges = spark.range(2000).selectExpr("id as src", "id + 1 as dst")
-        with measure(edges, requested) as (cached, rows, n):
+        with measure(edges) as (cached, rows):
             assert rows == 2000 and cached.is_cached
+            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+            n = cached.repartition("src").rdd.getNumPartitions()
             assert spark.conf.get("spark.sql.shuffle.partitions") == str(n)
         assert not cached.is_cached
         return n
 
-    assert sized(None) == 1
-    assert sized(7) == 7
-    with conf_scope(spark, {
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
-        "spark.sql.shuffle.partitions": "5",
-    }):
-        assert sized(None) == 5
+    assert sized() == 1
+    with partitions(spark, 5):
+        assert sized() == 5
 
 
 def _chain(spark, n=30):
@@ -245,12 +244,13 @@ def test_pagerank_bit_identical_on_many_partitions(spark, tmp_path):
     results from 16 tasks: two runs, and a run resumed from a checkpoint,
     still give bit-identical ranks."""
     edges = generate_graph(spark, 300, max_edges=4, seed=11)
-    kw = dict(eps=0.0, max_iter=6, num_partitions=16)
-    first = pagerank(spark, edges, **kw)
-    second = pagerank(spark, edges, **kw)
+    kw = dict(eps=0.0, max_iter=6)
     ck = str(tmp_path / "ck")
-    pagerank(spark, edges, checkpoint_dir=ck, **{**kw, "max_iter": 3})
-    resumed = pagerank(spark, edges, checkpoint_dir=ck, **kw)
+    with partitions(spark, 16):
+        first = pagerank(spark, edges, **kw)
+        second = pagerank(spark, edges, **kw)
+        pagerank(spark, edges, checkpoint_dir=ck, **{**kw, "max_iter": 3})
+        resumed = pagerank(spark, edges, checkpoint_dir=ck, **kw)
     want = ranks_of(first)
     assert len(want) == 300
     for res in (second, resumed):

@@ -8,7 +8,7 @@ from distributed_pagerank_spark.oracle import numpy_pagerank
 from distributed_pagerank_spark.plans.pagerank import pagerank
 from distributed_pagerank_spark.sources.generator import generate_graph
 
-from tests.conftest import ALL_FIXTURES, edges_df
+from tests.conftest import ALL_FIXTURES, edges_df, partitions
 
 C, EPS = 0.85, 1e-6
 # Fixture battery uses fixed-iteration parity (eps=0, 10 rounds): identical
@@ -116,8 +116,10 @@ def test_salted_aggregation_identical(spark):
 
 def test_partition_count_invariance(spark):
     edges = generate_graph(spark, 40, max_edges=4, seed=11)
-    a = pagerank(spark, edges, c=C, eps=0.0, max_iter=FIXED_ITERS, num_partitions=2)
-    b = pagerank(spark, edges, c=C, eps=0.0, max_iter=FIXED_ITERS, num_partitions=8)
+    with partitions(spark, 2):
+        a = pagerank(spark, edges, c=C, eps=0.0, max_iter=FIXED_ITERS)
+    with partitions(spark, 8):
+        b = pagerank(spark, edges, c=C, eps=0.0, max_iter=FIXED_ITERS)
     ra = {r["id"]: r["rank"] for r in a.ranks.collect()}
     rb = {r["id"]: r["rank"] for r in b.ranks.collect()}
     for v in ra:

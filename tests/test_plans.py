@@ -87,7 +87,7 @@ def test_pagerank_iteration_no_extra_state_exchange(spark):
         [(i, (i + 1) % 50) for i in range(50)], "src long, dst long"
     )
     # co-partitioning only holds when cached layouts match the shuffle
-    # partition count, exactly like pagerank()'s num_partitions default
+    # partition count, as under a plan's loop_policy
     parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # micro data would broadcast every join (each broadcast build is its
     # own job); at 85M+ edges these are sort-merge joins — probe that shape

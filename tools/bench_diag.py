@@ -36,6 +36,7 @@ def main():
         derive_edges,
         synth_transcripts,
     )
+    from distributed_pagerank_spark.plans.loop import conf_scope
     from distributed_pagerank_spark.plans.pagerank import pagerank
 
     spark = get_spark(
@@ -58,10 +59,13 @@ def main():
     app_id = sc.applicationId
     jobs_before = {j["jobId"] for j in rest(4050, f"applications/{app_id}/jobs")}
 
-    res = pagerank(
-        spark, edges, c=0.85, eps=0.0, max_iter=warmup + measure,
-        num_partitions=max(cores, 8),
-    )
+    # a 1-byte advisory size sizes the run to the shuffle partitions cap
+    with conf_scope(spark, {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
+        "spark.sql.shuffle.partitions": str(max(cores, 8)),
+    }):
+        res = pagerank(spark, edges, c=0.85, eps=0.0,
+                       max_iter=warmup + measure)
     jobs = [j for j in rest(4050, f"applications/{app_id}/jobs")
             if j["jobId"] not in jobs_before and j["status"] == "SUCCEEDED"]
     jobs.sort(key=lambda j: j["jobId"])

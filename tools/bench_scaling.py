@@ -130,6 +130,7 @@ def generate_once() -> None:
 def worker(cores: int) -> None:
     sys.path.insert(0, ROOT)
     from distributed_pagerank_spark.session import get_spark
+    from distributed_pagerank_spark.plans.loop import conf_scope
     from distributed_pagerank_spark.plans.pagerank import pagerank
 
     parts = max(cores, 8)
@@ -151,10 +152,13 @@ def worker(cores: int) -> None:
     m = edges.count()
     gen_s = time.monotonic() - t0
 
-    res = pagerank(
-        spark, edges, c=0.85, eps=0.0, max_iter=WARMUP + MEASURE,
-        num_partitions=parts,
-    )
+    # a 1-byte advisory size sizes the run to the shuffle partitions cap
+    with conf_scope(spark, {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1b",
+        "spark.sql.shuffle.partitions": str(parts),
+    }):
+        res = pagerank(spark, edges, c=0.85, eps=0.0,
+                       max_iter=WARMUP + MEASURE)
     measured = res.metrics[WARMUP:]
     # r6: pagerank cuts lineage every iteration (no eager-truncation
     # iterations remain), so the "truncated" marker is never set and
