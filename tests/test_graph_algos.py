@@ -7,6 +7,7 @@ from distributed_pagerank_spark.oracle import (
     brute_label_propagation,
     brute_triangles,
 )
+from distributed_pagerank_spark.plans import components
 from distributed_pagerank_spark.plans.components import connected_components
 from distributed_pagerank_spark.plans.labelprop import label_propagation
 from distributed_pagerank_spark.plans.triangles import (
@@ -82,6 +83,41 @@ def test_label_propagation_generated(spark):
 
 def chain_edges(n):
     return [(i, i + 1) for i in range(n - 1)]
+
+
+# (STALL_DECAY, JUMP_BACKSTOP_ROUND) per jump mode. A decay above 1 can
+# never see a stall, so with an unreachable backstop the run is plain
+# hash-min; a backstop of 0 arms the jumps from round 2, and a round-1
+# jump is a no-op anyway (every label is still its own id).
+JUMP_MODES = {
+    "hashmin": (2.0, 10**9),
+    "pointer": (components.STALL_DECAY, 0),
+    "hybrid": (components.STALL_DECAY, components.JUMP_BACKSTOP_ROUND),
+}
+
+
+def _components_in_mode(spark, edges, mode, monkeypatch):
+    decay, backstop = JUMP_MODES[mode]
+    monkeypatch.setattr(components, "STALL_DECAY", decay)
+    monkeypatch.setattr(components, "JUMP_BACKSTOP_ROUND", backstop)
+    metrics = []
+    got = {r["id"]: r["component"] for r in connected_components(
+        spark, edges, metrics_out=metrics).collect()}
+    return got, any(m_["jumping"] for m_ in metrics)
+
+
+@pytest.mark.parametrize("algorithm", ["pointer", "hybrid"])
+def test_components_algorithms_match_hashmin(spark, algorithm, monkeypatch):
+    """Pointer jumping changes the round count, never the fixpoint: a run
+    that jumps from the start and the default stall-armed run both land on
+    plain hash-min's labels."""
+    edges = generate_graph(spark, 300, max_edges=4, seed=11)
+    a, a_jumped = _components_in_mode(spark, edges, "hashmin", monkeypatch)
+    b, b_jumped = _components_in_mode(spark, edges, algorithm, monkeypatch)
+    assert not a_jumped
+    if algorithm == "pointer":
+        assert b_jumped
+    assert a == b
 
 
 def test_components_match_brute_on_generated_graph(spark):
