@@ -82,15 +82,6 @@ def exact_duplicates(
     )
 
 
-def dedup_exact(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Keep one row (min id) per normalized fingerprint."""
-    fp = df.withColumn("__fp", normalized_fingerprint(text_col))
-    keep = fp.groupBy("__fp").agg(F.min(id_col).alias(id_col))
-    return fp.join(keep, [ "__fp", id_col]).drop("__fp")
-
-
 # ------------------------------------------------- exact n-gram Jaccard
 def shingle_index(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3

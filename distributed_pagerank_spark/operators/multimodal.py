@@ -100,30 +100,3 @@ def extract_features(
 
     return media.mapInPandas(fe, FEATURE_SCHEMA)
 
-
-def resize_metadata(media: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize planning as a pure column transform: new dimensions for a
-    bounded-side resize (the decode/re-encode would use them in the UDF).
-    Keeps aspect ratio; JVM-side arithmetic only."""
-    w, h = F.col("meta.width"), F.col("meta.height")
-    scale = F.least(F.lit(1.0), F.lit(max_side) / F.greatest(w, h))
-    return media.select(
-        "media_id",
-        "kind",
-        F.round(w * scale).cast("int").alias("new_width"),
-        F.round(h * scale).cast("int").alias("new_height"),
-        F.octet_length("payload").alias("n_bytes"),
-    )
-
-
-def frame_sample_plan(
-    media: DataFrame, every_ms: int = 1000
-) -> DataFrame:
-    """Frame-sampling plan for video payloads: one row per planned frame
-    timestamp (explode of a JVM-side sequence — no Python)."""
-    return media.where(F.col("kind") == "video").select(
-        "media_id",
-        F.explode(
-            F.sequence(F.lit(0), F.col("meta.duration_ms"), F.lit(every_ms))
-        ).alias("frame_ms"),
-    )

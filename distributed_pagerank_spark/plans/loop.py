@@ -1,7 +1,7 @@
 """The loop harnesses every iterative plan runs on: ``fixpoint`` for
-PageRank, CC, label propagation, HITS, SCC's color and reach fixpoints
-and the k-core, coreness and k-truss peels; ``frontier`` for
-multi-source BFS and betweenness' forward pass.
+PageRank, personalized PageRank, CC, label propagation, HITS, SCC's
+color and reach fixpoints and the k-core, coreness and k-truss peels;
+``frontier`` for multi-source BFS and betweenness' forward pass.
 
 The reference runs one master loop: scatter, gather, convergence check,
 then a ``State`` snapshot replicated to the workers at the iteration
@@ -14,14 +14,15 @@ everything around it:
   (``bit_xor(xxhash64(src, dst))`` plus the algorithm's parameters) and
   the newest complete snapshot of the same job is resumed; a converged or
   budget-exhausted snapshot is returned as is;
-- one Spark action per iteration: the start state (fresh or resumed) and
-  each step's output are lazy ``localCheckpoint(eager=False)`` leaves,
-  and the iteration's only action is a write of its snapshot. That one
-  job computes the iteration (the first one also the start state),
-  caches it and cuts its lineage; the convergence statistics are
-  observed on the same job (``DataFrame.observe`` with an
-  ``Observation``), so no second aggregate runs. The previous leaf is
-  then released, and the final one is returned for the caller to free;
+- one Spark action per iteration of a loop with a convergence test:
+  the start state (fresh or resumed) and each step's output are lazy
+  ``localCheckpoint(eager=False)`` leaves, and the iteration's only
+  action is a write of its snapshot. That one job computes the
+  iteration (the first one also the start state), caches it and cuts
+  its lineage; the convergence statistics are observed on the same job
+  (``DataFrame.observe`` with an ``Observation``), so no second
+  aggregate runs. The previous leaf is then released, and the final one
+  is returned for the caller to free;
 - bounded size estimates: a leaf inherits the estimated size of the plan
   it was cut from, which a step joining the state with itself (a
   pointer jump) squares every iteration, until planning stalls in
@@ -37,14 +38,25 @@ everything around it:
 - per-partition lineage comes from the committed part files' Parquet
   footers (``part-NNNNN`` is written by state partition ``NNNNN``), read
   on the driver without a Spark job;
+- chained steps for a loop with no convergence test (``converged=None``,
+  a fixed iteration count such as personalized PageRank's): nothing is
+  observed between its iterations, so each step is planned lazily on top
+  of the last, and the chain is cut only every ``CHAIN`` iterations and
+  at ``max_iter``. A cut runs as one job, as an iteration does above
+  (lazy ``localCheckpoint``, write, statistics observed on it), and the
+  previous cut's leaf is released after it. It suits a step that reads
+  the state once, so that its plan grows linearly along the chain. Such
+  a loop saves durably only on cuts;
 - one metrics record per iteration, ``{iteration, <statistics>,
   converged, total_s}``, returned and stored in that iteration's manifest
-  (with the per-partition row counts of the snapshot).
+  (with the per-partition row counts of the snapshot). A chained
+  iteration's statistics are ``None``: no job ran to observe them.
 
 The state is keyed by a tuple of columns, ``("id",)`` for a vertex
-state. A peel's state is its surviving edge set, keyed by an endpoint;
-its statistic is the row count, and ``converged`` gets the previous
-record, so a round that removes nothing ends it (``rows_settled``).
+state, ``("set_id", "id")`` for personalized PageRank's. A peel's state
+is its surviving edge set, keyed by an endpoint; its statistic is the
+row count, and ``converged`` gets the previous record, so a round that
+removes nothing ends it (``rows_settled``).
 Loops whose partial state is a wrong answer (SCC's fixpoints, the peels)
 raise when their budget stops them unconverged (``Fixpoint.settled``).
 
@@ -90,8 +102,12 @@ tier's hot-shingle anti-join).
 
 Order-independent statistics: observed sums merge per-task partials in
 task completion order, so double-valued statistics (PageRank's
-``delta``, ``rank_sum``, ``dang_mass``) use ``exact_sum``; a run on
-many partitions gives bit-identical results every time, resumed or not.
+``delta``, ``rank_sum``, ``dang_mass``) use ``exact_sum``. In one JVM
+(local mode) a run on many partitions then gives bit-identical results
+every time, resumed or not. Across executors it does not: a step's own
+per-vertex sums (PageRank's ``sum(contrib)``) add in shuffle-fetch order,
+which depends on which executor holds which map output, so two runs on
+two executors can differ in the last bits (2.2e-19 measured on PageRank).
 
 Fault tolerance: without ``checkpoint_dir`` the iteration state lives
 only in unreplicated ``localCheckpoint`` blocks. In local mode (one JVM)
@@ -117,6 +133,9 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST = "manifest.json"
+# a loop with no convergence test cuts its lazy chain of steps every CHAIN
+# iterations (and at ``max_iter``)
+CHAIN = 5
 
 
 def loop_policy(num_partitions: int) -> dict[str, str]:
@@ -424,6 +443,12 @@ class CheckpointManager:
 
 @dataclass
 class Fixpoint:
+    """What a ``fixpoint`` run returns. ``metrics`` holds this run's
+    records; a loop with no convergence test chains its steps, so its
+    records between cuts carry ``None`` statistics. ``last`` is always a
+    cut's record (the last iteration is a cut), so its statistics are
+    set."""
+
     state: DataFrame  # the final snapshot leaf (or the resumed Parquet state)
     iterations: int
     last: dict[str, Any] | None  # the newest metrics record, if any
@@ -455,7 +480,7 @@ def fixpoint(
     init: Callable[[], DataFrame],
     step: Callable[[DataFrame, dict[str, Any] | None], tuple[DataFrame, dict]],
     stats: dict[str, Column],
-    converged: Callable[[dict[str, Any], dict[str, Any] | None], bool],
+    converged: Callable[[dict[str, Any], dict[str, Any] | None], bool] | None,
     *,
     max_iter: int,
     key: tuple[str, ...] = ("id",),
@@ -487,6 +512,11 @@ def fixpoint(
 
     The call runs in a ``measure`` block, whose partition count the
     state's ``repartition`` takes from ``loop_policy``.
+
+    With ``converged=None`` the loop has no convergence test and runs
+    ``max_iter`` steps, chained lazily and cut every ``CHAIN`` iterations
+    and at ``max_iter`` (module docstring); the records between cuts carry
+    ``None`` statistics.
 
     ``Fixpoint.state`` is the final snapshot itself (a leaf the caller
     frees with ``release_local_checkpoint``), so it may carry the step's
@@ -525,29 +555,33 @@ def fixpoint(
     )
     cols = state.columns
     aggs = [c.alias(k) for k, c in stats.items()]
-    records, iteration, done = [], start, False
+    records, iteration, done, chain = [], start, False, state
     while not done and iteration < max_iter:
         iteration += 1
         t0 = time.monotonic()
         prev = records[-1] if records else None
-        nxt, notes = step(state.select(*cols), prev)
-        snapshot = bound_estimate(nxt.localCheckpoint(eager=False))
-        save = ckpt.enabled() and (
-            iteration % checkpoint_interval == 0 or iteration >= max_iter
-        )
-        obs = Observation()
-        # the iteration's one job: computes, caches and truncates the
-        # snapshot, writes it (durably on a save iteration) and observes
-        # the statistics on the way
-        ckpt.write(snapshot.observe(obs, *aggs).select(*cols),
-                   iteration if save else None)
-        release_inputs()
-        release_local_checkpoint(state)
-        state = snapshot
-        # sums over an empty state are NULL
-        observed = obs.get
-        values = {k: 0 if observed[k] is None else observed[k] for k in stats}
-        done = converged(values, prev)
+        chain, notes = step(chain.select(*cols), prev)
+        values, save = dict.fromkeys(stats), False  # None: nothing observed
+        if converged is not None or iteration % CHAIN == 0 \
+                or iteration >= max_iter:
+            snapshot = bound_estimate(chain.localCheckpoint(eager=False))
+            save = ckpt.enabled() and (
+                iteration % checkpoint_interval == 0 or iteration >= max_iter
+            )
+            obs = Observation()
+            # the cut's one job: computes the chained steps, caches and
+            # truncates the snapshot, writes it (durably on a save
+            # iteration) and observes the statistics on the way
+            ckpt.write(snapshot.observe(obs, *aggs).select(*cols),
+                       iteration if save else None)
+            release_inputs()
+            release_local_checkpoint(state)
+            state = chain = snapshot
+            # sums over an empty state are NULL
+            observed = obs.get
+            values = {k: 0 if observed[k] is None else observed[k]
+                      for k in stats}
+            done = converged is not None and converged(values, prev)
         record = {"iteration": iteration, **values, **notes,
                   "converged": done,
                   "total_s": round(time.monotonic() - t0, 4)}

@@ -94,11 +94,6 @@ def synth_transcripts(
     )
 
 
-def vertex_id(conv_id, turn_idx):
-    """Deterministic 64-bit vertex id for a turn."""
-    return F.xxhash64(conv_id, turn_idx.cast("int") if hasattr(turn_idx, "cast") else turn_idx)
-
-
 def derive_edges(
     transcripts: DataFrame,
     reply_to: bool = True,
@@ -224,18 +219,6 @@ def tool_transitions(transcripts: DataFrame) -> DataFrame:
         .where(F.col("prev_tool").isNotNull())
         .groupBy("prev_tool", "tool")
         .agg(F.count("*").cast("long").alias("n"))
-    )
-
-
-def turn_text_invariant(transcripts: DataFrame) -> DataFrame:
-    """Per-turn text equality check under stable (conv_id, turn_idx) order.
-
-    Returns rows violating ``text == concat(conv_id,':',turn_idx,':',role)``
-    for the synthetic table — used by tests to prove derivation does not
-    permute or alter rows (BASELINE input_hint invariant).
-    """
-    return transcripts.where(
-        F.col("text") != F.concat_ws(":", "conv_id", "turn_idx", "role")
     )
 
 

@@ -28,6 +28,7 @@ from distributed_pagerank_spark.plans.labelprop import label_propagation
 from distributed_pagerank_spark.plans.loop import (
     conf_scope,
     exact_sum,
+    fixpoint,
     measure,
 )
 from distributed_pagerank_spark.plans.pagerank import pagerank
@@ -118,6 +119,45 @@ def test_one_job_per_iteration_with_session_aqe_on(spark, run):
 
     with conf_scope(spark, {"spark.sql.adaptive.enabled": "true"}):
         assert jobs_for(4) - jobs_for(2) == 2
+
+
+def test_fixpoint_without_convergence_test_chains_steps(spark):
+    """A loop with no convergence test chains its steps lazily and cuts
+    the chain every CHAIN (5) iterations and at max_iter: only the cuts'
+    records carry the statistic, two more cuts cost two more Spark jobs,
+    and the only cache left is the returned leaf."""
+    sc = spark.sparkContext
+    start = spark.range(40).select("id", F.lit(0).alias("v"))
+
+    def step(state, last):
+        return state.select("id", (F.col("v") + 1).alias("v")), {}
+
+    def run(max_iter):
+        group = f"chain-{max_iter}"
+        metrics = []
+
+        def call():
+            with measure(start) as (cached, _rows):
+                return fixpoint(
+                    spark, "chain", cached, lambda: cached, step,
+                    {"rows": F.count(F.lit(1))}, None, max_iter=max_iter,
+                    metrics_out=metrics,
+                ).state
+
+        sc.setJobGroup(group, group)
+        try:
+            rows = collect_owned(spark, call)
+        finally:
+            sc.setJobGroup("", "")
+        assert len(rows) == 40 and {r["v"] for r in rows} == {max_iter}
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), metrics
+
+    jobs, metrics = run(12)
+    assert [m["rows"] for m in metrics] == [
+        40 if i in (5, 10, 12) else None for i in range(1, 13)]
+    assert not any(m["converged"] for m in metrics)
+    assert jobs - run(5)[0] == 2
 
 
 GRAPH_CALLS = {

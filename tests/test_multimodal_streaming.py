@@ -6,8 +6,6 @@ from pyspark.sql import functions as F
 from distributed_pagerank_spark.operators.multimodal import (
     attach_binary_payload,
     extract_features,
-    frame_sample_plan,
-    resize_metadata,
     strict_decode,
 )
 from distributed_pagerank_spark.streaming.events import (
@@ -50,22 +48,6 @@ def test_strict_decoder_raises(media):
     assert "NotImplementedError" in str(ei.value) or isinstance(
         ei.value, NotImplementedError
     )
-
-
-def test_resize_metadata(media):
-    out = resize_metadata(media, max_side=64).collect()
-    for r in out:
-        assert max(r.new_width, r.new_height) <= 64
-        assert r.n_bytes > 0
-
-
-def test_frame_sample_plan(spark):
-    docs = spark.createDataFrame([(1, "x" * 400)], "doc_id long, text string")
-    vids = attach_binary_payload(docs, "doc_id", "text", kind="video")
-    frames = frame_sample_plan(vids, every_ms=1000)
-    n = frames.count()
-    dur = vids.first().meta.duration_ms
-    assert n == dur // 1000 + 1
 
 
 def test_windowed_counts_batch(spark):

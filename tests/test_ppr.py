@@ -66,7 +66,7 @@ def test_ppr_multi_matches_dense_oracle(spark, k):
 
 def test_ppr_state_stays_sparse(spark):
     # a long chain: a seed at one end reaches only k+1 vertices in k iters
-    n, k = 200, 3
+    n, k = 200, 7
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "src long, dst long"
     )
@@ -76,7 +76,9 @@ def test_ppr_state_stays_sparse(spark):
         spark, edges, seeds, k=k, metrics_out=metrics
     )
     assert out.count() == k + 1              # support = seed + k hops, not n
-    assert metrics[-1]["state_rows"] == k + 1
+    # the chained steps are cut, and their state counted, at 5 and at k
+    assert [m["state_rows"] for m in metrics] == [
+        None, None, None, None, 6, None, k + 1]
 
 
 def test_ppr_per_set_normalization_and_dangling(spark):
@@ -100,8 +102,8 @@ def test_ppr_empty_seeds_raises(spark):
 
 @pytest.mark.parametrize("k", [0, 2])
 def test_ppr_empty_seeds_releases_caches(spark, k):
-    """The empty-seeds error leaves no cached RDD behind, on the barrier
-    path (k=2) and on the zero-iteration path (k=0)."""
+    """The empty-seeds error leaves no cached RDD behind, after a run of
+    k=2 iterations and on the zero-iteration path (k=0)."""
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     seeds = spark.createDataFrame([], "set_id int, id long, weight double")
     before = cached_rdds(spark)

@@ -18,7 +18,6 @@ from distributed_pagerank_spark.functions.text import (
 )
 from distributed_pagerank_spark.operators.dedup import (
     exact_duplicates,
-    dedup_exact,
     jaccard_pairs,
     minhash_lsh_pairs,
     minhash_signatures,
@@ -67,9 +66,6 @@ def test_exact_dedup(spark, docs):
     assert len(dups) == 1
     assert dups[0]["n_docs"] == 3  # 1, 2, and 6 (normalization)
     assert dups[0]["keep_id"] == 1
-    kept = dedup_exact(docs)
-    assert kept.count() == 4
-    assert sorted(r.doc_id for r in kept.collect()) == [1, 3, 4, 5]
 
 
 def test_word_shingles(spark):
