@@ -1795,7 +1795,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _q_ann_ivf(s, d):
         # IVF coarse quantizer: seeded centroids (smallest 8 vec_ids, the
-        # deterministic tier — refine_iters stays 0 so the DuckDB twin can
+        # deterministic tier — unrefined, so the DuckDB twin can
         # reproduce the cells with ORDER BY vec_id LIMIT 8)
         emb = _t(s, d, "embeddings").select(
             "vec_id",

@@ -19,7 +19,10 @@ The three pair tiers each run in a ``plans.loop.measure`` block over
 what they read more than once (the shingle index, the signatures): one
 AQE-off job caches and counts it, and the pair search runs at the
 partition count sized from its bytes, AQE off, returning an eager
-``localCheckpoint`` the caller owns.
+``localCheckpoint`` the caller owns. Two joins broadcast when the
+block's row count bounds their small side under the caller's threshold
+(``plans.loop.broadcastable``): the Jaccard cap's hot shingles and one
+side of the MinHash bucket self-join (signatures × bands rows).
 
 All hashing is deterministic across runs, partitionings, and cluster
 sizes. Two hash families, selected by ``hash_fn``:
@@ -45,6 +48,7 @@ from distributed_pagerank_spark.functions.text import (
     word_shingles,
 )
 from distributed_pagerank_spark.plans.loop import (
+    broadcastable,
     measure,
     release_local_checkpoint,
 )
@@ -120,7 +124,7 @@ def jaccard_pairs(
     # scanned exactly once regardless of the cap. The capped index, read
     # three times, is a nested block of its own.
     with ExitStack() as blocks:
-        idx, _ = blocks.enter_context(
+        idx, rows = blocks.enter_context(
             measure(shingle_index(df, id_col, text_col, n)))
         if max_shingle_df is not None:
             hot = (
@@ -129,10 +133,14 @@ def jaccard_pairs(
                 .where(F.col("df") > max_shingle_df)
                 .select("shingle")
             )
-            # the cap's cost is one agg over the cached index plus a
-            # broadcast anti-join, run by the nested block's count
+            # the cap's cost is one agg over the cached index plus an
+            # anti-join, run by the nested block's count. A hot shingle
+            # holds more than max_shingle_df index rows, which bounds
+            # their number
+            if broadcastable(rows // (max_shingle_df + 1)):
+                hot = F.broadcast(hot)
             idx, _ = blocks.enter_context(measure(
-                idx.join(F.broadcast(hot), "shingle", "left_anti")))
+                idx.join(hot, "shingle", "left_anti")))
         sizes = idx.groupBy("id").agg(F.count("*").alias("n_sh"))
         a = idx.withColumnRenamed("id", "id_a")
         b = idx.withColumnRenamed("id", "id_b")
@@ -226,13 +234,15 @@ def minhash_lsh_pairs(
     )
     sigs = minhash_signatures(df, num_hashes, id_col, text_col, n, seed,
                               hash_fn)
-    with measure(sigs) as (sig, _):
+    with measure(sigs) as (sig, rows):
         buckets = sig.select("id", F.explode(band_arr).alias("bb")).select(
             "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
         )
+        y = buckets.alias("y")
         cand = (
             buckets.alias("x")
-            .join(buckets.alias("y"), ["band", "bucket"])
+            .join(F.broadcast(y) if broadcastable(rows * bands) else y,
+                  ["band", "bucket"])
             .where(F.col("x.id") < F.col("y.id"))
             .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
             .distinct()

@@ -214,14 +214,13 @@ def lsh_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     seed: int = 42,
-    multiprobe: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k via hyperplane LSH buckets.
 
     Corpus is bucketed once (a column expression — free at scan time);
-    each query probes its bucket and, with ``multiprobe``, all buckets at
-    Hamming distance 1 (n_planes+1 probes) to cut misses near plane
-    boundaries. Join is bucket-equi — no cross join anywhere.
+    each query probes its bucket and all buckets at Hamming distance 1
+    (n_planes+1 probes) to cut misses near plane boundaries. Join is
+    bucket-equi — no cross join anywhere.
     """
     if dim is None:
         # driver roundtrip (scans one row) — pass dim explicitly at scale
@@ -239,17 +238,14 @@ def lsh_topk(
         ),
         "qvec", planes, "qbucket",
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("qbucket"),
-            *[
-                F.col("qbucket").bitwiseXOR(F.lit(1 << i).cast("long"))
-                for i in range(n_planes)
-            ],
-        )
-        q = q.select("query_id", "qvec", F.explode(probes).alias("bucket"))
-    else:
-        q = q.select("query_id", "qvec", F.col("qbucket").alias("bucket"))
+    probes = F.array(
+        F.col("qbucket"),
+        *[
+            F.col("qbucket").bitwiseXOR(F.lit(1 << i).cast("long"))
+            for i in range(n_planes)
+        ],
+    )
+    q = q.select("query_id", "qvec", F.explode(probes).alias("bucket"))
     scored = c.join(q, "bucket").select(
         "query_id",
         "vec_id",
@@ -487,7 +483,6 @@ def ivf_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     centroids: list[tuple[int, list[float]]] | None = None,
-    refine_iters: int = 0,
 ) -> DataFrame:
     """Approximate cosine top-k via an inverted-file (IVF) coarse
     quantizer → ``(query_id, vec_id, cos_sim, rk)``.
@@ -497,13 +492,12 @@ def ivf_topk(
     cells. At scale: centroids are a broadcast-sized constant folded into
     the plan, corpus assignment is embarrassingly parallel at scan time,
     and the only shuffle is the cell-equi candidate join — ~
-    ``n_probe/n_centroids`` of the brute-force work. ``refine_iters`` runs
-    distributed Lloyd on the seed centroids first (k-means scale path).
+    ``n_probe/n_centroids`` of the brute-force work. ``centroids``
+    default to the seeded ones; pass :func:`kmeans_refine`'s to probe
+    refined cells (k-means scale path).
     """
     if centroids is None:
         centroids = seeded_centroids(corpus, n_centroids, id_col, vec_col)
-    if refine_iters:
-        centroids = kmeans_refine(corpus, centroids, refine_iters, vec_col)
     if dim is None:
         dim = len(centroids[0][1])
     use_arrow = len(centroids) * dim > MAX_UNROLLED_NODES

@@ -24,7 +24,6 @@ def numpy_pagerank(
     e: dict[int, float] | None = None,
     dup_policy: str = "distinct",
     dangling: str = "reference",
-    normalize_e: bool = True,
 ):
     """Returns (ranks: dict[id,float], iterations: int, delta: float)."""
     verts = sorted({v for edge in edges for v in edge})
@@ -41,9 +40,8 @@ def numpy_pagerank(
         evec = {v: 1.0 / n for v in verts}
     else:
         evec = {v: float(e.get(v, 0.0)) for v in verts}
-        if normalize_e:
-            t = sum(evec.values()) or 1.0
-            evec = {v: x / t for v, x in evec.items()}
+        t = sum(evec.values()) or 1.0
+        evec = {v: x / t for v, x in evec.items()}
 
     rank = {v: 1.0 / n for v in verts}
     dangling_set = [v for v in verts if out_deg.get(v, 0) == 0]

@@ -30,13 +30,16 @@ re-materialization.
 The backward hand-back picks its join shape per level from the EXACT
 slice row counts the forward pass already established (checkpoint
 leaves have unknown stats, so the planner cannot make these calls
-itself): when the successor slice is broadcastable and smaller than
+itself), through ``plans.loop.broadcastable`` — the caller's
+``autoBroadcastJoinThreshold`` at 64 bytes a row, so ``-1`` broadcasts
+nothing: when the successor slice is broadcastable and smaller than
 the current level, the per-successor factor ``(1+delta_w)/sigma_w``
 joins the edge table broadcast and is summed map-side BEFORE touching
 the current level — the (root, v→w) segment stream then lives and
 dies inside one codegen stage instead of crossing an exchange
 (measured 8× on the bench graph's 26M-segment level); otherwise the
-classic agg + left-join shape runs, with size-gated broadcast hints.
+classic agg + left-join shape runs, broadcasting the current level and
+its handed-back sums when that level is broadcastable.
 """
 
 from __future__ import annotations
@@ -49,28 +52,12 @@ from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import symmetrize
 from distributed_pagerank_spark.plans.loop import (
+    broadcastable,
     edge_table,
     frontier,
     measure,
     release_local_checkpoint,
 )
-
-
-def _broadcast_row_limit(spark: SparkSession) -> int:
-    """Max rows of a (root, wid, wsigma, wdelta) slice that may broadcast.
-
-    Checkpointed slices are LogicalRDD leaves with UNKNOWN stats, so the
-    planner can never auto-broadcast them — but the loop knows each
-    slice's exact row count from the forward pass. Gate on the session's
-    own ``autoBroadcastJoinThreshold`` (0 when disabled) at a
-    conservative 64 bytes/row (32 data + hashed-relation overhead), so
-    the hint scales with the conf, not with one host's memory. Read it
-    before ``measure`` applies ``loop_policy``, which turns automatic
-    broadcasts off.
-    """
-    threshold = spark._jsparkSession.sessionState().conf() \
-        .autoBroadcastJoinThreshold()
-    return max(0, threshold) // 64
 
 
 def betweenness(
@@ -90,7 +77,6 @@ def betweenness(
     Brandes–Pich estimate of the full sum). The result is a
     ``localCheckpoint`` the caller owns; every other cache is released.
     """
-    bcast_rows = _broadcast_row_limit(spark)
     with measure(
         (edges if directed else symmetrize(edges))
         .select("src", "dst")
@@ -157,8 +143,8 @@ def betweenness(
                 # calls itself (module docstring, guide §3).
                 w_rows = level_rows[lev + 1]
                 cur_rows = level_rows[lev]
-                bcast_cur = cur_rows <= bcast_rows
-                if w_rows <= bcast_rows and w_rows < cur_rows:
+                bcast_cur = broadcastable(cur_rows)
+                if broadcastable(w_rows) and w_rows < cur_rows:
                     # factor-aggregate shape: delta_v = sigma_v · Σ f_w
                     # with f = (1+delta_w)/sigma_w per successor pair.
                     # The edge table probes the BROADCAST factor slice

@@ -96,9 +96,21 @@ re-pays the driver's planning and closure cleaning. AQE off at the
 session's partition count trades those jobs for many near-empty tasks,
 which on a small graph costs more than it saves. Skew is the plan's to
 handle (PageRank's ``skew_salt``): AQE's skew-join split does not run
-under the policy, and joins broadcast only where the plan hints it
-(betweenness and SCC's extraction from counts they know, the Jaccard
-tier's hot-shingle anti-join).
+under the policy.
+
+Broadcast joins: under the policy a join broadcasts only where the plan
+hints it. Fixed hints sit on one-row and per-set tables (PageRank's and
+HITS' vertex count, personalized PageRank's per-set sums, the salting
+hubs). Every other hint is one rule, ``broadcastable(rows)``: a side
+whose exact row count, or an exact upper bound of it, fits
+``ROW_BYTES`` a row under the caller's
+``spark.sql.autoBroadcastJoinThreshold`` is broadcast, as Spark would
+broadcast a relation it knew the size of. The outermost ``measure``
+reads that threshold before it applies the policy and keeps it for the
+block, nested blocks included. Betweenness' backward hand-back, SCC's
+subgraph shrink, the Jaccard tier's hot-shingle anti-join and the
+MinHash bucket self-join decide through it, from counts they already
+know; a session that wants no broadcasts sets the threshold to ``-1``.
 
 Order-independent statistics: observed sums merge per-task partials in
 task completion order, so double-valued statistics (PageRank's
@@ -126,6 +138,7 @@ from __future__ import annotations
 import json
 import time
 from contextlib import contextmanager
+from contextvars import ContextVar
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterable, Iterator
 
@@ -136,6 +149,11 @@ MANIFEST = "manifest.json"
 # a loop with no convergence test cuts its lazy chain of steps every CHAIN
 # iterations (and at ``max_iter``)
 CHAIN = 5
+# bytes a broadcast row is charged: its data plus the hashed relation's
+# overhead
+ROW_BYTES = 64
+# the caller's autoBroadcastJoinThreshold, kept by the outermost measure
+_threshold: ContextVar[int | None] = ContextVar("threshold", default=None)
 
 
 def loop_policy(num_partitions: int) -> dict[str, str]:
@@ -178,6 +196,15 @@ def conf_scope(spark: SparkSession, confs: dict[str, str]):
                 pass
 
 
+def broadcastable(rows: int) -> bool:
+    """Whether a join side of ``rows`` rows (exact, or an exact upper
+    bound) is hinted ``F.broadcast``: ``rows * ROW_BYTES`` fits under
+    the threshold the outermost ``measure`` block read. Nothing is
+    broadcastable outside a block, nor at a threshold of ``-1``."""
+    threshold = _threshold.get()
+    return threshold is not None and 0 <= rows * ROW_BYTES <= threshold
+
+
 @contextmanager
 def measure(aggregate: DataFrame) -> Iterator[tuple[DataFrame, int]]:
     """Size a plan or operator from the input aggregate it reads more
@@ -194,9 +221,14 @@ def measure(aggregate: DataFrame) -> Iterator[tuple[DataFrame, int]]:
     Those two confs are the only way to set it. The block runs under
     ``loop_policy`` of that count, so every ``repartition(*key)`` and
     shuffle planned in it uses the count; on exit, also on raise, the
-    caller's confs are restored and the cache is released.
+    caller's confs are restored and the cache is released. The outermost
+    block keeps the caller's broadcast threshold for ``broadcastable``.
     """
     spark = aggregate.sparkSession
+    caller = _threshold.get()
+    token = _threshold.set(
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        if caller is None else caller)
     try:
         with conf_scope(spark, {"spark.sql.adaptive.enabled": "false"}):
             # AQE would run each shuffle map stage of the cache's plan as
@@ -213,6 +245,7 @@ def measure(aggregate: DataFrame) -> Iterator[tuple[DataFrame, int]]:
             yield aggregate, rows
     finally:
         aggregate.unpersist()
+        _threshold.reset(token)
 
 
 def edge_table(edges: DataFrame) -> DataFrame:

@@ -126,7 +126,6 @@ def pagerank(
     dup_policy: str = "distinct",
     dangling: str = "reference",
     weight_col: str | None = None,
-    normalize_e: bool = True,
     checkpoint_dir: str | None = None,
     checkpoint_interval: int = 1,
     resume: bool = True,
@@ -137,8 +136,10 @@ def pagerank(
 
     Parameters mirror the reference's ``Configuration`` (c, threshold,
     graph) plus the scale knobs the reference lacks. ``e`` is an optional
-    ``(id, e)`` DataFrame; ``skew_salt=S`` enables two-stage salted
-    aggregation over hubs with in-degree > ``hub_threshold``.
+    ``(id, e)`` DataFrame, normalized to sum 1 as the reference does on
+    load (an all-zero ``e`` is left as is); ``skew_salt=S`` enables
+    two-stage salted aggregation over hubs with in-degree >
+    ``hub_threshold``.
     ``weight_col`` names an edge-weight column: the transition probability
     becomes ``w(u,v) / Σ_x w(u,x)`` instead of ``1 / out_degree`` (dup
     edges merge by summing weight; ``dup_policy`` is subsumed).
@@ -169,16 +170,16 @@ def pagerank(
             eagg = e.agg(
                 F.expr("bit_xor(xxhash64(id, round(e, 12)))").alias("eh")
             ).first()
-            e_h = f"{eagg['eh']}|norm={normalize_e}"
+            # "|norm=True" keeps existing checkpoint directories resumable
+            e_h = f"{eagg['eh']}|norm=True"
 
         # --- E vector ----------------------------------------------------
         if e is not None:
             verts = verts.join(e, "id", "left").withColumn(
                 "e", F.coalesce(F.col("e"), F.lit(0.0)).cast("double")
             )
-            if normalize_e:
-                total_e = verts.agg(F.sum("e")).first()[0] or 1.0
-                verts = verts.withColumn("e", F.col("e") / F.lit(float(total_e)))
+            total_e = verts.agg(F.sum("e")).first()[0] or 1.0
+            verts = verts.withColumn("e", F.col("e") / F.lit(float(total_e)))
         # uniform e (1/n) is filled by init() below: the vertex count rides
         # the state materialization as a broadcast one-row aggregate instead
         # of paying its own driver job

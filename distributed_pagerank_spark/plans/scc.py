@@ -50,10 +50,12 @@ edges' bytes (``plans.loop.measure``).
 
 Scale shape: both fixpoints move only |V_r|-sized label vectors against
 a per-round cached-and-shrinking edge set (same gather-scatter economy
-as the PageRank loop); the extraction anti-join broadcasts when the
-assigned set is small. Worst case (a chain of SCCs in adversarial id
-order) degrades to O(chain length) outer rounds — the same worst case
-every coloring-family SCC algorithm has without DFS.
+as the PageRank loop). The subgraph shrink keeps the edges whose two
+endpoints both remain, in two semi-joins against the remaining vertex
+set, which broadcasts when its exact count is broadcastable
+(``plans.loop.broadcastable``). Worst case (a chain of SCCs in
+adversarial id order) degrades to O(chain length) outer rounds — the
+same worst case every coloring-family SCC algorithm has without DFS.
 
 Final labels are canonicalized to the minimum member id (one
 aggregation + join), so output is independent of which member happened
@@ -70,6 +72,7 @@ from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.degrees import vertices_from_edges
 from distributed_pagerank_spark.plans.loop import (
+    broadcastable,
     fixpoint,
     measure,
     release_local_checkpoint,
@@ -246,9 +249,8 @@ def strongly_connected_components(
                 if n_rem == 0:
                     break
                 # shrink the subgraph to the unassigned remainder
-                rem_b = (
-                    F.broadcast(remaining) if n_rem <= 1_000_000 else remaining
-                )
+                rem_b = (F.broadcast(remaining) if broadcastable(n_rem)
+                         else remaining)
                 nxt_edges = leaf(
                     cur.join(rem_b, cur["src"] == rem_b["id"], "left_semi")
                     .join(rem_b, cur["dst"] == rem_b["id"], "left_semi"),

@@ -85,10 +85,10 @@ def random_e_vector(
     Deterministic replica of the reference's random-E path
     (``pkg/graph/graph.go:150-164``: ``rand.Float64`` per node, then
     normalized on load, graph.go:93-97) — except seeded, so runs are
-    reproducible across cluster sizes. Normalization to Σe = 1 happens in
-    ``pagerank(normalize_e=True)``, mirroring the reference's load-time
-    normalization. ``hash_fn='md5'`` uses the cross-engine 60-bit hash so
-    the vector has an exact ANSI-SQL twin for oracle checks.
+    reproducible across cluster sizes. ``pagerank`` normalizes it to
+    Σe = 1, mirroring the reference's load-time normalization.
+    ``hash_fn='md5'`` uses the cross-engine 60-bit hash so the vector has
+    an exact ANSI-SQL twin for oracle checks.
     """
     if hash_fn == "md5":
         from distributed_pagerank_spark.operators.dedup import hash60_md5

@@ -98,9 +98,8 @@ def derive_edges(
     transcripts: DataFrame,
     reply_to: bool = True,
     tool_invocation: bool = True,
-    dedup: bool = True,
 ) -> DataFrame:
-    """Transcripts → ``edges(src long, dst long)``.
+    """Transcripts → distinct ``edges(src long, dst long)``.
 
     One window shuffle on ``conv_id`` produces both edge kinds; the stable
     ``turn_idx`` ordering is the per-row invariant demanded by the
@@ -146,14 +145,12 @@ def derive_edges(
                          F.col("nxt_vid").alias("dst")),
             )
         )
-    edges = (
+    return (
         base.select(F.explode(F.array(*kinds)).alias("edge"))
         .where(F.col("edge").isNotNull())
         .select("edge.src", "edge.dst")
+        .distinct()
     )
-    if dedup:
-        edges = edges.distinct()
-    return edges
 
 
 def conversation_stats(transcripts: DataFrame) -> DataFrame:

@@ -97,3 +97,26 @@ def collect_owned(spark, call):
         leaf.rdd().unpersist(False)
     assert not cached_rdds(spark) - base
     return rows
+
+
+def executed_plans(spark, call):
+    """``(call(), plans)``: the physical plan text of every SQL execution
+    ``call`` started, newest first, read from the session's in-process
+    SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def newest(n):  # the n-th newest retained execution
+        bus.waitUntilEmpty(60_000)
+        count = store.executionsCount()
+        return store.executionsList(count - n, 1).apply(0) \
+            if n <= count else None
+
+    last = newest(1)
+    before = -1 if last is None else last.executionId()
+    out = call()
+    plans = []
+    while (e := newest(len(plans) + 1)) is not None \
+            and e.executionId() > before:
+        plans.append(e.physicalPlanDescription())
+    return out, plans

@@ -5,7 +5,6 @@ from __future__ import annotations
 from collections import defaultdict, deque
 
 from distributed_pagerank_spark.plans.betweenness import betweenness
-from distributed_pagerank_spark.plans.loop import conf_scope
 from distributed_pagerank_spark.sources.generator import generate_graph
 
 from tests.conftest import edges_df
@@ -125,18 +124,3 @@ def test_betweenness_factor_agg_branch_matches_brute(spark):
     for v in expected:
         assert abs(got[v] - expected[v]) < 1e-9, v
 
-
-def test_broadcast_row_limit_parses_size_confs(spark):
-    """The row limit reads the session's typed threshold, whatever the
-    size string it was set with; -1 (off) clamps to 0."""
-    from distributed_pagerank_spark.plans.betweenness import (
-        _broadcast_row_limit,
-    )
-
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    for raw, want in (("10485760b", 10485760 // 64),
-                      ("10MB", 10 * 1024 * 1024 // 64),
-                      ("1g", 1024**3 // 64),
-                      ("-1", 0)):
-        with conf_scope(spark, {key: raw}):
-            assert _broadcast_row_limit(spark) == want, raw

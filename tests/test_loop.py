@@ -20,12 +20,15 @@ from distributed_pagerank_spark.operators.graphstats import (
     reciprocity,
 )
 from distributed_pagerank_spark.operators.linkpred import link_prediction
+from distributed_pagerank_spark.plans.betweenness import betweenness
 from distributed_pagerank_spark.plans.bfs import multi_source_bfs
 from distributed_pagerank_spark.plans.components import connected_components
 from distributed_pagerank_spark.plans.hits import hits
 from distributed_pagerank_spark.plans.kcore import k_core
 from distributed_pagerank_spark.plans.labelprop import label_propagation
 from distributed_pagerank_spark.plans.loop import (
+    ROW_BYTES,
+    broadcastable,
     conf_scope,
     exact_sum,
     fixpoint,
@@ -40,7 +43,12 @@ from distributed_pagerank_spark.plans.triangles import (
 from distributed_pagerank_spark.plans.truss import k_truss
 from distributed_pagerank_spark.sources.generator import generate_graph
 
-from tests.conftest import collect_owned, edges_df, partitions
+from tests.conftest import (
+    collect_owned,
+    edges_df,
+    executed_plans,
+    partitions,
+)
 
 SCOPED = (
     "spark.sql.adaptive.enabled",
@@ -245,6 +253,74 @@ def test_plan_jobs_same_with_session_aqe_on(spark, name):
     off = run("false")
     assert off[1]  # a case with an empty result checks little
     assert off == run("true")
+
+
+THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+
+
+def test_broadcastable_reads_callers_threshold(spark):
+    """The broadcast rule admits ``threshold // ROW_BYTES`` rows of the
+    caller's typed threshold, whatever size string set it, and nothing at
+    -1. A nested block keeps the caller's threshold, not its outer
+    block's policy (-1); outside any block nothing is broadcastable."""
+    for raw, threshold in (("10485760b", 10485760), ("10MB", 10 * 1024**2),
+                           ("1g", 1024**3), ("-1", -1)):
+        limit = threshold // ROW_BYTES
+
+        def admits():
+            if threshold < 0:
+                return not broadcastable(0)
+            return broadcastable(limit) and not broadcastable(limit + 1)
+
+        with conf_scope(spark, {THRESHOLD: raw}):
+            assert not broadcastable(0), raw
+            with measure(spark.range(3)):
+                assert admits(), raw
+                with measure(spark.range(2)):
+                    assert spark.conf.get(THRESHOLD) == "-1"
+                    assert admits(), raw
+                assert admits(), raw
+            assert not broadcastable(0), raw
+
+
+# a funnel from root 0 through 4 and 10 vertices into vertex 100: the
+# backward pass takes the factor-aggregate shape at level 2 (|w| = 1 <
+# |cur| = 10) and the classic shape at level 1 (|w| = 10 >= |cur| = 4)
+FUNNEL = ([(0, i) for i in range(1, 5)]
+          + [(1 + j % 4, 10 + j) for j in range(10)]
+          + [(10 + j, 100) for j in range(10)])
+# vertex 5 reaches both cycles, so SCC's first outer round assigns only
+# {5} and shrinks the subgraph to the other five vertices
+SCC_EDGES = [(5, 0), (0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 3)]
+
+SHAPE_CALLS = {
+    "minhash_lsh_pairs": lambda spark: minhash_lsh_pairs(
+        _docs_table(spark)(), threshold=0.3),
+    "jaccard_pairs_capped": lambda spark: jaccard_pairs(
+        _docs_table(spark)(), threshold=0.3, max_shingle_df=3),
+    "strongly_connected_components": lambda spark:
+        strongly_connected_components(spark, edges_df(spark, SCC_EDGES)),
+    "betweenness": lambda spark: betweenness(
+        spark, edges_df(spark, FUNNEL),
+        spark.createDataFrame([(0,)], "root long")),
+}
+
+
+@pytest.mark.parametrize("name", list(SHAPE_CALLS))
+def test_join_shapes_agree_without_broadcasts(spark, name):
+    """The joins that ``broadcastable`` gates broadcast at the default
+    threshold and are sort-merge joins at -1, with the same rows."""
+    op = SHAPE_CALLS[name]
+
+    def run(threshold):
+        with conf_scope(spark, {THRESHOLD: threshold}):
+            rows, plans = executed_plans(
+                spark, lambda: collect_owned(spark, lambda: op(spark)))
+        return sorted(rows), any("BroadcastHashJoin" in p for p in plans)
+
+    default, broadcast = run("10MB")
+    assert default and broadcast
+    assert run("-1") == (default, False)
 
 
 def test_fixpoint_restores_caller_confs(spark):
