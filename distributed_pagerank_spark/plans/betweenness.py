@@ -56,7 +56,7 @@ from distributed_pagerank_spark.plans.loop import (
     edge_table,
     frontier,
     measure,
-    release_local_checkpoint,
+    own,
 )
 
 
@@ -75,7 +75,7 @@ def betweenness(
     (default) symmetrizes the edge table. A vertex's score counts only
     dependencies of the sampled roots (scale by |V|/K for the
     Brandes–Pich estimate of the full sum). The result is a
-    ``localCheckpoint`` the caller owns; every other cache is released.
+    ``localCheckpoint`` the caller owns.
     """
     with measure(
         (edges if directed else symmetrize(edges))
@@ -111,6 +111,8 @@ def betweenness(
             expand, key=("root", "id"), max_depth=max_depth,
             metrics_out=metrics_out,
         )
+        for level in levels:
+            own(level)
 
         # ---- backward pass: delta accumulates deepest-level-first. Each
         # level's delta slice is a LAZY localCheckpoint: no action runs until
@@ -123,7 +125,6 @@ def betweenness(
         # a backward runtime value, so laziness costs nothing. Under the
         # plan's policy only the explicit hints below broadcast.
         contributions: list[DataFrame] = []
-        delta_slices: list[DataFrame] = []  # released after `out` materializes
         delta_above: DataFrame | None = None  # (root, id, sigma, delta)
         for lev in range(len(levels) - 1, 0, -1):
             cur = levels[lev]
@@ -163,7 +164,7 @@ def betweenness(
                         .groupBy("root", F.col("src").alias("id"))
                         .agg(F.sum("f").alias("s"))
                     )
-                    cur_delta = (
+                    cur_delta = own(
                         cur.join(efac, ["root", "id"], "left")
                         .select(
                             "root", "id", "sigma",
@@ -202,7 +203,7 @@ def betweenness(
                     )
                     if bcast_cur:
                         handed = F.broadcast(handed)
-                    cur_delta = (
+                    cur_delta = own(
                         cur.join(handed, ["root", "id"], "left")
                         .select(
                             "root", "id", "sigma",
@@ -211,7 +212,6 @@ def betweenness(
                         .localCheckpoint(eager=False)
                     )
             delta_above = cur_delta
-            delta_slices.append(cur_delta)
             contributions.append(cur_delta.select("id", "delta"))
 
         if not contributions:
@@ -224,9 +224,4 @@ def betweenness(
                 .agg(F.sum("delta").alias("betweenness"))
                 .localCheckpoint(eager=True)
             )
-        for sl in delta_slices:
-            release_local_checkpoint(sl)
-        for lv in levels:
-            release_local_checkpoint(lv)
-        e.unpersist()
     return out

@@ -57,9 +57,11 @@ def multi_source_bfs(
     view; pass ``True`` to follow edge direction.
 
     Rounds run to ``max_depth`` or until every frontier is empty,
-    whichever is first. The result is the union of the per-depth slices,
-    ``localCheckpoint`` leaves the caller owns (free each with
-    ``release_local_checkpoint``). Empty ``sources`` raise ``ValueError``.
+    whichever is first. The result is a lazy union of the per-depth
+    slices, ``localCheckpoint`` leaves that stay cached until nothing
+    references the result (``release_local_checkpoint`` of the result
+    does not free them; see ``plans/loop.py``). Empty ``sources`` raise
+    ``ValueError``.
     """
     with measure(
         (edges if directed else symmetrize(edges)).select("src", "dst")
@@ -79,7 +81,6 @@ def multi_source_bfs(
             expand, key=("root", "id"), max_depth=max_depth,
             metrics_out=metrics_out,
         )
-        e.unpersist()
     if not slices:
         raise ValueError("empty sources: no BFS roots")
     return reduce(DataFrame.unionByName, slices)

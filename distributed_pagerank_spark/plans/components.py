@@ -86,18 +86,15 @@ def label_exchange(
     # vertices that symmetrize drops) both derive from it
     with measure(edges.select("src", "dst")) as (raw, _):
         sym = edge_table(symmetrize(raw))
-        try:
-            run = fixpoint(
-                spark, name, sym,
-                lambda: vertices_from_edges(raw).select(
-                    "id", F.col("id").alias(label)),
-                lambda labels, last: step(sym, labels, last),
-                {"changed": F.sum((F.col(label) != F.col("old")).cast("long"))},
-                lambda s, _: s["changed"] == 0,
-                inputs=[raw], **loop,
-            )
-        finally:
-            sym.unpersist()
+        run = fixpoint(
+            spark, name, sym,
+            lambda: vertices_from_edges(raw).select(
+                "id", F.col("id").alias(label)),
+            lambda labels, last: step(sym, labels, last),
+            {"changed": F.sum((F.col(label) != F.col("old")).cast("long"))},
+            lambda s, _: s["changed"] == 0,
+            inputs=[raw], **loop,
+        )
     if not run.converged:
         # stacklevel 3: the line that called connected_components or
         # label_propagation

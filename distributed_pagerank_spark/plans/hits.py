@@ -77,11 +77,12 @@ def hits(
     authority vector is ≤ ``eps`` when ``eps > 0``.
 
     Returns normalized ``(id, hub, auth)`` over all vertices; vertices
-    with no in-links get auth 0, with no out-links hub 0. The scores read
-    the final snapshot, a ``localCheckpoint`` leaf the caller owns (free
-    it with ``release_local_checkpoint``). The iteration state lives
-    only in unreplicated local checkpoints, so losing an executor
-    mid-run aborts the run.
+    with no in-links get auth 0, with no out-links hub 0. The scores are
+    a lazy view over the final snapshot, a ``localCheckpoint`` leaf that
+    stays cached until nothing references the scores
+    (``release_local_checkpoint`` of the scores does not free it; see
+    ``plans/loop.py``). The iteration state lives only in unreplicated
+    local checkpoints, so losing an executor mid-run aborts the run.
     """
     if max_iter < 1:
         raise ValueError("max_iter must be >= 1")
@@ -133,15 +134,11 @@ def hits(
             "h_mass": exact_sum(F.col("hub_raw")),
             "delta": exact_sum(F.abs(F.col("auth") - F.col("auth_old"))),
         }
-        try:
-            run = fixpoint(
-                spark, "hits", e, init, step, stats,
-                lambda s, last: eps > 0 and last is not None and s["delta"] <= eps,
-                max_iter=max_iter + 1, inputs=[e],
-            )
-        finally:
-            fwd.unpersist()
-            rev.unpersist()
+        run = fixpoint(
+            spark, "hits", e, init, step, stats,
+            lambda s, last: eps > 0 and last is not None and s["delta"] <= eps,
+            max_iter=max_iter + 1, inputs=[e],
+        )
     h_mass = float(run.last["h_mass"] or 1.0)
     scores = run.state.select(
         "id", (F.col("hub_raw") / F.lit(h_mass)).alias("hub"), "auth"

@@ -34,7 +34,7 @@ from distributed_pagerank_spark.operators.degrees import symmetrize
 from distributed_pagerank_spark.plans.loop import (
     fixpoint,
     measure,
-    release_local_checkpoint,
+    own,
     rows_settled,
 )
 
@@ -94,8 +94,10 @@ def k_core(
     list cannot represent). Raises ``RuntimeError`` when ``max_iter``
     rounds end before the peel settles.
 
-    The result reads the final edge set, a ``localCheckpoint`` leaf the
-    caller owns (free it with ``release_local_checkpoint``).
+    The result is a lazy view over the final edge set, a
+    ``localCheckpoint`` leaf that stays cached until nothing references
+    the result (``release_local_checkpoint`` of the result does not free
+    it; see ``plans/loop.py``).
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -141,28 +143,24 @@ def coreness(
             (F.col("src") != F.col("dst")).cast("long").alias("core"),
         )]
         cores: list[DataFrame] = []
-        try:
-            while rows:
-                k = len(cores) + 2
-                if k > max_k:
-                    raise RuntimeError(f"the {max_k}-core is not empty")
-                # level k starts from the (k−1)-core: sym, then the last core
-                core, rows = _peel(
-                    spark, cores[-1] if cores else sym, k, rows,
-                    max_iter_per_level, metrics_out,
-                    [] if cores else [sym],
-                )
-                cores.append(core)
-                labels.append(core.select(
-                    F.col("src").alias("id"),
-                    F.lit(k).cast("long").alias("core"),
-                ))
-            return (
-                reduce(DataFrame.unionByName, labels)
-                .groupBy("id")
-                .agg(F.max("core").alias("core"))
-                .localCheckpoint(eager=True)
+        while rows:
+            k = len(cores) + 2
+            if k > max_k:
+                raise RuntimeError(f"the {max_k}-core is not empty")
+            # level k starts from the (k−1)-core: sym, then the last core
+            core, rows = _peel(
+                spark, cores[-1] if cores else sym, k, rows,
+                max_iter_per_level, metrics_out,
+                [] if cores else [sym],
             )
-        finally:
-            for core in cores:
-                release_local_checkpoint(core)
+            cores.append(own(core))
+            labels.append(core.select(
+                F.col("src").alias("id"),
+                F.lit(k).cast("long").alias("core"),
+            ))
+        return (
+            reduce(DataFrame.unionByName, labels)
+            .groupBy("id")
+            .agg(F.max("core").alias("core"))
+            .localCheckpoint(eager=True)
+        )

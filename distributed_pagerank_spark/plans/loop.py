@@ -22,7 +22,7 @@ everything around it:
   its lineage; the convergence statistics are observed on the same job
   (``DataFrame.observe`` with an ``Observation``), so no second
   aggregate runs. The previous leaf is then released, and the final one
-  is returned for the caller to free;
+  is returned to the caller;
 - bounded size estimates: a leaf inherits the estimated size of the plan
   it was cut from, which a step joining the state with itself (a
   pointer jump) squares every iteration, until planning stalls in
@@ -64,8 +64,8 @@ raise when their budget stops them unconverged (``Fixpoint.settled``).
 where level ``d`` is what ``expand`` reaches from level ``d−1`` minus
 the visited set, a lazy union of the earlier levels' slices. Each level
 is one job that caches its slice and observes its row count; the slices
-and their counts are the caller's. It stops at an empty slice or at
-``max_depth`` (declared truncation, which does not raise).
+and their counts are returned to the caller. It stops at an empty slice
+or at ``max_depth`` (declared truncation, which does not raise).
 
 Execution policy: one for the whole call, chosen once from what the call
 measures first. This holds for every plan here and for the one-shot
@@ -82,12 +82,11 @@ the call, from its setup tables (``edge_table``) through the loop to the
 finalization or an operator's final plan, runs under ``loop_policy`` of
 that count: AQE off, ``spark.sql.shuffle.partitions`` at it, and
 automatic broadcast joins off; the caller's confs come back on return
-and on raise (``conf_scope``), and the cache is released then too. In a
-loop the edges ⋈ state and state ⋈ aggregate joins are then
-co-partitioned sort-merge joins over the same hash layout: each
-iteration is one job with at most one shuffle, and a one-shot plan (the
-triangle kernel, an operator) runs its shuffles inside the jobs of its
-actions.
+and on raise (``conf_scope``). In a loop the edges ⋈ state and state ⋈
+aggregate joins are then co-partitioned sort-merge joins over the same
+hash layout: each iteration is one job with at most one shuffle, and a
+one-shot plan (the triangle kernel, an operator) runs its shuffles
+inside the jobs of its actions.
 The two halves only pay together. AQE on splits every query stage, and
 every runtime broadcast, into a job of its own (about 5.5 jobs per loop
 iteration; 16 jobs for a triangle count that takes 4 under the
@@ -111,6 +110,20 @@ block, nested blocks included. Betweenness' backward hand-back, SCC's
 subgraph shrink, the Jaccard tier's hot-shingle anti-join and the
 MinHash bucket self-join decide through it, from counts they already
 know; a session that wants no broadcasts sets the threshold to ``-1``.
+
+Cache ownership: every cache a call makes is owned by its innermost
+``measure`` block, which releases them all when it exits, on return and
+on raise: the block's input aggregate, the ``edge_table`` layouts and
+whatever else the plan hands to ``own`` (a persisted DataFrame or a
+``localCheckpoint`` leaf). A plan may release one of them earlier to
+free memory mid-run; it writes no release code of its own for the end
+of the call. ``fixpoint`` and ``frontier`` release the leaves they hold
+when an iteration raises. What a call returns is never owned: it is a
+leaf, or a lazy view over one (a ``fixpoint``'s final state, read after
+the block exits), and it stays cached for the caller.
+``release_local_checkpoint`` frees a returned leaf; a lazy view over a
+leaf is not a leaf, so that call leaves it cached, and Spark's context
+cleaner frees it once nothing references it.
 
 Order-independent statistics: observed sums merge per-task partials in
 task completion order, so double-valued statistics (PageRank's
@@ -140,6 +153,7 @@ import time
 from contextlib import contextmanager
 from contextvars import ContextVar
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any, Callable, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -154,6 +168,9 @@ CHAIN = 5
 ROW_BYTES = 64
 # the caller's autoBroadcastJoinThreshold, kept by the outermost measure
 _threshold: ContextVar[int | None] = ContextVar("threshold", default=None)
+# the releases of the caches the innermost measure block owns (unset
+# outside a block, where ``own`` raises LookupError)
+_owned: ContextVar[list] = ContextVar("owned")
 
 
 def loop_policy(num_partitions: int) -> dict[str, str]:
@@ -221,19 +238,22 @@ def measure(aggregate: DataFrame) -> Iterator[tuple[DataFrame, int]]:
     Those two confs are the only way to set it. The block runs under
     ``loop_policy`` of that count, so every ``repartition(*key)`` and
     shuffle planned in it uses the count; on exit, also on raise, the
-    caller's confs are restored and the cache is released. The outermost
-    block keeps the caller's broadcast threshold for ``broadcastable``.
+    caller's confs are restored and every cache the block owns is
+    released, the aggregate first (``own``). The outermost block keeps
+    the caller's broadcast threshold for ``broadcastable``.
     """
     spark = aggregate.sparkSession
     caller = _threshold.get()
     token = _threshold.set(
         spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
         if caller is None else caller)
+    owned: list[Callable[[], Any]] = []
+    scope = _owned.set(owned)
     try:
         with conf_scope(spark, {"spark.sql.adaptive.enabled": "false"}):
             # AQE would run each shuffle map stage of the cache's plan as
             # a job of its own
-            rows = aggregate.persist().count()
+            rows = own(aggregate.persist()).count()
         plan = aggregate._jdf.queryExecution().optimizedPlan()
         size = int(plan.stats().sizeInBytes())
         advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
@@ -244,19 +264,32 @@ def measure(aggregate: DataFrame) -> Iterator[tuple[DataFrame, int]]:
         with conf_scope(spark, loop_policy(n)):
             yield aggregate, rows
     finally:
-        aggregate.unpersist()
+        _owned.reset(scope)
         _threshold.reset(token)
+        for release in owned:
+            release()
+
+
+def own(df: DataFrame) -> DataFrame:
+    """Hand ``df``, a persisted DataFrame or a ``localCheckpoint`` leaf,
+    to the innermost ``measure`` block, which releases it when it exits,
+    on return and on raise. Returns ``df``."""
+    # a persisted DataFrame sits in the SQL cache manager, a leaf's RDD
+    # does not
+    _owned.get().append(df.unpersist if df.is_cached
+                        else partial(release_local_checkpoint, df))
+    return df
 
 
 def edge_table(edges: DataFrame) -> DataFrame:
     """``edges`` as a loop's static side: hash-partitioned by ``src`` into
     the enclosing ``measure`` block's partition count and sorted by it
-    (CSR-style), persisted with the plan of that block's policy. A loop's
-    joins on ``src`` then read it in place, with no edge-side shuffle or
-    sort. The first job that reads it fills the cache, so ``edges`` must
-    stay readable until then; the caller unpersists the table.
+    (CSR-style), persisted with the plan of that block's policy and owned
+    by that block. A loop's joins on ``src`` then read it in place, with
+    no edge-side shuffle or sort. The first job that reads it fills the
+    cache, so ``edges`` must stay readable until then.
     """
-    return edges.repartition("src").sortWithinPartitions("src").persist()
+    return own(edges.repartition("src").sortWithinPartitions("src").persist())
 
 
 def exact_sum(col: Column) -> Column:
@@ -554,6 +587,7 @@ def fixpoint(
     ``Fixpoint.state`` is the final snapshot itself (a leaf the caller
     frees with ``release_local_checkpoint``), so it may carry the step's
     extra columns besides the start state's; callers select their own.
+    When an iteration raises, the leaves the run holds are released.
     """
     ckpt = CheckpointManager(spark, checkpoint_dir)
     fingerprint = None
@@ -589,46 +623,55 @@ def fixpoint(
     cols = state.columns
     aggs = [c.alias(k) for k, c in stats.items()]
     records, iteration, done, chain = [], start, False, state
-    while not done and iteration < max_iter:
-        iteration += 1
-        t0 = time.monotonic()
-        prev = records[-1] if records else None
-        chain, notes = step(chain.select(*cols), prev)
-        values, save = dict.fromkeys(stats), False  # None: nothing observed
-        if converged is not None or iteration % CHAIN == 0 \
-                or iteration >= max_iter:
-            snapshot = bound_estimate(chain.localCheckpoint(eager=False))
-            save = ckpt.enabled() and (
-                iteration % checkpoint_interval == 0 or iteration >= max_iter
-            )
-            obs = Observation()
-            # the cut's one job: computes the chained steps, caches and
-            # truncates the snapshot, writes it (durably on a save
-            # iteration) and observes the statistics on the way
-            ckpt.write(snapshot.observe(obs, *aggs).select(*cols),
-                       iteration if save else None)
-            release_inputs()
-            release_local_checkpoint(state)
-            state = chain = snapshot
-            # sums over an empty state are NULL
-            observed = obs.get
-            values = {k: 0 if observed[k] is None else observed[k]
-                      for k in stats}
-            done = converged is not None and converged(values, prev)
-        record = {"iteration": iteration, **values, **notes,
-                  "converged": done,
-                  "total_s": round(time.monotonic() - t0, 4)}
-        records.append(record)
-        if metrics_out is not None:
-            metrics_out.append(record)
-        if ckpt.enabled() and done and not save:
-            # converged between cadence points: save the cached state
-            save = True
-            ckpt.write(state.select(*cols), iteration)
-        if save:
-            # durable resume point; iterating continues on the cached copy
-            ckpt.commit(iteration, {"algo": name, "fingerprint": fingerprint,
-                                    "metrics": record})
+    snapshot = state  # the cut in flight, once a cut has begun
+    try:
+        while not done and iteration < max_iter:
+            iteration += 1
+            t0 = time.monotonic()
+            prev = records[-1] if records else None
+            chain, notes = step(chain.select(*cols), prev)
+            # None: nothing observed
+            values, save = dict.fromkeys(stats), False
+            if converged is not None or iteration % CHAIN == 0 \
+                    or iteration >= max_iter:
+                snapshot = bound_estimate(chain.localCheckpoint(eager=False))
+                save = ckpt.enabled() and (
+                    iteration % checkpoint_interval == 0
+                    or iteration >= max_iter
+                )
+                obs = Observation()
+                # the cut's one job: computes the chained steps, caches and
+                # truncates the snapshot, writes it (durably on a save
+                # iteration) and observes the statistics on the way
+                ckpt.write(snapshot.observe(obs, *aggs).select(*cols),
+                           iteration if save else None)
+                release_inputs()
+                release_local_checkpoint(state)
+                state = chain = snapshot
+                # sums over an empty state are NULL
+                observed = obs.get
+                values = {k: 0 if observed[k] is None else observed[k]
+                          for k in stats}
+                done = converged is not None and converged(values, prev)
+            record = {"iteration": iteration, **values, **notes,
+                      "converged": done,
+                      "total_s": round(time.monotonic() - t0, 4)}
+            records.append(record)
+            if metrics_out is not None:
+                metrics_out.append(record)
+            if ckpt.enabled() and done and not save:
+                # converged between cadence points: save the cached state
+                save = True
+                ckpt.write(state.select(*cols), iteration)
+            if save:
+                # durable resume point; iterating continues on the cached copy
+                ckpt.commit(iteration, {"algo": name,
+                                        "fingerprint": fingerprint,
+                                        "metrics": record})
+    except BaseException:
+        release_local_checkpoint(state)
+        release_local_checkpoint(snapshot)
+        raise
     release_inputs()  # zero iterations: the lazy start state never ran
     return Fixpoint(state, iteration, records[-1] if records else last, done,
                     records)
@@ -653,7 +696,8 @@ def frontier(
     is the caller's declared semantics, so it does not raise.
 
     The slices and their exact row counts are the caller's; it frees the
-    slices with ``release_local_checkpoint``. The call runs in a
+    slices with ``release_local_checkpoint``. When a level raises, the
+    slices made so far are released here. The call runs in a
     ``measure`` block, and levels 1.. append ``{iteration, rows,
     converged, total_s}`` records (converged: the slice is empty) to
     ``metrics_out``.
@@ -661,28 +705,32 @@ def frontier(
     slices: list[DataFrame] = []
     rows: list[int] = []
     visited = None
-    for depth in range(max_depth + 1):
-        t0 = time.monotonic()
-        plan = (
-            start.repartition(*key)
-            if visited is None
-            else expand(slices[-1], depth).join(visited, list(key),
-                                                "left_anti")
-        )
-        level = bound_estimate(plan.localCheckpoint(eager=False))
-        obs = Observation()
-        level.observe(obs, F.count("*").alias("rows")) \
-            .write.format("noop").mode("overwrite").save()
-        n = obs.get["rows"]
-        if depth and metrics_out is not None:
-            metrics_out.append({"iteration": depth, "rows": n,
-                                "converged": n == 0,
-                                "total_s": round(time.monotonic() - t0, 4)})
-        if n == 0:
+    try:
+        for depth in range(max_depth + 1):
+            t0 = time.monotonic()
+            plan = (
+                start.repartition(*key)
+                if visited is None
+                else expand(slices[-1], depth).join(visited, list(key),
+                                                    "left_anti")
+            )
+            slices.append(bound_estimate(plan.localCheckpoint(eager=False)))
+            obs = Observation()
+            slices[-1].observe(obs, F.count("*").alias("rows")) \
+                .write.format("noop").mode("overwrite").save()
+            n = obs.get["rows"]
+            if depth and metrics_out is not None:
+                total_s = round(time.monotonic() - t0, 4)
+                metrics_out.append({"iteration": depth, "rows": n,
+                                    "converged": n == 0, "total_s": total_s})
+            if n == 0:
+                release_local_checkpoint(slices.pop())
+                break
+            rows.append(n)
+            seen = slices[-1].select(*key)
+            visited = seen if visited is None else visited.unionByName(seen)
+    except BaseException:
+        for level in slices:
             release_local_checkpoint(level)
-            break
-        slices.append(level)
-        rows.append(n)
-        seen = level.select(*key)
-        visited = seen if visited is None else visited.unionByName(seen)
+        raise
     return slices, rows

@@ -47,6 +47,7 @@ from distributed_pagerank_spark.plans.loop import (
     exact_sum,
     fixpoint,
     measure,
+    own,
 )
 
 
@@ -83,8 +84,7 @@ def _prepare_edges(
     vertices, cached_distinct_edges, edge_count)``; the edge count is the
     aggregate's, which the edge product shares (the empty-graph check).
     The edge product fills on the first job that reads it, and the
-    aggregate must stay cached until then; both caches are released on
-    exit.
+    aggregate must stay cached until then.
     """
     if weight_col is not None:
         # weighted graph: duplicate (src, dst) rows merge by SUMMING their
@@ -109,11 +109,8 @@ def _prepare_edges(
     with measure(ecnt) as (ecnt, m):
         # the join's own shuffle by src already is the edge table's layout
         ew = edge_table(e.join(deg, e["src"] == deg["id"]).select(*edge_cols))
-        try:
-            # the vertex set reads the cache, not the raw input
-            yield ew, vertices_from_edges(e), ecnt, m
-        finally:
-            ew.unpersist()
+        # the vertex set reads the cache, not the raw input
+        yield ew, vertices_from_edges(e), ecnt, m
 
 
 def pagerank(
@@ -230,7 +227,7 @@ def pagerank(
                     thr = hub_threshold if hub_threshold is not None else max(
                         64, int(n_edges / max(n, 1)) * 16
                     )
-                    hubs = hub_ids(edges_w, thr).persist()
+                    hubs = own(hub_ids(edges_w, thr).persist())
                     hubs.count()
             elif dangling == "redistribute":
                 dang_mass = last["dang_mass"]
@@ -300,8 +297,6 @@ def pagerank(
             ) or 1.0
             ranks = ranks.withColumn("rank", F.col("rank") / F.lit(float(total)))
 
-        if hubs is not None:
-            hubs.unpersist()
         delta = run.last["delta"] if run.last is not None else float("inf")
         return PageRankResult(ranks, run.iterations, delta, run.converged,
                               run.metrics)

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.plans.loop import (
     fixpoint,
+    own,
     release_local_checkpoint,
 )
 from distributed_pagerank_spark.plans.pagerank import _prepare_edges
@@ -57,9 +58,11 @@ def personalized_pagerank_multi(
 
     ``seeds``: ``(set_id, id, weight)`` with ``weight > 0`` — each set is
     normalized to a distribution internally. Returns ``(set_id, id,
-    rank)`` for the sparse support of each set, per-set normalized; it
-    reads the final state leaf, which the caller owns (free it with
-    ``release_local_checkpoint``).
+    rank)`` for the sparse support of each set, per-set normalized: a
+    lazy view over the final state, a ``localCheckpoint`` leaf that stays
+    cached until nothing references the result
+    (``release_local_checkpoint`` of the result does not free it; see
+    ``plans/loop.py``).
 
     Scale shape per iteration: one join of the sparse state against the
     shared edge product (state side exchanges on ``id`` — the sparse
@@ -73,7 +76,7 @@ def personalized_pagerank_multi(
         # iteration's full-outer reuses this layout. No count of its own:
         # the cache fills inside the first cut's job
         totals = seeds.groupBy("set_id").agg(F.sum("weight").alias("__tot"))
-        e_vec = (
+        e_vec = own(
             seeds.join(F.broadcast(totals), "set_id")
             .select(
                 "set_id", "id",
@@ -97,25 +100,22 @@ def personalized_pagerank_multi(
                 ).alias("rank"),
             ), {}
 
-        try:
-            # no convergence test: the harness chains the steps between cuts
-            run = fixpoint(
-                spark, "ppr", edges_w,
-                lambda: e_vec.select("set_id", "id", F.col("e").alias("rank")),
-                step, {"state_rows": F.count(F.lit(1))}, None,
-                max_iter=k, key=("set_id", "id"), inputs=[ecnt],
-                metrics_out=metrics_out,
-            )
-            # state ⊇ the seed support (full-outer against e_vec): an
-            # empty state means the seeds were empty
-            rows = run.state.count() if run.last is None \
-                else run.last["state_rows"]
-            if rows == 0:
-                release_local_checkpoint(run.state)
-                raise ValueError(
-                    "empty seeds: no personalization vectors to rank")
-        finally:
-            e_vec.unpersist()
+        # no convergence test: the harness chains the steps between cuts
+        run = fixpoint(
+            spark, "ppr", edges_w,
+            lambda: e_vec.select("set_id", "id", F.col("e").alias("rank")),
+            step, {"state_rows": F.count(F.lit(1))}, None,
+            max_iter=k, key=("set_id", "id"), inputs=[ecnt],
+            metrics_out=metrics_out,
+        )
+        # state ⊇ the seed support (full-outer against e_vec): an
+        # empty state means the seeds were empty
+        rows = run.state.count() if run.last is None \
+            else run.last["state_rows"]
+        if rows == 0:
+            release_local_checkpoint(run.state)
+            raise ValueError(
+                "empty seeds: no personalization vectors to rank")
     sums = run.state.groupBy("set_id").agg(F.sum("rank").alias("__sum"))
     return (
         run.state.join(F.broadcast(sums), "set_id")

@@ -75,6 +75,7 @@ from distributed_pagerank_spark.plans.loop import (
     broadcastable,
     fixpoint,
     measure,
+    own,
     release_local_checkpoint,
 )
 
@@ -141,142 +142,129 @@ def strongly_connected_components(
     strongly connected component (singletons label themselves).
 
     The result is a ``localCheckpoint`` the caller owns (free it with
-    ``release_local_checkpoint``); every other cache is released here,
-    also when a round budget runs out (``RuntimeError``). ``metrics_out``
+    ``release_local_checkpoint``). A round budget that runs out raises
+    ``RuntimeError``. ``metrics_out``
     gets one ``{iteration, assigned, remaining, converged, total_s}``
     record per outer round; ``converged`` is ``remaining == 0``."""
     metrics = metrics_out if metrics_out is not None else []
-    held: list[DataFrame] = []  # every leaf this call made and still holds
 
     def leaf(df: DataFrame, eager: bool) -> DataFrame:
         # a flat lineage leaf: each inner round embeds the plans of the
         # edge sets and start states, so they must not deepen per round
-        out = df.localCheckpoint(eager=eager)
-        held.append(out)
-        return out
-
-    def release(*dfs: DataFrame) -> None:
-        for df in dfs:
-            held.remove(df)
-            release_local_checkpoint(df)
+        return own(df.localCheckpoint(eager=eager))
 
     with measure(edges.select("src", "dst")) as (raw, _):
-        try:
-            cur = leaf(
-                raw.where(F.col("src") != F.col("dst"))
-                .distinct()
-                .repartition("src"),
-                eager=True,
+        cur = leaf(
+            raw.where(F.col("src") != F.col("dst"))
+            .distinct()
+            .repartition("src"),
+            eager=True,
+        )
+        # vertex set from the UN-filtered input: a vertex whose only
+        # edge is a self-loop is still a (singleton) SCC and must appear
+        verts = leaf(
+            vertices_from_edges(raw).repartition("id"),
+            eager=True,
+        )
+        raw.unpersist()
+        assigned_parts: list[DataFrame] = []
+        for outer in range(1, max_outer + 1):
+            t0 = time.monotonic()
+
+            # 1. color: forward max-label fixpoint with pointer jumps
+            colors = own(_max_prop(
+                spark, cur, verts.select("id", F.col("id").alias("c")),
+                max_prop, "src", "dst", f"scc_color_{outer}",
+            ))
+
+            # 2. confirm: within-class backward reachability to the
+            # root. The class-restricted edge set (both endpoints the
+            # same color) gets the same jumping max fixpoint in the
+            # REVERSE direction: m(v) = max id reachable from v along
+            # class edges; v reaches the root iff m(v) == c(v) (the
+            # root is the class maximum). The reach fixpoint's first
+            # job materializes the lazy edge leaf.
+            csrc = colors.select(
+                F.col("id").alias("__cs"), F.col("c").alias("__ccs")
             )
-            # vertex set from the UN-filtered input: a vertex whose only
-            # edge is a self-loop is still a (singleton) SCC and must appear
-            verts = leaf(
-                vertices_from_edges(raw).repartition("id"),
-                eager=True,
+            cdst = colors.select(
+                F.col("id").alias("__cd"), F.col("c").alias("__ccd")
             )
-            raw.unpersist()
-            assigned_parts: list[DataFrame] = []
-            for outer in range(1, max_outer + 1):
-                t0 = time.monotonic()
-
-                # 1. color: forward max-label fixpoint with pointer jumps
-                colors = _max_prop(
-                    spark, cur, verts.select("id", F.col("id").alias("c")),
-                    max_prop, "src", "dst", f"scc_color_{outer}",
-                )
-                held.append(colors)
-
-                # 2. confirm: within-class backward reachability to the
-                # root. The class-restricted edge set (both endpoints the
-                # same color) gets the same jumping max fixpoint in the
-                # REVERSE direction: m(v) = max id reachable from v along
-                # class edges; v reaches the root iff m(v) == c(v) (the
-                # root is the class maximum). The reach fixpoint's first
-                # job materializes the lazy edge leaf.
-                csrc = colors.select(
-                    F.col("id").alias("__cs"), F.col("c").alias("__ccs")
-                )
-                cdst = colors.select(
-                    F.col("id").alias("__cd"), F.col("c").alias("__ccd")
-                )
-                class_edges = leaf(
-                    cur.join(csrc, cur["src"] == F.col("__cs"))
-                    .join(cdst, cur["dst"] == F.col("__cd"))
-                    .where(F.col("__ccs") == F.col("__ccd"))
-                    .select("src", "dst"),
-                    eager=False,
-                )
-                m_final = _max_prop(
-                    spark, class_edges,
-                    colors.select("id", F.col("id").alias("c")),
-                    max_prop, "dst", "src", f"scc_reach_{outer}",
-                )
-                held.append(m_final)
-                flags = (
-                    colors.select("id", F.col("c").alias("color"))
-                    .join(m_final.select("id", F.col("c").alias("m")), "id")
-                    .select(
-                        "id",
-                        F.col("color").alias("c"),
-                        (F.col("m") == F.col("color")).alias("flag"),
-                    )
-                )
-
-                # 3. extract. Both outputs are leaves materialized by their
-                # counts before the fixpoint states they read are released
-                assigned = leaf(
-                    flags.where(F.col("flag"))
-                    .select("id", F.col("c").alias("root")),
-                    eager=False,
-                )
-                n_done = assigned.count()
-                remaining = leaf(
-                    flags.where(~F.col("flag")).select("id"), eager=False
-                )
-                n_rem = remaining.count()
-                assigned_parts.append(assigned)
-                metrics.append(
-                    {
-                        "iteration": outer,
-                        "assigned": n_done,
-                        "remaining": n_rem,
-                        "converged": n_rem == 0,
-                        "total_s": round(time.monotonic() - t0, 4),
-                    }
-                )
-                release(colors, m_final, class_edges, verts)
-                verts = remaining
-                if n_rem == 0:
-                    break
-                # shrink the subgraph to the unassigned remainder
-                rem_b = (F.broadcast(remaining) if broadcastable(n_rem)
-                         else remaining)
-                nxt_edges = leaf(
-                    cur.join(rem_b, cur["src"] == rem_b["id"], "left_semi")
-                    .join(rem_b, cur["dst"] == rem_b["id"], "left_semi"),
-                    eager=True,
-                )
-                release(cur)
-                cur = nxt_edges
-            else:
-                raise RuntimeError(
-                    f"SCC did not converge in {max_outer} outer rounds"
-                )
-
-            labeled = assigned_parts[0]
-            for part in assigned_parts[1:]:
-                labeled = labeled.unionByName(part)
-            # canonicalize: component = min member id (root is the
-            # max-reaching member, an artifact of the coloring order).
-            # plain equi-join: canon has one row per SCC, which can approach
-            # |V| (all-singleton graphs) — not broadcastable in general, so
-            # it is a sort-merge join at the run's partition count
-            canon = labeled.groupBy("root").agg(F.min("id").alias("component"))
-            return (
-                labeled.join(canon, "root")
-                .select("id", "component")
-                .localCheckpoint(eager=True)
+            class_edges = leaf(
+                cur.join(csrc, cur["src"] == F.col("__cs"))
+                .join(cdst, cur["dst"] == F.col("__cd"))
+                .where(F.col("__ccs") == F.col("__ccd"))
+                .select("src", "dst"),
+                eager=False,
             )
-        finally:
-            for df in held:
+            m_final = own(_max_prop(
+                spark, class_edges,
+                colors.select("id", F.col("id").alias("c")),
+                max_prop, "dst", "src", f"scc_reach_{outer}",
+            ))
+            flags = (
+                colors.select("id", F.col("c").alias("color"))
+                .join(m_final.select("id", F.col("c").alias("m")), "id")
+                .select(
+                    "id",
+                    F.col("color").alias("c"),
+                    (F.col("m") == F.col("color")).alias("flag"),
+                )
+            )
+
+            # 3. extract. Both outputs are leaves materialized by their
+            # counts before the fixpoint states they read are released
+            assigned = leaf(
+                flags.where(F.col("flag"))
+                .select("id", F.col("c").alias("root")),
+                eager=False,
+            )
+            n_done = assigned.count()
+            remaining = leaf(
+                flags.where(~F.col("flag")).select("id"), eager=False
+            )
+            n_rem = remaining.count()
+            assigned_parts.append(assigned)
+            metrics.append(
+                {
+                    "iteration": outer,
+                    "assigned": n_done,
+                    "remaining": n_rem,
+                    "converged": n_rem == 0,
+                    "total_s": round(time.monotonic() - t0, 4),
+                }
+            )
+            for df in (colors, m_final, class_edges, verts):
                 release_local_checkpoint(df)
+            verts = remaining
+            if n_rem == 0:
+                break
+            # shrink the subgraph to the unassigned remainder
+            rem_b = (F.broadcast(remaining) if broadcastable(n_rem)
+                     else remaining)
+            nxt_edges = leaf(
+                cur.join(rem_b, cur["src"] == rem_b["id"], "left_semi")
+                .join(rem_b, cur["dst"] == rem_b["id"], "left_semi"),
+                eager=True,
+            )
+            release_local_checkpoint(cur)
+            cur = nxt_edges
+        else:
+            raise RuntimeError(
+                f"SCC did not converge in {max_outer} outer rounds"
+            )
+
+        labeled = assigned_parts[0]
+        for part in assigned_parts[1:]:
+            labeled = labeled.unionByName(part)
+        # canonicalize: component = min member id (root is the
+        # max-reaching member, an artifact of the coloring order).
+        # plain equi-join: canon has one row per SCC, which can approach
+        # |V| (all-singleton graphs) — not broadcastable in general, so
+        # it is a sort-merge join at the run's partition count
+        canon = labeled.groupBy("root").agg(F.min("id").alias("component"))
+        return (
+            labeled.join(canon, "root")
+            .select("id", "component")
+            .localCheckpoint(eager=True)
+        )

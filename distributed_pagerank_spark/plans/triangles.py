@@ -95,8 +95,7 @@ def _on_oriented(
     edges: DataFrame, plan: Callable[[DataFrame], DataFrame]
 ) -> DataFrame:
     """``plan`` over the cached orientation of ``edges``, as an eager
-    ``localCheckpoint`` the caller owns; the orientation is released on
-    return and on raise."""
+    ``localCheckpoint`` the caller owns."""
     with orientation(edges) as (o, _):
         return plan(o).localCheckpoint(eager=True)
 

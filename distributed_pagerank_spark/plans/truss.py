@@ -75,8 +75,10 @@ def k_truss(
     Empty result when no k-truss exists. ``k < 3`` is rejected (the
     2-truss is the whole edge set — no triangle constraint to enforce).
     Raises ``RuntimeError`` when ``max_iter`` rounds end before the peel
-    settles. The result reads the final edge set, a ``localCheckpoint``
-    leaf the caller owns (free it with ``release_local_checkpoint``).
+    settles. The result is a lazy view over the final edge set, a
+    ``localCheckpoint`` leaf that stays cached until nothing references
+    the result (``release_local_checkpoint`` of the result does not free
+    it; see ``plans/loop.py``).
     """
     if k < 3:
         raise ValueError("k must be >= 3")

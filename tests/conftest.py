@@ -68,10 +68,27 @@ ALL_FIXTURES = {
 }
 
 
+# stands among the RDD ids for a query held by Spark's SQL cache manager
+SQL_CACHE = "sql-cache"
+
+
 def cached_rdds(spark):
-    """Ids of the RDDs the JVM holds persisted. Compare them as sets: the
-    context cleaner may drop other tests' dead caches meanwhile."""
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    """Ids of the RDDs the JVM holds persisted, plus ``SQL_CACHE`` while
+    Spark's SQL cache manager holds a query: a persisted query that no
+    job has read has no RDD yet. Compare them as sets: the context
+    cleaner may drop other tests' dead caches meanwhile."""
+    ids = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        ids.add(SQL_CACHE)
+    return ids
+
+
+def cache_base(spark):
+    """``cached_rdds`` at the start of a check, taken after the SQL cache
+    manager is emptied, so that a query the checked call leaves in it
+    shows as new."""
+    spark.catalog.clearCache()
+    return cached_rdds(spark)
 
 
 def _leaves(df):
@@ -89,7 +106,7 @@ def collect_owned(spark, call):
     """Rows of the DataFrame ``call()`` returns. Checks that the caches
     the call left are exactly the result's leaves, which the caller owns;
     releases them after the collect and checks nothing else is left."""
-    base = cached_rdds(spark)
+    base = cache_base(spark)
     out = call()
     assert cached_rdds(spark) - base == leaf_rdds(out)
     rows = out.collect()

@@ -8,7 +8,7 @@ import pytest
 
 from distributed_pagerank_spark.plans.bfs import multi_source_bfs
 
-from tests.conftest import cached_rdds
+from tests.conftest import cache_base, cached_rdds
 
 EDGES = [
     (1, 2), (2, 3), (3, 4), (4, 5),      # path
@@ -92,7 +92,7 @@ def test_bfs_empty_sources_raises(spark):
 def test_bfs_empty_sources_releases_caches(spark):
     edges = spark.createDataFrame(EDGES, "src long, dst long")
     sources = spark.createDataFrame([], "root long, id long")
-    base = cached_rdds(spark)
+    base = cache_base(spark)
     with pytest.raises(ValueError):
         multi_source_bfs(spark, edges, sources)
     assert not cached_rdds(spark) - base

@@ -4,7 +4,14 @@ import numpy as np
 import pytest
 
 from distributed_pagerank_spark.plans.hits import hits
-from tests.conftest import CHAIN5, STAR_IN, STAR_OUT, cached_rdds, edges_df
+from tests.conftest import (
+    CHAIN5,
+    STAR_IN,
+    STAR_OUT,
+    cache_base,
+    cached_rdds,
+    edges_df,
+)
 
 
 def hits_numpy(pairs, k):
@@ -96,7 +103,7 @@ def test_hits_one_job_per_iteration(spark, eps):
 def test_hits_empty_edges_releases_caches(spark):
     """The empty-edge-table error leaves no cached RDD behind."""
     edges = spark.createDataFrame([], "src long, dst long")
-    before = cached_rdds(spark)
+    before = cache_base(spark)
     with pytest.raises(ValueError):
         hits(spark, edges, max_iter=3)
     assert not cached_rdds(spark) - before

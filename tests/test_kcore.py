@@ -4,7 +4,7 @@ import pytest
 
 from distributed_pagerank_spark.plans.kcore import coreness, k_core
 from distributed_pagerank_spark.sources.generator import generate_graph
-from tests.conftest import ALL_FIXTURES, cached_rdds, edges_df
+from tests.conftest import ALL_FIXTURES, cache_base, cached_rdds, edges_df
 
 
 def brute_k_core(pairs, k):
@@ -130,7 +130,7 @@ PATH4 = [(1, 2), (2, 3), (3, 4)]
 def test_peel_budget_exhausted_raises_and_releases(spark, call):
     """A peel stopped by its budget is a supergraph of the core: it must
     raise, not return it, and leave no cache behind."""
-    base = cached_rdds(spark)
+    base = cache_base(spark)
     with pytest.raises(RuntimeError, match="did not converge|not empty"):
         call(spark)
     assert not cached_rdds(spark) - base

@@ -6,6 +6,7 @@ restored, and statistics that do not depend on task completion order."""
 from __future__ import annotations
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from distributed_pagerank_spark.operators.dedup import (
@@ -24,17 +25,20 @@ from distributed_pagerank_spark.plans.betweenness import betweenness
 from distributed_pagerank_spark.plans.bfs import multi_source_bfs
 from distributed_pagerank_spark.plans.components import connected_components
 from distributed_pagerank_spark.plans.hits import hits
-from distributed_pagerank_spark.plans.kcore import k_core
+from distributed_pagerank_spark.plans.kcore import coreness, k_core
 from distributed_pagerank_spark.plans.labelprop import label_propagation
 from distributed_pagerank_spark.plans.loop import (
     ROW_BYTES,
+    CheckpointManager,
     broadcastable,
     conf_scope,
     exact_sum,
     fixpoint,
+    frontier,
     measure,
 )
 from distributed_pagerank_spark.plans.pagerank import pagerank
+from distributed_pagerank_spark.plans.ppr import personalized_pagerank_multi
 from distributed_pagerank_spark.plans.scc import strongly_connected_components
 from distributed_pagerank_spark.plans.triangles import (
     local_clustering_coefficient,
@@ -44,6 +48,8 @@ from distributed_pagerank_spark.plans.truss import k_truss
 from distributed_pagerank_spark.sources.generator import generate_graph
 
 from tests.conftest import (
+    cache_base,
+    cached_rdds,
     collect_owned,
     edges_df,
     executed_plans,
@@ -321,6 +327,90 @@ def test_join_shapes_agree_without_broadcasts(spark, name):
     default, broadcast = run("10MB")
     assert default and broadcast
     assert run("-1") == (default, False)
+
+
+class Injected(Exception):
+    """The failure a raise-path test injects."""
+
+
+# a triangle with a tail pointing back into it: every loop below runs at
+# least two iterations on it (SCC's color fixpoint carries 8 down the
+# tail, the peels strip the tail one edge a round, the truss peel drops
+# the tail in round 1 and checks in round 2)
+LOLLIPOP = [(0, 1), (1, 2), (2, 0)] + [(i + 1, i) for i in range(2, 8)]
+
+MID_LOOP_CALLS = {
+    "pagerank": lambda spark, e: pagerank(spark, e, eps=0.0, max_iter=5),
+    "pagerank_skew_salt": lambda spark, e: pagerank(
+        spark, e, eps=0.0, max_iter=5, skew_salt=2, hub_threshold=1),
+    # PPR writes only at its cuts, iterations 5 and 10
+    "personalized_pagerank_multi": lambda spark, e:
+        personalized_pagerank_multi(spark, e, spark.createDataFrame(
+            [(0, 8, 1.0)], "set_id int, id long, weight double"), k=10),
+    "hits": lambda spark, e: hits(spark, e, max_iter=5),
+    "connected_components": connected_components,
+    "label_propagation": label_propagation,
+    "k_core": lambda spark, e: k_core(spark, e, 2),
+    "coreness": coreness,
+    "k_truss": lambda spark, e: k_truss(spark, e, 3),
+    "strongly_connected_components": strongly_connected_components,
+}
+
+
+def _released_on_raise(spark, error, call):
+    """``call()`` raises ``error`` and leaves no cache behind: no new
+    persisted RDD and nothing in the SQL cache manager."""
+    base = cache_base(spark)
+    with pytest.raises(error):
+        call()
+    assert not cached_rdds(spark) - base
+
+
+@pytest.mark.parametrize("name", list(MID_LOOP_CALLS))
+def test_mid_loop_raise_releases_caches(spark, monkeypatch, name):
+    """A call whose second snapshot write raises releases every cache
+    it made: its setup tables and the loop's leaves, the one the write
+    was cutting included."""
+    write, calls = CheckpointManager.write, []
+
+    def failing(self, df, iteration):
+        calls.append(iteration)
+        if len(calls) == 2:
+            raise Injected("second snapshot write")
+        write(self, df, iteration)
+
+    monkeypatch.setattr(CheckpointManager, "write", failing)
+    edges = edges_df(spark, LOLLIPOP)
+    _released_on_raise(
+        spark, Injected, lambda: MID_LOOP_CALLS[name](spark, edges))
+
+
+@pytest.mark.parametrize("call", [multi_source_bfs, betweenness],
+                         ids=["multi_source_bfs", "betweenness"])
+def test_roots_without_root_column_release_caches(spark, call):
+    """A roots frame with no ``root`` column fails after the edge
+    table is registered, before any job reads it: the table leaves the
+    SQL cache manager all the same."""
+    roots = spark.createDataFrame([(0,)], "id long")
+    _released_on_raise(
+        spark, AnalysisException,
+        lambda: call(spark, edges_df(spark, LOLLIPOP), roots))
+
+
+def test_frontier_level_raise_releases_slices(spark):
+    """An ``expand`` that raises at depth 2 leaves none of the slices
+    the earlier levels cached."""
+
+    def expand(level, depth):
+        if depth == 2:
+            raise Injected("depth 2")
+        return level.select((F.col("id") + 1).alias("id"))
+
+    def call():
+        with measure(spark.range(5)) as (cached, _):
+            frontier(cached, expand, key=("id",), max_depth=5)
+
+    _released_on_raise(spark, Injected, call)
 
 
 def test_fixpoint_restores_caller_confs(spark):

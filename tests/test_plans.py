@@ -50,29 +50,6 @@ def test_graph_edges_no_cartesian_and_pruned(spark):
     assert "l_comment" not in plan and "o_comment" not in plan
 
 
-def test_jaccard_capped_hot_filter_is_broadcast(spark):
-    """The hot-shingle anti-join must broadcast the (tiny) hot set, not
-    shuffle the full shingle index against it."""
-    from distributed_pagerank_spark.operators.dedup import (
-        jaccard_pairs,
-        shingle_index,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    idx = shingle_index(docs).persist()
-    hot = (
-        idx.groupBy("shingle").agg(F.count("*").alias("df"))
-        .where(F.col("df") > 3).select("shingle")
-    )
-    capped = idx.join(F.broadcast(hot), "shingle", "left_anti")
-    plan = plan_of(capped)
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-    idx.unpersist()
-    # and the operator output itself still computes (materialized inside)
-    out = jaccard_pairs(docs, threshold=0.9, max_shingle_df=3)
-    assert out.columns == ["id_a", "id_b", "jaccard"]
-
-
 def test_pagerank_iteration_no_extra_state_exchange(spark):
     """The per-iteration update must reuse the cached, pre-partitioned
     layouts: the only shuffle is the contribution stream's gather agg, so

@@ -8,7 +8,7 @@ import pytest
 
 from distributed_pagerank_spark.plans.ppr import personalized_pagerank_multi
 
-from tests.conftest import cached_rdds
+from tests.conftest import cache_base, cached_rdds
 
 EDGES = [
     (1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4),
@@ -106,7 +106,7 @@ def test_ppr_empty_seeds_releases_caches(spark, k):
     k=2 iterations and on the zero-iteration path (k=0)."""
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     seeds = spark.createDataFrame([], "set_id int, id long, weight double")
-    before = cached_rdds(spark)
+    before = cache_base(spark)
     with pytest.raises(ValueError):
         personalized_pagerank_multi(spark, edges, seeds, k=k)
     assert not cached_rdds(spark) - before

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from distributed_pagerank_spark.plans.loop import release_local_checkpoint
 from distributed_pagerank_spark.plans.scc import strongly_connected_components
 from distributed_pagerank_spark.sources.generator import generate_graph
-from tests.conftest import edges_df
+from tests.conftest import cache_base, cached_rdds, edges_df
 
 
 def brute_scc(pairs):
@@ -135,21 +135,15 @@ def test_scc_releases_all_but_its_output(spark):
     caller owns and frees with ``release_local_checkpoint``. Compared as
     RDD ids rather than counts: the JVM's context cleaner may drop other
     tests' dead caches meanwhile."""
-    sc = spark.sparkContext
-    edges = gen80(spark).persist()
-    edges.count()
-
-    def cached():
-        return set(sc._jsc.getPersistentRDDs().keySet())
-
-    base = cached()
+    edges = gen80(spark).localCheckpoint()
+    base = cache_base(spark)
     out = strongly_connected_components(spark, edges)
     out_rdd = out._jdf.queryExecution().analyzed().rdd().id()
-    assert cached() - base == {out_rdd}
+    assert cached_rdds(spark) - base == {out_rdd}
     release_local_checkpoint(out)
-    assert not cached() - base
+    assert not cached_rdds(spark) - base
     # the budget error path releases everything too
     with pytest.raises(RuntimeError):
         strongly_connected_components(spark, edges, max_prop=1)
-    assert not cached() - base
-    edges.unpersist()
+    assert not cached_rdds(spark) - base
+    release_local_checkpoint(edges)

@@ -9,7 +9,7 @@ import pytest
 from distributed_pagerank_spark.plans.truss import k_truss
 from distributed_pagerank_spark.sources.generator import generate_graph
 
-from tests.conftest import cached_rdds, edges_df
+from tests.conftest import cache_base, cached_rdds, edges_df
 
 
 def brute_truss(pairs, k):
@@ -83,7 +83,7 @@ def test_k_truss_budget_exhausted_raises_and_releases(spark):
     supergraph of the truss: it must raise and leave no cache behind."""
     pairs = [(a, b) for a in range(4) for b in range(a + 1, 4)]
     pairs += [(3, 4), (2, 4), (4, 5), (3, 5)]
-    base = cached_rdds(spark)
+    base = cache_base(spark)
     with pytest.raises(RuntimeError, match="did not converge"):
         k_truss(spark, edges_df(spark, pairs), k=4, max_iter=1)
     assert not cached_rdds(spark) - base

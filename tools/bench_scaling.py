@@ -15,13 +15,13 @@ varies 3-30× run to run), so the protocol is:
 - per level, WARMUP iterations are discarded (JIT ramp) and the
   per-iteration wall-clock of the remaining MEASURE iterations is pooled
   across the two runs;
-- lineage-truncation iterations (every 5th — the reliable checkpoint) are
-  reported separately and excluded from the steady-state median; the
-  amortized number (total measured wall / iterations, truncations in) is
-  reported alongside;
+- the loop cuts its lineage every iteration (a local checkpoint on the
+  iteration's own job), so every measured iteration is a steady-state
+  one; the median is reported with the amortized mean (total measured
+  wall / iterations) alongside;
 - each level also measures the per-iteration phases once, outside the
   timed loop: scatter join, scatter+gather agg, full update
-  (join+project+persist), reliable checkpoint, and the FIXED DRIVER FLOOR
+  (join+project+persist), and the FIXED DRIVER FLOOR
   (a count job over the already-cached state — pure scheduling/py4j/GC
   cost that does not shrink with cores and bounds achievable efficiency:
   ``eff_max = (W/8 + C) / (4 * (W/32 + C))``);
@@ -72,13 +72,12 @@ def _population_key() -> dict:
 
 
 def _clean_leg_scratch() -> None:
-    """tmpfs scratch (shuffle files, truncation checkpoints) is RAM; a
-    crashed or finished leg leaving 30+ GB behind starved a later 48g leg
-    into the OOM killer. Every leg runs in its OWN subdirectory of
-    SCRATCH_ROOT (never the shared spark-local, which foreground sessions
-    may be using), so after the leg's subprocess has exited its directory
-    is provably dead and is removed — no pgrep heuristics, no race with
-    unrelated JVMs."""
+    """tmpfs scratch (shuffle files) is RAM; a crashed or finished leg
+    leaving 30+ GB behind starved a later 48g leg into the OOM killer.
+    Every leg runs in its OWN subdirectory of SCRATCH_ROOT (never the
+    shared spark-local, which foreground sessions may be using), so after
+    the leg's subprocess has exited its directory is provably dead and is
+    removed — no pgrep heuristics, no race with unrelated JVMs."""
     import shutil
 
     if os.path.isdir(SCRATCH_ROOT):
@@ -146,7 +145,6 @@ def worker(cores: int) -> None:
             "spark.local.dir": f"{scratch}/local",
         },
     )
-    spark.sparkContext.setCheckpointDir(f"{scratch}/ck")
     t0 = time.monotonic()
     edges = spark.read.parquet(EDGES_PATH)
     m = edges.count()
@@ -159,13 +157,7 @@ def worker(cores: int) -> None:
     }):
         res = pagerank(spark, edges, c=0.85, eps=0.0,
                        max_iter=WARMUP + MEASURE)
-    measured = res.metrics[WARMUP:]
-    # r6: pagerank cuts lineage every iteration (no eager-truncation
-    # iterations remain), so the "truncated" marker is never set and
-    # trunc_iter_s stays [] — field kept so pooled JSONs from earlier
-    # rounds still merge.
-    steady = [x["total_s"] for x in measured if not x.get("truncated")]
-    trunc = [x["total_s"] for x in measured if x.get("truncated")]
+    steady = [x["total_s"] for x in res.metrics[WARMUP:]]
 
     phases = {}
     if os.environ.get("SCALING_PHASES", "1") == "1":
@@ -177,7 +169,6 @@ def worker(cores: int) -> None:
         "vertices": res.ranks.count(),
         "gen_s": round(gen_s, 1),
         "steady_iter_s": [round(x, 2) for x in steady],
-        "trunc_iter_s": [round(x, 2) for x in trunc],
         "phases_s": phases,
     }))
 
@@ -231,7 +222,6 @@ def _measure_phases(spark, edges, parts) -> dict:
         snap.count()
         snap.unpersist()
     update_s = _timed(_update)
-    ckpt_s = _timed(lambda: state.checkpoint(eager=True), reps=2)
     # fixed driver floor: a job over the already-cached state does ~zero
     # executor work — what remains is scheduling + py4j + result fetch,
     # the per-iteration cost that does NOT scale with cores.
@@ -240,7 +230,6 @@ def _measure_phases(spark, edges, parts) -> dict:
         "scatter_join": scatter_s,
         "scatter_plus_gather": gather_s,
         "full_update": update_s,
-        "reliable_checkpoint": ckpt_s,
         "driver_floor_job": floor_s,
     }
 
@@ -319,12 +308,10 @@ def main() -> None:
         print(line, flush=True)
         s = samples.setdefault(cores, {
             "cores": cores, "edges": r["edges"], "vertices": r["vertices"],
-            "gen_s": [], "steady_iter_s": [], "trunc_iter_s": [],
-            "phases_s": [],
+            "gen_s": [], "steady_iter_s": [], "phases_s": [],
         })
         s["gen_s"].append(r["gen_s"])
         s["steady_iter_s"].extend(r["steady_iter_s"])
-        s["trunc_iter_s"].extend(r["trunc_iter_s"])
         if r["phases_s"]:
             s["phases_s"].append(r["phases_s"])
         # crash-safe: park everything gathered so far after every leg
@@ -355,11 +342,11 @@ def main() -> None:
         # the true cost, p25 a jitter-robust middle ground. All three are
         # reported; BENCH/BASELINE.md discusses which to trust.
         p25 = steady[(len(steady) - 1) // 4]
-        n_iters = len(s["steady_iter_s"]) + len(s["trunc_iter_s"])
-        total = sum(s["steady_iter_s"]) + sum(s["trunc_iter_s"])
+        n_iters = len(steady)
+        total = sum(steady)
         result["levels"][str(cores)] = {
             **{k: s[k] for k in ("cores", "edges", "vertices", "gen_s",
-                                 "steady_iter_s", "trunc_iter_s", "phases_s")},
+                                 "steady_iter_s", "phases_s")},
             "median_steady_iter_s": round(med, 3),
             "min_steady_iter_s": round(steady[0], 3),
             "p25_steady_iter_s": round(p25, 3),
