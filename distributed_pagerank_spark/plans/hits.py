@@ -24,7 +24,8 @@ the next auth normalization). Superstep ``j``:
   authority vector ``auth_raw = Eᵀ·hub_raw``;
 - observes on its write ``a_mass = Σ auth_raw``, ``h_mass = Σ hub_raw``
   and ``delta = Σ|auth_{j-1} − auth_{j-2}|`` (0 on superstep 1), all with
-  ``exact_sum``.
+  ``exact_sum`` (exact long digit sums, so the scores do not depend on
+  task completion order; each mass must stay below 2^62).
 
 So the metrics record of superstep ``j`` reports iteration ``j − 1``'s
 delta, which stops the loop when ``eps > 0`` and ``delta ≤ eps``; the

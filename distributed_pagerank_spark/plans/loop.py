@@ -37,7 +37,8 @@ everything around it:
   from the newest complete iteration;
 - per-partition lineage comes from the committed part files' Parquet
   footers (``part-NNNNN`` is written by state partition ``NNNNN``), read
-  on the driver without a Spark job;
+  on the driver without a Spark job, with one set of read options built
+  from the session's Hadoop conf per commit;
 - chained steps for a loop with no convergence test (``converged=None``,
   a fixed iteration count such as personalized PageRank's): nothing is
   observed between its iterations, so each step is planned lazily on top
@@ -127,12 +128,17 @@ cleaner frees it once nothing references it.
 
 Order-independent statistics: observed sums merge per-task partials in
 task completion order, so double-valued statistics (PageRank's
-``delta``, ``rank_sum``, ``dang_mass``) use ``exact_sum``. In one JVM
-(local mode) a run on many partitions then gives bit-identical results
-every time, resumed or not. Across executors it does not: a step's own
-per-vertex sums (PageRank's ``sum(contrib)``) add in shuffle-fetch order,
-which depends on which executor holds which map output, so two runs on
-two executors can differ in the last bits (2.2e-19 measured on PageRank).
+``delta``, ``rank_sum``, ``dang_mass``; HITS' masses and delta) use
+``exact_sum``: each term is rounded to a multiple of 2^-96 and split
+into four integer digits (weights 1 down to 2^-96) whose long sums are
+exact in any order, then joined once per aggregate. The result is
+within ``n·2^-96`` plus 1 ulp of the exact sum for totals below 2^62.
+In one JVM (local mode) a run on many partitions then gives
+bit-identical results every time, resumed or not. Across executors it
+does not: a step's own per-vertex sums (PageRank's ``sum(contrib)``) add
+in shuffle-fetch order, which depends on which executor holds which map
+output, so two runs on two executors can differ in the last bits
+(2.2e-19 measured on PageRank).
 
 Fault tolerance: without ``checkpoint_dir`` the iteration state lives
 only in unreplicated ``localCheckpoint`` blocks. In local mode (one JVM)
@@ -154,6 +160,7 @@ from contextlib import contextmanager
 from contextvars import ContextVar
 from dataclasses import dataclass, field
 from functools import partial
+from types import SimpleNamespace
 from typing import Any, Callable, Iterable, Iterator
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
@@ -256,9 +263,8 @@ def measure(aggregate: DataFrame) -> Iterator[tuple[DataFrame, int]]:
             rows = own(aggregate.persist()).count()
         plan = aggregate._jdf.queryExecution().optimizedPlan()
         size = int(plan.stats().sizeInBytes())
-        advisory = spark._jvm.org.apache.spark.network.util.JavaUtils \
-            .byteStringAsBytes(spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+        advisory = _java(spark).byte_string(spark.conf.get(
+            "spark.sql.adaptive.advisoryPartitionSizeInBytes"))
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
         n = max(1, min(cap, -(-size // advisory)))
         with conf_scope(spark, loop_policy(n)):
@@ -299,15 +305,34 @@ def exact_sum(col: Column) -> Column:
     Observed statistics merge per-task partial sums in completion order,
     and double addition is not associative, so a loop on more than one
     partition could observe a different last bit on every run. Here each
-    term is split into its first 18 decimal places and the 18 after them
-    (fixed per-row roundings); each part sums exactly as a decimal, in any
-    order, and the two totals combine in double. Holds for totals below
-    10^20.
+    term ``x`` is split into four integer digits of weights 1, 2^-32,
+    2^-64 and 2^-96: digit ``k`` is ``rint(x·2^32k) − 2^32·rint(x·2^32(k−1))``
+    and digit 0 is ``rint(x)``; below digit 0 each is at most 2^31 in
+    magnitude. Power-of-two scaling, ``rint`` and that difference are
+    exact, and the digits add up to ``rint(x·2^96)·2^-96``, so each
+    digit's long sum is exact in any order. Once per aggregate, not per
+    row, the three upper sums are joined exactly into the total down to
+    2^-64, a ``decimal(38,0)`` count of 2^-64 units, and that and the
+    last sum are rounded to double and added in a fixed order.
+
+    Range and resolution: every term is rounded to a multiple of 2^-96,
+    so the result is within ``n·2^-96`` plus 1 ulp of the exact sum of
+    ``n`` terms. The terms' integer parts and their running sums must
+    stay below 2^62 in magnitude (``|total| < 2^62``). Under the
+    session's ANSI mode (Spark's default) a term or a total out of that
+    range fails its long cast, long sum or decimal join; with ANSI off it
+    would saturate, wrap or read NULL.
     """
-    exact = "decimal(38,18)"  # 20 integer and 18 fraction digits
-    hi = col.cast(exact)
-    lo = ((col - hi.cast("double")) * 1e18).cast(exact)
-    return F.sum(hi).cast("double") + F.sum(lo).cast("double") * 1e-18
+    x = col.cast("double")
+    near = [F.rint(x * 2.0 ** (32 * k)) for k in range(4)]
+    digits = [F.sum(near[0].cast("long"))] + [
+        F.sum((near[k] - near[k - 1] * 2.0**32).cast("long"))
+        for k in (1, 2, 3)
+    ]
+    units = ((digits[0].cast("decimal(38,0)") * 2**32 + digits[1]) * 2**32
+             + digits[2])
+    return (units.cast("double") * 2.0**-64
+            + digits[3].cast("double") * 2.0**-96)
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -379,15 +404,38 @@ def bound_estimate(leaf: DataFrame) -> DataFrame:
     )
 
 
-def _fs(spark: SparkSession, path: str):
+# the JVM classes and static methods this module calls, with the JVM they
+# were resolved in: each dotted name of a py4j path (``jvm.org.apache...``)
+# costs a gateway round trip and a class-path lookup in the JVM
+_java_cache: tuple[Any, SimpleNamespace | None] = (None, None)
+
+
+def _java(spark: SparkSession) -> SimpleNamespace:
+    """This module's JVM classes and static methods, resolved once per
+    JVM."""
+    global _java_cache
     jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
+    if _java_cache[0] is not jvm:
+        parquet = jvm.org.apache.parquet
+        _java_cache = (jvm, SimpleNamespace(
+            Path=jvm.org.apache.hadoop.fs.Path,
+            open_parquet=parquet.hadoop.ParquetFileReader.open,
+            input_file=parquet.hadoop.util.HadoopInputFile.fromStatus,
+            read_options=parquet.HadoopReadOptions.builder,
+            byte_string=jvm.org.apache.spark.network.util.JavaUtils
+            .byteStringAsBytes,
+            read_utf8=jvm.org.apache.commons.io.IOUtils.toString,
+        ))
+    return _java_cache[1]
+
+
+def _fs(spark: SparkSession, path: str):
+    hpath = _java(spark).Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 def _write_text(spark: SparkSession, path: str, text: str) -> None:
-    fs, hpath, _ = _fs(spark, path)
+    fs, hpath = _fs(spark, path)
     out = fs.create(hpath, True)
     try:
         out.write(bytearray(text.encode("utf-8")))
@@ -396,10 +444,10 @@ def _write_text(spark: SparkSession, path: str, text: str) -> None:
 
 
 def _read_text(spark: SparkSession, path: str) -> str:
-    fs, hpath, jvm = _fs(spark, path)
+    fs, hpath = _fs(spark, path)
     stream = fs.open(hpath)
     try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return _java(spark).read_utf8(stream, "UTF-8")
     finally:
         stream.close()
 
@@ -412,17 +460,19 @@ def footer_lineage(spark: SparkSession, path: str) -> list[dict[str, int]]:
     write no file and are absent, as in ``groupBy(spark_partition_id())``
     (an all-empty snapshot writes one file, with 0 rows).
     """
-    fs, hpath, jvm = _fs(spark, path)
+    fs, hpath = _fs(spark, path)
+    java = _java(spark)
     conf = spark._jsc.hadoopConfiguration()
-    hadoop = jvm.org.apache.parquet.hadoop
+    # one set of read options from the session's conf for every part
+    # file: the one-argument ``open`` builds a fresh Configuration, which
+    # parses Hadoop's XML defaults again, for each file
+    options = java.read_options(conf).build()
     parts = []
     for status in fs.listStatus(hpath):
         name = status.getPath().getName()
         if not name.startswith("part-"):
             continue
-        reader = hadoop.ParquetFileReader.open(
-            hadoop.util.HadoopInputFile.fromStatus(status, conf)
-        )
+        reader = java.open_parquet(java.input_file(status, conf), options)
         try:
             parts.append({"partition_id": int(name.split("-")[1]),
                           "rows": reader.getRecordCount()})
@@ -473,7 +523,7 @@ class CheckpointManager:
     def completed_iterations(self) -> list[int]:
         if not self.enabled():
             return []
-        fs, hpath, _ = _fs(self.spark, self.dir)
+        fs, hpath = _fs(self.spark, self.dir)
         if not fs.exists(hpath):
             return []
         out = []
@@ -482,7 +532,7 @@ class CheckpointManager:
             if not name.startswith("iter_"):
                 continue
             mpath = f"{self.dir}/{name}/{MANIFEST}"
-            mfs, mh, _ = _fs(self.spark, mpath)
+            mfs, mh = _fs(self.spark, mpath)
             if mfs.exists(mh):
                 try:
                     if json.loads(_read_text(self.spark, mpath)).get("complete"):

@@ -5,6 +5,10 @@ restored, and statistics that do not depend on task completion order."""
 
 from __future__ import annotations
 
+import math
+import random
+from fractions import Fraction
+
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
@@ -445,6 +449,64 @@ def test_exact_sum_order_independent(spark):
     assert {total(exact_sum(F.col("x")), o) for o in orders} == {1.0}
 
 
+def _adversarial_terms(seed, n=60):
+    """Mixed signs, magnitudes 1e-30 to 1e18, and cancelling pairs, some
+    exact negations and some off in their last bits."""
+    rng = random.Random(seed)
+    terms = []
+    for _ in range(n):
+        x = rng.choice((-1.0, 1.0)) * 10 ** rng.uniform(-30, 18)
+        terms.append(x)
+        if rng.random() < 0.5:
+            terms.append(-x if rng.random() < 0.5
+                         else -x * (1 + rng.uniform(-1e-9, 1e-9)))
+    return terms
+
+
+EXACT_SUM_SETS = [
+    _adversarial_terms(1),
+    _adversarial_terms(2),
+    # large terms cancel exactly, leaving the small ones
+    [1e18, 1e-25, -1e18, 3e-30, 7.5, -7.5],
+    # digit sums that cancel across digit boundaries
+    [1.0, -0.5, -0.5, 1e-27, 3.0, -2.9999999],
+    [2.0**-32, -(2.0**-33), -(2.0**-33), 1e-27],
+    # positive terms on a rank scale, as PageRank's statistics see them
+    [random.Random(3).random() / 7498 for _ in range(500)],
+]
+
+
+def test_exact_sum_matches_exact_rationals(spark):
+    """exact_sum gives one double for every row order and partition
+    count, within n·2^-96 plus 1 ulp of the exact rational sum."""
+    rows = [(i, t) for i, terms in enumerate(EXACT_SUM_SETS) for t in terms]
+    shuffled = random.Random(4).sample(rows, len(rows))
+    seen = {}
+    for order in (rows, rows[::-1], shuffled):
+        for n in (1, 4, 16):
+            df = spark.createDataFrame(order, "s int, x double")
+            for r in df.repartition(n).groupBy("s").agg(
+                    exact_sum(F.col("x")).alias("t")).collect():
+                seen.setdefault(r["s"], set()).add(r["t"])
+    for i, terms in enumerate(EXACT_SUM_SETS):
+        (got,) = seen[i]
+        exact = sum(map(Fraction, terms))
+        bound = len(terms) * Fraction(1, 2**96) + Fraction(
+            math.ulp(float(exact)))
+        assert abs(Fraction(got) - exact) <= bound, (i, got, float(exact))
+
+
+@pytest.mark.parametrize("terms", [[1e19], [4e18, 4e18, -1.0]],
+                         ids=["term", "total"])
+def test_exact_sum_out_of_range_fails(spark, terms):
+    """A term or a total past exact_sum's range fails the query under
+    ANSI mode rather than wrapping to a wrong total."""
+    df = spark.createDataFrame([(t,) for t in terms], "x double")
+    with conf_scope(spark, {"spark.sql.ansi.enabled": "true"}):
+        with pytest.raises(Exception, match="OVERFLOW|OUT_OF_RANGE"):
+            df.agg(exact_sum(F.col("x"))).collect()
+
+
 def test_pagerank_bit_identical_on_many_partitions(spark, tmp_path):
     """At 16 partitions the observed sums (delta, rank_sum) merge partial
     results from 16 tasks: two runs, and a run resumed from a checkpoint,
@@ -462,3 +524,17 @@ def test_pagerank_bit_identical_on_many_partitions(spark, tmp_path):
     for res in (second, resumed):
         assert (res.iterations, res.delta) == (first.iterations, first.delta)
         assert ranks_of(res) == want
+
+
+def test_hits_bit_identical_on_many_partitions(spark):
+    """HITS observes its masses and delta with exact_sum too: at 16
+    partitions two runs give bit-identical scores, iterations and
+    delta."""
+    edges = generate_graph(spark, 300, max_edges=4, seed=11)
+    with partitions(spark, 16):
+        first, second = (hits(spark, edges, max_iter=6) for _ in range(2))
+        runs = [(res.iterations, res.delta,
+                 {r["id"]: (r["hub"], r["auth"]) for r in res.scores.collect()})
+                for res in (first, second)]
+    assert len(runs[0][2]) == 300
+    assert runs[0] == runs[1]
